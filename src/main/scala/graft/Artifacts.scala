@@ -1,0 +1,132 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftCheckpoints
+
+/** The one registry of built artifacts: per-corpus models, inventories,
+  * checkpointed subtrees and probe results that operators build once
+  * and reuse across the queries of a session, plus the checkpoint
+  * leases of frames a query returns.
+  *
+  * An entry belongs to an OWNER, the object whose lifetime bounds the
+  * value:
+  *  - the `SparkContext` for broadcasts and checkpointed frames (a new
+  *    context never sees a stopped one's blocks);
+  *  - the `SparkSession` for values that depend on session config, and
+  *    for leases (sibling sessions of one context stay apart);
+  *  - [[Jvm]] for pure driver data keyed by content (centroids,
+  *    codebooks, trained models).
+  * Owners are told apart by identity, held weakly, never by a hash.
+  * The caller's key names the content (a corpus fingerprint, an
+  * artifact path), so a re-ingested corpus misses.
+  *
+  * Each kind is an access-ordered LRU of [[MaxEntries]] entries with
+  * its own lock and build counter. A build runs while HOLDING the
+  * kind's lock: duplicate concurrent builds of one subtree would cost
+  * more than the wait, and the lock is reentrant. (A multi-tenant
+  * driver would hold a per-key lazy value instead, so that one corpus's
+  * build never queues another's lookup.)
+  */
+object Artifacts {
+  /** Owner of values whose lifetime is the JVM's. */
+  object Jvm
+
+  /** Entries kept per kind: room for the corpora a session alternates
+    * between (the test scale factors plus a scaled copy), while a
+    * re-ingested corpus or a cycled session cannot grow a kind without
+    * bound. An evicted value is not released; the ContextCleaner
+    * reclaims its blocks once nothing references it. */
+  val MaxEntries = 8
+
+  private final class Kind {
+    val entries = new java.util.LinkedHashMap[String, Any](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Any]): Boolean = size > MaxEntries
+    }
+    val builds = new AtomicLong
+  }
+
+  private val kinds = new ConcurrentHashMap[String, Kind]()
+  private def kind(name: String): Kind =
+    kinds.computeIfAbsent(name, _ => new Kind)
+
+  private val owners = new java.util.WeakHashMap[AnyRef, java.lang.Long]()
+  private val nextOwner = new AtomicLong
+  private def slot(owner: AnyRef, key: String): String = {
+    val id = owners.synchronized {
+      val known = owners.get(owner)
+      if (known != null) known
+      else {
+        val fresh = java.lang.Long.valueOf(nextOwner.incrementAndGet())
+        owners.put(owner, fresh)
+        fresh
+      }
+    }
+    s"$id/$key"
+  }
+
+  /** The value of `kind` for (`owner`, `key`), built on a miss. */
+  def memo[T](owner: AnyRef, kind: String, key: String)(build: => T): T = {
+    val k = this.kind(kind)
+    val id = slot(owner, key)
+    k.synchronized {
+      k.entries.get(id) match {
+        case null =>
+          k.builds.incrementAndGet()
+          val v = build
+          k.entries.put(id, v)
+          v
+        case hit => hit.asInstanceOf[T]
+      }
+    }
+  }
+
+  /** The value of `kind` for (`owner`, `key`) if one is held; never
+    * builds. */
+  def peek[T](owner: AnyRef, kind: String, key: String): Option[T] = {
+    val k = this.kind(kind)
+    val id = slot(owner, key)
+    k.synchronized(Option(k.entries.get(id)).map(_.asInstanceOf[T]))
+  }
+
+  /** Builds of `kind` in this JVM. */
+  def builds(kind: String): AtomicLong = this.kind(kind).builds
+
+  /** Drop every entry of `kinds` (all kinds when none is named) and
+    * release the checkpoint blocks of the dropped frames. */
+  def clear(kinds: String*): Unit =
+    (if (kinds.isEmpty) this.kinds.keySet.asScala.toSeq else kinds)
+      .foreach { n =>
+        val k = kind(n)
+        val dropped = k.synchronized {
+          val vs = k.entries.values.asScala.toList
+          k.entries.clear()
+          vs
+        }
+        dropped.foreach {
+          case d: Dataset[_] => GraftCheckpoints.releaseLocalCheckpoint(d)
+          case _ => ()
+        }
+      }
+
+  private val leases = new ConcurrentHashMap[String, Seq[Dataset[_]]]()
+
+  /** Lease eagerly localCheckpoint'ed `frames` that a query RETURNS
+    * under (`s`, `tag`), releasing the frames of the previous lease.
+    *
+    * CONTRACT: the frame returned by call N of an operator is readable
+    * until call N+1 of the SAME operator on the SAME session; a later
+    * read of the stale frame fails loudly with a missing-block error
+    * (localCheckpoint truncates lineage), never silently recomputes.
+    * Callers fully materialize a query before re-invoking it. */
+  def lease(s: SparkSession, tag: String, frames: Dataset[_]*): Unit = {
+    val k = slot(s, tag)
+    val prev = if (frames.isEmpty) leases.remove(k) else leases.put(k, frames)
+    Option(prev).foreach(_.foreach(GraftCheckpoints.releaseLocalCheckpoint))
+  }
+}

@@ -103,11 +103,10 @@ object Bench {
     // inside sample() mean the d6/d8/c1/c2/c4 medians are CACHE-HIT
     // numbers — without this, the sweep total silently excludes the
     // most expensive subtree in the engine (the d2→d4Confirm screen/
-    // confirm chain + star contraction). Clear both memo caches and
+    // confirm chain + star contraction). Clear the registry and
     // time the first builds explicitly; the spec counters prove each
     // ran exactly once, so memo_build_sec + total bounds a cold sweep.
-    operators.Dedup.clearConfirmedCache()
-    operators.Dedup.clearClusterCache()
+    Artifacts.clear()
     val cb0 = operators.Dedup.confirmedBuildCount.get()
     val kb0 = operators.Dedup.clusterBuildCount.get()
     val memoBuildSec = timed {

@@ -139,13 +139,11 @@ object MemProbe {
       s""""coldWiped":[${wiped.map("\"" + _ + "\"").mkString(",")}]}""")
 
     for (n <- names) {
-      // every query pays its OWN subtree: the confirmed-pairs /
-      // cluster memos one dedup entry builds would otherwise let the
-      // next ride it for free (the ScaleBench rep rule) — a memory
-      // probe that measures a cache hit proves nothing
-      graft.operators.Dedup.clearConfirmedCache()
-      graft.operators.Dedup.clearClusterCache()
-      graft.Tables.clearScanPartsCache()
+      // every query pays its OWN subtree: the artifacts one entry
+      // builds would otherwise let the next ride them for free (the
+      // ScaleBench rep rule) — a memory probe that measures a cache
+      // hit proves nothing
+      Artifacts.clear()
       spark.catalog.clearCache(); System.gc()
       val l = new SpillListener
       spark.sparkContext.addSparkListener(l)

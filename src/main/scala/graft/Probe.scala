@@ -38,15 +38,10 @@ object Probe {
     if (sections("q25")) probeQ25(spark)
     if (sections("d8")) probeD8(spark)
     if (sections("d8ab")) probeD8AB(spark) // not in the default set
-    if (sections("c4")) probeC4(spark, sfDir) // not in the default set
-    if (sections("t8")) probeT8(spark, sfDir) // not in the default set
     if (sections("q36")) probeQ36(spark, sfDir) // not in the default set
-    if (sections("s6")) probeS6(spark, sfDir) // not in the default set
     if (sections("bpe")) probeBpe(spark) // not in the default set
     if (sections("q36b")) probeQ36B(spark) // not in the default set
     if (sections("d11")) probeD11(spark, sfDir) // not in the default set
-    if (sections("s8")) probeS8(spark, sfDir) // not in the default set
-    if (sections("s15")) probeS15(spark, sfDir) // not in the default set
     if (sections("decade")) probeDecade(spark, sfDir) // not in the default set
     if (sections("ev100")) probeEv100(spark, sfDir) // not in the default set
     if (sections("cdc")) probeCdc(spark) // not in the default set
@@ -490,140 +485,6 @@ object Probe {
     }
   }
 
-  /** ---- s8 incremental-ANN admission vs corpus size (round 12): the
-    * claim is the d11 contract for vectors — index BUILD is the
-    * pay-once corpus pass (quantizer training + cell-partitioned
-    * assignment write, grows with corpus), but ADMITTING a fixed-size
-    * shard is corpus-independent (scan-local inlined-centroid argmax
-    * over shard rows + a small partitioned write; the corpus is never
-    * re-read). The pruned QUERY grows with probed-partition bytes —
-    * ∝ corpus at fixed nprobe/cells, reported for honesty, not
-    * claimed flat. Not in the default set. */
-  private def probeS8(spark: SparkSession, sfDir: String): Unit = {
-    println("== s8: fixed-shard admission + pruned query vs 1x/10x ==")
-    val e = Tables.embeddings(spark, sfDir)
-    val mId = e.agg(max(col("vec_id"))).head().getLong(0) + 1
-    val x10 = "target/probe/s8x10"
-    // 10× DISTINCT corpus: ids shifted per copy, one deterministic
-    // per-copy perturbation so no replica is an exact duplicate
-    e.crossJoin(spark.range(10).withColumnRenamed("id", "copy"))
-      .withColumn("vec_id", col("vec_id") + col("copy") * mId)
-      .withColumn("embedding", expr("transform(embedding, (x, i) -> " +
-        "CAST(x + CAST(copy AS FLOAT) * CAST(0.003 AS FLOAT) * " +
-        "CAST(i % 7 AS FLOAT) AS FLOAT))"))
-      .select("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$x10/embeddings.parquet")
-    // the FIXED shard: 500 corpus vectors re-keyed far above both tiers
-    val shard = e.filter(col("vec_id") % 4 === 0).limit(500)
-      .select((col("vec_id") + lit(1000000000L)).as("vec_id"),
-        col("embedding"))
-      .localCheckpoint(true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    for ((tier, dir) <- Seq(("1x", sfDir), ("10x", x10))) {
-      val fp = Tables.fingerprint(spark, dir, "embeddings")
-      for (stale <- Seq(s"target/ivfindex/$fp", s"target/ivfinc/$fp",
-          s"target/graft-centroids/$fp")) {
-        val p = new org.apache.hadoop.fs.Path(stale)
-        p.getFileSystem(conf).delete(p, true)
-      }
-      operators.Similarity.clearCentroidCache()
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      operators.Similarity.s8IndexPath(spark, dir) // train + base + inc
-      val t1 = System.nanoTime()
-      operators.Similarity.s8WriteAssigned(spark, dir, shard,
-        s"target/probe/s8admit_$tier")
-      val t2 = System.nanoTime()
-      val n = operators.Similarity.s8AnnIncremental(spark, dir).count()
-      val t3 = System.nanoTime()
-      println(f"[s8] $tier%-4s indexBuild=${(t1 - t0) / 1e9}%6.2fs " +
-        f"admitFixed=${(t2 - t1) / 1e9}%6.2fs " +
-        f"query=${(t3 - t2) / 1e9}%6.2fs rows=$n")
-    }
-  }
-
-  /** ---- s15 graph-admission cost vs corpus size (round 17): the
-    * claim is the d11/s8 admission contract for the GRAPH artifact —
-    * the graph BUILD is the pay-once corpus pass (s12 + the three
-    * partitioned layers, grows with corpus), while ADMITTING a
-    * fixed-size shard is corpus-CAPPED: affected-old volume ≤ landed
-    * cells × nprobe × occupancy, a CONSTANT for a fixed shard because
-    * occupancy is pinned by the corpus-scaled quantizer. The cap is
-    * only visible once the corpus outgrows it (landed·4·128 ≈ 16k
-    * vectors for a 32-vector shard) — below that the affected set
-    * saturates the whole corpus and admission degenerates to a
-    * rebuild-sized pass, which is exactly what the small gate corpora
-    * show; the 10×→100× tiers are where the cap bites and the delta
-    * flattens. Timed is the admission DELTA (merged affected + new
-    * edges); the corpus-sized pass-through union is production's next
-    * edge-generation write. Not in the default set. */
-  private def probeS15(spark: SparkSession, sfDir: String): Unit = {
-    println("== s15: fixed-shard graph admission vs 1x/10x/100x ==")
-    val e = Tables.embeddings(spark, sfDir)
-    val mId = e.agg(max(col("vec_id"))).head().getLong(0) + 1
-    def replicate(copies: Int, out: String): Unit =
-      e.crossJoin(spark.range(copies).withColumnRenamed("id", "copy"))
-        .withColumn("vec_id", col("vec_id") + col("copy") * mId)
-        .withColumn("embedding", expr("transform(embedding, (x, i) -> " +
-          "CAST(x + CAST(copy AS FLOAT) * CAST(0.003 AS FLOAT) * " +
-          "CAST(i % 7 AS FLOAT) AS FLOAT))"))
-        .select("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    val x10 = "target/probe/s15x10"
-    val x100 = "target/probe/s15x100"
-    replicate(10, x10)
-    replicate(100, x100)
-    // the FIXED shard: 32 corpus vectors re-keyed far above every tier
-    val shard = e.filter(col("vec_id") % 4 === 0).limit(32)
-      .select((col("vec_id") + lit(1000000000L)).as("vec_id"),
-        col("embedding"))
-      .localCheckpoint(true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    for ((tier, dir) <- Seq(("1x", sfDir), ("10x", x10), ("100x", x100))) {
-      val fp = Tables.fingerprint(spark, dir, "embeddings")
-      // wipe this tier's graph artifact (any quantizer signature) so
-      // the build is timed cold; warm the quantizer OUTSIDE the timed
-      // window — the replicated tiers are rewritten each run (fresh
-      // fingerprint), so without this the 10×/100× builds would also
-      // pay cold k-means training while the stable 1× tier loads warm
-      // centroids, skewing exactly the scaling comparison this section
-      // reports (r17 review); training cost is probeS8's subject
-      for (stale <- Seq(s"target/knngraph")) {
-        val p = new org.apache.hadoop.fs.Path(stale)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p))
-          fs.listStatus(p).filter(_.getPath.getName.startsWith(fp))
-            .foreach(st => fs.delete(st.getPath, true))
-      }
-      operators.Similarity.s12CentroidsFor(spark, dir)
-      operators.Similarity.clearEdgeCache()
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      val artifact = operators.Similarity.graphIndexPath(spark, dir)
-      val t1 = System.nanoTime()
-      val (untouched, delta) =
-        operators.Similarity.s15AdmitParts(spark, dir, shard)
-      val nDelta = delta.count()
-      val t2 = System.nanoTime()
-      val nAll = nDelta + untouched.count()
-      // affected OLD nodes — the quantity the landed×nprobe×occupancy
-      // cap bounds; the 32 shard ids ride delta too and must not
-      // inflate the metric (r17 review)
-      val nAffected = delta.select("query_id")
-        .filter(col("query_id") < 1000000000L).distinct().count()
-      println(f"[s15] $tier%-4s graphBuild=${(t1 - t0) / 1e9}%6.2fs " +
-        f"admitDelta=${(t2 - t1) / 1e9}%6.2fs " +
-        f"affectedNodes=$nAffected deltaRows=$nDelta allRows=$nAll")
-      // the replicated tiers' fingerprints never recur — delete their
-      // three-layer artifacts (several × the tier's embedding bytes)
-      // or repeated probe runs fill the disk (r17 review)
-      if (tier != "1x") {
-        val ap = new org.apache.hadoop.fs.Path(artifact)
-        ap.getFileSystem(conf).delete(ap, true)
-      }
-    }
-  }
-
   /** ---- second-decade linearity check (round 17, r16 ask #7): the
     * ≥5× rows of the 10× sweep (c26 7.3×, q11 6.8×, q28 6.0×, q1
     * 5.8×, q23 5.8×) carry a "linear with constants" claim argued
@@ -740,97 +601,6 @@ object Probe {
         f"train=${(t2 - t1) / 1e9}%6.2fs " +
         s"merges=${merges.map(m => m.lhs + m.rhs).mkString(",")}")
     }
-  }
-
-  /** ---- t8 at 100× corpus: the byte-walk kernel's 10× ScaleBench row
-    * (3.6×) plus this 100× datum pin the linearity claim the same way
-    * c4's probe does. TRAIN (the once-per-corpus-generation artifact
-    * build — clearT8Cache forces it) and SCORE (the per-consumer scan)
-    * are timed separately: at 100 TB train is one extra corpus pass per
-    * generation whose output stays alphabet²-bounded, and score is the
-    * number that multiplies across every downstream consumer. Planted
-    * dir follows probeC4's replication rules (shifted ids keep the
-    * 1/101 plant density; per-copy text suffix keeps the byte volume
-    * genuinely 100×). */
-  private def probeT8(spark: SparkSession, sfDir: String): Unit = {
-    val doc = Tables.documents(spark, sfDir)
-    val mDoc = doc.agg(max(col("doc_id"))).head().getLong(0) + 1
-    val copies = spark.range(100).withColumnRenamed("id", "copy")
-    val cols = doc.columns
-    val out = "target/probe/t8x100"
-    doc.crossJoin(copies)
-      .withColumn("doc_id", col("doc_id") + col("copy") * mDoc)
-      .withColumn("text", concat(col("text"), lit(" copyword"),
-        col("copy").cast("string")))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .select(cols.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-
-    def time(name: String, dir: String, cold: Boolean): Double = {
-      if (cold) graft.operators.TextAnalysis.clearT8Cache()
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      graft.operators.TextAnalysis.t8CharlmFilter(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"$name","sec":$sec%.2f}""")
-      sec
-    }
-    time("t8_warmup", sfDir, cold = true) // absorbs codegen/session startup
-    val baseCold = time("t8_base_cold", sfDir, cold = true)
-    val baseWarm = time("t8_base_warm", sfDir, cold = false)
-    val xCold = time("t8_x100_cold", out, cold = true)
-    val xWarm = time("t8_x100_warm", out, cold = false)
-    println(f"""{"probe":"t8_x100_ratio","cold":${xCold / baseCold}%.1f,""" +
-      f""""warm":${xWarm / baseWarm}%.1f}""")
-  }
-
-  /** ---- c4 flagship at 100× corpus: the composed curation DAG was
-    * measured only at ScaleBench's 10× (ratio 3.0–3.4); this plants a
-    * 100× documents dir (ScaleBench's replication rules: shifted ids,
-    * per-copy text suffix so the shingle work is genuinely 100×) and
-    * runs the WHOLE DAG — quality, cluster dedup incl. the memoized
-    * screen/confirm/contract build, decontamination, source cap — cold
-    * (memo caches cleared, the per-corpus-generation cost) and warm
-    * (cache-hit, the per-consumer cost). Caveat recorded with the
-    * datum: the planted bench slice grows 100× with the corpus, so the
-    * d9 inventory broadcast is ~100× a production suite's (which is
-    * fixed-size); the probe therefore UPPER-bounds the production
-    * ratio. */
-  private def probeC4(spark: SparkSession, sfDir: String): Unit = {
-    val doc = Tables.documents(spark, sfDir)
-    val mDoc = doc.agg(max(col("doc_id"))).head().getLong(0) + 1
-    val copies = spark.range(100).withColumnRenamed("id", "copy")
-    val cols = doc.columns
-    val out = "target/probe/c4x100"
-    doc.crossJoin(copies)
-      .withColumn("doc_id", col("doc_id") + col("copy") * mDoc)
-      .withColumn("text", concat(col("text"), lit(" copyword"),
-        col("copy").cast("string")))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .select(cols.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-
-    def time(name: String, dir: String, cold: Boolean): Double = {
-      if (cold) {
-        graft.operators.Dedup.clearConfirmedCache()
-        graft.operators.Dedup.clearClusterCache()
-      }
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      graft.operators.Curation.c4CurationFull(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"$name","sec":$sec%.2f}""")
-      sec
-    }
-    time("c4_warmup", sfDir, cold = true) // absorbs codegen/session startup
-    val baseCold = time("c4_base_cold", sfDir, cold = true)
-    val baseWarm = time("c4_base_warm", sfDir, cold = false)
-    val xCold = time("c4_x100_cold", out, cold = true)
-    val xWarm = time("c4_x100_warm", out, cold = false)
-    println(f"""{"probe":"c4_x100_ratio","cold":${xCold / baseCold}%.1f,""" +
-      f""""warm":${xWarm / baseWarm}%.1f}""")
   }
 
   /** ---- s12's round-15 scale claim: the TWO-LEVEL coarse quantizer
@@ -1130,89 +900,6 @@ object Probe {
     }
   }
 
-  /** ---- d8 round-spelling A/B: composed smallStar∘largeStar round
-    * (one eager lineage cut per round) vs additionally checkpointing
-    * BETWEEN the stars (kills smallStar's triple re-execution of the
-    * largeStar subtree, pays one more materialization barrier per
-    * round). Separate sequential probe runs could not settle this —
-    * chain_n500000 swung 36–118s across runs of the SAME binary on the
-    * shared box — so the variants run INTERLEAVED in one JVM, several
-    * pairs, and the verdict is the per-pair ordering, not absolute
-    * seconds. Not in the default section set: it exists to justify the
-    * production spelling, not to re-measure it every round. */
-  /** ---- s6/s7 at 10×/100× embedding corpora: the PQ pipeline's two
-    * cost classes timed separately, the t8/c4 probe shape. TRAIN (the
-    * once-per-corpus-generation artifact build: corpus count + sample
-    * collect + 8 per-subspace Lloyd passes) is forced cold by
-    * clearing the JVM cache AND pointing the artifact dir at a fresh
-    * temp path; QUERY (encode every vector scan-locally + ADC +
-    * corpus-scaled shortlist rerank) is the path that multiplies at
-    * 100 TB, timed with the model warm. Corpora replicate by the d5
-    * rotation rule (distinct, decorrelated, norm-preserving copies). */
-  private def probeS6(spark: SparkSession, sfDir: String): Unit = {
-    val e = Tables.embeddings(spark, sfDir)
-    val n = e.count()
-    def distinctScaled(k: Int) = replicatedEmbeddings(
-      e, n, spark.range(k).withColumnRenamed("id", "copy"))
-    val base = "target/probe-s6"
-    distinctScaled(10).write.mode("overwrite")
-      .parquet(s"$base/x10/embeddings.parquet")
-    distinctScaled(100).write.mode("overwrite")
-      .parquet(s"$base/x100/embeddings.parquet")
-
-    def run(tag: String, dir: String): Unit = {
-      import graft.operators.Similarity
-      // force BOTH trainings cold into train_sec (fresh artifact dirs
-      // + cleared JVM caches), so the query timings below genuinely
-      // run warm-model — s7 also consults the IVF coarse quantizer,
-      // and the rewritten replica dirs change its fingerprint every
-      // probe invocation, so without this the s7 "query" numbers
-      // would silently absorb a centroid training
-      spark.conf.set("spark.graft.pq.dir",
-        java.nio.file.Files.createTempDirectory("probe-pq").toString)
-      spark.conf.set("spark.graft.centroids.dir",
-        java.nio.file.Files.createTempDirectory("probe-cent").toString)
-      Similarity.clearPqCache()
-      Similarity.clearCentroidCache()
-      spark.catalog.clearCache(); System.gc()
-      var t0 = System.nanoTime()
-      Similarity.pqFor(spark, dir)
-      Similarity.centroidsFor(spark, dir)
-      val trainSec = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      Similarity.s6Pq(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val s6Sec = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      Similarity.s7IvfPq(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val s7Sec = (System.nanoTime() - t0) / 1e9
-      val rows = Tables.embeddings(spark, dir).count()
-      println(f"""{"probe":"$tag","rows":$rows,"train_sec":$trainSec%.2f,"s6_sec":$s6Sec%.2f,"s7_sec":$s7Sec%.2f}""")
-      spark.conf.unset("spark.graft.pq.dir")
-      spark.conf.unset("spark.graft.centroids.dir")
-    }
-    run("s6_base_warmup", sfDir) // absorbs codegen/session startup
-    run("s6_base", sfDir)
-    run("s6_x10", s"$base/x10")
-    run("s6_x100", s"$base/x100")
-
-    // stage breakdown at x100: where does the query path spend time —
-    // encoding (codes projection), the ADC join + shortlist window, or
-    // the rerank?
-    {
-      import graft.operators.Similarity
-      val dir = s"$base/x100"
-      val stages = Similarity.s6Stages(spark, dir)
-      stages.foreach { case (tag, df) =>
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"""{"probe":"s6_x100_stage","stage":"$tag","sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      }
-    }
-  }
-
   /** ---- q36 phase timing: where do the PageRank seconds go — the
     * one-time edge materialization (orders⋈lineitem distinct,
     * symmetrize, outdeg, eager localCheckpoint) or the five
@@ -1266,6 +953,16 @@ object Probe {
         graft.operators.Graph.q36Pagerank(spark, sfDir).collect())
   }
 
+  /** ---- d8 round-spelling A/B: composed smallStar∘largeStar round
+    * (one eager lineage cut per round) vs additionally checkpointing
+    * BETWEEN the stars (kills smallStar's triple re-execution of the
+    * largeStar subtree, pays one more materialization barrier per
+    * round). Separate sequential probe runs could not settle this —
+    * chain_n500000 swung 36–118s across runs of the SAME binary on the
+    * shared box — so the variants run INTERLEAVED in one JVM, several
+    * pairs, and the verdict is the per-pair ordering, not absolute
+    * seconds. Not in the default section set: it exists to justify the
+    * production spelling, not to re-measure it every round. */
   private def probeD8AB(spark: SparkSession): Unit = {
     def chain(n: Long) = spark.range(1, n)
       .select((col("id") - 1).as("src"), col("id").as("dst"))

@@ -72,17 +72,14 @@ object ScaleBench {
       .filter(n => only.forall(_.contains(n)))
     for (rep <- 1 to reps) {
       // a repetition must re-measure the QUERY, not the per-corpus
-      // memo caches (confirmed pairs / cluster membership) a previous
+      // artifacts (confirmed pairs, cluster membership, …) a previous
       // rep left behind — and every rep must present the SAME cache
       // state the single-run table sees, so after clearing, the d6
       // warmup rebuilds the shared confirmed-pairs subtree on both
       // dirs (otherwise the alphabetically-first consumer in each rep
       // absorbs the build and its timings drift from the table's)
       if (reps > 1) {
-        graft.operators.Dedup.clearConfirmedCache()
-        graft.operators.Dedup.clearClusterCache()
-        graft.operators.Similarity.clearEdgeCache()
-        graft.Tables.clearScanPartsCache()
+        Artifacts.clear()
         run("d6_dedup_pipeline", sfDir)
         run("d6_dedup_pipeline", out)
       }

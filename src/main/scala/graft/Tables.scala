@@ -51,11 +51,8 @@ object Tables {
     * push down to the parquet reader (Relational.q17TimeRangeFilter,
     * ScaleBench's pass-through corpus copy). Callers dispatch on
     * `schema("ts").dataType`. */
-  def eventsRaw(s: SparkSession, dir: String): DataFrame = {
-    // no-op for TIMESTAMP(MICROS) files; lets legacy NANOS files load as long
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def eventsRaw(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(p(dir, "events"))
-  }
   def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "documents"))
   def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
 
@@ -80,38 +77,17 @@ object Tables {
     * repartition target is cores too — one task wave, not thousands
     * of slivers of a compact corpus. The partition probe (physical
     * planning, no job, one FS listing) is memoized per corpus
-    * fingerprint — several operators consult it more than once per
-    * query (the embCountCache pattern). */
+    * fingerprint in the session's [[Artifacts]] (the probed split
+    * count depends on session config) — several operators consult it
+    * more than once per query. */
   def documentsSpread(s: SparkSession, dir: String): DataFrame = {
     val df = documents(s, dir)
+    val parts = Artifacts.memo(s, "tables.scanParts",
+      fingerprint(s, dir, "documents"))(df.rdd.getNumPartitions)
     val cores = s.sparkContext.defaultParallelism
-    // keyed by (SESSION identity, fingerprint), not fingerprint alone:
-    // the probed split count depends on session config (parallelism,
-    // maxPartitionBytes), so a sibling SparkSession in the same JVM
-    // must re-probe rather than inherit another session's decision —
-    // and applicationId is SHARED by every session of one SparkContext
-    // (r17 review), so the key uses the session object's identity
-    val parts = scanPartsCache.computeIfAbsent(
-      System.identityHashCode(s).toString + "/" +
-        fingerprint(s, dir, "documents"),
-      _ => Integer.valueOf(df.rdd.getNumPartitions)).intValue
     if (parts < cores) df.repartition(cores) else df
   }
 
-  private val scanPartsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Drop every memoized scan-partition probe (the hook the other
-    * per-corpus memos expose — ScaleBench/MemProbe-style harnesses that
-    * rewrite a corpus in place under one session can re-probe). */
-  private[graft] def clearScanPartsCache(): Unit = scanPartsCache.clear()
-
-  /** Metadata-only fingerprint of one table: path + per-file
-    * (name, length, mtime). One FS listing, no data read — the cache key
-    * for per-corpus memoization (Similarity centroids, Dedup confirmed
-    * pairs): a re-ingested corpus at the same path changes file
-    * lengths/mtimes and misses the cache, so a long-lived JVM can never
-    * serve results computed on a previous corpus generation. */
   /** Metadata-only on-disk size of one table (sum of file lengths, one
     * FS listing, no data read, no Spark job) — the cheap scale probe
     * size-adaptive operators gate on (the quantile family's serial-
@@ -123,6 +99,12 @@ object Tables {
     fs.listStatus(path).map(_.getLen).sum
   }
 
+  /** Metadata-only fingerprint of one table: path + per-file
+    * (name, length, mtime). One FS listing, no data read — the key of
+    * every per-corpus [[Artifacts]] entry: a re-ingested corpus at the
+    * same path changes file lengths/mtimes and misses, so a long-lived
+    * JVM can never serve results computed on a previous corpus
+    * generation. */
   def fingerprint(s: SparkSession, dir: String, table: String): String = {
     val path = new org.apache.hadoop.fs.Path(p(dir, table))
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -69,28 +69,11 @@ object Bpe {
 
   final case class Merge(step: Int, lhs: String, rhs: String, cnt: Long)
 
-  /** Per-corpus trained merges, fingerprint-keyed like the t8/s3
-    * artifacts — a re-ingested corpus at the same path retrains. */
-  private val cache =
-    new java.util.LinkedHashMap[String, Seq[Merge]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[Merge]]): Boolean = size > 16
-    }
-
-  /** Spec hook: number of actual trainings in this JVM. */
-  private[graft] val trainCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Most recently trained/used corpus key — the static [[oracle]]
-    * resolves from THIS, not from the LRU's iteration order (an
-    * access-ordered LinkedHashMap iterates least-recently-used FIRST,
-    * so with two corpora trained in one JVM the old `values().next()`
-    * spelling silently inlined the STALE corpus's merges — the same
-    * trap Similarity.lastCorpusKey exists for). */
+    * resolves from THIS (the Similarity.lastCorpusKey pattern): with
+    * two corpora trained in one JVM, it inlines the merges of the one
+    * used last. */
   @volatile private[graft] var lastKey: Option[String] = None
-
-  private[graft] def clearCache(): Unit =
-    cache.synchronized { cache.clear(); lastKey = None }
 
   /** The distributed side of training: the corpus word-frequency
     * table, FLOORED at `minFreq` and CAPPED at the top-`cap` words by
@@ -176,20 +159,13 @@ object Bpe {
     }
   }
 
+  /** Per-corpus trained merges — pure driver data, held once per
+    * corpus generation per JVM. */
   def mergesFor(s: SparkSession, dir: String): Seq[Merge] = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    cache.synchronized {
-      lastKey = Some(key)
-      val hit = cache.get(key)
-      if (hit != null) hit
-      else {
-        trainCount.incrementAndGet()
-        val v = train(wordCounts(s, dir))
-        cache.put(key, v)
-        v
-      }
-    }
+    val key = Tables.fingerprint(s, dir, "documents")
+    lastKey = Some(key)
+    graft.Artifacts.memo(graft.Artifacts.Jvm, "bpe.merges", key)(
+      train(wordCounts(s, dir)))
   }
 
   /** c10a: the trained merge table itself — (step, lhs, rhs,
@@ -385,14 +361,10 @@ object Bpe {
   /** Static form — fails loudly if no training has happened (same
     * contract as Similarity.oracle: a premature dump must not
     * silently shrink the gate). Resolves the MOST RECENTLY used
-    * corpus via [[lastKey]] — the access-ordered LRU iterates
-    * least-recently-used first, so `values().next()` would pick the
-    * STALE corpus when two trained in one JVM. */
+    * corpus via [[lastKey]]. */
   def oracle: Map[String, String] = {
-    val trained = cache.synchronized {
-      lastKey.flatMap(k => Option(cache.get(k)))
-    }
-    trained match {
+    lastKey.flatMap(graft.Artifacts.peek[Seq[Merge]](
+        graft.Artifacts.Jvm, "bpe.merges", _)) match {
       case Some(m) => Map(
         "c10_bpe_merges" -> sqlMergesOracle,
         "c10_bpe_tokenize" -> sqlTokenizeOracle(m),

@@ -83,22 +83,6 @@ object Classifier {
       priorMicro: Long,
       train: Seq[(Int, Long, Long, Long)])
 
-  /** Per-corpus model cache — the t8/s3 pattern: keyed by
-    * (applicationId, documents fingerprint) so a re-ingested corpus
-    * retrains and a fresh session never reuses a dead context's
-    * artifact. Access-order LRU, synchronized on the map. */
-  private val cache =
-    new java.util.LinkedHashMap[String, ClfModel](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, ClfModel]): Boolean = size > 8
-    }
-
-  /** Spec hook: number of actual trainings in this JVM. */
-  private[graft] val trainCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def clearCache(): Unit = cache.synchronized(cache.clear())
-
   // ------------------------------------------------- shared spellings
 
   private def dbl(x: String) = s"CAST($x AS DOUBLE)"
@@ -163,34 +147,26 @@ object Classifier {
   /** Train (or cache-hit) the model for a corpus: collect the
     * ≤ 128-row weight table and the prior — both bounded artifacts.
     * Fails loudly on a single-class corpus (a prior over zero docs is
-    * a config error, not a NaN to propagate). */
-  private[graft] def modelFor(s: SparkSession, dir: String): ClfModel = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) hit
-      else {
-        trainCount.incrementAndGet()
-        val train = weightsFrame(s, dir).orderBy("f").collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSeq
-        val prior = labeled(s, dir)
-          .agg(sum(col("y")).as("d_pos"),
-            sum(lit(1) - col("y")).as("d_neg"))
-          .filter(col("d_pos") > 0 && col("d_neg") > 0)
-          .selectExpr(priorSql("d_pos", "d_neg") + " AS p")
-          .collect()
-        require(prior.nonEmpty,
-          s"t15 classifier needs both label classes in $dir/documents — " +
-            "a single-class corpus cannot train a prior")
-        val m = ClfModel(train.map(t => t._1 -> t._4).toMap,
-          prior.head.getLong(0), train)
-        cache.put(key, m)
-        m
-      }
+    * a config error, not a NaN to propagate). The model is pure driver
+    * data, held once per corpus generation per JVM. */
+  private[graft] def modelFor(s: SparkSession, dir: String): ClfModel =
+    graft.Artifacts.memo(graft.Artifacts.Jvm, "classifier.model",
+        Tables.fingerprint(s, dir, "documents")) {
+      val train = weightsFrame(s, dir).orderBy("f").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSeq
+      val prior = labeled(s, dir)
+        .agg(sum(col("y")).as("d_pos"),
+          sum(lit(1) - col("y")).as("d_neg"))
+        .filter(col("d_pos") > 0 && col("d_neg") > 0)
+        .selectExpr(priorSql("d_pos", "d_neg") + " AS p")
+        .collect()
+      require(prior.nonEmpty,
+        s"t15 classifier needs both label classes in $dir/documents — " +
+          "a single-class corpus cannot train a prior")
+      ClfModel(train.map(t => t._1 -> t._4).toMap,
+        prior.head.getLong(0), train)
     }
-  }
 
   /** t15_clf_train: the trained artifact itself — per-bucket counts
     * and micro-nat weights. Runs the distributed trainer (not the

@@ -626,7 +626,7 @@ object Curation {
     // suspect)
     org.apache.spark.sql.graftbridge.GraftCheckpoints
       .releaseLocalCheckpoint(base)
-    graft.CheckpointLease.swap(s, "curation.c30flags", flagged)
+    graft.Artifacts.lease(s, "curation.c30flags", flagged)
     val mixc = flagged.filter(col("p6")).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"))
     val mixn = mixc.agg(max("n_docs").as("n_max"))
@@ -2009,7 +2009,7 @@ object Curation {
       .groupBy("source").agg(sum("ws_tokens").as("n_tokens"))
       .localCheckpoint(true) // O(sources) rows; one corpus pass total
     // leased: read lazily by the returned plan until the next c31 call
-    graft.CheckpointLease.swap(s, "curation.c31", perSrc)
+    graft.Artifacts.lease(s, "curation.c31", perSrc)
     val nmax = perSrc.agg(max("n_tokens").as("n_max"))
     val alloc = perSrc.crossJoin(broadcast(nmax))
       .withColumn("epochs_milli",
@@ -2715,7 +2715,7 @@ object Curation {
     // Leased: the returned join reads verdicts lazily until the next
     // c28 call on this session releases it
     val verdicts = sig.join(sem, "doc_id").localCheckpoint(true)
-    graft.CheckpointLease.swap(s, "curation.c28", verdicts)
+    graft.Artifacts.lease(s, "curation.c28", verdicts)
     val admitted = verdicts
       .filter(col("sig_ok") === 1 && col("sem_ok") === 1)
       .select(col("doc_id").as("vec_id"))

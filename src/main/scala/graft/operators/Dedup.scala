@@ -543,49 +543,12 @@ object Dedup {
     * d6 oracle. */
   val KeepMinJaccard = 0.8
 
-  /** Memoized [[d4Confirm]]∘[[d2Minhash]] results, keyed by
-    * (SparkContext, documents-table fingerprint) — see
-    * [[confirmedPairs]]. */
-  /** Entries kept per memo cache: room for the corpora a session
-    * actually alternates between (the three test SFs plus ScaleBench's
-    * simulated dir), while bounding growth from re-ingested corpora
-    * (changed fingerprint ⇒ new key; the LRU drops the stale entry,
-    * whose checkpoint blocks the ContextCleaner then reclaims once the
-    * evicted DataFrame is unreachable) and from cycled sessions. */
-  private val MemoMaxEntries = 8
-
-  /** Access-order LRU keyed by (applicationId, corpus fingerprint) —
-    * see [[MemoMaxEntries]]. All access synchronized on the map: the
-    * engine memoizes from the driver thread, and duplicate concurrent
-    * builds would be worse than a brief lock. */
-  private def newMemoCache(): java.util.LinkedHashMap[String, DataFrame] =
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size > MemoMaxEntries
-    }
-
-  /** Runs `build` (potentially a minutes-long Spark job) while HOLDING
-    * the cache monitor — deliberate for this single-driver engine:
-    * duplicate concurrent builds of the same subtree would cost more
-    * than any lock wait, and the engine memoizes from the driver
-    * thread. If multi-tenant drivers ever matter, cache a per-key lazy
-    * holder (future) so the map lock covers only lookup/insert and an
-    * unrelated corpus's request never queues behind another's build. */
-  private def memoize(cache: java.util.LinkedHashMap[String, DataFrame],
-      key: String)(build: => DataFrame): DataFrame = cache.synchronized {
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else { val v = build; cache.put(key, v); v }
-  }
-
-  private val confirmedCache = newMemoCache()
-  /** Spec hook: how many times the screen→confirm chain has actually
-    * executed (vs been served from the cache) in this JVM. */
+  /** Spec/bench hooks: builds of the confirmed-pairs and cluster
+    * subtrees and of the d9 inventory, the registry's counters. */
   private[graft] val confirmedBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def clearConfirmedCache(): Unit =
-    confirmedCache.synchronized(confirmedCache.clear())
+    graft.Artifacts.builds("dedup.confirmed")
+  private[graft] val clusterBuildCount = graft.Artifacts.builds("dedup.cluster")
+  private[graft] val d9InvBuildCount = graft.Artifacts.builds("dedup.d9Inv")
 
   /** Confirmed duplicate pairs for a corpus — the d2 MinHash screen →
     * d4Confirm exact-Jaccard chain, memoized per (SparkContext, corpus
@@ -601,18 +564,12 @@ object Dedup {
     * from the checkpointed RDD. On a real cluster the same pattern
     * writes the confirmed-pairs table to reliable storage once per
     * corpus generation (localCheckpoint trades preemption-safety for
-    * zero setup, the right call in a single-JVM session); the
-    * fingerprint key (file names/lengths/mtimes — [[Tables.fingerprint]])
-    * invalidates on re-ingest, and the SparkContext half of the key
-    * keeps a fresh session from adopting RDDs of a stopped one. */
-  def confirmedPairs(s: SparkSession, dir: String): DataFrame = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    memoize(confirmedCache, key) {
-      confirmedBuildCount.incrementAndGet()
+    * zero setup, the right call in a single-JVM session). */
+  def confirmedPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.memo(s.sparkContext, "dedup.confirmed",
+        Tables.fingerprint(s, dir, "documents")) {
       d4Confirm(s, dir, d2Minhash(s, dir)).localCheckpoint(true)
     }
-  }
 
   /** d6: the production dedup pipeline END-TO-END as one gate operator —
     * d2 MinHash screen (sublinear candidate generation) → d4Confirm
@@ -625,28 +582,18 @@ object Dedup {
   def d6DedupPipeline(s: SparkSession, dir: String): DataFrame =
     dedupKeepList(s, dir, confirmedPairs(s, dir))
 
-  /** Memoized star-contraction membership over the confirmed-duplicate
-    * edges, keyed like [[confirmedPairs]]. One row per doc that appears
-    * in some non-trivial cluster — candidate-bounded (a subset of the
-    * confirmed-pair endpoints), NOT corpus-sized, so the checkpoint is
-    * cheap. Both d8 and c2 consume it; without memoization a gate/bench
-    * sweep runs the whole O(log² n)-round contraction loop once per
-    * consumer. On a real cluster this is the cluster-assignment table a
-    * corpus generation writes once. */
-  private val clusterCache = newMemoCache()
-  /** Spec hook: contraction executions (vs cache hits) in this JVM. */
-  private[graft] val clusterBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def clearClusterCache(): Unit =
-    clusterCache.synchronized(clusterCache.clear())
-
   /** (doc_id, component) for every doc in a confirmed-duplicate
-    * cluster — see [[clusterCache]]. */
-  def clusterMembership(s: SparkSession, dir: String): DataFrame = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    memoize(clusterCache, key) {
-      clusterBuildCount.incrementAndGet()
+    * cluster: the star-contraction membership over the confirmed-
+    * duplicate edges, memoized like [[confirmedPairs]]. One row per doc
+    * that appears in some non-trivial cluster — candidate-bounded (a
+    * subset of the confirmed-pair endpoints), NOT corpus-sized, so the
+    * checkpoint is cheap. Both d8 and c2 consume it; without
+    * memoization a gate/bench sweep runs the whole O(log² n)-round
+    * contraction loop once per consumer. On a real cluster this is the
+    * cluster-assignment table a corpus generation writes once. */
+  def clusterMembership(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.memo(s.sparkContext, "dedup.cluster",
+        Tables.fingerprint(s, dir, "documents")) {
       val edges = confirmedPairs(s, dir)
         .filter(col("jaccard") >= KeepMinJaccard)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -658,7 +605,6 @@ object Dedup {
         .select(col("id").as("doc_id"), col("component"))
         .localCheckpoint(true)
     }
-  }
 
   /** d8: duplicate CLUSTER ids — connected components over the same
     * confirmed-duplicate pairs d6 keeps from, assigning every document
@@ -771,49 +717,24 @@ object Dedup {
     * suite's ([[d9BenchmarksPath]]) distinct word-[[D9ShingleW]]-gram
     * shingles collected into a broadcast probe set
     * ([[graft.functions.SpanSet]]). The t8/t11/s3 offline-artifact
-    * pattern: built once per corpus GENERATION per JVM — keyed
-    * (applicationId, documents-table fingerprint) so a re-ingested
-    * corpus rebuilds and a fresh session never sees a dead
-    * SparkContext's Broadcast — then shipped once per executor. The
-    * collect is suite-sized (real benchmark suites are MBs against a
-    * 100 TB corpus), the same bound that lets d9 broadcast-join its
-    * inventory. Build runs while HOLDING the cache monitor (the
-    * memoize-under-lock tradeoff t11InventoryFor documents). */
-  private val d9InvCache =
-    new java.util.LinkedHashMap[String, D9Inv](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, D9Inv]): Boolean = size > 16
-    }
-
-  /** Spec hook: number of actual inventory builds in this JVM. */
-  private[graft] val d9InvBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def clearD9InvCache(): Unit =
-    d9InvCache.synchronized(d9InvCache.clear())
-
+    * pattern: built once per corpus generation per SparkContext, then
+    * shipped once per executor. The collect is suite-sized (real
+    * benchmark suites are MBs against a 100 TB corpus), the same bound
+    * that lets d9 broadcast-join its inventory. */
   def d9InventoryFor(s: SparkSession, dir: String): D9Inv = {
     graft.functions.GraftFunctions.register(s)
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    d9InvCache.synchronized {
-      val hit = d9InvCache.get(key)
-      if (hit != null) hit
-      else {
-        d9InvBuildCount.incrementAndGet()
-        val rows = s.read.parquet(d9BenchmarksPath(s, dir))
-          .withColumn("norm", TextOps.normText(col("prompt")))
-          .withColumn("toks", expr(TextOps.toksExpr))
-          .select(explode(
-            expr(s"array_distinct(word_shingles(toks, $D9ShingleW))"))
-            .as("shingle"))
-          .distinct().collect()
-        val set = new java.util.HashSet[String](rows.length * 2)
-        rows.foreach(r => set.add(r.getString(0)))
-        val v = s.sparkContext.broadcast(new graft.functions.SpanSet(set))
-        d9InvCache.put(key, v)
-        v
-      }
+    graft.Artifacts.memo(s.sparkContext, "dedup.d9Inv",
+        Tables.fingerprint(s, dir, "documents")) {
+      val rows = s.read.parquet(d9BenchmarksPath(s, dir))
+        .withColumn("norm", TextOps.normText(col("prompt")))
+        .withColumn("toks", expr(TextOps.toksExpr))
+        .select(explode(
+          expr(s"array_distinct(word_shingles(toks, $D9ShingleW))"))
+          .as("shingle"))
+        .distinct().collect()
+      val set = new java.util.HashSet[String](rows.length * 2)
+      rows.foreach(r => set.add(r.getString(0)))
+      s.sparkContext.broadcast(new graft.functions.SpanSet(set))
     }
   }
 
@@ -1115,7 +1036,7 @@ object Dedup {
       .localCheckpoint(true)
     // leased, not leaked: the returned verdict frame reads incGroups
     // lazily until the next d11Admit call on this session releases it
-    graft.CheckpointLease.swap(s, "dedup.d11admit", incGroups)
+    graft.Artifacts.lease(s, "dedup.d11admit", incGroups)
 
     // 1. exact duplicates of corpus content: every member drops
     val exactDup = incGroups.join(contents, col("ich") === col("ch"))
@@ -1717,7 +1638,7 @@ object Dedup {
     // lazily (ex re-explodes from d; cand reads indexed), so they stay
     // readable until the next d14 call on this session releases them —
     // a bench sweep previously pinned one generation PER RUN
-    graft.CheckpointLease.swap(s, "dedup.d14", d, indexed)
+    graft.Artifacts.lease(s, "dedup.d14", d, indexed)
     // the candidate join carries the 64-bit HASH of each rare shingle,
     // not the string (the q46 hashed-deletion-key argument, prescribed
     // by the r17 verdict): the index side is every df-capped shingle

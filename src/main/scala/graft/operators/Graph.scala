@@ -141,7 +141,7 @@ object Graph {
     // base (via nodes) and the converged edge set are read lazily by
     // `out` — leased until the next contraction on this session (the
     // d8/c2 consumer checkpoints its own memoized copy immediately)
-    graft.CheckpointLease.swap(
+    graft.Artifacts.lease(
       edges.sparkSession, "graph.cc", base, cur)
     (out, iter)
   }
@@ -319,7 +319,7 @@ object Graph {
       .releaseLocalCheckpoint(eo)
     // the FINAL vector is returned (read lazily by the caller) — lease
     // it: readable until the next pagerankRanks call on this session
-    graft.CheckpointLease.swap(trade.sparkSession, "graph.pagerank", ranks)
+    graft.Artifacts.lease(trade.sparkSession, "graph.pagerank", ranks)
     ranks
   }
 
@@ -517,7 +517,7 @@ object Graph {
     // the returned union reads them lazily until the next q49 call
     org.apache.spark.sql.graftbridge.GraftCheckpoints
       .releaseLocalCheckpoint(edges)
-    graft.CheckpointLease.swap(s, "graph.q49", levels.toSeq: _*)
+    graft.Artifacts.lease(s, "graph.q49", levels.toSeq: _*)
     levels.reduce(_ unionByName _)
       .select(when(col("node") % 2 === 0,
           concat(lit("c"), expr("node div 2")))
@@ -680,7 +680,7 @@ object Graph {
     }
     // the returned dist reads the LAST round's checkpoint lazily —
     // lease it (released by the next boundedSssp call on this session)
-    graft.CheckpointLease.swap(
+    graft.Artifacts.lease(
       edges.sparkSession, "graph.boundedSssp", prevRound)
     dist
   }

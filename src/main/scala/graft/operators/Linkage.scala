@@ -159,7 +159,7 @@ object Linkage {
       .localCheckpoint(true)
     // leased, not leaked: the returned frame reads this checkpoint
     // lazily, so it stays readable until the next q46 call releases it
-    graft.CheckpointLease.swap(s, "linkage.q46", cand)
+    graft.Artifacts.lease(s, "linkage.q46", cand)
     val best = cand
       .withColumn("dist", levenshtein(col("d_name"), col("c_name")))
       .filter(col("dist") <= FuzzyMaxDist)
@@ -243,7 +243,7 @@ object Linkage {
           Q53CutMinNames.toString).toLong) {
         val c = mcand0.localCheckpoint(true)
         // leased, not leaked: readable until the next q53 call
-        graft.CheckpointLease.swap(s, "linkage.q53", c)
+        graft.Artifacts.lease(s, "linkage.q53", c)
         c
       } else mcand0
     val matches = mcand

@@ -195,7 +195,7 @@ object Partitioned {
       val out = q42Plan(s, dir).localCheckpoint(true)
       // leased, not leaked: the result checkpoint stays readable until
       // the next q42 call on this session releases it
-      graft.CheckpointLease.swap(s, "partitioned.q42", out)
+      graft.Artifacts.lease(s, "partitioned.q42", out)
       out
     }
 

@@ -602,7 +602,7 @@ object Relational {
     * histogram aggregation ran TWICE (r17's q33/q39 plans:
     * two `Scan parquet` of lineitem — the measured regression), so a
     * non-checkpointed input is cut here and leased
-    * ([[graft.CheckpointLease]]: readable until the next rankedHist
+    * ([[graft.Artifacts.lease]]: readable until the next rankedHist
     * call on the session). All integer sums — bit-identical to the
     * serial window, which the DuckDB oracles keep (hash-equality
     * proves two-phase ≡ global, the t17/c27 argument). */
@@ -619,7 +619,7 @@ object Relational {
       if (materialized) hist
       else {
         val cut = hist.localCheckpoint(true)
-        graft.CheckpointLease.swap(
+        graft.Artifacts.lease(
           hist.sparkSession, "relational.rankedHist", cut)
         cut
       }
@@ -777,7 +777,7 @@ object Relational {
       .releaseLocalCheckpoint(hist) // med + devHist were its only readers
     // med/devHist are read lazily by the returned frame — leased until
     // the next q48 call on this session (previously pinned per run)
-    graft.CheckpointLease.swap(s, "relational.q48", med, devHist)
+    graft.Artifacts.lease(s, "relational.q48", med, devHist)
     val mad = medianOf(devHist, "dev").withColumnRenamed("m", "mad_cents")
     devHist
       .join(broadcast(mad), Seq("l_returnflag"))

@@ -291,7 +291,7 @@ object Similarity {
     * Determinism caveat (documented, deliberate): per-cell float sums
     * reduce in partition order, so trained floats can differ across
     * runs at the ULP level — unlike the bit-deterministic driver
-    * path. The artifact store ([[centroidsKeyed]]: fingerprint-keyed,
+    * path. The artifact store ([[storedFloats]]: fingerprint-keyed,
     * checksummed) pins ONE training per corpus, and every generated
     * oracle inlines from that same artifact, so the correctness gate
     * stays exact; only cross-JVM retrains of the same corpus may
@@ -356,56 +356,16 @@ object Similarity {
     * nprobe/cells of the corpus. */
   val IvfProbes = 10
 
-  /** Per-corpus centroid store: the quantizer is deterministic for a
-    * given corpus, so it trains ONCE and every later s3 call (or bench
-    * repeat) reuses the literals with zero driver-side
-    * count/collect/Lloyd work — the "train offline, persist, reuse"
-    * production shape. Two layers, BOTH keyed by a metadata-only
-    * corpus fingerprint (file names + lengths + mtimes of the
-    * embeddings table — one FS listing per call, no data scan; that
-    * listing is also why a re-ingested corpus at the same path can
-    * never serve stale centroids):
-    *  - a JVM-lifetime map (hot path — the listing is the only IO);
-    *  - a parquet ARTIFACT under `spark.graft.centroids.dir` (default
-    *    target/graft-centroids — repo-local, NOT the world-shared
-    *    java.io.tmpdir where another user of a multi-tenant host could
-    *    pre-create/poison the path), so separate JVMs (verify, bench,
-    *    tests) share one training. Loaded artifacts are validated
-    *    against an embedded content checksum before being trusted —
-    *    a torn or tampered artifact fails the check and retrains.
-    *    Best-effort: an unreadable/unwritable artifact dir degrades to
-    *    in-JVM training. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-  /** Spec hook: how many actual k-means trainings (corpus count +
-    * sample collect + Lloyd) have run in this JVM. */
-  private[graft] val kmeansTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
   /** Fingerprint of the most recently requested corpus — keys the
     * generated s3 oracle (Verify runs every query, THEN dumps
     * oracleSql, so by dump time this is the gate's corpus). */
   @volatile private[graft] var lastCorpusKey: Option[String] = None
-
-  private[graft] def clearCentroidCache(): Unit = {
-    centroidCache.clear(); lastCorpusKey = None
-  }
 
   /** Metadata-only fingerprint of the embeddings table —
     * [[graft.Tables.fingerprint]]: one FS listing, no data read. */
   private def corpusFingerprint(s: SparkSession, dir: String): String =
     graft.Tables.fingerprint(s, dir, "embeddings")
 
-  private def artifactPath(s: SparkSession, key: String): String = {
-    val base = s.conf.get("spark.graft.centroids.dir",
-      "target/graft-centroids")
-    s"$base/$key"
-  }
-
-  /** Content checksum over the centroid floats (IEEE-754 bits in cell
-    * then component order) — stored inside the artifact and re-derived
-    * from the loaded rows, so a torn write or out-of-band edit cannot
-    * silently feed wrong centroids to both the query and its generated
-    * oracle. */
   /** MD5 over IEEE-754 float bits in iteration order — the one
     * checksum both artifact formats (s3 centroids, s6 codebooks)
     * embed and re-derive on load. */
@@ -421,43 +381,61 @@ object Similarity {
   private def centroidSig(cent: Array[Array[Float]]): String =
     floatSig(cent.iterator.flatten)
 
-  /** Cache/artifact lookup for a quantizer with `cells` centroids
-    * under `key` — the shared two-layer (JVM map + checksummed
-    * parquet) store behind [[centroidsFor]] and [[s12CentroidsFor]]. */
-  private def centroidsKeyed(s: SparkSession, key: String,
-      cells: Int, dir: String): Array[Array[Float]] =
-    centroidCache.computeIfAbsent(key, k => {
-      import s.implicits._
-      val path = artifactPath(s, k)
-      val loaded: Option[Array[Array[Float]]] =
-        try {
-          val rows = s.read.parquet(path)
-            .as[(Int, Array[Float], String)].collect()
-          val cent = rows.sortBy(_._1).map(_._2)
-          // trust the artifact only if complete AND its embedded
-          // checksum matches what the loaded floats re-derive to
-          val expected = centroidSig(cent)
-          if (rows.length == cells && rows.forall(_._3 == expected))
-            Some(cent)
-          else None
-        } catch { case _: Exception => None }
+  /** The two-layer store behind the trained quantizers (s3/s12
+    * centroids, s6 codebooks): they are deterministic for a corpus, so
+    * each trains ONCE and every later call reuses it with zero
+    * driver-side count/collect/Lloyd work — the "train offline,
+    * persist, reuse" production shape. Layer one is a JVM-owned
+    * [[graft.Artifacts]] entry of `kind` keyed by the corpus
+    * fingerprint. Layer two is a parquet artifact at `base/key` (a
+    * repo-local default, NOT the world-shared java.io.tmpdir another
+    * user could pre-create), so separate JVMs (verify, bench, tests)
+    * share one training. `load` trusts an artifact only if it is
+    * complete AND its embedded [[floatSig]] matches what the loaded
+    * floats re-derive to: a torn or tampered artifact trains again
+    * instead of serving wrong floats to both the query and its
+    * generated oracle. Trainings count under `kind.train`. Best-effort:
+    * an unreadable/unwritable artifact dir degrades to in-JVM
+    * training. */
+  private def storedFloats[T](s: SparkSession, kind: String, key: String,
+      base: String)(load: DataFrame => Option[T], save: T => DataFrame)(
+      train: => T): T =
+    graft.Artifacts.memo(graft.Artifacts.Jvm, kind, key) {
+      val path = s"$base/$key"
+      val loaded =
+        try load(s.read.parquet(path)) catch { case _: Exception => None }
       loaded.getOrElse {
-        kmeansTrainCount.incrementAndGet()
-        val trained = kmeansCentroids(s, dir, cells)
-        val sig = centroidSig(trained)
-        try trained.zipWithIndex.map { case (v, i) => (i, v, sig) }.toSeq
-          .toDS().toDF("cid", "embedding", "sig")
-          .coalesce(1).write.mode("overwrite").parquet(path)
-        catch { case _: Exception => () } // artifact is best-effort
-        trained
+        graft.Artifacts.builds(s"$kind.train").incrementAndGet()
+        val v = train
+        try save(v).coalesce(1).write.mode("overwrite").parquet(path)
+        catch { case _: Exception => () } // the artifact is best-effort
+        v
       }
-    })
+    }
+
+  /** The quantizer with `cells` centroids stored under `key` (artifact
+    * dir `spark.graft.centroids.dir`) — shared by [[centroidsFor]] and
+    * [[s12CentroidsFor]]. */
+  private def centroidsKeyed(s: SparkSession, key: String,
+      cells: Int, dir: String): Array[Array[Float]] = {
+    import s.implicits._
+    storedFloats[Array[Array[Float]]](s, "similarity.centroids", key,
+        s.conf.get("spark.graft.centroids.dir", "target/graft-centroids"))(
+      load = df => {
+        val rows = df.as[(Int, Array[Float], String)].collect()
+        val cent = rows.sortBy(_._1).map(_._2)
+        val sig = centroidSig(cent)
+        if (rows.length == cells && rows.forall(_._3 == sig)) Some(cent)
+        else None
+      },
+      save = cent => {
+        val sig = centroidSig(cent)
+        cent.zipWithIndex.map { case (v, i) => (i, v, sig) }.toSeq
+          .toDF("cid", "embedding", "sig")
+      })(kmeansCentroids(s, dir, cells))
+  }
 
   private[graft] def centroidsFor(s: SparkSession, dir: String): Array[Array[Float]] = {
-    // cache key = corpus FINGERPRINT, not dir: a re-ingested corpus at
-    // the same path changes the fingerprint (file lengths/mtimes) and
-    // misses both layers, so a long-lived JVM can never serve
-    // centroids trained on a previous corpus generation
     val key = corpusFingerprint(s, dir)
     val c = centroidsKeyed(s, key, IvfCells, dir)
     lastCorpusKey = Some(key)
@@ -475,17 +453,14 @@ object Similarity {
   private[graft] def s12CellsFor(n: Long): Int =
     math.max(IvfCells, ((n + S12Occupancy - 1) / S12Occupancy).toInt)
 
-  /** Per-corpus embeddings row count, keyed by the corpus FINGERPRINT
+  /** Per-corpus embeddings row count, keyed by the corpus fingerprint
     * (one FS listing, no scan — re-ingest invalidates). s12 needs the
     * count twice per call (cell scaling + the broadcast-vs-shuffle
-    * join decision); without the cache every invocation paid an extra
+    * join decision); without the memo every invocation paid an extra
     * count() job on the corpus (r14 ADVICE). */
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def embeddingsCount(s: SparkSession, dir: String): Long =
-    embCountCache.computeIfAbsent(corpusFingerprint(s, dir),
-      _ => Tables.embeddings(s, dir).count()).longValue
+    graft.Artifacts.memo(graft.Artifacts.Jvm, "similarity.embCount",
+      corpusFingerprint(s, dir))(Tables.embeddings(s, dir).count())
 
   /** s12 coarse level: ~√K coarse buckets over the fine centroids
     * (the FAISS-IMI shape) and the constant number of coarse buckets
@@ -501,14 +476,12 @@ object Similarity {
   private[graft] def s12CoarseCellsFor(k: Int): Int =
     math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** coarse centroids + fine→coarse assignment, cached by the fine
+  /** coarse centroids + fine→coarse assignment, memoized by the fine
     * set's content signature (derivation is deterministic). */
-  private val coarseCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Float]], Array[Int])]()
-
   private[graft] def s12CoarseFor(
       fine: Array[Array[Float]]): (Array[Array[Float]], Array[Int]) =
-    coarseCache.computeIfAbsent(centroidSig(fine), _ => trainCoarse(fine))
+    graft.Artifacts.memo(graft.Artifacts.Jvm, "similarity.coarse",
+      centroidSig(fine))(trainCoarse(fine))
 
   /** Deterministic driver-side Lloyd over the FINE CENTROIDS (not the
     * corpus — the fine set is already the corpus summary, ≤ n/128
@@ -948,6 +921,17 @@ object Similarity {
   val S14Beam = 32
   val S14Hops = 4
 
+  /** Serializes [[graphIndexPath]]'s check-then-build per artifact
+    * path: two threads of one JVM (concurrent s14 search + s15
+    * admission, parallel suites) must not race two overlapping
+    * `mode("overwrite")` jobs into the same layer directory — the
+    * single-driver trade the in-memory edge memo used to provide
+    * before the build moved behind the persisted artifact
+    * (r17 review). Cross-JVM writers remain the lake's
+    * one-writer-per-generation contract, as for s8/d11. */
+  private val graphBuildLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
   /** The persisted kNN-GRAPH artifact — the s8 inverted-list contract
     * applied to the graph family: production builds the graph ONCE per
     * corpus generation, persists it as a lake table, and every search
@@ -975,17 +959,6 @@ object Similarity {
     *    vector's merged candidate list without recomputing its old
     *    candidates (top-k of a disjoint union = top-k of the merged
     *    top-k lists under the shared total order). */
-  /** Serializes [[graphIndexPath]]'s check-then-build per artifact
-    * path: two threads of one JVM (concurrent s14 search + s15
-    * admission, parallel suites) must not race two overlapping
-    * `mode("overwrite")` jobs into the same layer directory — the
-    * single-driver trade the edgeCache's computeIfAbsent used to
-    * provide before the build moved behind the persisted artifact
-    * (r17 review). Cross-JVM writers remain the lake's
-    * one-writer-per-generation contract, as for s8/d11. */
-  private val graphBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   private[graft] def graphIndexPath(s: SparkSession, dir: String): String = {
     graft.functions.GraftFunctions.register(s)
     val sig = centroidSig(s12CentroidsFor(s, dir)).take(8)
@@ -1044,28 +1017,15 @@ object Similarity {
     * is the artifact PATH — which embeds the centroid signature, so a
     * mid-application quantizer retrain can never serve edges from the
     * old geometry (r16 ADVICE). */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def clearEdgeCache(): Unit = {
-    // release the checkpoint blocks too — a cleared entry is
-    // unreachable, and its executor storage would otherwise stay
-    // pinned for the application lifetime (r16 ADVICE)
-    edgeCache.values.forEach(df => org.apache.spark.sql.graftbridge
-      .GraftCheckpoints.releaseLocalCheckpoint(df))
-    edgeCache.clear()
-  }
-
   private[graft] def s12SymEdges(s: SparkSession, dir: String): DataFrame = {
     val path = graphIndexPath(s, dir)
-    edgeCache.computeIfAbsent(
-      s.sparkContext.applicationId + "/" + path,
-      _ => {
-        val knn = s.read.parquet(s"$path/edges")
-          .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        knn.unionByName(
-            knn.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct().localCheckpoint(true)
-      })
+    graft.Artifacts.memo(s.sparkContext, "similarity.edges", path) {
+      val knn = s.read.parquet(s"$path/edges")
+        .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
+      knn.unionByName(
+          knn.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct().localCheckpoint(true)
+    }
   }
 
   /** s14: GRAPH ANN SEARCH — greedy beam search over the s12 kNN
@@ -1210,7 +1170,7 @@ object Similarity {
     }
     // the FINAL beam is read lazily by the returned frame — leased
     // until the next s14 call on this session
-    graft.CheckpointLease.swap(s, "similarity.s14", beam)
+    graft.Artifacts.lease(s, "similarity.s14", beam)
     beam.filter(col("query_id") =!= col("node"))
       .withColumn("rnk", row_number().over(wBeam))
       .filter(col("rnk") <= TopK)
@@ -1253,7 +1213,7 @@ object Similarity {
     *     (one broadcast anti-join on the affected-id list).
     *
     * Admission work is ∝ shard + affected (both corpus-independent at
-    * fixed shard size — Probe's s15 section measures it flat 1×→10×);
+    * fixed shard size — measured flat 1×→10×, SURVEY.md);
     * the only corpus-sized term is the OUTPUT relation itself, which
     * production writes as the next edge-table generation. Shard: the
     * s8 increment (every [[S8Mod]]th vector re-keyed past max id,
@@ -1546,7 +1506,7 @@ object Similarity {
       .releaseLocalCheckpoint(cand)
     org.apache.spark.sql.graftbridge.GraftCheckpoints
       .releaseLocalCheckpoint(pairs)
-    graft.CheckpointLease.swap(s, "similarity.s10", sel)
+    graft.Artifacts.lease(s, "similarity.s10", sel)
     sel.orderBy("query_id", "step")
   }
 
@@ -2720,58 +2680,38 @@ object Similarity {
     } -> n
   }
 
-  /** Per-corpus PQ codebook store — the same two-layer
-    * fingerprint-keyed cache as [[centroidsFor]] (JVM map + checksummed
-    * parquet artifact under `spark.graft.pq.dir`), so training runs
-    * once per corpus generation and Verify/bench/tests share it. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Array[Float]]], Long)]()
-  /** Spec hook: actual PQ trainings run in this JVM. */
-  private[graft] val pqTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private[graft] var lastPqKey: Option[String] = None
-
-  private[graft] def clearPqCache(): Unit = {
-    pqCache.clear(); lastPqKey = None
-  }
 
   private def pqSig(cb: Array[Array[Array[Float]]]): String =
     floatSig(cb.iterator.flatMap(_.iterator.flatten))
 
+  /** Per-corpus PQ codebooks and corpus size, stored like the
+    * centroids ([[storedFloats]], artifact dir `spark.graft.pq.dir`). */
   private[graft] def pqFor(s: SparkSession, dir: String): (Array[Array[Array[Float]]], Long) = {
-    val key = graft.Tables.fingerprint(s, dir, "embeddings")
-    val cb = pqCache.computeIfAbsent(key, k => {
-      import s.implicits._
-      val base = s.conf.get("spark.graft.pq.dir", "target/graft-pq")
-      val path = s"$base/$k"
-      val loaded: Option[(Array[Array[Array[Float]]], Long)] =
-        try {
-          val rows = s.read.parquet(path)
-            .as[(Int, Int, Array[Float], String, Long)].collect()
-          val cb0 = Array.tabulate(PqM, PqK)((m, c) =>
-            rows.find(r => r._1 == m && r._2 == c).map(_._3).orNull)
-          val expected = if (cb0.exists(_.exists(_ == null))) None
-            else Some(pqSig(cb0))
-          if (rows.length == PqM * PqK &&
-              expected.exists(e => rows.forall(_._4 == e)) &&
-              rows.map(_._5).distinct.length == 1)
-            Some((cb0, rows.head._5))
-          else None
-        } catch { case _: Exception => None }
-      loaded.getOrElse {
-        pqTrainCount.incrementAndGet()
-        val (trained, n) = pqTrainCodebooks(s, dir)
+    import s.implicits._
+    val key = corpusFingerprint(s, dir)
+    val cb = storedFloats[(Array[Array[Array[Float]]], Long)](
+        s, "similarity.pq", key,
+        s.conf.get("spark.graft.pq.dir", "target/graft-pq"))(
+      load = df => {
+        val rows = df.as[(Int, Int, Array[Float], String, Long)].collect()
+        val cb0 = Array.tabulate(PqM, PqK)((m, c) =>
+          rows.find(r => r._1 == m && r._2 == c).map(_._3).orNull)
+        val expected = if (cb0.exists(_.exists(_ == null))) None
+          else Some(pqSig(cb0))
+        if (rows.length == PqM * PqK &&
+            expected.exists(e => rows.forall(_._4 == e)) &&
+            rows.map(_._5).distinct.length == 1)
+          Some((cb0, rows.head._5))
+        else None
+      },
+      save = { case (trained, n) =>
         val sig = pqSig(trained)
-        try {
-          val flat = for {
-            m <- 0 until PqM; c <- 0 until PqK
-          } yield (m, c, trained(m)(c), sig, n)
-          flat.toDS().toDF("m", "cid", "cw", "sig", "n")
-            .coalesce(1).write.mode("overwrite").parquet(path)
-        } catch { case _: Exception => () }
-        (trained, n)
-      }
-    })
+        (for {
+          m <- 0 until PqM; c <- 0 until PqK
+        } yield (m, c, trained(m)(c), sig, n))
+          .toDF("m", "cid", "cw", "sig", "n")
+      })(pqTrainCodebooks(s, dir))
     lastPqKey = Some(key)
     cb
   }
@@ -2933,32 +2873,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "adist")
 
     pqRerank(s, dir, shortlist)
-  }
-
-  /** Probe hook: the s6 pipeline cut at each stage boundary, for
-    * per-stage timing at scale (graft.Probe `s6` section). */
-  private[graft] def s6Stages(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    graft.functions.GraftFunctions.register(s)
-    val (cb, nCorpus) = pqFor(s, dir)
-    val shortDepth = pqShortlistFor(nCorpus)
-    val nv = pqNv(s, dir)
-    val cand = nv.select(col("vec_id").as("neighbor_id"), pqCodesCol(cb))
-    val q = nv.filter(col("vec_id") < NumQueries)
-      .select((col("vec_id").as("query_id") +: pqQtabCols(cb)): _*)
-    val joined = cand
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", pqAdistExpr)
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    val shortlist = joined
-      .withColumn("arnk", row_number().over(wAdc))
-      .filter(col("arnk") <= shortDepth)
-      .select("query_id", "neighbor_id", "adist")
-    Seq(
-      "encode" -> cand,
-      "adc_join" -> joined.select("query_id", "neighbor_id", "adist"),
-      "shortlist" -> shortlist,
-      "full" -> pqRerank(s, dir, shortlist))
   }
 
   /** s7: IVF-PQ — the composition both families exist FOR (FAISS's
@@ -3468,27 +3382,24 @@ object Similarity {
     * different corpus) must not quietly shrink the gate. Callers that
     * know the corpus should prefer [[oracleFor]]. */
   def oracle: Map[String, String] = {
-    val cached = lastCorpusKey.flatMap(k => Option(centroidCache.get(k)))
-    val pqCached = lastPqKey.flatMap(k => Option(pqCache.get(k)))
-    (cached, pqCached) match {
-      case (Some(c), Some(p)) => staticOracle +
+    import graft.Artifacts.{Jvm, peek}
+    def centroids(key: Option[String]) =
+      key.flatMap(peek[Array[Array[Float]]](Jvm, "similarity.centroids", _))
+    val pqCached = lastPqKey.flatMap(
+      peek[(Array[Array[Array[Float]]], Long)](Jvm, "similarity.pq", _))
+    (centroids(lastCorpusKey), pqCached) match {
+      case (Some(c), Some(p)) =>
+        // the s12 quantizer shares s3's entry whenever its scaled cell
+        // count is 16 (every gate corpus); a corpus where they differ
+        // has necessarily RUN s12 (that is how a dump is taken), so
+        // lastS12Key resolves — fall back to c otherwise
+        val c12 = centroids(lastS12Key).getOrElse(c)
+        staticOracle +
         ("s3_ann_ivf" -> s3OracleSql(c)) +
-        // the s12 quantizer shares s3's cache entry whenever its
-        // scaled cell count is 16 (every gate corpus); a corpus where
-        // they differ has necessarily RUN s12 (that is how a dump is
-        // taken), so lastS12Key resolves — fall back to c otherwise
-        ("s12_knn_graph" -> s12OracleFor(
-          lastS12Key.flatMap(k => Option(centroidCache.get(k)))
-            .getOrElse(c))) +
-        ("s14_ann_graph" -> s14OracleFor(
-          lastS12Key.flatMap(k => Option(centroidCache.get(k)))
-            .getOrElse(c))) +
-        ("s15_graph_admit" -> s15OracleFor(
-          lastS12Key.flatMap(k => Option(centroidCache.get(k)))
-            .getOrElse(c))) +
-        ("s18_graph_communities" -> s18OracleFor(
-          lastS12Key.flatMap(k => Option(centroidCache.get(k)))
-            .getOrElse(c))) +
+        ("s12_knn_graph" -> s12OracleFor(c12)) +
+        ("s14_ann_graph" -> s14OracleFor(c12)) +
+        ("s15_graph_admit" -> s15OracleFor(c12)) +
+        ("s18_graph_communities" -> s18OracleFor(c12)) +
         ("s9_ann_filtered" -> s9OracleSql(c)) +
         ("s17_range_search" -> s17OracleSql(c)) +
         ("d10_semdedup" -> d10OracleSql(c)) +

@@ -388,36 +388,6 @@ object TextAnalysis {
   private type T8Model =
     org.apache.spark.broadcast.Broadcast[graft.functions.BigramModel]
 
-  /** Entries kept in [[t8Cache]] — same bound and rationale as
-    * Dedup.MemoMaxEntries (the corpora a session actually alternates
-    * between; evicted entries' broadcasts are reclaimed by the
-    * ContextCleaner once unreachable). */
-  private val T8MaxEntries = 8
-
-  /** Per-corpus trained bigram model (the s3-centroids pattern: the
-    * offline-train artifact computes once per corpus GENERATION per JVM
-    * and is broadcast once per executor). Keyed like the Dedup memo
-    * caches and s3's centroids — (applicationId, documents-table
-    * fingerprint), NOT the raw dir string — so a re-ingested corpus at
-    * the same path changes the fingerprint and retrains (a long-lived
-    * JVM can never score against a previous generation's model), and a
-    * fresh session after a stopped one can never be served a Broadcast
-    * belonging to a dead SparkContext. Access-order LRU; all access
-    * synchronized on the map. */
-  private val t8Cache =
-    new java.util.LinkedHashMap[String, T8Model](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, T8Model]): Boolean =
-        size > T8MaxEntries
-    }
-
-  /** Spec hook: number of actual model trainings in this JVM. */
-  private[graft] val t8TrainCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def clearT8Cache(): Unit =
-    t8Cache.synchronized(t8Cache.clear())
-
   /** TRAIN: one corpus pass — explode char bigrams, map-side-combinable
     * count keyed by bigram (alphabet²-bounded output), collect the tiny
     * table, broadcast it. The collect is the once-per-corpus-generation
@@ -426,44 +396,29 @@ object TextAnalysis {
     * table outgrew a broadcast the fallback is the broadcast-join
     * spelling of the score pass ([[t8CharlmFilterJoinSpelling]],
     * spec-pinned equivalent) — not needed for any natural-language
-    * charset.
-    *
-    * Training (a full Spark job) runs while HOLDING the cache monitor —
-    * the same deliberate single-driver tradeoff Dedup.memoize
-    * documents: a duplicate concurrent build of the same model would
-    * cost more than any lock wait, and `synchronized` is reentrant
-    * (unlike the previous computeIfAbsent spelling, which forbids
-    * reentrant mapping attempts outright). */
-  private[graft] def t8ModelFor(s: SparkSession, dir: String): T8Model = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    t8Cache.synchronized {
-      val hit = t8Cache.get(key)
-      if (hit != null) hit
-      else {
-        t8TrainCount.incrementAndGet()
-        graft.functions.GraftFunctions.register(s)
-        val rows = Tables.documentsSpread(s, dir)
-          .withColumn("norm", t8PlantedNorm)
-          .select(explode(expr("char_shingles(norm, 2)")).as("b"))
-          .groupBy("b").agg(count(lit(1)).as("c"))
-          .collect()
-        val m = new java.util.HashMap[String, java.lang.Long](rows.length * 2)
-        var total = 0L
-        rows.foreach { r =>
-          val c = r.getLong(1)
-          m.put(r.getString(0), c)
-          total += c
-        }
-        // precompute the frequent set driver-side (≤ T8RareDen entries)
-        // so executors probe a bitset, not a String-keyed HashMap
-        val v = s.sparkContext.broadcast(
-          new graft.functions.BigramModel(m, total, T8RareDen))
-        t8Cache.put(key, v)
-        v
+    * charset. Built once per corpus generation per SparkContext
+    * ([[graft.Artifacts]] kind `text.t8`). */
+  private[graft] def t8ModelFor(s: SparkSession, dir: String): T8Model =
+    graft.Artifacts.memo(s.sparkContext, "text.t8",
+        Tables.fingerprint(s, dir, "documents")) {
+      graft.functions.GraftFunctions.register(s)
+      val rows = Tables.documentsSpread(s, dir)
+        .withColumn("norm", t8PlantedNorm)
+        .select(explode(expr("char_shingles(norm, 2)")).as("b"))
+        .groupBy("b").agg(count(lit(1)).as("c"))
+        .collect()
+      val m = new java.util.HashMap[String, java.lang.Long](rows.length * 2)
+      var total = 0L
+      rows.foreach { r =>
+        val c = r.getLong(1)
+        m.put(r.getString(0), c)
+        total += c
       }
+      // precompute the frequent set driver-side (≤ T8RareDen entries)
+      // so executors probe a bitset, not a String-keyed HashMap
+      s.sparkContext.broadcast(
+        new graft.functions.BigramModel(m, total, T8RareDen))
     }
-  }
 
   def t8CharlmFilter(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -787,54 +742,25 @@ object TextAnalysis {
   private type T11Inv =
     org.apache.spark.broadcast.Broadcast[graft.functions.SpanSet]
 
-  /** Per-corpus frequent-span inventory for t11 — the t8/s3 offline-
-    * artifact pattern: built once per corpus GENERATION per JVM,
-    * broadcast once per executor. Keyed (applicationId, documents-table
-    * fingerprint) so a re-ingested corpus at the same path rebuilds and
-    * a fresh session never sees a dead SparkContext's Broadcast.
-    * Access-order LRU bounded like [[t8Cache]]. */
-  private val t11Cache =
-    new java.util.LinkedHashMap[String, T11Inv](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, T11Inv]): Boolean =
-        size > T8MaxEntries
-    }
-
-  /** Spec hook: number of actual inventory builds in this JVM. */
-  private[graft] val t11BuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def clearT11Cache(): Unit =
-    t11Cache.synchronized(t11Cache.clear())
+  /** Spec/bench hook: t11 inventory builds, the registry's counter. */
+  private[graft] val t11BuildCount = graft.Artifacts.builds("text.t11")
 
   /** BUILD: run t10's frequent-span subplan (per-doc-distinct spans →
     * one combinable count shuffle → df floor), collect the pigeonhole-
     * bounded Zipf head, broadcast it as a probe set. The collect is the
-    * once-per-corpus-generation artifact build (s3-centroids altitude).
-    * Runs while HOLDING the cache monitor — the same deliberate
-    * single-driver tradeoff [[t8ModelFor]] and Dedup.memoize document:
-    * a duplicate concurrent build costs more than any lock wait, and
-    * `synchronized` is reentrant. */
-  private[graft] def t11InventoryFor(s: SparkSession, dir: String): T11Inv = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    t11Cache.synchronized {
-      val hit = t11Cache.get(key)
-      if (hit != null) hit
-      else {
-        t11BuildCount.incrementAndGet()
-        val spans = t10SpanFrame(s, dir)
-        val pairs =
-          spans.select(col("doc_id"), explode(col("spans")).as("span"))
-        val rows = t10FreqSpans(pairs).collect()
-        val set = new java.util.HashSet[String](rows.length * 2)
-        rows.foreach(r => set.add(r.getString(0)))
-        val v = s.sparkContext.broadcast(new graft.functions.SpanSet(set))
-        t11Cache.put(key, v)
-        v
-      }
+    * once-per-corpus-generation artifact build (s3-centroids altitude),
+    * held per SparkContext like [[t8ModelFor]]. */
+  private[graft] def t11InventoryFor(s: SparkSession, dir: String): T11Inv =
+    graft.Artifacts.memo(s.sparkContext, "text.t11",
+        Tables.fingerprint(s, dir, "documents")) {
+      val spans = t10SpanFrame(s, dir)
+      val pairs =
+        spans.select(col("doc_id"), explode(col("spans")).as("span"))
+      val rows = t10FreqSpans(pairs).collect()
+      val set = new java.util.HashSet[String](rows.length * 2)
+      rows.foreach(r => set.add(r.getString(0)))
+      s.sparkContext.broadcast(new graft.functions.SpanSet(set))
     }
-  }
 
   /** t11: boilerplate-span SCRUBBING — the rewrite half of the C4/CCNet
     * line-dedup rule that t10 only scores: excise from every document
@@ -1201,7 +1127,7 @@ object TextAnalysis {
     // corpus-token-sized block set stays pinned until the NEXT t16
     // call on this session releases it (r17 advice #3 — previously it
     // pinned one generation per invocation for the application life)
-    graft.CheckpointLease.swap(s, "text.t16", tf)
+    graft.Artifacts.lease(s, "text.t16", tf)
     val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val nd = docs.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1361,24 +1287,13 @@ object TextAnalysis {
   def t17CcnetPpl(s: SparkSession, dir: String): DataFrame =
     t17Terciles(s, t17NllKernel(s, dir))
 
-  /** Per-corpus trained [[graft.functions.CcnetLpGrid]] — the t8Model
-    * pattern: keyed (applicationId, documents fingerprint), access-order
-    * LRU, training holds the monitor (duplicate concurrent builds cost
-    * more than the lock wait). The collect is bounded by [[T17Buckets]]²
-    * observed pairs (≤ 1M rows however large the corpus — the hashing
-    * trick IS the bound), and the broadcast grid is 4 MB. */
+  /** Per-corpus trained [[graft.functions.CcnetLpGrid]], held per
+    * SparkContext like the t8 model. The collect is bounded by
+    * [[T17Buckets]]² observed pairs (≤ 1M rows however large the
+    * corpus — the hashing trick IS the bound), and the broadcast grid
+    * is 4 MB. */
   private type T17Model =
     org.apache.spark.broadcast.Broadcast[graft.functions.CcnetLpGrid]
-  private val t17Cache =
-    new java.util.LinkedHashMap[String, T17Model](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, T17Model]): Boolean = size > 8
-    }
-  /** Spec hook: number of actual grid trainings in this JVM. */
-  private[graft] val t17TrainCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def clearT17Cache(): Unit =
-    t17Cache.synchronized(t17Cache.clear())
 
   /** The per-doc bigram-key frame: ONE md5 per token inside the
     * codegen'd [[graft.functions.T17BigramKeys]] walk (the join
@@ -1401,25 +1316,19 @@ object TextAnalysis {
     * on a cache hit the query is a single corpus scan. TextAnalysisSpec
     * pins this bit-identical to [[t17NllJoinSpelling]] corpus-wide. */
   private[graft] def t17NllKernel(s: SparkSession, dir: String): DataFrame = {
-    val key = s.sparkContext.applicationId + "/" +
-      Tables.fingerprint(s, dir, "documents")
-    val (model, keys) = t17Cache.synchronized {
-      val hit = t17Cache.get(key)
-      if (hit != null) (hit, t17Keys(s, dir))
-      else {
-        t17TrainCount.incrementAndGet()
-        // two consumers on a miss (pair counts + scoring): cut the
-        // subtree so the md5 walk runs once (the d8/q36 reuse rule)
-        val k = t17Keys(s, dir).localCheckpoint(true)
-        val pairs = k.select(explode(col("ks")).as("k"))
-          .groupBy("k").agg(count(lit(1)).as("c"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        val m = s.sparkContext.broadcast(
-          graft.functions.CcnetLpGrid.build(pairs, T17Buckets))
-        t17Cache.put(key, m)
-        (m, k)
-      }
+    var trainedOn: DataFrame = null
+    val model: T17Model = graft.Artifacts.memo(s.sparkContext, "text.t17",
+        Tables.fingerprint(s, dir, "documents")) {
+      // two consumers on a miss (pair counts + scoring): cut the
+      // subtree so the md5 walk runs once (the d8/q36 reuse rule)
+      trainedOn = t17Keys(s, dir).localCheckpoint(true)
+      val pairs = trainedOn.select(explode(col("ks")).as("k"))
+        .groupBy("k").agg(count(lit(1)).as("c"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      s.sparkContext.broadcast(
+        graft.functions.CcnetLpGrid.build(pairs, T17Buckets))
     }
+    val keys = Option(trainedOn).getOrElse(t17Keys(s, dir))
     val st = org.apache.spark.sql.graftbridge.GraftColumns.column(
       graft.functions.T17Nll(
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("ks"),

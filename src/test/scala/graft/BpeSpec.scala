@@ -133,11 +133,12 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("merges train once per corpus and piece counts shrink monotonically") {
-    Bpe.clearCache()
-    val before = Bpe.trainCount.get()
+    Artifacts.clear("bpe.merges")
+    val before = Artifacts.builds("bpe.merges").get()
     Bpe.c10BpeMerges(s, dir).collect()
     val rows = Bpe.c10BpeTokenize(s, dir).collect()
-    assert(Bpe.trainCount.get() == before + 1, "second call must cache-hit")
+    assert(Artifacts.builds("bpe.merges").get() == before + 1,
+      "second call must cache-hit")
     rows.foreach { r =>
       val (nw, nc, np) = (r.getInt(1), r.getInt(2), r.getInt(3))
       assert(np <= nc, "merging can only reduce pieces")

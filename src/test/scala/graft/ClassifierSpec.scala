@@ -38,11 +38,11 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("t15 model is a fingerprint-keyed once-per-corpus artifact, " +
       "bounded by the bucket count") {
-    Classifier.clearCache()
-    val before = Classifier.trainCount.get()
+    Artifacts.clear("classifier.model")
+    val before = Artifacts.builds("classifier.model").get()
     Classifier.t15ClfScores(s, dir).collect()
     Classifier.t15ClfScores(s, dir).collect()
-    assert(Classifier.trainCount.get() == before + 1,
+    assert(Artifacts.builds("classifier.model").get() == before + 1,
       "second scoring call must reuse the cached model")
     val m = Classifier.modelFor(s, dir)
     assert(m.weights.size <= Classifier.ClfBuckets)

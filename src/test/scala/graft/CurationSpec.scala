@@ -130,7 +130,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("confirmedPairs builds the screen/confirm chain once across d6/d8/c1/c2") {
-    Dedup.clearConfirmedCache()
+    Artifacts.clear("dedup.confirmed")
     val before = Dedup.confirmedBuildCount.get()
     val d6 = Dedup.d6DedupPipeline(s, dir).collect()
     Dedup.d8DedupClusters(s, dir).collect()
@@ -145,7 +145,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("clusterMembership runs the contraction once across d8/c2") {
-    Dedup.clearClusterCache()
+    Artifacts.clear("dedup.cluster")
     val before = Dedup.clusterBuildCount.get()
     val d8 = Dedup.d8DedupClusters(s, dir).collect()
     Curation.c2ClusterCuration(s, dir).collect()
@@ -673,7 +673,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("confirmedPairs cache invalidates when the corpus fingerprint changes") {
-    Dedup.clearConfirmedCache()
+    Artifacts.clear("dedup.confirmed")
     val before = Dedup.confirmedBuildCount.get()
     Dedup.confirmedPairs(s, dir).count()
     Dedup.confirmedPairs(s, dir).count()

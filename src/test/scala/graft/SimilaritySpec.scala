@@ -294,32 +294,32 @@ class SimilaritySpec extends AnyFunSuite {
     // satisfy the first call
     s.conf.set("spark.graft.centroids.dir",
       java.nio.file.Files.createTempDirectory("graft-cent").toString)
-    Similarity.clearCentroidCache()
-    val before = Similarity.kmeansTrainCount.get()
+    Artifacts.clear("similarity.centroids")
+    val before = Artifacts.builds("similarity.centroids.train").get()
     Similarity.s3Ivf(s, dir).collect()
-    assert(Similarity.kmeansTrainCount.get() == before + 1)
+    assert(Artifacts.builds("similarity.centroids.train").get() == before + 1)
     // second invocation: no count(), no sample collect, no Lloyd pass
     Similarity.s3Ivf(s, dir).collect()
-    assert(Similarity.kmeansTrainCount.get() == before + 1,
+    assert(Artifacts.builds("similarity.centroids.train").get() == before + 1,
       "second s3 call re-trained the quantizer")
     // cross-JVM path: wipe the in-memory cache — the parquet artifact
     // written by the first call must satisfy the reload with NO retrain
-    Similarity.clearCentroidCache()
+    Artifacts.clear("similarity.centroids")
     val r1 = Similarity.s3Ivf(s, dir).collect()
-    assert(Similarity.kmeansTrainCount.get() == before + 1,
+    assert(Artifacts.builds("similarity.centroids.train").get() == before + 1,
       "artifact miss: cache reload re-trained the quantizer")
     // and the loaded centroids produce identical results
-    Similarity.clearCentroidCache()
+    Artifacts.clear("similarity.centroids")
     s.conf.set("spark.graft.centroids.dir",
       java.nio.file.Files.createTempDirectory("graft-cent2").toString)
     val r2 = Similarity.s3Ivf(s, dir).collect()
     assert(r1.map(_.toString).toSeq == r2.map(_.toString).toSeq)
     s.conf.unset("spark.graft.centroids.dir")
-    Similarity.clearCentroidCache()
+    Artifacts.clear("similarity.centroids")
   }
 
   test("s3 oracle SQL is generated with the trained centroids inlined") {
-    Similarity.clearCentroidCache()
+    Artifacts.clear("similarity.centroids")
     // an untrained quantizer must FAIL the static dump loudly, not
     // silently shrink the gate by omitting the s3 entry
     intercept[IllegalStateException] { Similarity.oracle }
@@ -590,17 +590,17 @@ class SimilaritySpec extends AnyFunSuite {
   test("s6 PQ matches a driver-side replay and trains once per corpus") {
     s.conf.set("spark.graft.pq.dir",
       java.nio.file.Files.createTempDirectory("graft-pq").toString)
-    Similarity.clearPqCache()
-    val before = Similarity.pqTrainCount.get()
+    Artifacts.clear("similarity.pq")
+    val before = Artifacts.builds("similarity.pq.train").get()
     val rows = Similarity.s6Pq(s, dir).collect()
-    assert(Similarity.pqTrainCount.get() == before + 1)
+    assert(Artifacts.builds("similarity.pq.train").get() == before + 1)
     Similarity.s6Pq(s, dir).collect()
-    assert(Similarity.pqTrainCount.get() == before + 1,
+    assert(Artifacts.builds("similarity.pq.train").get() == before + 1,
       "second s6 call re-trained the codebooks")
     // cross-JVM path: the parquet artifact must satisfy a cache reload
-    Similarity.clearPqCache()
+    Artifacts.clear("similarity.pq")
     Similarity.s6Pq(s, dir).collect()
-    assert(Similarity.pqTrainCount.get() == before + 1,
+    assert(Artifacts.builds("similarity.pq.train").get() == before + 1,
       "artifact miss: cache reload re-trained the codebooks")
 
     // independent in-JVM replay of encode + ADC from the same codebooks

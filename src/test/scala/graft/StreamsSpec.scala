@@ -301,7 +301,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("st6 inventory: built once per corpus generation, cache-hit after") {
-    graft.operators.Dedup.clearD9InvCache()
+    Artifacts.clear("dedup.d9Inv")
     val before = graft.operators.Dedup.d9InvBuildCount.get()
     val a = graft.operators.Dedup.d9InventoryFor(s, dir)
     val mid = graft.operators.Dedup.d9InvBuildCount.get()

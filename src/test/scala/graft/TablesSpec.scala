@@ -52,4 +52,13 @@ class TablesSpec extends AnyFunSuite {
     val legacy = operators.Relational.q17TimeRangeFilter(s, dir).collect()
     assert(native.nonEmpty && native.sameElements(legacy))
   }
+
+  test("loaders leave session config alone; new sessions inherit it") {
+    val fresh = s.newSession()
+    val before = fresh.conf.getAll
+    assert(Tables.events(fresh, TestSpark.SfDir).count() > 0)
+    assert(fresh.conf.getAll == before, "a loader mutated session config")
+    // the legacy-nanos read comes from the context conf GraftSession sets
+    assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
 }

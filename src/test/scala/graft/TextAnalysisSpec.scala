@@ -354,7 +354,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     val gen1 = (1L to 5L).map(i =>
       (i, s"unique$i filler$i $shared tail$i", "en", "web", 40))
     ingest(gen1)
-    TextAnalysis.clearT11Cache()
+    Artifacts.clear("text.t11")
     val before = TextAnalysis.t11BuildCount.get()
     val inv1 = TextAnalysis.t11InventoryFor(s, tmp)
     TextAnalysis.t11InventoryFor(s, tmp) // same generation: cache hit
@@ -410,11 +410,11 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(docs.exists(_._1 % TextAnalysis.T8PlantMod == 0), "nothing planted")
     // the model is a once-per-corpus trained artifact: a second query
     // against the same corpus must hit the cache, not retrain
-    TextAnalysis.clearT8Cache()
-    val before = TextAnalysis.t8TrainCount.get()
+    Artifacts.clear("text.t8")
+    val before = Artifacts.builds("text.t8").get()
     TextAnalysis.t8CharlmFilter(s, dir).count()
     TextAnalysis.t8CharlmFilter(s, dir).count()
-    assert(TextAnalysis.t8TrainCount.get() == before + 1,
+    assert(Artifacts.builds("text.t8").get() == before + 1,
       "t8 model trained more than once for one corpus")
   }
 
@@ -432,16 +432,16 @@ class TextAnalysisSpec extends AnyFunSuite {
     val gen1 = Seq((1L, "the quick brown fox", "en", "web", 19),
       (2L, "jumps over the lazy dog", "en", "web", 23))
     ingest(gen1)
-    TextAnalysis.clearT8Cache()
-    val before = TextAnalysis.t8TrainCount.get()
+    Artifacts.clear("text.t8")
+    val before = Artifacts.builds("text.t8").get()
     TextAnalysis.t8ModelFor(s, tmp)
     TextAnalysis.t8ModelFor(s, tmp) // same generation: cache hit
-    assert(TextAnalysis.t8TrainCount.get() == before + 1)
+    assert(Artifacts.builds("text.t8").get() == before + 1)
     // re-ingest generation 2 at the SAME path with different content;
     // the model must reflect it (not just retrain blindly)
     ingest(gen1 :+ ((3L, "zzqp vkqj gibberish chunk", "en", "web", 25)))
     val m2 = TextAnalysis.t8ModelFor(s, tmp)
-    assert(TextAnalysis.t8TrainCount.get() == before + 2,
+    assert(Artifacts.builds("text.t8").get() == before + 2,
       "re-ingested corpus at the same path served a stale model")
     assert(m2.value.counts.containsKey("zq"),
       "generation-2 model missing generation-2 bigrams")
@@ -666,19 +666,19 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("t17 kernel scoring is bit-identical to the composed join " +
       "spelling and the grid trains once per corpus") {
-    TextAnalysis.clearT17Cache()
-    val before = TextAnalysis.t17TrainCount.get()
+    Artifacts.clear("text.t17")
+    val before = Artifacts.builds("text.t17").get()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val kernel = rows(TextAnalysis.t17NllKernel(s, dir))
-    assert(TextAnalysis.t17TrainCount.get() == before + 1)
+    assert(Artifacts.builds("text.t17").get() == before + 1)
     val join = rows(TextAnalysis.t17NllJoinSpelling(s, dir))
     assert(kernel.nonEmpty && kernel == join,
       s"kernel/join drift: ${(kernel -- join).take(3)} vs " +
         s"${(join -- kernel).take(3)}")
     // second kernel call: cache hit, no retrain
     rows(TextAnalysis.t17NllKernel(s, dir))
-    assert(TextAnalysis.t17TrainCount.get() == before + 1)
+    assert(Artifacts.builds("text.t17").get() == before + 1)
   }
 
   test("t17 ccnet terciles match a driver bigram-LM replay; planted " +
