@@ -49,7 +49,6 @@ object Probe {
     if (sections("s10")) probeS10(spark, sfDir) // not in the default set
     if (sections("d14")) probeD14(spark, sfDir) // not in the default set
     if (sections("d4")) probeD4(spark, sfDir) // not in the default set
-    if (sections("s12")) probeS12(spark, sfDir) // not in the default set
     if (sections("lp")) probeLp(spark) // not in the default set
     spark.stop()
   }
@@ -600,88 +599,6 @@ object Probe {
         f"count+collect=${(t1 - t0) / 1e9}%6.2fs " +
         f"train=${(t2 - t1) / 1e9}%6.2fs " +
         s"merges=${merges.map(m => m.lhs + m.rhs).mkString(",")}")
-    }
-  }
-
-  /** ---- s12's round-15 scale claim: the TWO-LEVEL coarse quantizer
-    * makes the cell-rank term SUB-DOMINANT at 100× (the r14 verdict's
-    * one `weak`: flat `ivf_rank_cells` ranks all K = n/128 cells per
-    * row — O(n²/128) across the corpus, measured ~30% of the 100×
-    * profile and growing). Per tier (1×/10×/100× distinct-replicated
-    * embeddings), times the rank SCAN in isolation under both kernels
-    * — flat O(K)/row vs two-level O(√K·(1+cp))/row — and the full
-    * s12 build, whose rank share must now be small. Not in the
-    * default set. */
-  private def probeS12(spark: SparkSession, sfDir: String): Unit = {
-    println("== s12: two-level vs flat rank term at 1x/10x/100x ==")
-    graft.functions.GraftFunctions.register(spark)
-    val e = Tables.embeddings(spark, sfDir)
-    val n = e.count()
-    val tiers = Seq(("10x", 10L), ("100x", 100L)).map { case (tag, k) =>
-      val dir = s"target/probe/s12$tag"
-      replicatedEmbeddings(e, n,
-        spark.range(k).withColumnRenamed("id", "copy"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      (tag, dir)
-    }
-    def flatLit(a: Array[Array[Float]]) = "array(" +
-      a.flatMap(_.map(x => s"CAST($x AS FLOAT)")).mkString(",") + ")"
-    for ((tier, dir) <- ("1x", sfDir) +: tiers) {
-      val fine = operators.Similarity.s12CentroidsFor(spark, dir)
-      val (coarse, map) = operators.Similarity.s12CoarseFor(fine)
-      val cp = math.min(operators.Similarity.S12CoarseProbes, coarse.length)
-      val mapArr = "array(" + map.mkString(",") + ")"
-      def scan(rank: String): Double = {
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        // repartition first — the rank term inside s12 runs on the
-        // explicit-N repartitioned sides, so the isolation scan must
-        // spread the kernel the same way (the probe parquet is a
-        // handful of files)
-        Tables.embeddings(spark, dir)
-          .repartition(spark.sessionState.conf.numShufflePartitions)
-          .selectExpr("vec_id", s"element_at($rank, 1) AS cell")
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val tFlat = scan(s"ivf_rank_cells(embedding, ${flatLit(fine)})")
-      val tTwo = scan(s"ivf_rank_cells2(embedding, ${flatLit(coarse)}, " +
-        s"${flatLit(fine)}, $mapArr, $cp)")
-      // driver-side kernel micro-bench: the scan timings above carry
-      // parquet IO + a ~100k-literal parse per expression, which at
-      // probe scale swamps the kernel difference run-to-run; this
-      // isolates ns/row of the rank term itself, reproducibly
-      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      val rnd = new scala.util.Random(11)
-      // Tungsten primitive arrays — the layout the scan actually hands
-      // the kernel (boxed GenericArrayData triples the access cost and
-      // masks the algorithmic difference)
-      val fineAd = UnsafeArrayData.fromPrimitiveArray(fine.flatten)
-      val coarseAd = UnsafeArrayData.fromPrimitiveArray(coarse.flatten)
-      val mapAd = UnsafeArrayData.fromPrimitiveArray(map)
-      val vecs = Array.fill(2000)(UnsafeArrayData.fromPrimitiveArray(
-        Array.fill(64)(rnd.nextFloat())))
-      def micro(f: org.apache.spark.sql.catalyst.util.ArrayData
-          => Any): Double = {
-        var i = 0
-        while (i < vecs.length) { f(vecs(i)); i += 1 } // warm
-        val t0 = System.nanoTime()
-        i = 0
-        while (i < vecs.length) { f(vecs(i)); i += 1 }
-        (System.nanoTime() - t0) / 1e3 / vecs.length
-      }
-      val usFlat = micro(v =>
-        graft.functions.IvfRankCellsKernel.rank(v, fineAd))
-      val usTwo = micro(v => graft.functions.IvfRankCells2Kernel
-        .rank(v, coarseAd, fineAd, mapAd, cp))
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      val edges = operators.Similarity.s12KnnGraph(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"s12_$tier","cells":${fine.length},""" +
-        f""""kc":${coarse.length},"cp":$cp,"rankFlatSec":$tFlat%.2f,""" +
-        f""""rankTwoSec":$tTwo%.2f,"usPerRowFlat":$usFlat%.1f,""" +
-        f""""usPerRowTwo":$usTwo%.1f,"s12Sec":$wall%.2f,"edges":$edges}""")
     }
   }
 

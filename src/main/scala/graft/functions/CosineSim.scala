@@ -191,15 +191,18 @@ case class PqEncode(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `ivf_rank_cells(embedding, flat_centroids) -> array<int>` — all K
-  * coarse-quantizer cell ids ranked by (cosine DESC, id DESC), the s3
-  * ordering (struct array_max ties to the higher id), as one fused
-  * kernel: cell = element 1, probe list = the first nprobe. Replaces
-  * the per-row 16-struct array_max/array_sort spelling on s7's
-  * corpus-sized path (measured ~110 µs/row interpreted vs a tight
-  * codegen'd loop). Cosines use the [[CosineSim]] fold, so the ranking
-  * is bit-identical to the composed spelling and the DuckDB oracle. */
-case class IvfRankCells(left: Expression, right: Expression)
+/** `ivf_rank_cells(embedding, flat_centroids) -> array<int>` — the
+  * coarse-quantizer cell ids ranked by [[IvfRankCellsKernel.select]]'s
+  * (cosine DESC, id DESC, NaN highest) rule, the order Spark's struct
+  * `array_max`/`array_sort` gives (cos, id) structs and DuckDB's
+  * `ORDER BY ccos DESC, cid DESC` gives rows: cell = element 1, probe
+  * list = the first nprobe. `dim` is the centroid stride: the library
+  * builds the expression with the trained centroids' dim
+  * (graft.operators.Similarity.ivfRankCol); the two-argument SQL form
+  * assumes [[IvfRankCellsKernel.D]]. Cosines use the [[CosineSim]]
+  * fold over min(|embedding|, dim) components, so scores are
+  * bit-identical to `cosine_sim` and the DuckDB oracle. */
+case class IvfRankCells(left: Expression, right: Expression, dim: Int)
     extends BinaryExpression {
   override val nullIntolerant: Boolean = true
   override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
@@ -208,11 +211,11 @@ case class IvfRankCells(left: Expression, right: Expression)
 
   override def nullSafeEval(a: Any, b: Any): Any =
     IvfRankCellsKernel.rank(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.IvfRankCellsKernel.rank($a, $b)")
+      s"graft.functions.IvfRankCellsKernel.rank($a, $b, $dim)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IvfRankCells =
@@ -220,60 +223,86 @@ case class IvfRankCells(left: Expression, right: Expression)
 }
 
 object IvfRankCellsKernel {
-  /** Fixed-family geometry (s3/s7's 16×64 quantizer — asserted at
-    * literal build time there). The kernel itself derives the CELL
-    * COUNT from the flat centroid array's length, so the same codegen
-    * call also serves s12's corpus-scaled quantizer (any K, dim [[D]]). */
+  /** The fixed 16-cell, 64-dim family of the gate corpora; `D` is the
+    * stride the two-argument SQL forms assume. */
   val K = 16; val D = 64
+  /** Ranks emitted per row: no caller probes deeper than 16, and the
+    * partial selection keeps a row's cost O(16·k) however large a
+    * corpus-scaled cell count grows. */
+  val Emit = 16
 
-  def rank(emb: ArrayData, cents: ArrayData): ArrayData = {
-    val k = cents.numElements() / D
-    val n = math.min(emb.numElements(), D)
-    val cos = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val base = c * D
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val x = emb.getFloat(i).toDouble
-        val y = cents.getFloat(base + i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      cos(c) = dot / (math.sqrt(na) * math.sqrt(nb))
-      c += 1
-    }
-    // partial selection sort by (cos DESC, id DESC) — the
-    // struct-array_max order. Only the first min(k, 16) ranks are
-    // emitted: no caller probes deeper (s3/s9 slice <= 13, s12 <= 4),
-    // and the partial sort keeps the per-row cost O(16·k) however
-    // large the corpus-scaled cell count grows.
-    val emit = math.min(k, 16)
-    val out = new Array[Int](emit)
-    val used = new Array[Boolean](k)
+  /** True iff cell `i` at cosine `ci` ranks before cell `j` at `cj`:
+    * cosine DESC, then id DESC, with NaN (a zero-norm vector or
+    * centroid) above every number and equal to itself — Spark's double
+    * ordering, under which -0.0 equals 0.0. */
+  def above(ci: Double, i: Int, cj: Double, j: Int): Boolean = {
+    val c = if (ci == cj) 0 else java.lang.Double.compare(ci, cj)
+    c > 0 || (c == 0 && i > j)
+  }
+
+  /** The first min(n, emit) of cells `ids(0 until n)` at cosines
+    * `cos(0 until n)`, in [[above]] order — the one cell-ranking
+    * selection. A partial selection sort: O(emit·n) per call. */
+  def select(cos: Array[Double], ids: Array[Int], n: Int,
+      emit: Int): Array[Int] = {
+    val m = math.min(n, emit)
+    val out = new Array[Int](m)
+    val used = new Array[Boolean](n)
     var r = 0
-    while (r < emit) {
+    while (r < m) {
       var best = -1
-      var i = 0
-      while (i < k) {
-        if (!used(i) && (best < 0 || cos(i) > cos(best) ||
-            (cos(i) == cos(best) && i > best))) best = i
-        i += 1
+      var j = 0
+      while (j < n) {
+        if (!used(j) &&
+            (best < 0 || above(cos(j), ids(j), cos(best), ids(best))))
+          best = j
+        j += 1
       }
       used(best) = true
-      out(r) = best
+      out(r) = ids(best)
       r += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    out
   }
+
+  /** [[select]] over cells `0 until cos.length`. */
+  def select(cos: Array[Double], emit: Int): Array[Int] =
+    select(cos, Array.range(0, cos.length), cos.length, emit)
+
+  /** Cosine of `emb` with centroid `c` of the flat array `cents`
+    * (stride `dim`): the [[CosineSim]] fold. */
+  def cosine(emb: ArrayData, cents: ArrayData, c: Int, dim: Int): Double = {
+    val n = math.min(emb.numElements(), dim)
+    val base = c * dim
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = emb.getFloat(i).toDouble
+      val y = cents.getFloat(base + i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Cosines of `emb` with every centroid of `cents`. */
+  def cosines(emb: ArrayData, cents: ArrayData, dim: Int): Array[Double] = {
+    val cos = new Array[Double](cents.numElements() / dim)
+    var c = 0
+    while (c < cos.length) { cos(c) = cosine(emb, cents, c, dim); c += 1 }
+    cos
+  }
+
+  def rank(emb: ArrayData, cents: ArrayData, dim: Int): ArrayData =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      select(cosines(emb, cents, dim), Emit))
 }
 
 /** `ivf_rank_cells2(embedding, coarse_flat, fine_flat, fine_coarse, cp)
   * -> array<int>` — TWO-LEVEL cell ranking, the FAISS-IMI shape for
-  * corpus-scaled quantizers: rank the ~√K coarse centroids by
-  * (cosine DESC, id DESC), keep the top `cp` coarse buckets, then rank
-  * ONLY the fine cells assigned to those buckets by the same order.
+  * corpus-scaled quantizers: rank the ~√K coarse centroids, keep the
+  * top `cp` coarse buckets, then rank ONLY the fine cells assigned to
+  * those buckets — both by [[IvfRankCellsKernel.select]]'s rule.
   * [[IvfRankCells]] pays O(K) cosines per row — with K scaled as n/128
   * (s12's fixed-occupancy rule) that rank term is O(n²/128) across the
   * corpus, the one super-linear residual of round 14; this kernel pays
@@ -282,11 +311,12 @@ object IvfRankCellsKernel {
   * centroid arrays). When cp >= #coarse buckets every fine cell is a
   * candidate and the ranking EQUALS the flat [[IvfRankCells]] order —
   * the gate corpora sit in that regime (spec-pinned), so the
-  * restriction only engages where the corpus-scaled K grows. Cosines
-  * use the [[CosineSim]] fold; the DuckDB oracle replays the identical
-  * coarse→restrict→fine rule with all three literals inlined. */
+  * restriction only engages where the corpus-scaled K grows. `dim` is
+  * the centroid stride, as for [[IvfRankCells]]; the DuckDB oracle
+  * replays the identical coarse→restrict→fine rule with all three
+  * literals inlined. */
 case class IvfRankCells2(first: Expression, second: Expression,
-    third: Expression, fourth: Expression, cp: Int)
+    third: Expression, fourth: Expression, cp: Int, dim: Int)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
   override val nullIntolerant: Boolean = true
   override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
@@ -296,11 +326,11 @@ case class IvfRankCells2(first: Expression, second: Expression,
   override def nullSafeEval(e: Any, co: Any, fi: Any, mp: Any): Any =
     IvfRankCells2Kernel.rank(e.asInstanceOf[ArrayData],
       co.asInstanceOf[ArrayData], fi.asInstanceOf[ArrayData],
-      mp.asInstanceOf[ArrayData], cp)
+      mp.asInstanceOf[ArrayData], cp, dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (e, co, fi, mp) =>
-      s"graft.functions.IvfRankCells2Kernel.rank($e, $co, $fi, $mp, $cp)")
+      s"graft.functions.IvfRankCells2Kernel.rank($e, $co, $fi, $mp, $cp, $dim)")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -310,111 +340,33 @@ case class IvfRankCells2(first: Expression, second: Expression,
 }
 
 object IvfRankCells2Kernel {
-  /** Shared geometry with [[IvfRankCellsKernel]] (dim [[D]], emit cap
-    * [[Emit]] — no caller probes deeper than 16). */
-  val D: Int = IvfRankCellsKernel.D
-  val Emit = 16
-
-  /** (cos DESC, id DESC) partial selection over `cos(0 until k)`,
-    * first min(k, emit) ranks. */
-  private def select(cos: Array[Double], emit: Int): Array[Int] = {
-    val k = cos.length
-    val m = math.min(k, emit)
-    val out = new Array[Int](m)
-    val used = new Array[Boolean](k)
-    var r = 0
-    while (r < m) {
-      var best = -1
-      var j = 0
-      while (j < k) {
-        if (!used(j) && (best < 0 || cos(j) > cos(best) ||
-            (cos(j) == cos(best) && j > best))) best = j
-        j += 1
-      }
-      used(best) = true
-      out(r) = best
-      r += 1
-    }
-    out
-  }
-
-  private def cosines(emb: ArrayData, cents: ArrayData): Array[Double] = {
-    val k = cents.numElements() / D
-    val n = math.min(emb.numElements(), D)
-    val cos = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val base = c * D
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val x = emb.getFloat(i).toDouble
-        val y = cents.getFloat(base + i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      cos(c) = dot / (math.sqrt(na) * math.sqrt(nb))
-      c += 1
-    }
-    cos
-  }
+  import IvfRankCellsKernel.{Emit, cosine, cosines, select}
 
   def rank(emb: ArrayData, coarse: ArrayData, fine: ArrayData,
-      fineCoarse: ArrayData, cp: Int): ArrayData = {
-    val kc = coarse.numElements() / D
-    val top = select(cosines(emb, coarse), math.min(cp, kc))
-    val sel = new Array[Boolean](kc)
-    var i = 0
-    while (i < top.length) { sel(top(i)) = true; i += 1 }
-    val k = fine.numElements() / D
+      fineCoarse: ArrayData, cp: Int, dim: Int): ArrayData = {
+    val coarseCos = cosines(emb, coarse, dim)
+    val top = select(coarseCos, cp)
+    val sel = new Array[Boolean](coarseCos.length)
+    top.foreach(sel(_) = true)
     // fine cosines only for cells in a selected coarse bucket — the
     // whole point: unselected cells never pay a cosine — and the rank
-    // selection below walks the CANDIDATE list, not all k cells (the
-    // per-rank O(k) scan would hand back much of the cosine saving:
-    // emit·k comparisons ≈ the flat kernel's mult count)
-    val n = math.min(emb.numElements(), D)
+    // selection walks the CANDIDATE list, not all k cells (a per-rank
+    // O(k) scan would hand back much of the cosine saving)
+    val k = fine.numElements() / dim
     val candIdx = new Array[Int](k)
     val candCos = new Array[Double](k)
     var cnt = 0
     var c = 0
     while (c < k) {
       if (sel(fineCoarse.getInt(c))) {
-        val base = c * D
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var j = 0
-        while (j < n) {
-          val x = emb.getFloat(j).toDouble
-          val y = fine.getFloat(base + j).toDouble
-          dot += x * y; na += x * x; nb += y * y
-          j += 1
-        }
         candIdx(cnt) = c
-        candCos(cnt) = dot / (math.sqrt(na) * math.sqrt(nb))
+        candCos(cnt) = cosine(emb, fine, c, dim)
         cnt += 1
       }
       c += 1
     }
-    // partial (cos DESC, id DESC) selection over the candidates only;
-    // candIdx is id-ascending, so on equal cos the LATER slot (higher
-    // id) must win — mirror of the flat kernel's tie rule
-    val m = math.min(cnt, Emit)
-    val out = new Array[Int](m)
-    val used = new Array[Boolean](cnt)
-    var r = 0
-    while (r < m) {
-      var best = -1
-      var j = 0
-      while (j < cnt) {
-        if (!used(j) && (best < 0 || candCos(j) > candCos(best) ||
-          (candCos(j) == candCos(best) && candIdx(j) > candIdx(best))))
-          best = j
-        j += 1
-      }
-      used(best) = true
-      out(r) = candIdx(best)
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      select(candCos, candIdx, cnt, Emit))
   }
 }
 
@@ -679,10 +631,10 @@ object GraftFunctions {
     reg("dot_prod", classOf[DotProd], cs => DotProd(cs(0), cs(1)))
     reg("pq_encode", classOf[PqEncode], cs => PqEncode(cs(0), cs(1)))
     reg("ivf_rank_cells", classOf[IvfRankCells],
-      cs => IvfRankCells(cs(0), cs(1)))
+      cs => IvfRankCells(cs(0), cs(1), IvfRankCellsKernel.D))
     reg("ivf_rank_cells2", classOf[IvfRankCells2], cs =>
       IvfRankCells2(cs(0), cs(1), cs(2), cs(3),
-        litInt("ivf_rank_cells2", "cp", cs(4))))
+        litInt("ivf_rank_cells2", "cp", cs(4)), IvfRankCellsKernel.D))
     reg("dot_at", classOf[DotAt], cs =>
       DotAt(cs(0), litInt("dot_at", "pos", cs(1)), cs(2)))
     reg("simhash60", classOf[SimHash60], cs => SimHash60(cs(0)))

@@ -28,10 +28,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("dot_prod", classOf[DotProd], cs => DotProd(cs(0), cs(1)))
     inject("pq_encode", classOf[PqEncode], cs => PqEncode(cs(0), cs(1)))
     inject("ivf_rank_cells", classOf[IvfRankCells],
-      cs => IvfRankCells(cs(0), cs(1)))
+      cs => IvfRankCells(cs(0), cs(1), IvfRankCellsKernel.D))
     inject("ivf_rank_cells2", classOf[IvfRankCells2], cs =>
       IvfRankCells2(cs(0), cs(1), cs(2), cs(3),
-        GraftFunctions.litInt("ivf_rank_cells2", "cp", cs(4))))
+        GraftFunctions.litInt("ivf_rank_cells2", "cp", cs(4)),
+        IvfRankCellsKernel.D))
     inject("dot_at", classOf[DotAt], cs =>
       DotAt(cs(0), GraftFunctions.litInt("dot_at", "pos", cs(1)), cs(2)))
     inject("simhash60", classOf[SimHash60], cs => SimHash60(cs(0)))

@@ -2747,15 +2747,9 @@ object Curation {
     * centroids inlined), joined on the SQL-derived shard; `indexed` =
     * the conjunction. */
   private[graft] def c28OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
     val unionChain = Dedup.sqlConfirmedCtes.stripPrefix("WITH ")
       .replace("FROM documents", "FROM udocs")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |mxx AS (
+    s"""WITH mxx AS (
        |  SELECT greatest((SELECT max(doc_id) FROM documents),
        |    (SELECT max(vec_id) FROM embeddings)) AS m),
        |shard AS (
@@ -2782,15 +2776,10 @@ object Curation {
        |uvecs AS (
        |  SELECT vec_id, embedding FROM embeddings
        |  UNION ALL SELECT doc_id AS vec_id, embedding FROM shard),
-       |scored_cells AS (
-       |  SELECT u.vec_id, u.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM uvecs u CROSS JOIN cent c),
+       |${Similarity.sqlRankedCells(cent, "uvecs")},
        |cells AS (
-       |  SELECT vec_id, embedding, cid AS cell FROM (
-       |    SELECT vec_id, embedding, cid, row_number() OVER (
-       |      PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |    FROM scored_cells) WHERE crnk = 1),
+       |  SELECT vec_id, embedding, cid AS cell FROM ranked_cells
+       |  WHERE crnk = 1),
        |dropped AS (
        |  SELECT DISTINCT y.vec_id
        |  FROM cells x JOIN cells y

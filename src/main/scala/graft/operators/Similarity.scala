@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -234,17 +234,12 @@ object Similarity {
         var si = lo
         while (si < hi) {
           val v = sample(si)
-          var best = 0; var bestCos = -2.0; var c = 0
-          while (c < cells) {
-            val cs = cos(v, cents(c))
-            // >= : exact-cosine ties assign to the HIGHER cell index —
-            // the same (cos DESC, id DESC) rule as the ivf_rank_cells
-            // kernel the DISTRIBUTED Lloyd assigns with, so which side
-            // of the driverMaxSample cap a corpus lands on can never
-            // change trained output on a tie-bearing sample (r16 ADVICE)
-            if (cs >= bestCos) { bestCos = cs; best = c }
-            c += 1
-          }
+          // the ivf_rank_cells kernel's own selection (ties to the
+          // HIGHER cell, NaN highest) — the rule the DISTRIBUTED Lloyd
+          // assigns with, so which side of the driverMaxSample cap a
+          // corpus lands on can never change trained output
+          val best = graft.functions.IvfRankCellsKernel.select(
+            Array.tabulate(cells)(c => cos(v, cents(c))), 1)(0)
           pCounts(best) += 1
           var i = 0
           while (i < dim) { pSums(best)(i) += v(i); i += 1 }
@@ -275,10 +270,8 @@ object Similarity {
   /** DISTRIBUTED Lloyd — the §5 driver-budget handoff implemented
     * (spelling (a) of the audit): when the scaled sample outgrows
     * [[KmeansDriverMaxSample]], training runs with the sample staying
-    * on EXECUTORS. Per iteration: assignment is the codegen'd
-    * `ivf_rank_cells` scan kernel with the current centroids riding a
-    * constructed catalyst Literal (the s12 plumbing — no SQL-text
-    * parse of K·64 float literals), per-cell means are one
+    * on EXECUTORS. Per iteration: assignment is [[ivfCellCol]] with
+    * the current centroids, per-cell means are one
     * posexplode + groupBy(cell, pos) aggregation, and only K·D
     * (cell, pos, sum, count) scalars return to the driver — the
     * driver holds PARAMETERS, never the sample. Seeds: the `cells`
@@ -298,9 +291,6 @@ object Similarity {
     * produce an equivalent-quality but not bit-identical quantizer. */
   private[graft] def kmeansCentroidsDistributed(s: SparkSession,
       dir: String, cells: Int): Array[Array[Float]] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
     val e = Tables.embeddings(s, dir)
     val n = e.count()
     val step = math.max(1L, n / kmeansSampleFor(cells))
@@ -316,19 +306,10 @@ object Similarity {
       .select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
     val dim = centroids.head.length
-    // the assignment kernel's flat-centroid layout is strided at its
-    // fixed D — a different corpus dim would silently mis-assign
-    require(dim == graft.functions.IvfRankCellsKernel.D,
-      s"distributed Lloyd requires dim ${graft.functions.IvfRankCellsKernel.D}, got $dim")
     var iter = 0
     while (iter < KmeansIters) {
-      val rankCol = org.apache.spark.sql.graftbridge.GraftColumns.column(
-        graft.functions.IvfRankCells(
-          UnresolvedAttribute("embedding"),
-          Literal.create(centroids.flatten,
-            ArrayType(FloatType, containsNull = false))))
       val agg = sample
-        .withColumn("cell", element_at(rankCol, lit(1)))
+        .withColumn("cell", ivfCellCol(centroids))
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy("cell", "pos")
         .agg(sum(col("v").cast("double")).as("sv"), count(lit(1)).as("cnt"))
@@ -487,8 +468,9 @@ object Similarity {
     * corpus — the fine set is already the corpus summary, ≤ n/128
     * rows, so this is O(K·√K·D·iters) driver work: ~32M flops at the
     * 100× probe). Strided init over the id-ordered fine set, max-cosine
-    * assignment with ties to the HIGHER coarse id (the fine level's
-    * struct-array_max order), mean update in double cast to float per
+    * assignment by the fine level's rule
+    * ([[graft.functions.IvfRankCellsKernel.select]]: ties to the HIGHER
+    * coarse id, NaN highest), mean update in double cast to float per
     * round (bit-deterministic), empty buckets keep their centroid
     * during iteration and are DROPPED (ids compacted) at the end so a
     * selected coarse bucket always routes to ≥ 1 fine cell. */
@@ -507,13 +489,8 @@ object Similarity {
     }
     var coarse = Array.tabulate(kc)(j => fine((j.toLong * k / kc).toInt))
     def assign(): Array[Int] = Array.tabulate(k) { i =>
-      var best = 0; var bestCos = -2.0; var j = 0
-      while (j < kc) {
-        val c = cos(fine(i), coarse(j))
-        if (c >= bestCos) { bestCos = c; best = j } // ties -> higher id
-        j += 1
-      }
-      best
+      graft.functions.IvfRankCellsKernel.select(
+        Array.tabulate(kc)(j => cos(fine(i), coarse(j))), 1)(0)
     }
     var iter = 0
     while (iter < KmeansIters) {
@@ -558,68 +535,88 @@ object Similarity {
     c
   }
 
-  /** s3: IVF ANN — the other standard production scale path next to LSH.
-    *
-    * Coarse quantizer: [[IvfCells]] k-means centroids from
-    * [[kmeansCentroids]] (deterministic sampled Lloyd — production would
-    * run this offline and persist; here it runs once at plan build).
-    * Every corpus vector is assigned to its max-cosine centroid by a
-    * fixed-size argmax — 16 native cosine_sim calls + array_max over
-    * (cos, id) structs, all codegen'd, no per-row lambda. Each query
-    * probes its [[IvfProbes]] nearest cells (the HOF slice/transform on
-    * the query side is interpreted, but runs only per QUERY row — the
-    * corpus side stays pure codegen). The centroid set is inlined as
-    * literals, so the assignment runs scan-local with zero extra
-    * shuffle; corpus-side work is one keyed shuffle on the cell id.
-    * Centroids come from the per-corpus cache ([[centroidsFor]]), so
-    * repeated calls pay only the query itself. Oracle: the SAME cached
-    * centroids are inlined as literals into generated DuckDB SQL
-    * ([[s3OracleSql]]) — assignment, probing and top-k are plain SQL,
-    * mirrored tie-break and fold order, so the gate is a full
-    * rows+schema+hash match (recall vs s1 additionally measured in
-    * SimilaritySpec, including on an id-shuffled corpus). */
-  /** SQL text of `array(struct(cos, id), …)` scoring `embedding`
-    * against every trained centroid inlined as FLOAT literals — the
-    * shared assignment primitive of s3 (cell routing) and d10 (cell
-    * blocking). `array_max` over it picks the max-cosine cell with
-    * ties to the HIGHER cell id (struct ordering is lexicographic),
-    * mirrored in the oracles by `ORDER BY ccos DESC, cid DESC`. */
-  private[graft] def centroidStructsArr(centroids: Array[(Int, Array[Float])]): String = {
-    def litVec(v: Array[Float]) =
-      s"array(${v.map(x => s"CAST($x AS FLOAT)").mkString(",")})"
-    "array(" + centroids.map { case (id, v) =>
-      s"struct(cosine_sim(embedding, ${litVec(v)}) AS cos, $id AS id)"
-    }.mkString(",") + ")"
-  }
+  /** The flat quantizer's cell ranking of `embedding` against `cents`
+    * as ONE kernel Column: `ivf_rank_cells`, the cell ids by
+    * (cos DESC, id DESC, NaN highest), rank 1 the assigned cell and the
+    * first nprobe the probe list. Every flat-quantizer route — the
+    * searches, the index and admission writers, d10's blocking, s7's
+    * routing and distributed Lloyd's assignment — reads its cells from
+    * here, so no two can disagree on where a vector lives. Built from
+    * a constructed catalyst Literal (the [[s12RankCol]] pattern: no
+    * SQL text of K·dim float literals to parse), with the trained
+    * centroids' dim as the kernel's stride. */
+  private[graft] def ivfRankCol(cents: Array[Array[Float]]): Column =
+    org.apache.spark.sql.graftbridge.GraftColumns.column(
+      graft.functions.IvfRankCells(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
+          "embedding"),
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          cents.flatten, org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.FloatType, containsNull = false)),
+        cents.head.length))
 
-  def s3Ivf(s: SparkSession, dir: String): DataFrame = {
+  /** The assigned cell: rank 1 of [[ivfRankCol]]. */
+  private[graft] def ivfCellCol(cents: Array[Array[Float]]): Column =
+    element_at(ivfRankCol(cents), lit(1))
+
+  /** `vecs`' (vec_id, embedding) as probe candidates
+    * (neighbor_id, ce, cell), assigned by the corpus's trained
+    * quantizer — scan-local, zero shuffle. */
+  private def assignedCands(s: SparkSession, dir: String,
+      vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
+      ivfCellCol(centroidsFor(s, dir)).as("cell"))
+
+  /** The one IVF probe core of s3, s9, s17, s8 and s11, which differ
+    * only in their candidates `(neighbor_id, ce, cell)` and in the
+    * probe depth, row limit and radius passed here. The
+    * [[NumQueries]] query vectors fan out to their `probes` best cells
+    * of the trained quantizer ([[centroidsFor]], [[ivfRankCol]]; the
+    * explode runs per QUERY row only), the query×probe frame
+    * broadcasts into one candidate-bounded join on the cell id (self
+    * excluded), the shared cosine fold scores each pair, `minCos`
+    * drops pairs below a radius, and a WindowGroupLimit-pruned
+    * row_number keeps each query's best `limit` by
+    * (cos DESC, neighbor_id ASC). Scale: cost ∝ candidates ×
+    * probes/cells — one scan-local assignment pass and a broadcast
+    * query side. `pruneCells` serves a persisted cell-partitioned
+    * index: the query frame is checkpointed, its probed cell ids
+    * (queries × probes ints) collected and the candidates filtered
+    * to them, a static partition-pruned scan. Oracle mirror:
+    * [[sqlRankedCells]] + [[sqlProbeTail]], with the same centroids
+    * inlined, so each gate entry is a full rows+schema+hash match. */
+  private def ivfProbe(s: SparkSession, dir: String, cand: DataFrame,
+      probes: Int, limit: Int, minCos: Option[Double] = None,
+      pruneCells: Boolean = false): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids: Array[(Int, Array[Float])] =
-      centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-
-    val structsArr = centroidStructsArr(centroids)
-    val cellExpr = expr(s"array_max($structsArr).id")
-    val probeExpr = expr(
-      s"transform(slice(reverse(array_sort($structsArr)), 1, $IvfProbes)," +
-        " x -> x.id)")
-
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
+    val fanOut = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(probeExpr).as("qc"))
-    val cand = Tables.embeddings(s, dir)
-      .withColumn("cell", cellExpr)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(broadcast(q),
+        explode(slice(ivfRankCol(centroidsFor(s, dir)), 1, probes)).as("qc"))
+    // when pruning, the query frame is read twice: prune list + join
+    val q = if (pruneCells) fanOut.localCheckpoint(true) else fanOut
+    val c = if (!pruneCells) cand else {
+      val probed = q.select("qc").distinct().collect().map(_.getInt(0))
+      cand.filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    }
+    val scored = c.join(broadcast(q),
         col("cell") === col("qc") && col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", VectorOps.cosine("qe", "ce"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    minCos.fold(scored)(t => scored.filter(col("cos") >= t))
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
+      .filter(col("rnk") <= limit)
       .select("query_id", "rnk", "neighbor_id", "cos")
       .orderBy("query_id", "rnk")
   }
+
+  /** s3: IVF ANN — the other standard production scale path next to
+    * LSH: the probe core over the whole corpus, [[IvfProbes]] cells
+    * per query. Recall vs s1 is measured in SimilaritySpec, including
+    * on an id-shuffled corpus. */
+  def s3Ivf(s: SparkSession, dir: String): DataFrame =
+    ivfProbe(s, dir, assignedCands(s, dir, Tables.embeddings(s, dir)),
+      IvfProbes, TopK)
 
   /** s17 radius: a range query keeps every probed candidate at cosine
     * ≥ this. 0.3 sits above the corpus's organic pairwise band's
@@ -636,80 +633,20 @@ object Similarity {
     * these vectors", the retrieval-expansion / near-dup-audit shape
     * that top-k cannot express (k fixes the output size; a radius
     * query's size is data-dependent, so it needs the [[S17Cap]]
-    * guard instead). Same IVF pruning as s3 — the query probes its
-    * [[IvfProbes]] best cells and candidates are the probed cells'
-    * members only — then a threshold filter replaces the top-k rank:
-    * monotone in the (cos DESC, neighbor ASC) ranking order, so
-    * rank-within-threshold ≡ threshold-within-rank and the capped
-    * output is deterministic. Scale shape: identical to s3's (one
-    * scan-local assignment pass, one keyed shuffle on cell id, a
-    * broadcast query side); the threshold makes the FINAL output
-    * request-sized even when a cell is dense — the window's
-    * WindowGroupLimit prunes per-query groups at the cap. Oracle:
-    * the s3 replay with the same threshold + cap, trained centroids
-    * inlined. */
-  def s17RangeSearch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val centroids: Array[(Int, Array[Float])] =
-      centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val structsArr = centroidStructsArr(centroids)
-    val cellExpr = expr(s"array_max($structsArr).id")
-    val probeExpr = expr(
-      s"transform(slice(reverse(array_sort($structsArr)), 1, $IvfProbes)," +
-        " x -> x.id)")
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(probeExpr).as("qc"))
-    val cand = Tables.embeddings(s, dir)
-      .withColumn("cell", cellExpr)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(broadcast(q),
-        col("cell") === col("qc") && col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", VectorOps.cosine("qe", "ce"))
-      .filter(col("cos") >= S17Tau)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= S17Cap)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
-  }
+    * guard instead). The probe core with the radius in place of the
+    * top-k: the threshold is monotone in the (cos DESC, neighbor ASC)
+    * ranking order, so rank-within-threshold ≡ threshold-within-rank
+    * and the capped output is deterministic; the window's
+    * WindowGroupLimit keeps the output request-sized even when a cell
+    * is dense. */
+  def s17RangeSearch(s: SparkSession, dir: String): DataFrame =
+    ivfProbe(s, dir, assignedCands(s, dir, Tables.embeddings(s, dir)),
+      IvfProbes, S17Cap, minCos = Some(S17Tau))
 
-  /** DuckDB mirror of [[s17RangeSearch]] — [[s3OracleSql]]'s probing
-    * replay with the radius filter + cap in place of the top-k. */
-  private[graft] def s17OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |scored_cells AS (
-       |  SELECT e.vec_id, e.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM embeddings e CROSS JOIN cent c),
-       |ranked_cells AS (
-       |  SELECT vec_id, embedding, cid, row_number() OVER (
-       |    PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |  FROM scored_cells),
-       |cells AS (
-       |  SELECT vec_id AS neighbor_id, embedding AS ce, cid AS cell
-       |  FROM ranked_cells WHERE crnk = 1),
-       |qprobe AS (
-       |  SELECT vec_id AS query_id, embedding AS qe, cid AS qc
-       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $IvfProbes),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, ${VectorOps.sqlCosine("qe", "ce")} AS cos
-       |  FROM qprobe JOIN cells ON cells.cell = qprobe.qc
-       |    AND cells.neighbor_id <> qprobe.query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored WHERE cos >= $S17Tau)
-       |SELECT query_id, CAST(rnk AS INTEGER) AS rnk, neighbor_id, cos
-       |FROM ranked WHERE rnk <= $S17Cap ORDER BY query_id, rnk""".stripMargin
-  }
+  /** DuckDB mirror of [[s17RangeSearch]]. */
+  private[graft] def s17OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH ${sqlRankedCells(cent, "embeddings")},
+       |${sqlProbeTail(IvfProbes, S17Cap, minCos = Some(S17Tau))}""".stripMargin
 
   /** s9 candidate predicate: labels ≡ 0 (mod [[S9LabelMod]]) — the
     * metadata filter (license class, language, tenant) a production
@@ -732,48 +669,16 @@ object Similarity {
     * (fused into the scan's codegen stage, before any shuffle or
     * distance arithmetic), so the cell join and cosine kernel only
     * ever touch surviving rows — PRE-filtering, the FAISS/Milvus-style
-    * strategy for selective predicates. (The synthetic `label % 3`
-    * predicate is not parquet-pushable; a production equality/IN
-    * predicate on the same column additionally prunes row groups via
-    * PushedFilters — the plan shape downstream is identical.)
-    * Everything else is s3's audited shape:
-    * trained centroids inlined as literals (scan-local cell
-    * assignment, zero shuffle), broadcast query×probe fan-out, one
-    * candidate-bounded join, WindowGroupLimit top-k.
-    *
-    * Scale: cost ∝ filtered-corpus × nprobe/cells, same linearity as
-    * s3 with a smaller constant; at 100 TB the filter rides the same
-    * pushdown as every other scan predicate. The oracle replays the
-    * identical filtered plan with the trained centroids inlined
-    * ([[s9OracleSql]]); recall vs the filtered BRUTE FORCE is the
-    * spec's claim, measured 1.0 at the gate corpus. */
-  def s9FilteredAnn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val centroids: Array[(Int, Array[Float])] =
-      centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val structsArr = centroidStructsArr(centroids)
-    val cellExpr = expr(s"array_max($structsArr).id")
-    val probeExpr = expr(
-      s"transform(slice(reverse(array_sort($structsArr)), 1, $S9Probes)," +
-        " x -> x.id)")
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(probeExpr).as("qc"))
-    val cand = Tables.embeddings(s, dir)
-      .filter(col("label") % S9LabelMod === 0)
-      .withColumn("cell", cellExpr)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(broadcast(q),
-        col("cell") === col("qc") && col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", VectorOps.cosine("qe", "ce"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
-  }
+    * strategy for selective predicates, with the deeper [[S9Probes]]
+    * for its recall cliff. (The synthetic `label % 3` predicate is not
+    * parquet-pushable; a production equality/IN predicate on the same
+    * column additionally prunes row groups via PushedFilters.) Cost ∝
+    * filtered-corpus × nprobe/cells; recall vs the filtered BRUTE
+    * FORCE is the spec's claim, measured 1.0 at the gate corpus. */
+  def s9FilteredAnn(s: SparkSession, dir: String): DataFrame =
+    ivfProbe(s, dir, assignedCands(s, dir,
+        Tables.embeddings(s, dir).filter(col("label") % S9LabelMod === 0)),
+      S9Probes, TopK)
 
   /** s12 probe depth and graph degree: every vector probes its 4
     * nearest cells and keeps its 3 nearest in-probe neighbors. */
@@ -824,7 +729,7 @@ object Similarity {
     * at the 100× probe, re-parsed per invocation; the constructed
     * Literal carries the array directly. */
   private[graft] def s12RankCol(s: SparkSession, dir: String,
-      inputCol: String = "embedding"): org.apache.spark.sql.Column = {
+      inputCol: String = "embedding"): Column = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
@@ -840,7 +745,7 @@ object Similarity {
           ArrayType(FloatType, containsNull = false)),
         Literal.create(fineCoarse,
           ArrayType(IntegerType, containsNull = false)),
-        cp))
+        cp, cents.head.length))
   }
 
   def s12KnnGraph(s: SparkSession, dir: String): DataFrame = {
@@ -1867,8 +1772,8 @@ object Similarity {
     * — one row per vector `(vec_id, cell, is_kept)` — not just the
     * keep list, so the gate hashes the cell assignment too.
     *
-    * Scale shape: cell assignment is scan-local (trained centroids
-    * inlined as literals — zero shuffle, the exact primitive s3 uses);
+    * Scale shape: cell assignment is scan-local ([[ivfCellCol]] — zero
+    * shuffle, the exact route s3 uses);
     * then ONE keyed shuffle on cell id, and the within-cell self-join
     * is bounded by cell occupancy, which production keeps O(1) by
     * scaling k with corpus size (the SemDeDup paper runs 100k clusters
@@ -1879,12 +1784,8 @@ object Similarity {
     * (≤ the duplicate count, not the corpus). */
   def d10SemDedup(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids: Array[(Int, Array[Float])] =
-      centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val cellExpr = expr(s"array_max(${centroidStructsArr(centroids)}).id")
-
-    val cells = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"), cellExpr.as("cell"))
+    val cells = Tables.embeddings(s, dir).select(col("vec_id"),
+      col("embedding"), ivfCellCol(centroidsFor(s, dir)).as("cell"))
     val lo = cells.select(col("cell").as("cell_a"), col("vec_id").as("vec_a"),
       col("embedding").as("ea"))
     val hi = cells.select(col("cell").as("cell_b"), col("vec_id").as("vec_b"),
@@ -1936,25 +1837,21 @@ object Similarity {
     * batch). Two fingerprint-keyed, `_SUCCESS`-gated, write-once
     * layers:
     *  - `base/` — the corpus assignment, the pay-once-per-generation
-    *    corpus pass (scan-local inlined-centroid argmax, zero shuffle
-    *    before the partitioned write);
+    *    corpus pass (scan-local [[ivfCellCol]], zero shuffle before
+    *    the partitioned write);
     *  - `inc/` — the ADMITTED increment: the staged shard assigned by
     *    the SAME frozen quantizer (no retraining — the production
     *    contract: centroids are versioned artifacts, increments join
     *    the existing geometry) and appended as its own partition tree,
     *    cost ∝ increment, corpus untouched. */
   def s8IndexPath(s: SparkSession, dir: String): String = {
-    graft.functions.GraftFunctions.register(s)
     val path = s"target/ivfindex/${graft.Tables.fingerprint(s, dir, "embeddings")}"
-    val cents = centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val cellExpr = expr(s"array_max(${centroidStructsArr(cents)}).id")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/base", "_SUCCESS"))) {
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("cell", cellExpr)
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
+      s8WriteAssigned(s, dir,
+        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
+        s"$path/base")
     }
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/inc", "_SUCCESS"))) {
       s8WriteAssigned(s, dir, s.read.parquet(s8IncrementPath(s, dir)),
@@ -1969,9 +1866,7 @@ object Similarity {
     * against growing corpora (the d11Admit pattern). */
   private[graft] def s8WriteAssigned(s: SparkSession, dir: String,
       inc: DataFrame, outPath: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
-    val cents = centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    inc.withColumn("cell", expr(s"array_max(${centroidStructsArr(cents)}).id"))
+    inc.withColumn("cell", ivfCellCol(centroidsFor(s, dir)))
       .write.partitionBy("cell").mode("overwrite").parquet(outPath)
   }
 
@@ -1982,51 +1877,28 @@ object Similarity {
     * lake never re-trains or re-assigns 100 TB of vectors to ingest a
     * shard). The quantizer is FROZEN (centroidsFor's versioned
     * artifact — cache-hit here), the increment is assigned scan-local
-    * by the same inlined-centroid argmax and appended under
-    * `inc/` ([[s8IndexPath]]); the query then reads ONLY the probed
-    * cell partitions of base ∪ inc — a static partition-pruned scan
-    * (PartitionFilters on `cell`, spec-asserted), the inverted-list
-    * read pattern IVF exists for. Queries stay the [[NumQueries]]
-    * corpus vectors; their probe lists come from the same probeExpr as
-    * s3 on a query-sized frame, and the probed-cell id set (≤
-    * queries × nprobe literals) feeds the pruning filter. Every
-    * increment copy surfaces its source at cosine exactly 1.0 —
-    * planted recall ground truth, and the oracle (generated with the
-    * trained centroids inlined, deriving the same shard in SQL)
-    * hash-checks the whole report.
-    *
-    * Scale shape: admission = shard scan + partitioned append
-    * (∝ increment); query = partition-pruned index scan (nprobe/cells
-    * of index bytes) joined to a BROADCAST query×probe frame, one
-    * window top-k — no shuffle of index rows except the final
-    * candidate rank. The only driver-side materialization is the
-    * probed-cell id list (queries × nprobe ints — request-sized). */
+    * by [[ivfCellCol]] and appended under `inc/` ([[s8IndexPath]]);
+    * the query is the probe core over base ∪ inc with `pruneCells`,
+    * so it reads ONLY the probed cell partitions — a static
+    * partition-pruned scan (PartitionFilters on `cell`,
+    * spec-asserted), the inverted-list read pattern IVF exists for.
+    * Every increment copy surfaces its source at cosine exactly 1.0 —
+    * planted recall ground truth, and the oracle (deriving the same
+    * shard in SQL) hash-checks the whole report. Scale shape:
+    * admission = shard scan + partitioned append (∝ increment);
+    * query = nprobe/cells of the index bytes, no shuffle of index rows
+    * except the final candidate rank. */
   def s8AnnIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val idx = s8IndexPath(s, dir)
-    val cents = centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val probeExpr = expr(
-      s"transform(slice(reverse(array_sort(${centroidStructsArr(cents)}))," +
-        s" 1, $IvfProbes), x -> x.id)")
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(probeExpr).as("qc"))
-      .localCheckpoint(true) // query-sized; reused for cells + join
-    val probed = q.select("qc").distinct().collect().map(_.getInt(0))
-    val index = s.read.parquet(s"$idx/base")
-      .unionByName(s.read.parquet(s"$idx/inc"))
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    index.join(broadcast(q),
-        col("cell") === col("qc") && col("query_id") =!= col("vec_id"))
-      .withColumn("cos", VectorOps.cosine("qe", "embedding"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    ivfProbe(s, dir, indexCands(s.read.parquet(s"$idx/base")
+        .unionByName(s.read.parquet(s"$idx/inc"))),
+      IvfProbes, TopK, pruneCells = true)
   }
+
+  /** Rows of the persisted cell-partitioned index as probe candidates. */
+  private def indexCands(index: DataFrame): DataFrame =
+    index.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
+      col("cell"))
 
   /** s13: COMPACT the vector lake — c16's OPTIMIZE job applied to the
     * cell-partitioned IVF index. Every s8 admission appends its shard
@@ -2063,32 +1935,18 @@ object Similarity {
   /** DuckDB mirror of [[s13CompactIndex]]'s audit: derive the s8
     * increment shard and its frozen-quantizer cell assignment in SQL,
     * group by cell. */
-  private[graft] def s13OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |mx AS (SELECT max(vec_id) AS m FROM embeddings),
+  private[graft] def s13OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH mx AS (SELECT max(vec_id) AS m FROM embeddings),
        |inc AS (
        |  SELECT e.vec_id + mx.m + 1 AS vec_id, e.embedding
        |  FROM embeddings e, mx WHERE e.vec_id % $S8Mod = 0),
-       |scored_cells AS (
-       |  SELECT i.vec_id, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM inc i CROSS JOIN cent c),
-       |assigned AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT vec_id, cid, row_number() OVER (
-       |      PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |    FROM scored_cells) WHERE crnk = 1)
-       |SELECT CAST(cell AS INTEGER) AS cell,
+       |${sqlRankedCells(cent, "inc", carry = Nil)}
+       |SELECT CAST(cid AS INTEGER) AS cell,
        |  CAST(count(*) AS BIGINT) AS n_vecs,
        |  min(vec_id) AS min_id, max(vec_id) AS max_id,
        |  CAST(sum(vec_id) AS BIGINT) AS sum_id
-       |FROM assigned GROUP BY cell ORDER BY cell""".stripMargin
-  }
+       |FROM ranked_cells WHERE crnk = 1
+       |GROUP BY cid ORDER BY cell""".stripMargin
 
   /** The d12 staged shard: every [[S8Mod]]th corpus vector re-keyed
     * past max id — EXACT copy when the source id divides 2·[[S8Mod]]
@@ -2131,7 +1989,7 @@ object Similarity {
     * tier). Output: (vec_id, cell, is_new_unique) per increment vector.
     *
     * Scale shape: corpus-sized work is ZERO at admission — the shard
-    * assigns scan-local (inlined centroids), the corpus side is the
+    * assigns scan-local ([[ivfCellCol]]), the corpus side is the
     * PERSISTED cell-partitioned index read pruned to the shard's cells
     * (≤ cells directories; at 100 TB each cell is further bucketed),
     * and both confirm joins are cell-blocked: shard × cell-occupancy,
@@ -2149,10 +2007,8 @@ object Similarity {
       incVecs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val idx = s8IndexPath(s, dir)
-    val cents = centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val cellExpr = expr(s"array_max(${centroidStructsArr(cents)}).id")
     val inc = incVecs
-      .withColumn("cell", cellExpr)
+      .withColumn("cell", ivfCellCol(centroidsFor(s, dir)))
       .localCheckpoint(true) // shard-sized; reused by 3 joins below
     val incCells = inc.select("cell").distinct().collect().map(_.getInt(0))
     val base = s.read.parquet(s"$idx/base")
@@ -2181,14 +2037,8 @@ object Similarity {
     * [[S8Mod]] re-keying, same copy/negate split), restricted to
     * increment rows — the full-recompute equivalence, generated with
     * the trained centroids inlined. */
-  private[graft] def d12OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |mx AS (SELECT max(vec_id) AS m FROM embeddings),
+  private[graft] def d12OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH mx AS (SELECT max(vec_id) AS m FROM embeddings),
        |eu AS (
        |  SELECT vec_id, embedding FROM embeddings
        |  UNION ALL
@@ -2196,15 +2046,10 @@ object Similarity {
        |    CASE WHEN e.vec_id % ${2 * S8Mod} = 0 THEN e.embedding
        |      ELSE list_transform(e.embedding, x -> -x) END AS embedding
        |  FROM embeddings e, mx WHERE e.vec_id % $S8Mod = 0),
-       |scored_cells AS (
-       |  SELECT u.vec_id, u.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM eu u CROSS JOIN cent c),
+       |${sqlRankedCells(cent, "eu")},
        |cells AS (
-       |  SELECT vec_id, embedding, cid AS cell FROM (
-       |    SELECT vec_id, embedding, cid, row_number() OVER (
-       |      PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |    FROM scored_cells) WHERE crnk = 1),
+       |  SELECT vec_id, embedding, cid AS cell FROM ranked_cells
+       |  WHERE crnk = 1),
        |dropped AS (
        |  SELECT DISTINCT y.vec_id
        |  FROM cells x JOIN cells y
@@ -2217,7 +2062,6 @@ object Similarity {
        |    AS is_new_unique
        |FROM incr i LEFT JOIN dropped d ON d.vec_id = i.vec_id
        |ORDER BY i.vec_id""".stripMargin
-  }
 
   // --------------------------------------------------- s11 index forget
 
@@ -2257,12 +2101,10 @@ object Similarity {
     * catalog table (pay-once), apply the forget merge (re-runs
     * recompute an EMPTY footprint from the erased table — idempotent
     * no-op, the c15 contract), then answer the standard s8 queries
-    * from the erased table's probed cells. Oracle: the s8 SQL with
-    * the forget rule excluded from the INDEX side only (queries
-    * unrestricted) — hash-green at 3 SFs with the trained centroids
-    * inlined. */
+    * from the erased table's probed cells (the probe core with
+    * `pruneCells`). Oracle: the s8 SQL with the forget rule excluded
+    * from the INDEX side only (queries unrestricted). */
   def s11AnnForget(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val idx = s8IndexPath(s, dir)
     val t = graft.sources.Sources.ensureStagedPartitioned(
       s, s11Table(s, dir), "cell",
@@ -2276,116 +2118,38 @@ object Similarity {
       // delete-only (the c15 contract): limit(0) upserts re-derive for
       // free; an idempotent re-apply must not pay a materialization job
       materializeUpserts = false)
-    val cents = centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
-    val probeExpr = expr(
-      s"transform(slice(reverse(array_sort(${centroidStructsArr(cents)}))," +
-        s" 1, $IvfProbes), x -> x.id)")
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(probeExpr).as("qc"))
-      .localCheckpoint(true) // query-sized; reused for cells + join
-    val probed = q.select("qc").distinct().collect().map(_.getInt(0))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    s.table(t)
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-      .join(broadcast(q),
-        col("cell") === col("qc") && col("query_id") =!= col("vec_id"))
-      .withColumn("cos", VectorOps.cosine("qe", "embedding"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    ivfProbe(s, dir, indexCands(s.table(t)), IvfProbes, TopK,
+      pruneCells = true)
   }
 
-  /** DuckDB mirror of [[s11AnnForget]]: [[s8OracleSql]]'s derivation
-    * with the forget rule excluded from the INDEX side only — the
-    * query side stays unrestricted (erasure removes the vector, not
-    * the requester). */
-  private[graft] def s11OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |mx AS (SELECT max(vec_id) AS m FROM embeddings),
+  /** DuckDB mirror of [[s11AnnForget]]: [[s8OracleSql]] with the
+    * forget rule excluded from the candidate side only — the query
+    * side stays unrestricted (erasure removes the vector, not the
+    * requester). */
+  private[graft] def s11OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH $s8UnionCtes,
+       |${sqlRankedCells(cent, "eu")},
+       |${sqlProbeTail(IvfProbes, TopK,
+            candWhere = s" AND vec_id % $S11ForgetMod <> 0")}""".stripMargin
+
+  /** The corpus ∪ SQL-derived s8 increment shard as `eu` (same
+    * [[S8Mod]] rule, same re-keying past max id). */
+  private val s8UnionCtes: String =
+    s"""mx AS (SELECT max(vec_id) AS m FROM embeddings),
        |eu AS (
        |  SELECT vec_id, embedding FROM embeddings
        |  UNION ALL
        |  SELECT e.vec_id + mx.m + 1 AS vec_id, e.embedding
-       |  FROM embeddings e, mx WHERE e.vec_id % $S8Mod = 0),
-       |scored_cells AS (
-       |  SELECT u.vec_id, u.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM eu u CROSS JOIN cent c),
-       |ranked_cells AS (
-       |  SELECT vec_id, embedding, cid, row_number() OVER (
-       |    PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |  FROM scored_cells),
-       |cells AS (
-       |  SELECT vec_id AS neighbor_id, embedding AS ce, cid AS cell
-       |  FROM ranked_cells
-       |  WHERE crnk = 1 AND vec_id % $S11ForgetMod <> 0),
-       |qprobe AS (
-       |  SELECT vec_id AS query_id, embedding AS qe, cid AS qc
-       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $IvfProbes),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, ${VectorOps.sqlCosine("qe", "ce")} AS cos
-       |  FROM qprobe JOIN cells ON cells.cell = qprobe.qc
-       |    AND cells.neighbor_id <> qprobe.query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored)
-       |SELECT query_id, CAST(rnk AS INTEGER) AS rnk, neighbor_id, cos
-       |FROM ranked WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin
-  }
+       |  FROM embeddings e, mx WHERE e.vec_id % $S8Mod = 0)""".stripMargin
 
   /** DuckDB mirror of [[s8AnnIncremental]]: the s3 oracle over the
-    * UNION of `embeddings` and the SQL-derived increment shard (same
-    * [[S8Mod]] rule, same re-keying past max id). Queries are the
-    * corpus vectors < [[NumQueries]] — increment ids sort past the
-    * corpus max, so the restriction is unambiguous. */
-  private[graft] def s8OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |mx AS (SELECT max(vec_id) AS m FROM embeddings),
-       |eu AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT e.vec_id + mx.m + 1 AS vec_id, e.embedding
-       |  FROM embeddings e, mx WHERE e.vec_id % $S8Mod = 0),
-       |scored_cells AS (
-       |  SELECT u.vec_id, u.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM eu u CROSS JOIN cent c),
-       |ranked_cells AS (
-       |  SELECT vec_id, embedding, cid, row_number() OVER (
-       |    PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |  FROM scored_cells),
-       |cells AS (
-       |  SELECT vec_id AS neighbor_id, embedding AS ce, cid AS cell
-       |  FROM ranked_cells WHERE crnk = 1),
-       |qprobe AS (
-       |  SELECT vec_id AS query_id, embedding AS qe, cid AS qc
-       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $IvfProbes),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, ${VectorOps.sqlCosine("qe", "ce")} AS cos
-       |  FROM qprobe JOIN cells ON cells.cell = qprobe.qc
-       |    AND cells.neighbor_id <> qprobe.query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored)
-       |SELECT query_id, CAST(rnk AS INTEGER) AS rnk, neighbor_id, cos
-       |FROM ranked WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin
-  }
+    * corpus ∪ increment union. Queries are the corpus vectors <
+    * [[NumQueries]] — increment ids sort past the corpus max, so the
+    * restriction is unambiguous. */
+  private[graft] def s8OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH $s8UnionCtes,
+       |${sqlRankedCells(cent, "eu")},
+       |${sqlProbeTail(IvfProbes, TopK)}""".stripMargin
 
   // ------------------------------------------------------------- s4 BM25
 
@@ -2894,29 +2658,17 @@ object Similarity {
     * are WindowGroupLimit-pruned; rerank broadcasts. */
   def s7IvfPq(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids: Array[(Int, Array[Float])] =
-      centroidsFor(s, dir).zipWithIndex.map { case (v, i) => (i, v) }
+    val cents = centroidsFor(s, dir)
     val (cb, nCorpus) = pqFor(s, dir)
     val shortDepth = pqShortlistFor(nCorpus)
     val nv = pqNv(s, dir)
 
-    // the fused routing kernel (all 16 cell ids ranked by the s3
-    // (cos DESC, id DESC) order) replaces the per-row 16-struct
-    // array_max spelling — on s7's corpus-sized path the structs were
-    // the probe-measured bottleneck (~110 µs/row interpreted)
-    require(IvfCells == graft.functions.IvfRankCellsKernel.K,
-      "IVF geometry drifted from the ivf_rank_cells kernel's")
-    val centFlat = "array(" + centroids
-      .flatMap(_._2.map(x => s"CAST($x AS FLOAT)")).mkString(",") + ")"
-    val rankExpr = s"ivf_rank_cells(embedding, $centFlat)"
-    val cellExpr = expr(s"element_at($rankExpr, 1)")
-    val probeExpr = expr(s"slice($rankExpr, 1, $IvfProbes)")
-
     val cand = nv.select(col("vec_id").as("neighbor_id"),
-      cellExpr.as("cell"), pqCodesCol(cb))
+      ivfCellCol(cents).as("cell"), pqCodesCol(cb))
     val q = nv.filter(col("vec_id") < NumQueries)
       .select((col("vec_id").as("query_id") +:
-        explode(probeExpr).as("qc") +: pqQtabCols(cb)): _*)
+        explode(slice(ivfRankCol(cents), 1, IvfProbes)).as("qc") +:
+        pqQtabCols(cb)): _*)
 
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adist").asc, col("neighbor_id"))
@@ -3029,34 +2781,21 @@ object Similarity {
        |${pqOracleTail(pqShortlistFor(nCorpus))}""".stripMargin
   }
 
-  /** DuckDB mirror of [[s7IvfPq]]: the shared PQ core CTEs plus the s3
-    * cell-routing CTEs (cent VALUES, argmax assignment with ties to
-    * the HIGHER cid, probe list crnk ≤ nprobe); the contrib join
-    * additionally requires the candidate's cell to be one of the
-    * query's probes — a candidate matches at most one probe, so no
-    * pair duplicates — then the shared shortlist/rerank tail. */
+  /** DuckDB mirror of [[s7IvfPq]]: the shared PQ core CTEs plus the
+    * shared cell ranking ([[sqlRankedCells]]: assigned cell crnk = 1,
+    * probe list crnk ≤ nprobe); the contrib join additionally requires
+    * the candidate's cell to be one of the query's probes — a
+    * candidate matches at most one probe, so no pair duplicates — then
+    * the shared shortlist/rerank tail. */
   private[graft] def s7OracleSql(cent: Array[Array[Float]],
       model: (Array[Array[Array[Float]]], Long)): String = {
     val (cb, nCorpus) = model
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val centVals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
     s"""WITH ${pqOracleCoreCtes(cb)},
-       |cent(icid, icv) AS (VALUES
-       |    $centVals),
-       |cellsc AS (
-       |  SELECT e.vec_id, c.icid,
-       |    ${VectorOps.sqlCosine("embedding", "icv")} AS ccos
-       |  FROM embeddings e CROSS JOIN cent c),
-       |rankedc AS (
-       |  SELECT vec_id, icid, row_number() OVER (
-       |    PARTITION BY vec_id ORDER BY ccos DESC, icid DESC) AS crnk
-       |  FROM cellsc),
-       |cells AS (SELECT vec_id, icid AS cell FROM rankedc WHERE crnk = 1),
+       |${sqlRankedCells(cent, "embeddings", carry = Nil)},
+       |cells AS (SELECT vec_id, cid AS cell FROM ranked_cells WHERE crnk = 1),
        |qprobe AS (
-       |  SELECT vec_id AS query_id, icid AS qc
-       |  FROM rankedc WHERE vec_id < $NumQueries AND crnk <= $IvfProbes),
+       |  SELECT vec_id AS query_id, cid AS qc
+       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $IvfProbes),
        |contrib AS (
        |  SELECT qd.query_id, c.vec_id AS neighbor_id, pd
        |  FROM codes c
@@ -3069,39 +2808,52 @@ object Similarity {
 
   // ---------------------------------------------------------------- oracle
 
-  /** DuckDB mirror of [[s3Ivf]] with the trained centroids inlined as
-    * FLOAT literals (16×64 ≈ 10 KB of SQL — the quantizer is
-    * deterministic per corpus, so "not SQL-expressible" only ever
-    * applied to TRAINING, not to assignment/probing/top-k, which are
-    * plain SQL once the centroids are data). Tie-breaks mirror the
-    * Spark plan exactly: cell assignment = array_max over (cos, id)
-    * structs → ORDER BY ccos DESC, cid DESC; probe list = reverse
-    * array_sort prefix → same ordering, crnk ≤ nprobe; final top-k =
-    * cos DESC, neighbor_id ASC. Scala Float.toString is the shortest
-    * round-trip form, so both engines recover bit-identical float32
-    * centroids and the shared left-fold cosine keeps scores
-    * bit-identical. */
-  private[graft] def s3OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
+  /** DuckDB list literal of a trained float vector: Scala's
+    * Float.toString is the shortest round-trip form, so DuckDB recovers
+    * the bit-identical float32 and the shared left-fold cosine keeps
+    * scores bit-identical. */
+  private[graft] def sqlVec(v: Array[Float]): String =
+    v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
+
+  /** The oracle's one cell ranking, the mirror of [[ivfRankCol]]: the
+    * trained centroids inlined as `cent(cid, cv)` VALUES, and
+    * `ranked_cells` — every row of `src` (which has `vec_id` and
+    * `embedding`) scored against every centroid and row-numbered by
+    * (ccos DESC, cid DESC), where DuckDB, like the kernel, ranks a NaN
+    * cosine highest — carrying `vec_id` and the `carry` columns of
+    * `src`. `crnk = 1` is the assigned cell, `crnk <= p` the probe
+    * list. Training is the only step that is not plain SQL, and the
+    * centroids are data once trained. */
+  private[graft] def sqlRankedCells(cent: Array[Array[Float]], src: String,
+      carry: Seq[String] = Seq("embedding")): String = {
     val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
+      .map { case (v, i) => s"($i, ${sqlVec(v)})" }.mkString(",\n    ")
+    val cols = ("vec_id" +: carry).mkString(", ")
+    s"""cent(cid, cv) AS (VALUES
        |    $vals),
-       |scored_cells AS (
-       |  SELECT e.vec_id, e.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM embeddings e CROSS JOIN cent c),
        |ranked_cells AS (
-       |  SELECT vec_id, embedding, cid, row_number() OVER (
+       |  SELECT $cols, cid, row_number() OVER (
        |    PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |  FROM scored_cells),
-       |cells AS (
+       |  FROM (
+       |    SELECT ${("vec_id" +: carry).map("u." + _).mkString(", ")}, c.cid,
+       |      ${VectorOps.sqlCosine("u.embedding", "c.cv")} AS ccos
+       |    FROM $src u CROSS JOIN cent c))""".stripMargin
+  }
+
+  /** The oracle's mirror of [[ivfProbe]] over `ranked_cells`: the
+    * candidates are the rows at their assigned cell (`candWhere`
+    * restricts them further), the queries the [[NumQueries]] vectors'
+    * first `probes` cells; then the self-excluding cell join, the
+    * shared cosine fold, the optional radius, and the best `limit` by
+    * (cos DESC, neighbor_id). */
+  private def sqlProbeTail(probes: Int, limit: Int,
+      minCos: Option[Double] = None, candWhere: String = ""): String =
+    s"""cells AS (
        |  SELECT vec_id AS neighbor_id, embedding AS ce, cid AS cell
-       |  FROM ranked_cells WHERE crnk = 1),
+       |  FROM ranked_cells WHERE crnk = 1$candWhere),
        |qprobe AS (
        |  SELECT vec_id AS query_id, embedding AS qe, cid AS qc
-       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $IvfProbes),
+       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $probes),
        |scored AS (
        |  SELECT query_id, neighbor_id, ${VectorOps.sqlCosine("qe", "ce")} AS cos
        |  FROM qprobe JOIN cells ON cells.cell = qprobe.qc
@@ -3109,10 +2861,14 @@ object Similarity {
        |ranked AS (
        |  SELECT query_id, neighbor_id, cos, row_number() OVER (
        |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored)
+       |  FROM scored${minCos.fold("")(t => s" WHERE cos >= $t")})
        |SELECT query_id, CAST(rnk AS INTEGER) AS rnk, neighbor_id, cos
-       |FROM ranked WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin
-  }
+       |FROM ranked WHERE rnk <= $limit ORDER BY query_id, rnk""".stripMargin
+
+  /** DuckDB mirror of [[s3Ivf]]. */
+  private[graft] def s3OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH ${sqlRankedCells(cent, "embeddings")},
+       |${sqlProbeTail(IvfProbes, TopK)}""".stripMargin
 
   /** DuckDB mirror of [[s12KnnGraph]] — [[s3OracleSql]]'s replay with
     * the WHOLE corpus as the query side, [[S12Probes]] probes,
@@ -3137,13 +2893,11 @@ object Similarity {
   private def s12EdgeCtes(cent: Array[Array[Float]],
       coarse: Array[Array[Float]], fineCoarse: Array[Int],
       cp: Int, rel: String = "embeddings"): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
     val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)}, ${fineCoarse(i)})" }
+      .map { case (v, i) => s"($i, ${sqlVec(v)}, ${fineCoarse(i)})" }
       .mkString(",\n    ")
     val cvals = coarse.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
+      .map { case (v, i) => s"($i, ${sqlVec(v)})" }.mkString(",\n    ")
     s"""ccent(ccid, cv) AS (VALUES
        |    $cvals),
        |cent(cid, fv, fcc) AS (VALUES
@@ -3278,67 +3032,24 @@ object Similarity {
       math.min(S12CoarseProbes, coarse.length))
   }
 
-  /** DuckDB mirror of [[s9FilteredAnn]] — [[s3OracleSql]]'s replay
-    * with the label pre-filter in the candidate CTE and the deeper
-    * [[S9Probes]] probe set. The filter sits BEFORE the cell join in
-    * both engines, so the compared plan is the filtered plan, not a
-    * post-filtered rewrite of s3's. */
-  private[graft] def s9OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |scored_cells AS (
-       |  SELECT e.vec_id, e.embedding, e.label, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM embeddings e CROSS JOIN cent c),
-       |ranked_cells AS (
-       |  SELECT vec_id, embedding, label, cid, row_number() OVER (
-       |    PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |  FROM scored_cells),
-       |cells AS (
-       |  SELECT vec_id AS neighbor_id, embedding AS ce, cid AS cell
-       |  FROM ranked_cells WHERE crnk = 1 AND label % $S9LabelMod = 0),
-       |qprobe AS (
-       |  SELECT vec_id AS query_id, embedding AS qe, cid AS qc
-       |  FROM ranked_cells WHERE vec_id < $NumQueries AND crnk <= $S9Probes),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, ${VectorOps.sqlCosine("qe", "ce")} AS cos
-       |  FROM qprobe JOIN cells ON cells.cell = qprobe.qc
-       |    AND cells.neighbor_id <> qprobe.query_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored)
-       |SELECT query_id, CAST(rnk AS INTEGER) AS rnk, neighbor_id, cos
-       |FROM ranked WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin
-  }
+  /** DuckDB mirror of [[s9FilteredAnn]]: the label pre-filter on the
+    * candidate side, before the cell join as in Spark, and the deeper
+    * [[S9Probes]] probe list. */
+  private[graft] def s9OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH ${sqlRankedCells(cent, "embeddings", Seq("embedding", "label"))},
+       |${sqlProbeTail(S9Probes, TopK,
+            candWhere = s" AND label % $S9LabelMod = 0")}""".stripMargin
 
-  /** DuckDB mirror of [[d10SemDedup]] with the trained centroids
-    * inlined — same argmax cell assignment as [[s3OracleSql]] (ties to
-    * the higher cid, mirroring Spark's struct array_max), then the
-    * within-cell lower-id pair rule and the audit flag. The shared
-    * left-fold cosine keeps the ≥ τ decision bit-identical across
-    * engines, so no boundary pair can flip between Spark and the
-    * oracle. */
-  private[graft] def d10OracleSql(cent: Array[Array[Float]]): String = {
-    def litVec(v: Array[Float]) =
-      v.map(x => s"CAST($x AS FLOAT)").mkString("[", ",", "]")
-    val vals = cent.zipWithIndex
-      .map { case (v, i) => s"($i, ${litVec(v)})" }.mkString(",\n    ")
-    s"""WITH cent(cid, cv) AS (VALUES
-       |    $vals),
-       |scored_cells AS (
-       |  SELECT e.vec_id, e.embedding, c.cid,
-       |    ${VectorOps.sqlCosine("embedding", "cv")} AS ccos
-       |  FROM embeddings e CROSS JOIN cent c),
+  /** DuckDB mirror of [[d10SemDedup]]: the assigned cells of
+    * [[sqlRankedCells]], then the within-cell lower-id pair rule and
+    * the audit flag. The shared left-fold cosine keeps the ≥ τ
+    * decision bit-identical across engines, so no boundary pair can
+    * flip between Spark and the oracle. */
+  private[graft] def d10OracleSql(cent: Array[Array[Float]]): String =
+    s"""WITH ${sqlRankedCells(cent, "embeddings")},
        |cells AS (
-       |  SELECT vec_id, embedding, cid AS cell FROM (
-       |    SELECT vec_id, embedding, cid, row_number() OVER (
-       |      PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS crnk
-       |    FROM scored_cells) WHERE crnk = 1),
+       |  SELECT vec_id, embedding, cid AS cell FROM ranked_cells
+       |  WHERE crnk = 1),
        |dropped AS (
        |  SELECT DISTINCT y.vec_id
        |  FROM cells x JOIN cells y
@@ -3349,7 +3060,6 @@ object Similarity {
        |    AS is_kept
        |FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id
        |ORDER BY c.vec_id""".stripMargin
-  }
 
   /** Oracle for an EXPLICIT corpus: trains (or cache-hits) the
     * quantizer for `dir` on demand, so the s3/d10 entries never depend

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{BigramModel, GraftFunctions, TextHashKernels}
-import graft.operators.VectorOps
+import graft.operators.{Similarity, VectorOps}
 
 class FunctionsSpec extends AnyFunSuite {
 
@@ -331,25 +331,44 @@ class FunctionsSpec extends AnyFunSuite {
     GraftFunctions.register(s)
     import s.implicits._
     val rnd = new scala.util.Random(7)
-    def vec() = Array.fill(64)(rnd.nextFloat() * 2f - 1f)
-    val rows = Seq.fill(40)(vec()).toDF("embedding")
-    for (k <- Seq(16, 20)) {
-      val cents = Array.fill(k)(vec())
-      val flat = "array(" +
-        cents.flatMap(_.map(x => s"CAST($x AS FLOAT)")).mkString(",") + ")"
+    def vec(dim: Int) = Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
+    // (cells, dim, centroid edits): plain random quantizers at 16 and 20
+    // cells; a zero centroid (NaN cosine for every row) and an exact
+    // duplicate (a tie on every row); a non-64 dim. Every row set holds
+    // a zero-norm embedding (NaN against every cell).
+    val zeroCell = 3; val dupOf = 2; val dup = 9
+    val cases = Seq(
+      (16, 64, false), (20, 64, false), (16, 64, true), (16, 48, false))
+    for ((k, dim, degenerate) <- cases) {
+      val cents = Array.fill(k)(vec(dim))
+      if (degenerate) {
+        cents(zeroCell) = new Array[Float](dim)
+        cents(dup) = cents(dupOf).clone()
+      }
+      val rows = (new Array[Float](dim) +: Seq.fill(40)(vec(dim)))
+        .toDF("embedding")
       val structs = "array(" + cents.zipWithIndex.map { case (v, i) =>
         s"struct(cosine_sim(embedding, array(${v.map(x =>
           s"CAST($x AS FLOAT)").mkString(",")})) AS cos, $i AS id)"
       }.mkString(",") + ")"
       val emit = math.min(k, 16)
-      val got = rows.selectExpr(
-          s"slice(ivf_rank_cells(embedding, $flat), 1, $emit) AS kr",
-          s"transform(slice(reverse(array_sort($structs)), 1, $emit)," +
-            " x -> x.id) AS sr")
+      val got = rows.select(
+          slice(Similarity.ivfRankCol(cents), 1, emit).as("kr"),
+          expr(s"transform(slice(reverse(array_sort($structs)), 1, $emit)," +
+            " x -> x.id)").as("sr"))
         .collect()
       got.foreach { r =>
         assert(r.getSeq[Int](0) == r.getSeq[Int](1),
-          s"k=$k: kernel rank diverged from the struct spelling")
+          s"k=$k dim=$dim degenerate=$degenerate: kernel rank diverged " +
+            "from the struct spelling")
+      }
+      // the zero-norm row ranks every cell at NaN: ids descending
+      assert(got.head.getSeq[Int](0) == (k - 1 to k - emit by -1))
+      if (degenerate) got.tail.foreach { r =>
+        val kr = r.getSeq[Int](0)
+        assert(kr.head == zeroCell, "a NaN cosine ranks highest")
+        assert(kr.indexOf(dup) == kr.indexOf(dupOf) - 1,
+          "an exact tie goes to the higher id")
       }
     }
   }

@@ -521,11 +521,13 @@ class SimilaritySpec extends AnyFunSuite {
       assert(f.partitionFilters.nonEmpty, "cell partition filter present")
       assert(f.relation.partitionSchema.fieldNames.contains("cell"))
     }
-    // index content == fresh inline assignment over corpus ∪ increment
-    val cents = Similarity.centroidsFor(s, dir)
-      .zipWithIndex.map { case (v, i) => (i, v) }
-    val cellExpr = expr(
-      s"array_max(${Similarity.centroidStructsArr(cents)}).id")
+    // index content == a fresh assignment over corpus ∪ increment by
+    // the kernel-free reference: array_max over (cos, id) structs
+    val structs = Similarity.centroidsFor(s, dir).zipWithIndex
+      .map { case (v, i) =>
+        s"struct(cosine_sim(embedding, array(${v.map(x =>
+          s"CAST($x AS FLOAT)").mkString(",")})) AS cos, $i AS id)" }
+    val cellExpr = expr(s"array_max(array(${structs.mkString(",")})).id")
     val idx = Similarity.s8IndexPath(s, dir)
     val stored = s.read.parquet(s"$idx/base")
       .unionByName(s.read.parquet(s"$idx/inc"))
