@@ -1,10 +1,12 @@
 package graft
 
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.graftbridge.GraftCheckpoints
 
@@ -31,6 +33,10 @@ import org.apache.spark.sql.graftbridge.GraftCheckpoints
   * more than the wait, and the lock is reentrant. (A multi-tenant
   * driver would hold a per-key lazy value instead, so that one corpus's
   * build never queues another's lookup.)
+  *
+  * Artifacts persisted on the filesystem (staged shards, indexes,
+  * layouts, pipeline targets) go through [[staged]], the one
+  * stage-once publish protocol.
   */
 object Artifacts {
   /** Owner of values whose lifetime is the JVM's. */
@@ -128,5 +134,94 @@ object Artifacts {
     val k = slot(s, tag)
     val prev = if (frames.isEmpty) leases.remove(k) else leases.put(k, frames)
     Option(prev).foreach(_.foreach(GraftCheckpoints.releaseLocalCheckpoint))
+  }
+
+  /** Commit-marker filename of a [[staged]] unit. Distinct from Spark's
+    * `_SUCCESS`, which the parquet committer writes per job, including
+    * for half-published multi-job outputs a crashed run may leave
+    * behind: only [[staged]] creates this file, and only after the
+    * unit's data is in place. */
+  val Marker = "_GRAFT_COMMITTED"
+
+  /** The kinds of operator-staged artifact, each a directory under
+    * `target/` keyed per corpus generation; the one list a cold start
+    * wipes (MemProbe). */
+  val StagedKinds = Seq("admitshard", "benchdata", "dedupindex", "incdata",
+    "ivfinc", "ivfindex", "knngraph", "semdedupinc", "snapdata", "zorder")
+
+  /** `target/<kind>/<sub...>`: where staged artifacts of `kind` live. */
+  def stagedDir(kind: String, sub: String*): String = {
+    require(StagedKinds.contains(kind), s"unknown staged kind $kind")
+    (s"target/$kind" +: sub).mkString("/")
+  }
+
+  /** True iff the unit at `path` was published by [[staged]]. */
+  def committed(s: SparkSession, path: String): Boolean = {
+    val marker = new Path(path, Marker)
+    marker.getFileSystem(s.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
+  private val stageLocks = new ConcurrentHashMap[String, Object]()
+
+  /** Stage the unit at `path` once: the Luigi rule that a task is done
+    * when its output target exists, made crash-safe. A unit whose
+    * [[Marker]] exists is returned as is. Otherwise `write` fills a
+    * fresh scratch directory beside the unit, the scratch is renamed
+    * onto the unit, and the marker is created with create-no-overwrite,
+    * which is atomic on HDFS and object stores alike. Returns `path`.
+    *
+    *  - A crash mid-write leaves data without a marker. That is debris
+    *    the next call owns: it is deleted, then replaced. Spark's
+    *    `_SUCCESS` alone never counts as committed.
+    *  - Within a JVM, callers of one path serialize on a per-path lock,
+    *    so two threads never race two writes into one unit; the second
+    *    finds the first's marker and reads its rows.
+    *  - Across JVMs, a run that finds a marker after writing drops its
+    *    scratch and keeps the committed output; if another run commits
+    *    between the check and the rename, its marker wins, and both
+    *    wrote the same deterministic rows.
+    *
+    * With `parts`, the unit is those entries of the directory `path`
+    * (each written by `write` under the scratch directory), committed
+    * together by one marker in `path` and rebuilt if any is missing.
+    * Only the named entries are replaced, so the directory may hold
+    * other units beside them. */
+  def staged(s: SparkSession, path: String, parts: String*)(
+      write: String => Unit): String = {
+    val unit = new Path(path)
+    val marker = new Path(unit, Marker)
+    val fs = unit.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def done =
+      fs.exists(marker) && parts.forall(p => fs.exists(new Path(unit, p)))
+    if (!done)
+      stageLocks.computeIfAbsent(path, _ => new Object).synchronized {
+        if (!done) {
+          val scratch = new Path(s"$path.inprogress-${UUID.randomUUID()}")
+          try {
+            write(scratch.toString)
+            // a concurrent run that committed first keeps its output
+            if (!done) publish(fs, scratch, unit, parts)
+          } finally fs.delete(scratch, true)
+        }
+      }
+    path
+  }
+
+  private def publish(fs: FileSystem, scratch: Path, unit: Path,
+      parts: Seq[String]): Unit = {
+    val marker = new Path(unit, Marker)
+    val moves =
+      if (parts.isEmpty) Seq(scratch -> unit)
+      else {
+        fs.mkdirs(unit)
+        parts.map(p => new Path(scratch, p) -> new Path(unit, p))
+      }
+    moves.foreach { case (from, to) =>
+      fs.delete(to, true) // uncommitted crash debris
+      if (!fs.rename(from, to) && !fs.exists(marker)) // not a lost race
+        throw new java.io.IOException(s"could not publish $from -> $to")
+    }
+    try fs.create(marker, /* overwrite = */ false).close()
+    catch { case _: java.io.IOException if fs.exists(marker) => () }
   }
 }

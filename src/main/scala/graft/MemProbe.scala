@@ -117,17 +117,14 @@ object MemProbe {
         // the trained-model dirs are RESOLVED from the same confs the
         // operators read (a relocated artifact dir would otherwise be
         // missed and the probe would silently measure warm staging —
-        // r16 ADVICE); the staged-data dirs are the operators' fixed
-        // paths. The env JSON line below records what was actually
-        // wiped, so a cold artifact is self-describing.
+        // r16 ADVICE); the staged-data dirs come from the store's one
+        // list of staged kinds. The env JSON line below records what
+        // was actually wiped, so a cold artifact is self-describing.
         val dirs = Seq(
           spark.conf.get("spark.graft.centroids.dir",
             "target/graft-centroids"),
-          spark.conf.get("spark.graft.pq.dir", "target/graft-pq"),
-          "target/dedupindex", "target/incdata", "target/admitshard",
-          "target/benchdata", "target/ivfinc", "target/ivfindex",
-          "target/semdedupinc", "target/knngraph", "target/snapdata",
-          "target/zorder")
+          spark.conf.get("spark.graft.pq.dir", "target/graft-pq")) ++
+          Artifacts.StagedKinds.map(Artifacts.stagedDir(_))
         dirs.flatMap { d =>
           val p = new org.apache.hadoop.fs.Path(d)
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -41,11 +41,9 @@ object Probe {
     if (sections("q36")) probeQ36(spark, sfDir) // not in the default set
     if (sections("bpe")) probeBpe(spark) // not in the default set
     if (sections("q36b")) probeQ36B(spark) // not in the default set
-    if (sections("d11")) probeD11(spark, sfDir) // not in the default set
     if (sections("decade")) probeDecade(spark, sfDir) // not in the default set
     if (sections("ev100")) probeEv100(spark, sfDir) // not in the default set
     if (sections("cdc")) probeCdc(spark) // not in the default set
-    if (sections("c20")) probeC20(spark, sfDir) // not in the default set
     if (sections("s10")) probeS10(spark, sfDir) // not in the default set
     if (sections("d14")) probeD14(spark, sfDir) // not in the default set
     if (sections("d4")) probeD4(spark, sfDir) // not in the default set
@@ -168,76 +166,6 @@ object Probe {
     println(f"[d4] 10x brute force wall=${(System.nanoTime() - t0) / 1e9}%7.2fs" +
       f" pairs=${full.size} recall=${got.size.toDouble / full.size}%.4f" +
       s" invented=${(got -- full).size}")
-  }
-
-  /** ---- c20's scale claim: MV maintenance cost ∝ |changeset| +
-    * touched MV partitions, NEVER the base corpus (round 12, fourth
-    * sitting). A FIXED 500-row before/after-image changeset (300
-    * changed / 100 removed / 100 added) is applied to the maintained
-    * MV of 100× and 1000× document corpora; the corpora live under
-    * target/probe (own fingerprints), so the synthetic changeset can
-    * never shadow a gate corpus's derived one. Printed per tier:
-    * `stage` (pay-once MV build — the only corpus-sized pass),
-    * `maintain` (the idempotent re-apply: delta agg + touched-
-    * partition read + merge — must stay ~flat 1×→10×), and
-    * `recompute` (the full aggregation a lake WITHOUT incremental
-    * maintenance pays per refresh — must grow with the corpus;
-    * maintain must stay ~flat 100×→1000×). Not in the default set. */
-  private def probeC20(spark: SparkSession, sfDir: String): Unit = {
-    println("== c20: fixed-changeset MV maintenance vs 1x/10x corpus ==")
-    val docs = Tables.documents(spark, sfDir)
-    val mId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
-    // the gate corpora are small (5k docs at sf0.1); the tiers must be
-    // big enough that a full refresh costs REAL time, or the contrast
-    // (maintain flat, recompute growing) drowns in fixed overhead
-    val tiers = Seq(("100x", 100), ("1000x", 1000)).map { case (tag, k) =>
-      val dir = s"target/probe/c20$tag"
-      docs.crossJoin(spark.range(k).withColumnRenamed("id", "copy"))
-        .withColumn("doc_id", col("doc_id") + col("copy") * mId)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      (tag, dir)
-    }
-    for ((tier, dir) <- tiers) {
-      // the FIXED changeset, prestaged at this corpus's keyed path so
-      // c20 skips its gate-mode derivation (probe setup, untimed)
-      val base = Tables.documents(spark, dir)
-        .filter(col("doc_id") % 7 === 0).orderBy("doc_id").limit(500)
-        .select(col("doc_id"),
-          coalesce(length(col("text")), lit(0)).cast("long").as("old_chars"),
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy("doc_id")).as("rn"))
-      val changeset = base.select(col("doc_id"),
-          when(col("rn") <= 300, lit("changed"))
-            .when(col("rn") <= 400, lit("removed"))
-            .otherwise(lit("added")).as("status"),
-          when(col("rn") <= 400, col("old_chars")).as("old_chars"),
-          when(col("rn") <= 300, col("old_chars") + 5L)
-            .when(col("rn") > 400, lit(42L)).as("new_chars"))
-        .withColumn("doc_id", when(col("status") === "added",
-          col("doc_id") + lit(2000000000L)).otherwise(col("doc_id")))
-      val csPath = s"target/snapdata/" +
-        s"${Tables.fingerprint(spark, dir, "documents")}/changeset.parquet"
-      changeset.write.mode("overwrite").parquet(csPath)
-      val t0 = System.nanoTime()
-      val n1 = operators.Curation.c20IncrementalMv(spark, dir).count()
-      val t1 = System.nanoTime()
-      val n2 = operators.Curation.c20IncrementalMv(spark, dir).count()
-      val t2 = System.nanoTime()
-      // reduce over BOTH aggregates so column pruning can't skip the
-      // text-length work a real refresh pays
-      val full = Tables.documents(spark, dir)
-        .groupBy(pmod(col("doc_id"),
-          lit(operators.Curation.C20Groups.toLong)).as("g"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(coalesce(length(col("text")), lit(0)).cast("long"))
-            .as("sum_chars"))
-        .agg(count(lit(1)), sum("n_docs"), sum("sum_chars")).head().getLong(0)
-      val t3 = System.nanoTime()
-      println(f"[c20] $tier%-4s stage+maintain=${(t1 - t0) / 1e9}%6.2fs " +
-        f"maintain=${(t2 - t1) / 1e9}%6.2fs " +
-        f"recompute=${(t3 - t2) / 1e9}%6.2fs mvRows=$n1/$n2 full=$full")
-    }
   }
 
   /** ---- d14's scale claim: containment dedup cost rides the
@@ -434,54 +362,6 @@ object Probe {
     time("q41_100x", q41SessionizeBatch(spark, base))
     time("q40_1x", q40HllDistinct(spark, sfDir))
     time("q40_100x", q40HllDistinct(spark, base))
-  }
-
-  /** ---- d11 admission cost vs corpus size (round 12): the operator's
-    * claim is "admission scales with the INCREMENT, not the corpus" —
-    * so a FIXED-size shard (every 10th base doc, 500 at sf0.1; half
-    * near-copies, half novel) is admitted against the base corpus and
-    * a 10× replica (c4's replication rules). Index BUILD (the pay-once
-    * per-generation corpus pass) and ADMIT are timed separately; admit
-    * should ride the compact index scan (fixed-width signature rows)
-    * while build grows with the corpus. Not in the default set. */
-  private def probeD11(spark: SparkSession, sfDir: String): Unit = {
-    println("== d11: fixed-size shard admission vs 1x/10x corpus ==")
-    val doc = Tables.documents(spark, sfDir)
-    val mDoc = doc.agg(max(col("doc_id"))).head().getLong(0) + 1
-    val cols = doc.columns
-    val x10 = "target/probe/d11x10"
-    doc.crossJoin(spark.range(10).withColumnRenamed("id", "copy"))
-      .withColumn("doc_id", col("doc_id") + col("copy") * mDoc)
-      .withColumn("text", concat(col("text"), lit(" copyword"),
-        col("copy").cast("string")))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .select(cols.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").parquet(s"$x10/documents.parquet")
-    // the fixed shard: half near-copies of base docs, half reversed
-    // (novel); ids far above both corpora per the d11Admit contract
-    val shard = doc.filter(col("doc_id") % 10 === 0).limit(1000)
-      .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
-        when(col("doc_id") % 20 === 0, col("text"))
-          .otherwise(reverse(col("text"))).as("text"))
-      .localCheckpoint(true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    for ((tier, dir) <- Seq(("1x", sfDir), ("10x", x10))) {
-      // force a cold index build (delete the fingerprint-keyed artifact)
-      val idxPath = new org.apache.hadoop.fs.Path(
-        s"target/dedupindex/${Tables.fingerprint(spark, dir, "documents")}")
-      idxPath.getFileSystem(conf).delete(idxPath, true)
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      operators.Dedup.d11IndexPath(spark, dir)
-      val t1 = System.nanoTime()
-      val n1 = operators.Dedup.d11Admit(spark, dir, shard).count()
-      val t2 = System.nanoTime()
-      val n2 = operators.Dedup.d11Admit(spark, dir, shard).count()
-      val t3 = System.nanoTime()
-      println(f"[d11] $tier%-4s indexBuild=${(t1 - t0) / 1e9}%6.2fs " +
-        f"admit1=${(t2 - t1) / 1e9}%6.2fs admit2=${(t3 - t2) / 1e9}%6.2fs " +
-        f"rows=$n1/$n2")
-    }
   }
 
   /** ---- second-decade linearity check (round 17, r16 ask #7): the

@@ -621,50 +621,60 @@ object GraftFunctions {
         s"${if (e.foldable) s"a ${e.dataType.simpleString} literal"
         else s"a non-literal expression (${e.sql})"}")
 
-  def register(spark: SparkSession): Unit = {
-    def reg(name: String, clazz: Class[_],
-            builder: Seq[Expression] => Expression): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name), builder)
-    reg("cosine_sim", classOf[CosineSim], cs => CosineSim(cs(0), cs(1)))
-    reg("dot_prod", classOf[DotProd], cs => DotProd(cs(0), cs(1)))
-    reg("pq_encode", classOf[PqEncode], cs => PqEncode(cs(0), cs(1)))
-    reg("ivf_rank_cells", classOf[IvfRankCells],
-      cs => IvfRankCells(cs(0), cs(1), IvfRankCellsKernel.D))
-    reg("ivf_rank_cells2", classOf[IvfRankCells2], cs =>
-      IvfRankCells2(cs(0), cs(1), cs(2), cs(3),
-        litInt("ivf_rank_cells2", "cp", cs(4)), IvfRankCellsKernel.D))
-    reg("dot_at", classOf[DotAt], cs =>
-      DotAt(cs(0), litInt("dot_at", "pos", cs(1)), cs(2)))
-    reg("simhash60", classOf[SimHash60], cs => SimHash60(cs(0)))
-    reg("payload_simhash", classOf[PayloadSimhash],
-      cs => PayloadSimhash(cs(0)))
-    reg("minhash_min", classOf[MinHashMin], cs => MinHashMin(cs(0), cs(1)))
-    reg("minhash_sig", classOf[MinHashSig], cs => MinHashSig(cs(0), cs(1)))
-    reg("minhash_band_keys", classOf[MinHashBandKeys], cs =>
-      MinHashBandKeys(cs(0),
-        litInt("minhash_band_keys", "num_hashes", cs(1)),
-        litInt("minhash_band_keys", "bands", cs(2))))
-    reg("roll_hash", classOf[RollHash], cs => RollHash(cs(0)))
-    reg("word_shingles", classOf[WordShingles], cs => WordShingles(cs(0),
-      if (cs.length > 1) litInt("word_shingles", "width", cs(1)) else 3))
-    reg("char_shingles", classOf[CharShingles], cs => CharShingles(cs(0),
-      if (cs.length > 1) litInt("char_shingles", "width", cs(1)) else 2))
-    reg("hyperplane_bucket", classOf[HyperplaneBucket],
-      cs => HyperplaneBucket(cs(0), cs(1)))
-    reg("hyperplane_band_keys", classOf[HyperplaneBandKeys], cs =>
-      HyperplaneBandKeys(cs(0),
-        litInt("hyperplane_band_keys", "bands", cs(1)),
-        litInt("hyperplane_band_keys", "bits_per_band", cs(2))))
-    reg("lead_sign_bucket", classOf[LeadSignBucket],
-      cs => LeadSignBucket(cs(0), cs(1)))
-    reg("count_in", classOf[CountTokensIn], cs => CountTokensIn(cs(0), cs(1)))
-    reg("pii_scrub", classOf[PiiScrub], cs => PiiScrub(cs(0)))
-    reg("hll_sketch", classOf[HllSketchAgg], cs => HllSketchAgg(cs(0)))
-    reg("nfc_normalize", classOf[NfcNormalize], cs => NfcNormalize(cs(0)))
-    reg("url_canon", classOf[UrlCanon], cs => UrlCanon(cs(0)))
-    reg("t17_bigram_keys", classOf[T17BigramKeys], cs => T17BigramKeys(cs(0),
-      litInt("t17_bigram_keys", "buckets", cs(1))))
+  /** Every native SQL function as (identifier, info, builder): the one
+    * list both install paths iterate — [[register]] per session, and
+    * [[GraftExtensions]] at session build. */
+  private[functions] val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = {
+    def f(name: String, clazz: Class[_])(
+        builder: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name),
+        builder)
+    Seq(
+      f("cosine_sim", classOf[CosineSim])(cs => CosineSim(cs(0), cs(1))),
+      f("dot_prod", classOf[DotProd])(cs => DotProd(cs(0), cs(1))),
+      f("pq_encode", classOf[PqEncode])(cs => PqEncode(cs(0), cs(1))),
+      f("ivf_rank_cells", classOf[IvfRankCells])(cs =>
+        IvfRankCells(cs(0), cs(1), IvfRankCellsKernel.D)),
+      f("ivf_rank_cells2", classOf[IvfRankCells2])(cs =>
+        IvfRankCells2(cs(0), cs(1), cs(2), cs(3),
+          litInt("ivf_rank_cells2", "cp", cs(4)), IvfRankCellsKernel.D)),
+      f("dot_at", classOf[DotAt])(cs =>
+        DotAt(cs(0), litInt("dot_at", "pos", cs(1)), cs(2))),
+      f("simhash60", classOf[SimHash60])(cs => SimHash60(cs(0))),
+      f("payload_simhash", classOf[PayloadSimhash])(cs =>
+        PayloadSimhash(cs(0))),
+      f("minhash_min", classOf[MinHashMin])(cs => MinHashMin(cs(0), cs(1))),
+      f("minhash_sig", classOf[MinHashSig])(cs => MinHashSig(cs(0), cs(1))),
+      f("minhash_band_keys", classOf[MinHashBandKeys])(cs =>
+        MinHashBandKeys(cs(0),
+          litInt("minhash_band_keys", "num_hashes", cs(1)),
+          litInt("minhash_band_keys", "bands", cs(2)))),
+      f("roll_hash", classOf[RollHash])(cs => RollHash(cs(0))),
+      f("word_shingles", classOf[WordShingles])(cs => WordShingles(cs(0),
+        if (cs.length > 1) litInt("word_shingles", "width", cs(1)) else 3)),
+      f("char_shingles", classOf[CharShingles])(cs => CharShingles(cs(0),
+        if (cs.length > 1) litInt("char_shingles", "width", cs(1)) else 2)),
+      f("hyperplane_bucket", classOf[HyperplaneBucket])(cs =>
+        HyperplaneBucket(cs(0), cs(1))),
+      f("hyperplane_band_keys", classOf[HyperplaneBandKeys])(cs =>
+        HyperplaneBandKeys(cs(0),
+          litInt("hyperplane_band_keys", "bands", cs(1)),
+          litInt("hyperplane_band_keys", "bits_per_band", cs(2)))),
+      f("lead_sign_bucket", classOf[LeadSignBucket])(cs =>
+        LeadSignBucket(cs(0), cs(1))),
+      f("count_in", classOf[CountTokensIn])(cs =>
+        CountTokensIn(cs(0), cs(1))),
+      f("pii_scrub", classOf[PiiScrub])(cs => PiiScrub(cs(0))),
+      f("hll_sketch", classOf[HllSketchAgg])(cs => HllSketchAgg(cs(0))),
+      f("nfc_normalize", classOf[NfcNormalize])(cs => NfcNormalize(cs(0))),
+      f("url_canon", classOf[UrlCanon])(cs => UrlCanon(cs(0))),
+      f("t17_bigram_keys", classOf[T17BigramKeys])(cs =>
+        T17BigramKeys(cs(0), litInt("t17_bigram_keys", "buckets", cs(1)))))
   }
+
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

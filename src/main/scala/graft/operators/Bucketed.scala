@@ -30,26 +30,16 @@ object Bucketed {
   def tableNames(dir: String): (String, String) =
     (s"graft_orders_bkt_${tag(dir)}", s"graft_lineitem_bkt_${tag(dir)}")
 
-  /** Ensure the bucketed copies exist (pay-once; skipped when the
-    * session catalog already has them). A location left behind by a
-    * previous session (in-memory catalog forgets, warehouse dir
-    * persists) is removed first — CTAS refuses to create a table over
-    * an existing location. */
+  /** Ensure the bucketed copies exist (pay-once through
+    * [[Sources.ensureStaged]]). */
   def ensureTables(s: SparkSession, dir: String): (String, String) = {
     val (ot, lt) = tableNames(dir)
-    def write(table: String, df: => org.apache.spark.sql.DataFrame,
-              key: String): Unit =
-      if (!s.catalog.tableExists(table)) {
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, /* recursive = */ true)
-        Sources.writeBucketed(df, table, key, Buckets)
-      }
-    write(ot, Tables.orders(s, dir).select("o_orderkey", "o_orderstatus"),
-      "o_orderkey")
-    write(lt, Tables.lineitem(s, dir).select("l_orderkey", "l_returnflag",
-      "l_quantity"), "l_orderkey")
+    Sources.ensureStaged(s, ot)(Sources.writeBucketed(
+      Tables.orders(s, dir).select("o_orderkey", "o_orderstatus"),
+      ot, "o_orderkey", Buckets))
+    Sources.ensureStaged(s, lt)(Sources.writeBucketed(
+      Tables.lineitem(s, dir).select("l_orderkey", "l_returnflag",
+        "l_quantity"), lt, "l_orderkey", Buckets))
     (ot, lt)
   }
 

@@ -765,15 +765,12 @@ object Curation {
        |  SELECT doc_id + mxid + 1 AS doc_id, text
        |  FROM documents CROSS JOIN mx WHERE doc_id % $C12AddMod = 0)""".stripMargin
 
-  /** The staged v2 snapshot — written once per corpus generation under
-    * a fingerprint-keyed path (the d9BenchmarksPath pattern: _SUCCESS
-    * short-circuits repeats, re-ingest invalidates). */
-  def c12SnapshotPath(s: SparkSession, dir: String): String = {
-    val path = s"target/snapdata/${Tables.fingerprint(s, dir, "documents")}" +
-      "/documents_v2.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+  /** The v2 snapshot, staged once per corpus generation under a
+    * fingerprint-keyed path ([[graft.Artifacts.staged]]). */
+  def c12SnapshotPath(s: SparkSession, dir: String): String =
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("snapdata",
+        Tables.fingerprint(s, dir, "documents"),
+        "documents_v2.parquet")) { out =>
       val docs = Tables.documents(s, dir)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       docs.filter(col("doc_id") % C12DropMod =!= 0)
@@ -783,10 +780,8 @@ object Curation {
             .as("text"))
         .unionAll(docs.filter(col("doc_id") % C12AddMod === 0)
           .select((col("doc_id") + maxId + 1).as("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** c12: SNAPSHOT DIFF — the incremental-ingestion audit every
     * versioned corpus store (Delta/Iceberg-shaped pipelines, dataset
@@ -956,17 +951,12 @@ object Curation {
     * re-run. */
   def c16CompactShards(s: SparkSession, dir: String): DataFrame = {
     val t = c16Table(s, dir)
-    if (!s.catalog.tableExists(t)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(loc, /* recursive = */ true)
+    graft.sources.Sources.ensureStaged(s, t)(
       Tables.events(s, dir)
         .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
         .repartition(8) // deliberate fragmentation: 8 tasks × every dir
         .write.mode("overwrite").partitionBy("dt")
-        .format("parquet").saveAsTable(t)
-    }
+        .format("parquet").saveAsTable(t))
     graft.sources.Sources.compactPartitions(s, t, "dt")
     s.table(t).groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -1892,12 +1882,9 @@ object Curation {
     * with the snapshots. Carrying the images is the design point: the
     * maintenance pass needs old and new contributions WITHOUT touching
     * either corpus snapshot. */
-  private def c20ChangesetPath(s: SparkSession, dir: String): String = {
-    val path = s"target/snapdata/${Tables.fingerprint(s, dir, "documents")}" +
-      "/changeset.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+  private def c20ChangesetPath(s: SparkSession, dir: String): String =
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("snapdata",
+        Tables.fingerprint(s, dir, "documents"), "changeset.parquet")) { out =>
       val v1 = Tables.documents(s, dir).select(col("doc_id"),
         coalesce(length(col("text")), lit(0)).cast("long").as("old_chars"))
       val v2 = s.read.parquet(c12SnapshotPath(s, dir)).select(col("doc_id"),
@@ -1905,10 +1892,8 @@ object Curation {
       c12SnapshotDiff(s, dir).filter(col("status") =!= "unchanged")
         .join(v1, Seq("doc_id"), "left_outer")
         .join(v2, Seq("doc_id"), "left_outer")
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** c20: INCREMENTAL MATERIALIZED-VIEW MAINTENANCE — keep a persisted
     * aggregate table consistent with its base table as changesets land,
@@ -2650,18 +2635,15 @@ object Curation {
   val C28Mod = 6
 
   /** The staged c28 shard (doc_id, text, embedding) — fingerprint-keyed
-    * on BOTH source tables, `_SUCCESS`-gated write-once. */
-  def c28ShardPath(s: SparkSession, dir: String): String = {
+    * on BOTH source tables, staged once ([[graft.Artifacts.staged]]);
+    * the unit is `shard.parquet` alone, beside c28's per-call
+    * `indexed/` tree. */
+  def c28ShardPath(s: SparkSession, dir: String): String =
     // full fingerprints, never a 32-bit hash of them: a hashCode
     // collision across corpora would silently reuse a stale shard
-    // behind the _SUCCESS gate (the s8IndexPath discipline)
-    val path = "target/admitshard/" +
-      s"${Tables.fingerprint(s, dir, "documents")}_" +
-      s"${Tables.fingerprint(s, dir, "embeddings")}" +
-      "/shard.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("admitshard",
+        s"${Tables.fingerprint(s, dir, "documents")}_" +
+          Tables.fingerprint(s, dir, "embeddings"), "shard.parquet")) { out =>
       val docs = Tables.documents(s, dir)
       val vecs = Tables.embeddings(s, dir)
       val m = math.max(
@@ -2677,10 +2659,8 @@ object Curation {
             col("embedding"))
             .otherwise(expr("transform(embedding, x -> CAST(-x AS FLOAT))"))
             .as("embedding"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** c28: END-TO-END SHARD ADMISSION — the c1 composition discipline
     * applied to the incremental family: ONE staged shard runs the

@@ -687,28 +687,22 @@ object Dedup {
 
   /** Stages the benchmark SUITE as a genuine second parquet table with
     * its own schema — `benchmarks(bench_id STRING, prompt STRING)` —
-    * under target/benchdata/<corpus-fingerprint>/, written once per
-    * corpus generation (the `_SUCCESS` marker short-circuits repeats;
-    * the fingerprint key invalidates on re-ingest, like the memo
-    * caches). Contents are deterministic: the [[D9BenchPct]] sample
+    * under target/benchdata/<corpus-fingerprint>/, staged once per
+    * corpus generation ([[graft.Artifacts.staged]]). Contents are
+    * deterministic: the [[D9BenchPct]] sample
     * bucket's docs, re-keyed as `bench_<doc_id>` with the text as the
     * suite `prompt` — so the DuckDB oracle can reproduce the staged
     * table from `documents` without reading the file, while the Spark
     * side exercises the real production plumbing: a second path, a
     * second schema, a second `spark.read.parquet`. */
-  def d9BenchmarksPath(s: SparkSession, dir: String): String = {
-    val path = s"target/benchdata/${Tables.fingerprint(s, dir, "documents")}" +
-      "/benchmarks.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success))
+  def d9BenchmarksPath(s: SparkSession, dir: String): String =
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("benchdata",
+        Tables.fingerprint(s, dir, "documents"), "benchmarks.parquet"))(
       Tables.documents(s, dir)
         .filter(TextAnalysis.sampleBucket(col("doc_id")) < D9BenchPct)
         .select(concat(lit("bench_"), col("doc_id")).as("bench_id"),
           col("text").as("prompt"))
-        .write.mode("overwrite").parquet(path)
-    path
-  }
+        .write.parquet(_))
 
   private type D9Inv =
     org.apache.spark.broadcast.Broadcast[graft.functions.SpanSet]
@@ -925,10 +919,11 @@ object Dedup {
     * INCREMENTAL: a production lake never re-minhashes 100 TB to admit
     * 1 TB; it screens the new shard against the corpus's persisted
     * band signatures. Staged once per corpus generation under a
-    * fingerprint-keyed path (`_SUCCESS`-gated write-once, invalidated
-    * by re-ingest — the d9BenchmarksPath pattern), at DISTINCT-content
-    * level (the [[contentGroups]] lesson: exact-dup clusters cost one
-    * index row, not m):
+    * fingerprint-keyed path, both files as ONE unit
+    * ([[graft.Artifacts.staged]] with parts: the directory also holds
+    * st11's [[st11ShsetsPath]]), at DISTINCT-content level (the
+    * [[contentGroups]] lesson: exact-dup clusters cost one index row,
+    * not m):
     *  - `contents.parquet` (ch, rep): content hash → minimum member
     *    doc id — the exact-dup screen and the confirm fetch key;
     *  - `bands.parquet` (ch, rep, band_id, band_key): the d2 MinHash
@@ -940,17 +935,14 @@ object Dedup {
     * text is never re-read except to fetch confirm candidates. */
   def d11IndexPath(s: SparkSession, dir: String): String = {
     graft.functions.GraftFunctions.register(s)
-    val path = s"target/dedupindex/${Tables.fingerprint(s, dir, "documents")}"
-    val success = new org.apache.hadoop.fs.Path(s"$path/bands.parquet", "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("dedupindex",
+        Tables.fingerprint(s, dir, "documents")),
+        "contents.parquet", "bands.parquet") { out =>
       val groups = Tables.documentsSpread(s, dir)
         .withColumn("norm", TextOps.normText(col("text")))
         .groupBy(md5(col("norm")).as("ch"))
         .agg(min("doc_id").as("rep"), first("norm").as("norm"))
-      groups.select("ch", "rep")
-        .write.mode("overwrite").parquet(s"$path/contents.parquet")
-      // bands LAST: their _SUCCESS gates the whole artifact
+      groups.select("ch", "rep").write.parquet(s"$out/contents.parquet")
       groups
         .withColumn("toks", expr(TextOps.toksExpr))
         .filter(size(col("toks")) >= MinToks)
@@ -959,20 +951,16 @@ object Dedup {
           posexplode(expr(s"minhash_band_keys(shingles, $NumHashes, $Bands)")))
         .select(col("ch"), col("rep"), col("pos").as("band_id"),
           col("col").as("band_key"))
-        .write.mode("overwrite").parquet(s"$path/bands.parquet")
+        .write.parquet(s"$out/bands.parquet")
     }
-    path
   }
 
   /** The staged increment shard — a genuine second parquet
     * (`increment(doc_id, text)`, ids past the corpus max; see
-    * [[D11Mod]]), written once per corpus generation. */
-  def d11IncrementPath(s: SparkSession, dir: String): String = {
-    val path = s"target/incdata/${Tables.fingerprint(s, dir, "documents")}" +
-      "/increment.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+    * [[D11Mod]]), staged once per corpus generation. */
+  def d11IncrementPath(s: SparkSession, dir: String): String =
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("incdata",
+        Tables.fingerprint(s, dir, "documents"), "increment.parquet")) { out =>
       val docs = Tables.documents(s, dir)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       docs.filter(col("doc_id") % D11Mod === 0)
@@ -981,10 +969,8 @@ object Dedup {
             .when(col("doc_id") % D11NearMod === 0,
               concat(col("text"), lit(" [inc]")))
             .otherwise(reverse(col("text"))).as("text"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** d11: INCREMENTAL dedup — admit a NEW shard against the persisted
     * signature index ([[d11IndexPath]]) without re-screening the
@@ -1404,8 +1390,8 @@ object Dedup {
     * admission path touches lake artifacts only, never the corpus
     * table. Cost ∝ shard + candidates. */
   /** The confirm-side artifact: (rep, cnorm, cshset) for every index
-    * content, persisted ONCE per corpus generation next to the d11
-    * index (fingerprint-keyed, `_SUCCESS`-gated). With it, st11's
+    * content, staged ONCE per corpus generation next to the d11 index
+    * files (its own unit in the same directory). With it, st11's
     * per-batch confirm joins LAKE ARTIFACTS only — a production
     * admission gate that re-scanned 100 TB of corpus parquet every
     * micro-batch to re-derive candidate shingle sets would be paying
@@ -1414,11 +1400,8 @@ object Dedup {
     * admission. */
   private[graft] def st11ShsetsPath(s: SparkSession, dir: String): String = {
     graft.functions.GraftFunctions.register(s)
-    val path = s"target/dedupindex/${Tables.fingerprint(s, dir, "documents")}" +
-      "/shsets.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("dedupindex",
+        Tables.fingerprint(s, dir, "documents"), "shsets.parquet"))(
       Tables.documentsSpread(s, dir)
         .withColumn("norm", TextOps.normText(col("text")))
         .groupBy(md5(col("norm")).as("ch"))
@@ -1427,9 +1410,7 @@ object Dedup {
         .withColumn("toks", expr(TextOps.toksExpr))
         .select(col("rep"), col("cnorm"),
           expr("array_distinct(word_shingles(toks))").as("cshset"))
-        .write.mode("overwrite").parquet(path)
-    }
-    path
+        .write.parquet(_))
   }
 
   private[graft] def st11AdmitFeed(s: SparkSession, dir: String,

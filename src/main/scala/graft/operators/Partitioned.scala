@@ -42,28 +42,14 @@ object Partitioned {
   def tableNames(dir: String): (String, String) =
     (s"graft_orders_part_${tag(dir)}", s"graft_ym_dim_${tag(dir)}")
 
-  /** Ensure the partitioned fact + month dim exist (pay-once; skipped
-    * when the session catalog already has them). Same stale-location
-    * guard as Bucketed.ensureTables: the in-memory catalog forgets
-    * between sessions but the warehouse dir persists, and CTAS refuses
-    * to create a table over an existing location. */
+  /** Ensure the partitioned fact + month dim exist (pay-once through
+    * [[Sources.ensureStaged]]). */
   def ensureTables(s: SparkSession, dir: String): (String, String) = {
     val (ft, dt) = tableNames(dir)
-    def ensure(table: String)(doWrite: => Unit): Unit =
-      if (!s.catalog.tableExists(table)) {
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, /* recursive = */ true)
-        doWrite
-      }
-    ensure(ft) {
-      Sources.writePartitioned(
-        Tables.orders(s, dir)
-          .withColumn("o_ym", date_format(col("o_orderdate"), "yyyy-MM")),
-        ft, "o_ym")
-    }
-    ensure(dt) {
+    Sources.ensureStagedPartitioned(s, ft, "o_ym",
+      Tables.orders(s, dir)
+        .withColumn("o_ym", date_format(col("o_orderdate"), "yyyy-MM")))
+    Sources.ensureStaged(s, dt) {
       Tables.orders(s, dir)
         .select(date_format(col("o_orderdate"), "yyyy-MM").as("ym"),
           year(col("o_orderdate")).as("y"),

@@ -359,7 +359,7 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def centroidSig(cent: Array[Array[Float]]): String =
+  private[graft] def centroidSig(cent: Array[Array[Float]]): String =
     floatSig(cent.iterator.flatten)
 
   /** The two-layer store behind the trained quantizers (s3/s12
@@ -826,17 +826,6 @@ object Similarity {
   val S14Beam = 32
   val S14Hops = 4
 
-  /** Serializes [[graphIndexPath]]'s check-then-build per artifact
-    * path: two threads of one JVM (concurrent s14 search + s15
-    * admission, parallel suites) must not race two overlapping
-    * `mode("overwrite")` jobs into the same layer directory — the
-    * single-driver trade the in-memory edge memo used to provide
-    * before the build moved behind the persisted artifact
-    * (r17 review). Cross-JVM writers remain the lake's
-    * one-writer-per-generation contract, as for s8/d11. */
-  private val graphBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** The persisted kNN-GRAPH artifact — the s8 inverted-list contract
     * applied to the graph family: production builds the graph ONCE per
     * corpus generation, persists it as a lake table, and every search
@@ -845,8 +834,8 @@ object Similarity {
     * ADVICE: the distributed-Lloyd path is not bit-deterministic
     * across retrains, so a wiped/retrained quantizer must never be
     * paired with edges derived from the old one — the signature in the
-    * path makes that structurally impossible). Three `_SUCCESS`-gated,
-    * write-once layers:
+    * path makes that structurally impossible). Three layers, each
+    * staged once ([[graft.Artifacts.staged]]):
     *  - `assign/` — (vec_id, embedding, probes) PARTITIONED BY the
     *    assigned cell: the member lookup behind s14's query-probe
     *    seeding and s15's new-vector candidates is a partition-pruned
@@ -871,16 +860,10 @@ object Similarity {
     // corpus fingerprint, trained-quantizer signature, AND the edge
     // derivation constants — bumping S12K/S12Probes/S12CoarseProbes in
     // a later round must invalidate the artifact, not silently serve
-    // stale-depth edges under a valid _SUCCESS (r17 review)
-    val path =
-      s"target/knngraph/${corpusFingerprint(s, dir)}-$sig" +
-        s"-k$S12K-p$S12Probes-cp$S12CoarseProbes"
-    graphBuildLocks.computeIfAbsent(path, _ => new Object).synchronized {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def missing(layer: String) =
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$path/$layer", "_SUCCESS"))
-    if (missing("assign")) {
+    // stale-depth edges under a valid commit marker (r17 review)
+    val path = graft.Artifacts.stagedDir("knngraph",
+      s"${corpusFingerprint(s, dir)}-$sig-k$S12K-p$S12Probes-cp$S12CoarseProbes")
+    graft.Artifacts.staged(s, s"$path/assign") { out =>
       val rankCol = s12RankCol(s, dir)
       Tables.embeddings(s, dir)
         // explicit-N spread before the kernel pass — the s12 rule:
@@ -897,20 +880,17 @@ object Similarity {
         // for 1563 cells); hash-clustering on the partition column
         // bounds it at one file per cell
         .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$path/assign")
+        .write.partitionBy("cell").parquet(out)
     }
-    if (missing("probed"))
+    graft.Artifacts.staged(s, s"$path/probed")(
       s.read.parquet(s"$path/assign")
         .select(col("vec_id"), col("embedding"),
           explode(col("probes")).as("pcell"))
         .repartition(col("pcell")) // one writer task per probed cell
-        .write.partitionBy("pcell").mode("overwrite")
-        .parquet(s"$path/probed")
-    if (missing("edges"))
-      s12KnnGraph(s, dir).write.mode("overwrite").parquet(s"$path/edges")
+        .write.partitionBy("pcell").parquet(_))
+    graft.Artifacts.staged(s, s"$path/edges")(
+      s12KnnGraph(s, dir).write.parquet(_))
     path
-    }
   }
 
   /** Symmetrized s12 kNN edges for a corpus — the substrate s14's
@@ -1814,28 +1794,27 @@ object Similarity {
 
   /** The staged increment shard (vec_id, embedding), ids past the
     * corpus max — the d11IncrementPath pattern for embeddings. */
-  def s8IncrementPath(s: SparkSession, dir: String): String = {
-    val path = s"target/ivfinc/${graft.Tables.fingerprint(s, dir, "embeddings")}" +
-      "/increment.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+  def s8IncrementPath(s: SparkSession, dir: String): String =
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("ivfinc",
+        corpusFingerprint(s, dir), "increment.parquet")) { out =>
       val e = Tables.embeddings(s, dir)
       val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
       e.filter(col("vec_id") % S8Mod === 0)
         .select((col("vec_id") + maxId + 1).as("vec_id"), col("embedding"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** The persisted IVF INDEX — FAISS's inverted lists as a lake table:
     * (vec_id, embedding) PARTITIONED BY the assigned cell, so a probe
     * of nprobe cells is a PARTITION-PRUNED scan (the q30 machinery
     * applied to ANN: at 100 TB each cell partition is further bucketed
     * and only nprobe/cells of the index bytes are read per query
-    * batch). Two fingerprint-keyed, `_SUCCESS`-gated, write-once
-    * layers:
+    * batch). Keyed by the corpus fingerprint AND the full signature
+    * of the quantizer that assigned the cells ([[ivfIndexKey]]: a
+    * retrained quantizer, which distributed Lloyd does not promise to
+    * reproduce bit for bit, gets its own index instead of probing
+    * cells assigned by other centroids). Two layers, each staged once
+    * ([[graft.Artifacts.staged]]):
     *  - `base/` — the corpus assignment, the pay-once-per-generation
     *    corpus pass (scan-local [[ivfCellCol]], zero shuffle before
     *    the partitioned write);
@@ -1845,20 +1824,18 @@ object Similarity {
     *    the existing geometry) and appended as its own partition tree,
     *    cost ∝ increment, corpus untouched. */
   def s8IndexPath(s: SparkSession, dir: String): String = {
-    val path = s"target/ivfindex/${graft.Tables.fingerprint(s, dir, "embeddings")}"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/base", "_SUCCESS"))) {
-      s8WriteAssigned(s, dir,
-        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
-        s"$path/base")
-    }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/inc", "_SUCCESS"))) {
-      s8WriteAssigned(s, dir, s.read.parquet(s8IncrementPath(s, dir)),
-        s"$path/inc")
-    }
+    val path = graft.Artifacts.stagedDir("ivfindex", ivfIndexKey(s, dir))
+    graft.Artifacts.staged(s, s"$path/base")(s8WriteAssigned(s, dir,
+      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), _))
+    graft.Artifacts.staged(s, s"$path/inc")(s8WriteAssigned(s, dir,
+      s.read.parquet(s8IncrementPath(s, dir)), _))
     path
   }
+
+  /** `<embeddings fingerprint>_<centroid signature>`: the key of every
+    * artifact derived from the flat quantizer's cell assignment. */
+  private def ivfIndexKey(s: SparkSession, dir: String): String =
+    s"${corpusFingerprint(s, dir)}_${centroidSig(centroidsFor(s, dir))}"
 
   /** The admission core: assign an explicit (vec_id, embedding) shard
     * with the corpus's FROZEN quantizer and write it cell-partitioned —
@@ -1955,12 +1932,9 @@ object Similarity {
     * collides with a lower member only where the corpus itself has a
     * ≤ −τ pair — as rare as the ≥ τ tail; most survive as novel).
     * Both admission verdicts are thereby planted deterministically. */
-  def d12IncrementPath(s: SparkSession, dir: String): String = {
-    val path = s"target/semdedupinc/" +
-      s"${graft.Tables.fingerprint(s, dir, "embeddings")}/increment.parquet"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+  def d12IncrementPath(s: SparkSession, dir: String): String =
+    graft.Artifacts.staged(s, graft.Artifacts.stagedDir("semdedupinc",
+        corpusFingerprint(s, dir), "increment.parquet")) { out =>
       val e = Tables.embeddings(s, dir)
       val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
       e.filter(col("vec_id") % S8Mod === 0)
@@ -1968,10 +1942,8 @@ object Similarity {
           when(col("vec_id") % (2 * S8Mod) === 0, col("embedding"))
             .otherwise(expr("transform(embedding, x -> -x)"))
             .as("embedding"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** d12: INCREMENTAL SemDeDup — the semantic tier of the admission
     * family (d11 screens a new shard's exact/MinHash signatures against
@@ -2071,8 +2043,8 @@ object Similarity {
     * ids, so the erasure property genuinely bites (spec-asserted). */
   val S11ForgetMod = 7
 
-  private def s11Table(s: SparkSession, dir: String): String =
-    s"graft_ivf_fgt_${graft.Tables.fingerprint(s, dir, "embeddings")}"
+  private[graft] def s11Table(s: SparkSession, dir: String): String =
+    s"graft_ivf_fgt_${ivfIndexKey(s, dir)}"
 
   /** s11: RIGHT-TO-BE-FORGOTTEN in the vector index — c15's erasure
     * contract applied to the s8 lake-resident IVF index: a deletion

@@ -45,8 +45,8 @@ object Zorder {
         s"((${idiv(dy, p)}) % 2) * ${1L << (2 * i)}"
     }.mkString("(", " + ", ")")
 
-  /** The WRITTEN layout — fingerprint-keyed, `_SUCCESS`-gated,
-    * write-once (the s8IndexPath pattern): orders scaled to
+  /** The WRITTEN layout, staged once per corpus generation under a
+    * fingerprint-keyed path ([[graft.Artifacts.staged]]): orders scaled to
     * (ckb, dayb) ∈ [0,256)², Morton-coded, sorted by z and written
     * PARTITIONED BY the z-prefix bucket. One corpus pass, scan-local
     * arithmetic (the two scaling constants ride a broadcast 1-row
@@ -54,10 +54,9 @@ object Zorder {
     * repartition by z — the exact shuffle a linear sort pays, just on
     * a better key. */
   def layoutPath(s: SparkSession, dir: String): String = {
-    val path = s"target/zorder/${Tables.fingerprint(s, dir, "orders")}"
-    val success = new org.apache.hadoop.fs.Path(s"$path/table", "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+    val path = graft.Artifacts.stagedDir("zorder",
+      Tables.fingerprint(s, dir, "orders"))
+    graft.Artifacts.staged(s, s"$path/table") { out =>
       val o = Tables.orders(s, dir)
       val sc = o.agg(max("o_custkey").as("maxck"),
         to_date(min("o_orderdate")).as("mind"),
@@ -71,7 +70,7 @@ object Zorder {
         .withColumn("zbucket", expr(s"CAST(z div ${1L << ZBucketShift} AS INT)"))
         .select("o_orderkey", "ckb", "dayb", "z", "zbucket")
         .sort("z")
-        .write.partitionBy("zbucket").mode("overwrite").parquet(s"$path/table")
+        .write.partitionBy("zbucket").parquet(out)
     }
     path
   }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -21,12 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    independent branches still build;
   *  - all filesystem access goes through the Hadoop `FileSystem`
   *    resolved from the session's hadoopConfiguration, so targets can
-  *    live on HDFS/S3/local alike. Publication is marker-file commit:
-  *    the output directory is written first, then a zero-byte
-  *    `_GRAFT_COMMITTED` marker is created with create-no-overwrite —
-  *    atomic on HDFS AND object stores, where directory rename is not.
-  *    A crash mid-write leaves data files but no marker; the re-run
-  *    sees "incomplete" and overwrites.
+  *    live on HDFS/S3/local alike. Publication is the marker-file
+  *    commit of [[graft.Artifacts.staged]]: a crash mid-write leaves
+  *    data files but no marker; the re-run sees "incomplete" and
+  *    overwrites.
   *
   * Unlike Luigi's worker pool, execution here is just topological order
   * on the driver — the parallelism that matters lives INSIDE each task's
@@ -46,12 +42,10 @@ abstract class Task {
   /** Backoff before attempt k+1, multiplied by k (linear backoff). */
   def retryBackoffMs: Long = 100
 
-  final def markerPath: Path = new Path(output, Task.Marker)
+  final def markerPath: Path = new Path(output, graft.Artifacts.Marker)
 
-  final def complete(spark: SparkSession): Boolean = {
-    val p = markerPath
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  final def complete(spark: SparkSession): Boolean =
+    graft.Artifacts.committed(spark, output)
 
   /** Read this task's materialized output (for downstream tasks). */
   final def read(spark: SparkSession): DataFrame = spark.read.parquet(output)
@@ -72,44 +66,18 @@ abstract class Task {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  /** One attempt: stage to a scratch directory, then publish. Staging
-    * first means a concurrent run's COMMITTED target is never clobbered
-    * mid-write: the destructive step (replacing the target) happens
-    * only after re-checking the marker, and a marker-less target can
-    * only be crash debris (data files written, never committed), which
-    * the re-run owns and replaces. The marker create-no-overwrite stays
-    * the final arbiter: if another run commits in the remaining window,
-    * its marker wins and both runs wrote identical deterministic
-    * output. */
+  /** One attempt: stage this task's output through
+    * [[graft.Artifacts.staged]], the protocol every persisted artifact
+    * shares (scratch write, rename, create-no-overwrite marker). A
+    * marker-less target is crash debris the attempt replaces; a target
+    * another run committed first is kept. Returns rows written (0 when
+    * the target was already committed). */
   final def run(spark: SparkSession): Long = {
-    val target = new Path(output)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val scratch = new Path(output + ".inprogress-" + UUID.randomUUID())
-    val rows = writeStaged(spark, scratch)
-    if (fs.exists(markerPath)) {
-      fs.delete(scratch, true) // a concurrent run committed first; keep its output
-    } else {
-      if (fs.exists(target)) fs.delete(target, true) // uncommitted crash debris
-      if (!fs.rename(scratch, target)) {
-        fs.delete(scratch, true)
-        if (!fs.exists(markerPath)) // not a lost race → a real FS failure
-          throw new java.io.IOException(s"could not publish $scratch -> $target")
-      } else {
-        try fs.create(markerPath, /* overwrite = */ false).close()
-        catch { case _: java.io.IOException if fs.exists(markerPath) => () }
-      }
-    }
+    var rows = 0L
+    graft.Artifacts.staged(spark, output)(p =>
+      rows = writeStaged(spark, new Path(p)))
     rows
   }
-}
-
-object Task {
-  /** Commit-marker filename. Distinct from Spark's `_SUCCESS` (which the
-    * parquet committer writes per job, including for half-published
-    * multi-job outputs a crashed run may leave behind): only graft's own
-    * publish protocol creates this file, and only after the write
-    * finished. */
-  val Marker = "_GRAFT_COMMITTED"
 }
 
 /** Report-DISTRIBUTION task: renders upstream results into a

@@ -110,23 +110,29 @@ object Sources {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Stage-once guard for fingerprint-keyed lake tables: if `table` is
-    * absent from the catalog, clear any orphaned warehouse directory a
-    * crashed prior staging left behind (saveAsTable refuses to land on
-    * leftover files) and write `df` via [[writePartitioned]]. The
-    * staging frame is by-name so an already-staged table never pays
-    * its derivation. Returns the table name for chaining. */
-  def ensureStagedPartitioned(s: SparkSession, table: String,
-      partCol: String, df: => DataFrame): String = {
+  /** Stage-once guard for catalog tables: if `table` is absent from the
+    * catalog, clear any orphaned warehouse directory a crashed prior
+    * staging or an earlier session left behind (the in-memory catalog
+    * forgets between sessions but the warehouse persists, and
+    * saveAsTable refuses to land on leftover files), then run `write`,
+    * which must create `table`. `write` is by-name so an
+    * already-staged table never pays its derivation. Returns the table
+    * name for chaining. */
+  def ensureStaged(s: SparkSession, table: String)(write: => Unit): String = {
     if (!s.catalog.tableExists(table)) {
       val loc = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
       loc.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(loc, /* recursive = */ true)
-      writePartitioned(df, table, partCol)
+      write
     }
     table
   }
+
+  /** [[ensureStaged]] writing `df` via [[writePartitioned]]. */
+  def ensureStagedPartitioned(s: SparkSession, table: String,
+      partCol: String, df: => DataFrame): String =
+    ensureStaged(s, table)(writePartitioned(df, table, partCol))
 
   /** COMPACT a partitioned table's fragmented directories: any
     * partition holding more than `maxFilesPerDir` parquet files is

@@ -736,9 +736,9 @@ class CurationSpec extends AnyFunSuite {
     assert(got.map(_._2).toSet == Set("added", "removed", "changed", "unchanged"),
       "derivation must exercise every diff status")
     // staging is write-once per corpus generation: a second call reads
-    // the same _SUCCESS-marked parquet (no rewrite) and agrees
+    // the same committed parquet (no rewrite) and agrees
     val p = new org.apache.hadoop.fs.Path(
-      Curation.c12SnapshotPath(s, dir), "_SUCCESS")
+      Curation.c12SnapshotPath(s, dir), Artifacts.Marker)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val stamp = fs.getFileStatus(p).getModificationTime
     val again = Curation.c12SnapshotDiff(s, dir).collect()

@@ -272,7 +272,8 @@ class DedupSpec extends AnyFunSuite {
     // once per corpus generation
     val path = Dedup.d9BenchmarksPath(s, dir)
     val fs = new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val mtime0 = fs.getFileStatus(new Path(path, "_SUCCESS")).getModificationTime
+    val mtime0 =
+      fs.getFileStatus(new Path(path, Artifacts.Marker)).getModificationTime
     val bench = s.read.parquet(path)
     assert(bench.columns.toSeq == Seq("bench_id", "prompt"))
     val benchIds = graft.Tables.documents(s, dir).select("doc_id").collect()
@@ -282,7 +283,7 @@ class DedupSpec extends AnyFunSuite {
       .sameElements(benchIds.map(id => s"bench_$id").sorted))
     // a second call must reuse the staged file, not rewrite it
     Dedup.d9BenchmarksPath(s, dir)
-    assert(fs.getFileStatus(new Path(path, "_SUCCESS"))
+    assert(fs.getFileStatus(new Path(path, Artifacts.Marker))
       .getModificationTime == mtime0, "staging was not idempotent")
 
     val xt = Dedup.d9DecontaminateXt(s, dir).collect()
@@ -402,12 +403,34 @@ class DedupSpec extends AnyFunSuite {
       val f = new org.apache.hadoop.fs.Path(p)
       f.getFileSystem(conf).getFileStatus(f).getModificationTime
     }
-    val idxSuccess = s"${Dedup.d11IndexPath(s, dir)}/bands.parquet/_SUCCESS"
-    val incSuccess = s"${Dedup.d11IncrementPath(s, dir)}/_SUCCESS"
-    val (t1, t2) = (mtime(idxSuccess), mtime(incSuccess))
+    val idxMarker = s"${Dedup.d11IndexPath(s, dir)}/${Artifacts.Marker}"
+    val incMarker = s"${Dedup.d11IncrementPath(s, dir)}/${Artifacts.Marker}"
+    val (t1, t2) = (mtime(idxMarker), mtime(incMarker))
     Dedup.d11IndexPath(s, dir); Dedup.d11IncrementPath(s, dir)
-    assert(mtime(idxSuccess) == t1 && mtime(incSuccess) == t2,
-      "staging must be _SUCCESS-gated write-once")
+    assert(mtime(idxMarker) == t1 && mtime(incMarker) == t2,
+      "staging must be commit-marker-gated write-once")
+  }
+
+  test("dedupindex: a missing file is restaged with the rows the index " +
+      "held, and st11's sibling artifact is left in place") {
+    import org.apache.hadoop.fs.Path
+    val conf = s.sparkContext.hadoopConfiguration
+    val idx = Dedup.d11IndexPath(s, dir)
+    val shsets = Dedup.st11ShsetsPath(s, dir)
+    val shMarker = new Path(shsets, Artifacts.Marker)
+    val fs = shMarker.getFileSystem(conf)
+    val shStamp = fs.getFileStatus(shMarker).getModificationTime
+    val files = Seq("contents.parquet", "bands.parquet")
+    def rows() = files.map(f => s.read.parquet(s"$idx/$f").collect()
+      .map(_.toString).sorted.toSeq)
+    val before = rows()
+    files.foreach { f =>
+      fs.delete(new Path(idx, f), true)
+      assert(Dedup.d11IndexPath(s, dir) == idx)
+      assert(rows() == before, s"$f restaged with other rows")
+    }
+    assert(fs.getFileStatus(shMarker).getModificationTime == shStamp,
+      "restaging the index touched st11's shingle-set artifact")
   }
 
   test("d14 finds every planted quote pair with the quote contained; " +

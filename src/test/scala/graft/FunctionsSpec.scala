@@ -237,10 +237,19 @@ class FunctionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.SparkSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
+    // every function register installed on this session
+    val reg = s.sessionState.functionRegistry
+    val installed = reg.listFunction().filter(id => reg.lookupFunction(id)
+      .exists(_.getClassName.startsWith("graft.functions."))).map(_.funcName)
+    assert(installed.contains("cosine_sim"))
     try {
       val s2 = SparkSession.builder()
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
+      assert(s2 ne s, "getOrCreate returned the test session")
+      val missing = installed.filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty,
+        s"GraftExtensions does not install ${missing.mkString(", ")}")
       val v = s2.sql(
         "SELECT cosine_sim(array(1.0F, 2.0F), array(1.0F, 2.0F)) AS c")
         .head.getDouble(0)

@@ -789,8 +789,7 @@ class SimilaritySpec extends AnyFunSuite {
     val total = combined.count()
     val fgt = combined.filter(col("vec_id") % Similarity.S11ForgetMod === 0)
       .count()
-    val tbl = s.table(s"graft_ivf_fgt_" +
-      graft.Tables.fingerprint(s, dir, "embeddings"))
+    val tbl = s.table(Similarity.s11Table(s, dir))
     assert(tbl.count() == total - fgt && fgt > 0)
     // re-run: the footprint recomputed from the erased table is empty,
     // so the merge no-ops and the answer is unchanged
@@ -1209,5 +1208,77 @@ class SimilaritySpec extends AnyFunSuite {
     }
     info(s"s18: ${commSizes.size} communities over $nVecs vectors, " +
       s"largest ${commSizes.values.max}")
+  }
+
+  private def deletePath(p: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    path.getFileSystem(s.sparkContext.hadoopConfiguration).delete(path, true)
+  }
+
+  test("ivfindex and knngraph: a missing layer is restaged with the " +
+      "rows it held") {
+    def rows(p: String) =
+      s.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    for ((build, layers) <- Seq[(() => String, Seq[String])](
+        (() => Similarity.s8IndexPath(s, dir), Seq("base", "inc")),
+        (() => Similarity.graphIndexPath(s, dir),
+          Seq("assign", "probed", "edges")))) {
+      val root = build()
+      val before = layers.map(l => rows(s"$root/$l"))
+      layers.foreach { l =>
+        deletePath(s"$root/$l")
+        assert(build() == root)
+        assert(Artifacts.committed(s, s"$root/$l"), s"$root/$l not restaged")
+        assert(layers.map(l => rows(s"$root/$l")) == before,
+          s"$root/$l restaged with other rows")
+      }
+    }
+  }
+
+  test("s8's index is keyed by its quantizer: after a different, validly " +
+      "checksummed centroid artifact replaces the trained one, s8 reads " +
+      "cells assigned by the new centroids") {
+    import org.apache.spark.sql.functions._
+    import s.implicits._
+    val centDir =
+      java.nio.file.Files.createTempDirectory("graft-cent").toString
+    s.conf.set("spark.graft.centroids.dir", centDir)
+    var replaced: Option[String] = None
+    try {
+      Artifacts.clear("similarity.centroids")
+      val trained = Similarity.centroidsFor(s, dir)
+      Similarity.s8IndexPath(s, dir)
+      // the same centroids in reverse id order, stored with their own
+      // valid checksum, so the store loads them instead of retraining
+      val swapped = trained.reverse
+      val sig = Similarity.centroidSig(swapped)
+      swapped.zipWithIndex.map { case (v, i) => (i, v, sig) }.toSeq
+        .toDF("cid", "embedding", "sig").coalesce(1)
+        .write.mode("overwrite")
+        .parquet(s"$centDir/${Tables.fingerprint(s, dir, "embeddings")}")
+      Artifacts.clear("similarity.centroids")
+      val loaded = Similarity.centroidsFor(s, dir)
+      assert(loaded.map(_.toSeq).toSeq == swapped.map(_.toSeq).toSeq,
+        "the store did not load the replacement artifact")
+      val idx = Similarity.s8IndexPath(s, dir)
+      replaced = Some(idx)
+      def cells(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val stored = cells(s.read.parquet(s"$idx/base")
+        .unionByName(s.read.parquet(s"$idx/inc"))
+        .select(col("vec_id"), col("cell").cast("int")))
+      val fresh = cells(Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding"))
+        .unionByName(s.read.parquet(Similarity.s8IncrementPath(s, dir)))
+        .select(col("vec_id"),
+          Similarity.ivfCellCol(loaded).cast("int").as("cell")))
+      val wrong = fresh.count { case (id, c) => !stored.get(id).contains(c) }
+      assert(stored.size == fresh.size && wrong == 0, s"s8 read $wrong of " +
+        s"${fresh.size} rows in cells other centroids assigned")
+    } finally {
+      s.conf.unset("spark.graft.centroids.dir")
+      Artifacts.clear("similarity.centroids")
+      replaced.foreach(deletePath)
+    }
   }
 }

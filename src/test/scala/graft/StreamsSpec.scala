@@ -567,7 +567,7 @@ class StreamsSpec extends AnyFunSuite {
     // admission must not rewrite it (admission touches lake artifacts
     // only, never re-derives from the corpus)
     val shsets = new org.apache.hadoop.fs.Path(
-      graft.operators.Dedup.st11ShsetsPath(s, dir), "_SUCCESS")
+      graft.operators.Dedup.st11ShsetsPath(s, dir), Artifacts.Marker)
     val fs = shsets.getFileSystem(s.sparkContext.hadoopConfiguration)
     val t0 = fs.getFileStatus(shsets).getModificationTime
     Streams.st11Query(s, dir).collect()
