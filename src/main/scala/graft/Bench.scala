@@ -54,20 +54,29 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    /** (median, relative spread) over `runs` timed executions after ONE
-      * untimed per-query warmup (codegen compilation, file listing, and
-      * pay-once artifacts like q23's bucketed rewrite otherwise land in
-      * the first run and dominate the spread, drowning the steady-state
-      * noise the spread exists to measure). A single failed run poisons
+    /** Classes Spark has compiled for generated code in this JVM (misses
+      * of its generated-code cache, see [[GraftSession]]). */
+    def codegenCompiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+        .getCount
+
+    /** (median, relative spread, codegen compiles) over `runs` timed
+      * executions after ONE untimed per-query warmup (codegen
+      * compilation, file listing, and pay-once artifacts like q23's
+      * bucketed rewrite otherwise land in the first run and dominate
+      * the spread, drowning the steady-state noise the spread exists to
+      * measure). A single failed run poisons
       * the sample — a transient failure must not hide behind the
       * surviving runs' timing. */
-    def sample(body: => Unit): (Double, Double) = {
+    def sample(body: => Unit): (Double, Double, Long) = {
       // a failed WARMUP also poisons the sample: silently swallowing it
       // would both hide the failure and leak the pay-once costs the
       // warmup absorbs into timed run 1's spread
       val warm = { cleanup(); timed(body) }
+      val c0 = codegenCompiles()
       val xs = Seq.fill(runs) { cleanup(); timed(body) }
-      if (warm < 0 || xs.exists(_ < 0)) (-1.0, -1.0)
+      val compiles = codegenCompiles() - c0
+      if (warm < 0 || xs.exists(_ < 0)) (-1.0, -1.0, compiles)
       else {
         val s = xs.sorted
         val n = s.length
@@ -75,7 +84,7 @@ object Bench {
         // (upper-middle alone biases high and skews cross-round deltas
         // when rounds were run with different run counts)
         val med = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-        (med, if (med > 0) (s.last - s.head) / med else 0.0)
+        (med, if (med > 0) (s.last - s.head) / med else 0.0, compiles)
       }
     }
 
@@ -169,7 +178,7 @@ object Bench {
         "guard is skipped (direction-only evidence)")
     // guarded lookup: a pin added/renamed without a reference entry must
     // degrade to "not in the ratio" — not throw after the whole sweep ran
-    val pinRatios = pinnedResults.flatMap { case (n, (m, _)) =>
+    val pinRatios = pinnedResults.flatMap { case (n, (m, _, _)) =>
       referencePins.get(n).filter(_ => m > 0).map(m / _)
     }.sorted
     val pinRatio =
@@ -193,7 +202,7 @@ object Bench {
     // pinned failures count too: a -1.0 pinned median would silently
     // poison the cross-round drift correction it exists to provide
     val failed = (results ++ pinnedResults)
-      .collect { case (n, (m, _)) if m < 0 => n }
+      .collect { case (n, (m, _, _)) if m < 0 => n }
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val spreads = results.map(_._2._2).filter(_ >= 0).sorted
@@ -213,6 +222,10 @@ object Bench {
       f"""{"metric":"total_wall","value":$total%.3f,"unit":"sec","runs":$runs,""" +
         s""""queries":${fmtMap(results.map(r => r._1 -> r._2._1))},""" +
         s""""spread":${fmtMap(results.map(r => r._1 -> r._2._2))},""" +
+        // classes compiled in each query's timed runs: 0 once every
+        // class the query generates stays in Spark's codegen cache
+        s""""codegen_compiles":${results.map(r => "\"" + r._1 + "\":" + r._2._3)
+          .mkString("{", ",", "}")},""" +
         s""""pinned":${fmtMap(pinnedResults.map(r => r._1 -> r._2._1))},""" +
         s""""pinned_spread":${fmtMap(pinnedResults.map(r => r._1 -> r._2._2))},""" +
         f""""memo_build_sec":$memoBuildSec%.3f,"pin_ratio":$pinRatio%.3f,""" +

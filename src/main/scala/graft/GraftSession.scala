@@ -9,8 +9,53 @@ import org.apache.spark.sql.SparkSession
   * partitions, skew-join splitting), broadcast threshold keeps dimension
   * joins shuffle-free, and shuffle.partitions is sized by the caller
   * (32 on the local harness, thousands on a real cluster).
+  *
+  * Generated code is compiled once per JVM. A plan that runs again
+  * generates the same source, and Spark's generated-code cache hands
+  * back the class compiled the first time, provided two things hold:
+  *  - The cache holds the whole query surface: [[CodegenCacheEntries]]
+  *    classes instead of Spark's 100. The cache is LRU and a pass
+  *    reuses its classes in the same cyclic order, so a workload that
+  *    needs more distinct classes than the cap has each one evicted
+  *    just before it is needed again, and every repeated pass
+  *    recompiles all of them with Janino, runs them interpreted and
+  *    pays the JIT again. The seven course queries need 105 classes,
+  *    d2 + t17 102 (both at sf0.001), and one pass over all 162 gate
+  *    queries 2,356 at sf0.001 and 2,354 at sf0.01. With Spark's
+  *    defaults for both settings, a steady-state pass of all 162 at
+  *    sf0.001 (the third in one JVM) compiled 3,851 classes and took
+  *    204.9 s; with these it compiles 0 and takes 151.4 s. Each cached
+  *    class holds about 29 KB of heap, so the full surface costs about
+  *    70 MB.
+  *  - Class names leave out the codegen stage id
+  *    (`spark.sql.codegen.useIdInClassName`). AQE numbers a query's
+  *    codegen stages in the order it plans them, and that order moves
+  *    between calls when independent stages finish in another order;
+  *    with the id in the name, each renumbering was a new class (q51
+  *    compiled 8 on its third identical call). Without it, the same
+  *    pipeline in two stages or two queries also shares one class. The
+  *    id stays in the generated comment, in explain output and in the
+  *    plan.
+  *
+  * The status store behind the web UI keeps [[StatusHistory]] finished
+  * SQL execution, job, stage and task per stage instead of
+  * 1,000/1,000/1,000/100,000. With the UI off nothing reads that history
+  * (graft's listeners are plain SparkListeners), yet it kept plan
+  * strings and task records that grew the heap query by query; trimming
+  * it pays back part of the cache's heap. A user who turns the UI on
+  * should raise these four limits again.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`: distinct generated classes
+    * kept compiled per JVM (the whole 162-query surface fits). */
+  val CodegenCacheEntries = 4096
+
+  /** Finished SQL executions, jobs, stages and tasks per stage that
+    * Spark's status store keeps (`spark.sql.ui.retainedExecutions`,
+    * `spark.ui.retainedJobs`, `spark.ui.retainedStages`,
+    * `spark.ui.retainedTasks`). */
+  val StatusHistory = 1
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -30,6 +75,12 @@ object GraftSession {
       // all graft operators guard their own arithmetic explicitly.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.ui.retainedExecutions", StatusHistory.toString)
+      .config("spark.ui.retainedJobs", StatusHistory.toString)
+      .config("spark.ui.retainedStages", StatusHistory.toString)
+      .config("spark.ui.retainedTasks", StatusHistory.toString)
       // bucketed tables (Sources.writeBucketed) land here, not in cwd
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")

@@ -938,20 +938,25 @@ object Dedup {
     graft.Artifacts.staged(s, graft.Artifacts.stagedDir("dedupindex",
         Tables.fingerprint(s, dir, "documents")),
         "contents.parquet", "bands.parquet") { out =>
+      // both layers read the distinct-content groups: persisted for the
+      // write, so the corpus scan, normalisation and grouping run once
       val groups = Tables.documentsSpread(s, dir)
         .withColumn("norm", TextOps.normText(col("text")))
         .groupBy(md5(col("norm")).as("ch"))
         .agg(min("doc_id").as("rep"), first("norm").as("norm"))
-      groups.select("ch", "rep").write.parquet(s"$out/contents.parquet")
-      groups
-        .withColumn("toks", expr(TextOps.toksExpr))
-        .filter(size(col("toks")) >= MinToks)
-        .withColumn("shingles", expr("word_shingles(toks)"))
-        .select(col("ch"), col("rep"),
-          posexplode(expr(s"minhash_band_keys(shingles, $NumHashes, $Bands)")))
-        .select(col("ch"), col("rep"), col("pos").as("band_id"),
-          col("col").as("band_key"))
-        .write.parquet(s"$out/bands.parquet")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        groups.select("ch", "rep").write.parquet(s"$out/contents.parquet")
+        groups
+          .withColumn("toks", expr(TextOps.toksExpr))
+          .filter(size(col("toks")) >= MinToks)
+          .withColumn("shingles", expr("word_shingles(toks)"))
+          .select(col("ch"), col("rep"), posexplode(
+            expr(s"minhash_band_keys(shingles, $NumHashes, $Bands)")))
+          .select(col("ch"), col("rep"), col("pos").as("band_id"),
+            col("col").as("band_key"))
+          .write.parquet(s"$out/bands.parquet")
+      } finally groups.unpersist()
     }
   }
 
