@@ -65,9 +65,8 @@ object Bench {
       * compilation, file listing, and pay-once artifacts like q23's
       * bucketed rewrite otherwise land in the first run and dominate
       * the spread, drowning the steady-state noise the spread exists to
-      * measure). A single failed run poisons
-      * the sample — a transient failure must not hide behind the
-      * surviving runs' timing. */
+      * measure). A single failed run poisons the sample — a transient
+      * failure must not hide behind the surviving runs' timing. */
     def sample(body: => Unit): (Double, Double, Long) = {
       // a failed WARMUP also poisons the sample: silently swallowing it
       // would both hide the failure and leak the pay-once costs the

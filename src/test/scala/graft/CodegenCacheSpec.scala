@@ -42,10 +42,12 @@ class CodegenCacheSpec extends AnyFunSuite {
     // between calls of these queries; with the id in the class name each
     // renumbering was a new class. The first pass builds the per-corpus
     // artifacts (t17's model, c25 through it), whose building call plans
-    // differently from every later call.
+    // differently from every later call. q46 and c30 are left out: AQE
+    // picks their join shapes by which stage finishes first, so a shape
+    // can first appear on any call.
     val names = Seq("c22_quantile_filter", "c25_curriculum",
-      "q46_fuzzy_join", "q51_assoc_rules", "st11_stream_admission",
-      "t16_keywords", "t17_ccnet_ppl")
+      "q51_assoc_rules", "st11_stream_admission", "t16_keywords",
+      "t17_ccnet_ppl")
     pass(names)
     val second = pass(names)
     val third = pass(names)
