@@ -27,8 +27,9 @@ import org.apache.spark.sql.graftbridge.GraftCheckpoints
   * The caller's key names the content (a corpus fingerprint, an
   * artifact path), so a re-ingested corpus misses.
   *
-  * Each kind is an access-ordered LRU of [[MaxEntries]] entries with
-  * its own lock and build counter. A build runs while HOLDING the
+  * Each kind is an access-ordered LRU of [[MaxEntries]] entries (the
+  * parquet schemas of [[Tables.parquet]] keep [[Tables.SchemaEntries]])
+  * with its own lock and build counter. A build runs while HOLDING the
   * kind's lock: duplicate concurrent builds of one subtree would cost
   * more than the wait, and the lock is reentrant. (A multi-tenant
   * driver would hold a per-key lazy value instead, so that one corpus's
@@ -49,17 +50,20 @@ object Artifacts {
     * reclaims its blocks once nothing references it. */
   val MaxEntries = 8
 
-  private final class Kind {
+  /** Kinds kept to another bound than [[MaxEntries]]. */
+  private val bounds = Map(Tables.SchemaKind -> Tables.SchemaEntries)
+
+  private final class Kind(max: Int) {
     val entries = new java.util.LinkedHashMap[String, Any](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Any]): Boolean = size > MaxEntries
+          e: java.util.Map.Entry[String, Any]): Boolean = size > max
     }
     val builds = new AtomicLong
   }
 
   private val kinds = new ConcurrentHashMap[String, Kind]()
   private def kind(name: String): Kind =
-    kinds.computeIfAbsent(name, _ => new Kind)
+    kinds.computeIfAbsent(name, n => new Kind(bounds.getOrElse(n, MaxEntries)))
 
   private val owners = new java.util.WeakHashMap[AnyRef, java.lang.Long]()
   private val nextOwner = new AtomicLong

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall seconds.
@@ -60,22 +61,45 @@ object Bench {
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
         .getCount
 
-    /** (median, relative spread, codegen compiles) over `runs` timed
-      * executions after ONE untimed per-query warmup (codegen
+    /** Spark jobs started while a query's frame is built: the jobs
+      * submitted under the [[BuildPhase]] local property, which
+      * [[built]] sets around the query call (schema inference, size
+      * probes and eager checkpoints inside the operator). */
+    val BuildPhase = "graft.bench.build"
+    val buildJobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(BuildPhase) != null)
+          buildJobs.incrementAndGet()
+    })
+    def built(df: => DataFrame): DataFrame = {
+      spark.sparkContext.setLocalProperty(BuildPhase, "1")
+      try df finally spark.sparkContext.setLocalProperty(BuildPhase, null)
+    }
+    def drainedBuildJobs(): Long = {
+      org.apache.spark.graftbridge.GraftScheduler
+        .drainListenerBus(spark.sparkContext)
+      buildJobs.get
+    }
+
+    /** (median, relative spread, codegen compiles, build jobs) over
+      * `runs` timed executions after ONE untimed per-query warmup (codegen
       * compilation, file listing, and pay-once artifacts like q23's
       * bucketed rewrite otherwise land in the first run and dominate
       * the spread, drowning the steady-state noise the spread exists to
       * measure). A single failed run poisons the sample — a transient
       * failure must not hide behind the surviving runs' timing. */
-    def sample(body: => Unit): (Double, Double, Long) = {
+    def sample(body: => Unit): (Double, Double, Long, Long) = {
       // a failed WARMUP also poisons the sample: silently swallowing it
       // would both hide the failure and leak the pay-once costs the
       // warmup absorbs into timed run 1's spread
       val warm = { cleanup(); timed(body) }
       val c0 = codegenCompiles()
+      val j0 = drainedBuildJobs()
       val xs = Seq.fill(runs) { cleanup(); timed(body) }
       val compiles = codegenCompiles() - c0
-      if (warm < 0 || xs.exists(_ < 0)) (-1.0, -1.0, compiles)
+      val jobs = drainedBuildJobs() - j0
+      if (warm < 0 || xs.exists(_ < 0)) (-1.0, -1.0, compiles, jobs)
       else {
         val s = xs.sorted
         val n = s.length
@@ -83,7 +107,7 @@ object Bench {
         // (upper-middle alone biases high and skews cross-round deltas
         // when rounds were run with different run counts)
         val med = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-        (med, if (med > 0) (s.last - s.head) / med else 0.0, compiles)
+        (med, if (med > 0) (s.last - s.head) / med else 0.0, compiles, jobs)
       }
     }
 
@@ -145,7 +169,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val results = names.map { n =>
-      n -> sample(noopWrite(SparkEntry.queries(n)(spark, sfDir)))
+      n -> sample(noopWrite(built(SparkEntry.queries(n)(spark, sfDir))))
     }
     val pinnedResults = pinned.map { case (n, f) => n -> sample(f()) }
 
@@ -161,13 +185,18 @@ object Bench {
     // are the r4 originals (unchanged); 8-core refs are the driver's
     // r17 8-core run (BENCH_r17_c8.json — quiet per the r17 verdict's
     // adjudication, its 2.26 "pin_ratio" being exactly this artifact).
+    // 4-core refs are the medians of three quiet pins-only runs on a
+    // 4-core local[4] box (SPARK_GRAFT_BENCH_ONLY=q1_multi_agg, sf0.001).
     val referencePinsByCpus = Map(
       32 -> Map(
         "pin_shuffle_agg" -> 0.425, "pin_sort" -> 1.341,
         "pin_hash_cpu" -> 0.349),
       8 -> Map(
         "pin_shuffle_agg" -> 0.276, "pin_sort" -> 3.032,
-        "pin_hash_cpu" -> 1.183))
+        "pin_hash_cpu" -> 1.183),
+      4 -> Map(
+        "pin_shuffle_agg" -> 0.569, "pin_sort" -> 6.657,
+        "pin_hash_cpu" -> 1.726))
     val pinRefKnown = referencePinsByCpus.contains(cpus.toInt)
     val referencePins = referencePinsByCpus.getOrElse(
       cpus.toInt, referencePinsByCpus(32))
@@ -177,7 +206,7 @@ object Bench {
         "guard is skipped (direction-only evidence)")
     // guarded lookup: a pin added/renamed without a reference entry must
     // degrade to "not in the ratio" — not throw after the whole sweep ran
-    val pinRatios = pinnedResults.flatMap { case (n, (m, _, _)) =>
+    val pinRatios = pinnedResults.flatMap { case (n, (m, _, _, _)) =>
       referencePins.get(n).filter(_ => m > 0).map(m / _)
     }.sorted
     val pinRatio =
@@ -201,7 +230,7 @@ object Bench {
     // pinned failures count too: a -1.0 pinned median would silently
     // poison the cross-round drift correction it exists to provide
     val failed = (results ++ pinnedResults)
-      .collect { case (n, (m, _, _)) if m < 0 => n }
+      .collect { case (n, (m, _, _, _)) if m < 0 => n }
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val spreads = results.map(_._2._2).filter(_ >= 0).sorted
@@ -224,6 +253,10 @@ object Bench {
         // classes compiled in each query's timed runs: 0 once every
         // class the query generates stays in Spark's codegen cache
         s""""codegen_compiles":${results.map(r => "\"" + r._1 + "\":" + r._2._3)
+          .mkString("{", ",", "}")},""" +
+        // Spark jobs started while each query's frame was built, in its
+        // timed runs: 0 for a query whose operators run no eager job
+        s""""build_jobs":${results.map(r => "\"" + r._1 + "\":" + r._2._4)
           .mkString("{", ",", "}")},""" +
         s""""pinned":${fmtMap(pinnedResults.map(r => r._1 -> r._2._1))},""" +
         s""""pinned_spread":${fmtMap(pinnedResults.map(r => r._1 -> r._2._2))},""" +

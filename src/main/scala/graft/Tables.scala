@@ -10,17 +10,71 @@ import org.apache.spark.sql.functions.{col, expr}
   * predicate pushdown and column pruning to Catalyst. At cluster scale
   * the same call reads a partitioned table — operators never assume a
   * single file.
+  *
+  * Read path: every loader, every pipeline task's read-back and every
+  * reader of a committed staged unit calls [[parquet]]. Without a
+  * schema, `spark.read.parquet` runs a Spark job on every call to infer
+  * one from the footers. [[parquet]] infers it once and hands the
+  * memoized `StructType` to the reader, so a repeated read costs one
+  * FS listing ([[fingerprint]]) and starts no job. Each call still
+  * returns a new `DataFrame` with fresh expression ids, so self-joins
+  * and multi-table joins resolve exactly as with a plain read.
+  *
+  * The memo is the [[SchemaKind]] kind of [[Artifacts]], owned by the
+  * `SparkSession`. Its key is the path's listing fingerprint (a table
+  * rewritten at the same path misses) plus the session's values of the
+  * [[InferenceConfs]] (a changed setting infers again). It keeps
+  * [[SchemaEntries]] entries, LRU.
   */
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
-  def region(s: SparkSession, dir: String): DataFrame    = s.read.parquet(p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame    = s.read.parquet(p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame      = s.read.parquet(p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame    = s.read.parquet(p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "lineitem"))
+  /** [[Artifacts]] kind of the memoized parquet schemas. */
+  final val SchemaKind = "tables.schema"
+
+  /** Schemas kept by [[SchemaKind]]: room for the [[Artifacts.MaxEntries]]
+    * corpora every other kind keeps, at 24 distinct paths per corpus
+    * (one 162-query sweep reads the ten tables and 14 staged units),
+    * rounded up. An LRU under a cyclic scan of more paths than its
+    * bound misses on every read. A schema is a few KB. */
+  final val SchemaEntries = 256
+
+  /** Session settings that change what parquet schema inference
+    * returns for the same files. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** A fresh scan of the parquet table at `path`, read with its
+    * memoized schema: one FS listing, no Spark job once the schema is
+    * known (see the object doc). */
+  def parquet(s: SparkSession, path: String): DataFrame = scan(s, path)._1
+
+  /** [[parquet]] and the fingerprint its schema was looked up under, for
+    * callers that key further memos on the same listing. */
+  private def scan(s: SparkSession, path: String): (DataFrame, String) = {
+    val fp = fingerprint(s, path)
+    val settings = InferenceConfs.map(k => s.conf.getOption(k).orNull)
+    val schema = Artifacts.memo(s, SchemaKind,
+        (fp +: settings).mkString("|")) {
+      s.read.parquet(path).schema
+    }
+    (s.read.schema(schema).parquet(path), fp)
+  }
+
+  private def table(s: SparkSession, dir: String, name: String) =
+    parquet(s, p(dir, name))
+
+  def region(s: SparkSession, dir: String): DataFrame    = table(s, dir, "region")
+  def nation(s: SparkSession, dir: String): DataFrame    = table(s, dir, "nation")
+  def customer(s: SparkSession, dir: String): DataFrame  = table(s, dir, "customer")
+  def supplier(s: SparkSession, dir: String): DataFrame  = table(s, dir, "supplier")
+  def part(s: SparkSession, dir: String): DataFrame      = table(s, dir, "part")
+  def orders(s: SparkSession, dir: String): DataFrame    = table(s, dir, "orders")
+  def lineitem(s: SparkSession, dir: String): DataFrame  = table(s, dir, "lineitem")
   /** events with `ts` normalized to TimestampType (micros, session TZ =
     * UTC), whichever on-disk generation is present. The current
     * test-corpus writer emits parquet TIMESTAMP(MICROS,
@@ -51,10 +105,9 @@ object Tables {
     * push down to the parquet reader (Relational.q17TimeRangeFilter,
     * ScaleBench's pass-through corpus copy). Callers dispatch on
     * `schema("ts").dataType`. */
-  def eventsRaw(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(p(dir, "events"))
-  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
+  def eventsRaw(s: SparkSession, dir: String): DataFrame = table(s, dir, "events")
+  def documents(s: SparkSession, dir: String): DataFrame = table(s, dir, "documents")
+  def embeddings(s: SparkSession, dir: String): DataFrame = table(s, dir, "embeddings")
 
   /** `documents`, guaranteed at least CLUSTER-CORE scan parallelism
     * for a COMPUTE-HEAVY first pass (normalize/tokenize/shingle/
@@ -79,11 +132,12 @@ object Tables {
     * planning, no job, one FS listing) is memoized per corpus
     * fingerprint in the session's [[Artifacts]] (the probed split
     * count depends on session config) — several operators consult it
-    * more than once per query. */
+    * more than once per query. The key is the fingerprint the read
+    * itself took, so the call lists the corpus once. */
   def documentsSpread(s: SparkSession, dir: String): DataFrame = {
-    val df = documents(s, dir)
-    val parts = Artifacts.memo(s, "tables.scanParts",
-      fingerprint(s, dir, "documents"))(df.rdd.getNumPartitions)
+    val (df, fp) = scan(s, p(dir, "documents"))
+    val parts = Artifacts.memo(s, "tables.scanParts", fp)(
+      df.rdd.getNumPartitions)
     val cores = s.sparkContext.defaultParallelism
     if (parts < cores) df.repartition(cores) else df
   }
@@ -105,14 +159,18 @@ object Tables {
     * same path changes file lengths/mtimes and misses, so a long-lived
     * JVM can never serve results computed on a previous corpus
     * generation. */
-  def fingerprint(s: SparkSession, dir: String, table: String): String = {
-    val path = new org.apache.hadoop.fs.Path(p(dir, table))
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(path)
+  def fingerprint(s: SparkSession, dir: String, table: String): String =
+    fingerprint(s, p(dir, table))
+
+  /** [[fingerprint]] of the table (or staged unit) at `path`. */
+  def fingerprint(s: SparkSession, path: String): String = {
+    val loc = new org.apache.hadoop.fs.Path(path)
+    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val entries = fs.listStatus(loc)
       .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString("\n")
     java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir\n$entries".getBytes("UTF-8"))
+      .digest(s"$path\n$entries".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
 }

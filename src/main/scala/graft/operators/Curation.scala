@@ -810,7 +810,7 @@ object Curation {
     // unchanged via the null-safe compare), never as absent
     val v1 = Tables.documents(s, dir)
       .select(col("doc_id"), md5(col("text")).as("h1"), lit(1).as("p1"))
-    val v2 = s.read.parquet(c12SnapshotPath(s, dir))
+    val v2 = Tables.parquet(s, c12SnapshotPath(s, dir))
       .select(col("doc_id"), md5(col("text")).as("h2"), lit(1).as("p2"))
     v1.join(v2, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
@@ -859,7 +859,7 @@ object Curation {
     val diff = c12DiffCore(s, dir)
       .filter(col("status") =!= "unchanged")
       .localCheckpoint(true)
-    val v2 = s.read.parquet(c12SnapshotPath(s, dir))
+    val v2 = Tables.parquet(s, c12SnapshotPath(s, dir))
     val upserts = diff.filter(col("status").isin("added", "changed"))
       .join(v2, Seq("doc_id"))
       .select(col("doc_id"), col("text"),
@@ -1887,7 +1887,7 @@ object Curation {
         Tables.fingerprint(s, dir, "documents"), "changeset.parquet")) { out =>
       val v1 = Tables.documents(s, dir).select(col("doc_id"),
         coalesce(length(col("text")), lit(0)).cast("long").as("old_chars"))
-      val v2 = s.read.parquet(c12SnapshotPath(s, dir)).select(col("doc_id"),
+      val v2 = Tables.parquet(s, c12SnapshotPath(s, dir)).select(col("doc_id"),
         coalesce(length(col("text")), lit(0)).cast("long").as("new_chars"))
       c12SnapshotDiff(s, dir).filter(col("status") =!= "unchanged")
         .join(v1, Seq("doc_id"), "left_outer")
@@ -1926,7 +1926,7 @@ object Curation {
       s, c20V1Table(s, dir), "pg", c20Mv(Tables.documents(s, dir)))
     val livet = graft.sources.Sources.ensureStagedPartitioned(
       s, c20LiveTable(s, dir), "pg", c20Mv(Tables.documents(s, dir)))
-    val delta = s.read.parquet(c20ChangesetPath(s, dir))
+    val delta = Tables.parquet(s, c20ChangesetPath(s, dir))
       .groupBy(pmod(col("doc_id"), lit(C20Groups.toLong)).as("g"))
       .agg(
         sum(when(col("status") === "added", 1L)
@@ -2682,7 +2682,7 @@ object Curation {
     * partitioned append ∝ admitted shard). */
   def c28AdmitShard(s: SparkSession, dir: String): DataFrame = {
     val shardPath = c28ShardPath(s, dir)
-    val shard = s.read.parquet(shardPath).localCheckpoint(true)
+    val shard = Tables.parquet(s, shardPath).localCheckpoint(true)
     val sig = Dedup.d11Admit(s, dir, shard.select("doc_id", "text"))
       .select(col("doc_id"), col("is_new_unique").as("sig_ok"))
     val sem = Similarity.d12Admit(s, dir,

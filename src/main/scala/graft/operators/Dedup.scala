@@ -694,7 +694,7 @@ object Dedup {
     * suite `prompt` — so the DuckDB oracle can reproduce the staged
     * table from `documents` without reading the file, while the Spark
     * side exercises the real production plumbing: a second path, a
-    * second schema, a second `spark.read.parquet`. */
+    * second schema, a second parquet read. */
   def d9BenchmarksPath(s: SparkSession, dir: String): String =
     graft.Artifacts.staged(s, graft.Artifacts.stagedDir("benchdata",
         Tables.fingerprint(s, dir, "documents"), "benchmarks.parquet"))(
@@ -719,7 +719,7 @@ object Dedup {
     graft.functions.GraftFunctions.register(s)
     graft.Artifacts.memo(s.sparkContext, "dedup.d9Inv",
         Tables.fingerprint(s, dir, "documents")) {
-      val rows = s.read.parquet(d9BenchmarksPath(s, dir))
+      val rows = Tables.parquet(s, d9BenchmarksPath(s, dir))
         .withColumn("norm", TextOps.normText(col("prompt")))
         .withColumn("toks", expr(TextOps.toksExpr))
         .select(explode(
@@ -750,7 +750,7 @@ object Dedup {
     * operators below the scan. */
   def d9DecontaminateXt(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val inv = s.read.parquet(d9BenchmarksPath(s, dir))
+    val inv = Tables.parquet(s, d9BenchmarksPath(s, dir))
       .withColumn("norm", TextOps.normText(col("prompt")))
       .withColumn("toks", expr(TextOps.toksExpr))
       .select(explode(
@@ -797,7 +797,7 @@ object Dedup {
     * cardinality. */
   def d9Report(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val bench = s.read.parquet(d9BenchmarksPath(s, dir))
+    val bench = Tables.parquet(s, d9BenchmarksPath(s, dir))
       .withColumn("norm", TextOps.normText(col("prompt")))
       .withColumn("toks", expr(TextOps.toksExpr))
       .select(col("bench_id"),
@@ -1001,7 +1001,7 @@ object Dedup {
     * per-generation corpus pass (probe times it separately). */
   def d11DedupIncremental(s: SparkSession, dir: String): DataFrame =
     d11Admit(s, dir,
-      s.read.parquet(d11IncrementPath(s, dir)))
+      Tables.parquet(s, d11IncrementPath(s, dir)))
 
   /** The admission core over an explicit increment frame
     * (doc_id, text) — factored out so the scale probe can admit a
@@ -1012,8 +1012,8 @@ object Dedup {
       inc: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val idx = d11IndexPath(s, dir)
-    val idxBands = s.read.parquet(s"$idx/bands.parquet")
-    val contents = s.read.parquet(s"$idx/contents.parquet")
+    val idxBands = Tables.parquet(s, s"$idx/bands.parquet")
+    val contents = Tables.parquet(s, s"$idx/contents.parquet")
 
     // shard collapsed to distinct content (the contentGroups lesson),
     // eagerly materialized once — four screening branches reuse it
@@ -1422,8 +1422,8 @@ object Dedup {
       inc: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val idx = d11IndexPath(s, dir)
-    val contents = s.read.parquet(s"$idx/contents.parquet")
-    val idxBands = s.read.parquet(s"$idx/bands.parquet")
+    val contents = Tables.parquet(s, s"$idx/contents.parquet")
+    val idxBands = Tables.parquet(s, s"$idx/bands.parquet")
     val e = inc
       .withColumn("norm", TextOps.normText(col("text")))
       .withColumn("ih", md5(col("norm")))
@@ -1444,7 +1444,7 @@ object Dedup {
       .filter(col("ch") =!= col("ih")) // identical content → exact path
       .select(col("doc_id"), col("rep"), col("inorm"), col("ishset"))
       .dropDuplicates("doc_id", "rep")
-    val corpusSide = s.read.parquet(st11ShsetsPath(s, dir))
+    val corpusSide = Tables.parquet(s, st11ShsetsPath(s, dir))
       .join(broadcast(cand.select(col("rep")).distinct()), Seq("rep"))
     val inter = size(array_intersect(col("ishset"), col("cshset")))
       .cast("long")

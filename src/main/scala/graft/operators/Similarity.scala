@@ -883,7 +883,7 @@ object Similarity {
         .write.partitionBy("cell").parquet(out)
     }
     graft.Artifacts.staged(s, s"$path/probed")(
-      s.read.parquet(s"$path/assign")
+      Tables.parquet(s, s"$path/assign")
         .select(col("vec_id"), col("embedding"),
           explode(col("probes")).as("pcell"))
         .repartition(col("pcell")) // one writer task per probed cell
@@ -905,7 +905,7 @@ object Similarity {
   private[graft] def s12SymEdges(s: SparkSession, dir: String): DataFrame = {
     val path = graphIndexPath(s, dir)
     graft.Artifacts.memo(s.sparkContext, "similarity.edges", path) {
-      val knn = s.read.parquet(s"$path/edges")
+      val knn = Tables.parquet(s, s"$path/edges")
         .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
       knn.unionByName(
           knn.select(col("dst").as("src"), col("src").as("dst")))
@@ -997,7 +997,7 @@ object Similarity {
       .localCheckpoint(true) // query-sized; reused for the cell list + join
     val probedCells = qprobe.select("qc").distinct().collect()
       .map(_.getInt(0))
-    val seedProbe = s.read.parquet(s"$idx/assign")
+    val seedProbe = Tables.parquet(s, s"$idx/assign")
       .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       .select(col("vec_id").as("node"), col("embedding").as("ne"),
         col("cell"))
@@ -1106,7 +1106,7 @@ object Similarity {
     * in SQL; each copy's planted nearest neighbor is its source at
     * cosine exactly 1.0. */
   def s15GraphAdmit(s: SparkSession, dir: String): DataFrame =
-    s15Admit(s, dir, s.read.parquet(s8IncrementPath(s, dir)))
+    s15Admit(s, dir, Tables.parquet(s, s8IncrementPath(s, dir)))
 
   /** The admission core over an explicit (vec_id, embedding) shard —
     * factored like [[d12Admit]]/[[s8WriteAssigned]] so the scale probe
@@ -1144,7 +1144,7 @@ object Similarity {
     // 1. new-vector edges: shard probes × (old members of those cells
     //    ∪ the shard itself), shard side broadcast — members never
     //    shuffle, and the read is partition-pruned to the probed cells
-    val members = s.read.parquet(s"$idx/assign")
+    val members = Tables.parquet(s, s"$idx/assign")
       .filter(col("cell").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
         col("cell"))
@@ -1164,7 +1164,7 @@ object Similarity {
     // 2. affected-old updates: probers of the landed cells (pruned
     //    inverted-index read), paired with the new arrivals in the
     //    cell they probe, then merged with their STORED edge lists
-    val affected = s.read.parquet(s"$idx/probed")
+    val affected = Tables.parquet(s, s"$idx/probed")
       .filter(col("pcell").isin(landed: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("pcell"))
@@ -1176,7 +1176,7 @@ object Similarity {
         VectorOps.cosine("qe", "ne").as("cos"))
     val affIds = affected.select("query_id").distinct()
       .localCheckpoint(true) // landed-cells-bounded; reused by 2 joins
-    val oldEdges = s.read.parquet(s"$idx/edges")
+    val oldEdges = Tables.parquet(s, s"$idx/edges")
     val merged = oldEdges
       .join(broadcast(affIds), Seq("query_id"), "left_semi")
       .select("query_id", "neighbor_id", "cos")
@@ -1828,7 +1828,7 @@ object Similarity {
     graft.Artifacts.staged(s, s"$path/base")(s8WriteAssigned(s, dir,
       Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), _))
     graft.Artifacts.staged(s, s"$path/inc")(s8WriteAssigned(s, dir,
-      s.read.parquet(s8IncrementPath(s, dir)), _))
+      Tables.parquet(s, s8IncrementPath(s, dir)), _))
     path
   }
 
@@ -1867,8 +1867,8 @@ object Similarity {
     * except the final candidate rank. */
   def s8AnnIncremental(s: SparkSession, dir: String): DataFrame = {
     val idx = s8IndexPath(s, dir)
-    ivfProbe(s, dir, indexCands(s.read.parquet(s"$idx/base")
-        .unionByName(s.read.parquet(s"$idx/inc"))),
+    ivfProbe(s, dir, indexCands(Tables.parquet(s, s"$idx/base")
+        .unionByName(Tables.parquet(s, s"$idx/inc"))),
       IvfProbes, TopK, pruneCells = true)
   }
 
@@ -1900,7 +1900,7 @@ object Similarity {
   def s13CompactIndex(s: SparkSession, dir: String): DataFrame = {
     val idx = s8IndexPath(s, dir)
     graft.sources.Sources.compactPartitionedPath(s, s"$idx/inc", "cell")
-    s.read.parquet(s"$idx/inc")
+    Tables.parquet(s, s"$idx/inc")
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), min("vec_id").as("min_id"),
         max("vec_id").as("max_id"), sum("vec_id").as("sum_id"))
@@ -1969,7 +1969,7 @@ object Similarity {
     * exact copies drop (cos 1.0 with their source), negated vectors
     * survive except against the corpus's ≤ −τ tail. */
   def d12SemdedupIncremental(s: SparkSession, dir: String): DataFrame =
-    d12Admit(s, dir, s.read.parquet(d12IncrementPath(s, dir)))
+    d12Admit(s, dir, Tables.parquet(s, d12IncrementPath(s, dir)))
 
   /** The semantic-admission core over an explicit (vec_id, embedding)
     * shard — factored out like [[Dedup.d11Admit]]/[[s8WriteAssigned]]
@@ -1983,7 +1983,7 @@ object Similarity {
       .withColumn("cell", ivfCellCol(centroidsFor(s, dir)))
       .localCheckpoint(true) // shard-sized; reused by 3 joins below
     val incCells = inc.select("cell").distinct().collect().map(_.getInt(0))
-    val base = s.read.parquet(s"$idx/base")
+    val base = Tables.parquet(s, s"$idx/base")
       .filter(col("cell").isin(incCells.map(Integer.valueOf): _*))
     val vsCorpus = inc.as("i")
       .join(base.as("b"), col("i.cell") === col("b.cell"))
@@ -2080,8 +2080,8 @@ object Similarity {
     val idx = s8IndexPath(s, dir)
     val t = graft.sources.Sources.ensureStagedPartitioned(
       s, s11Table(s, dir), "cell",
-      s.read.parquet(s"$idx/base")
-        .unionByName(s.read.parquet(s"$idx/inc")))
+      Tables.parquet(s, s"$idx/base")
+        .unionByName(Tables.parquet(s, s"$idx/inc")))
     val deleteKeys = s.table(t)
       .filter(col("vec_id") % S11ForgetMod === 0)
       .select("vec_id", "cell").distinct()

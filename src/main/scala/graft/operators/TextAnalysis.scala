@@ -1442,7 +1442,7 @@ object TextAnalysis {
       .groupBy("word").agg(count(lit(1)).as(as))
     val c1 = counts(Tables.documentsSpread(s, dir).select("text"), "c1")
     val c2 = counts(
-      s.read.parquet(Curation.c12SnapshotPath(s, dir)).select("text"), "c2")
+      Tables.parquet(s, Curation.c12SnapshotPath(s, dir)).select("text"), "c2")
     val j = c1.join(c2, Seq("word"), "full_outer")
       .select(col("word"), coalesce(col("c1"), lit(0L)).as("c1"),
         coalesce(col("c2"), lit(0L)).as("c2"))

@@ -88,7 +88,7 @@ object Zorder {
     * proves the skip decision complete (no matching row outside
     * hit buckets). */
   def c14ZorderLayout(s: SparkSession, dir: String): DataFrame = {
-    val t = s.read.parquet(s"${layoutPath(s, dir)}/table")
+    val t = Tables.parquet(s, s"${layoutPath(s, dir)}/table")
     t.groupBy(col("zbucket").cast("int").as("zbucket"))
       .agg(count(lit(1)).as("n_rows"),
         min("ckb").as("min_ckb"), max("ckb").as("max_ckb"),

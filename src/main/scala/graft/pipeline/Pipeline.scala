@@ -48,7 +48,8 @@ abstract class Task {
     graft.Artifacts.committed(spark, output)
 
   /** Read this task's materialized output (for downstream tasks). */
-  final def read(spark: SparkSession): DataFrame = spark.read.parquet(output)
+  final def read(spark: SparkSession): DataFrame =
+    graft.Tables.parquet(spark, output)
 
   /** Stage this task's output into `scratch`; returns rows written.
     * The default materializes [[build]] as parquet; [[TextReportTask]]

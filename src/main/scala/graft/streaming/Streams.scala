@@ -524,7 +524,7 @@ object Streams {
     * proves micro-batched admission ≡ this batch feed row for row. */
   def st11Query(s: SparkSession, dir: String): DataFrame =
     Dedup.st11AdmitFeed(s, dir,
-      s.read.parquet(Dedup.d11IncrementPath(s, dir)))
+      Tables.parquet(s, Dedup.d11IncrementPath(s, dir)))
       .orderBy("doc_id", "dup_of")
 
   /** st11 (streaming spelling): the always-on ingest admission gate —

@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,9 +13,107 @@ import org.scalatest.funsuite.AnyFunSuite
   * corpus (TESTDATA.md): the current writer's native TIMESTAMP(MICROS)
   * column and the earlier INT64-nanos shape. At cluster scale a
   * long-lived table spans writer generations, so the reader dispatches
-  * on the scanned schema rather than assuming one representation. */
+  * on the scanned schema rather than assuming one representation.
+  *
+  * Every read goes through [[Tables.parquet]], which memoizes each
+  * path's inferred schema: it must return what a plain read returns,
+  * infer again when the files or the inference settings change, and
+  * start no Spark job on a repeated read. */
 class TablesSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
+  private val dir = TestSpark.SfDir
+  private val tables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Spark jobs started while `body` runs (nothing else runs in this
+    * JVM while a suite does). */
+  private def jobsDuring(body: => Unit): Long = {
+    val jobs = new AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val drain = () => org.apache.spark.graftbridge.GraftScheduler
+      .drainListenerBus(s.sparkContext)
+    drain()
+    s.sparkContext.addSparkListener(l)
+    try { body; drain() } finally s.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  /** (row count, order-free sum of row hashes). */
+  private def rowHash(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def schemaBuilds = Artifacts.builds(Tables.SchemaKind).get()
+
+  test("a memoized read has the inferred schema and the same rows") {
+    tables.foreach { t =>
+      val path = s"$dir/$t.parquet"
+      val plain = s.read.parquet(path)
+      Tables.parquet(s, path) // the second call reads the memoized schema
+      val memoized = Tables.parquet(s, path)
+      assert(memoized.schema == plain.schema, t)
+      assert(rowHash(memoized) == rowHash(plain), t)
+    }
+  }
+
+  test("a table rewritten at the same path is read with its new schema") {
+    val path = Files.createTempDirectory("graft-rewrite").toString + "/t.parquet"
+    s.range(5).toDF("id").write.parquet(path)
+    assert(Tables.parquet(s, path).columns.toSeq == Seq("id"))
+    s.range(7).toDF("id").withColumn("added", col("id") * 2)
+      .write.mode("overwrite").parquet(path)
+    val reread = Tables.parquet(s, path)
+    assert(reread.columns.toSeq == Seq("id", "added"))
+    assert(reread.agg(sum("added")).head().getLong(0) == 42L)
+  }
+
+  test("a changed inference setting infers again; other sessions keep theirs") {
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val other = s.newSession()
+    def tsType(x: org.apache.spark.sql.SparkSession) =
+      Tables.eventsRaw(x, dir).schema("ts").dataType
+    assert(tsType(other) == TimestampNTZType)
+    other.conf.set(key, "false")
+    assert(tsType(other) == TimestampType)
+    assert(tsType(s) == TimestampNTZType)
+    assert(Tables.events(other, dir).agg(count(lit(1))).head().getLong(0) ==
+      Tables.events(s, dir).agg(count(lit(1))).head().getLong(0))
+    other.conf.unset(key)
+    assert(tsType(other) == TimestampNTZType)
+  }
+
+  test("a cycle over as many paths as the schema bound keeps every schema") {
+    val root = Files.createTempDirectory("graft-schema-bound")
+    val first = root.resolve("t0")
+    s.range(3).toDF("id").coalesce(1).write.parquet(first.toString)
+    val paths = first +: (1 until Tables.SchemaEntries).map { i =>
+      val to = root.resolve(s"t$i")
+      Files.createDirectory(to)
+      Files.list(first).forEach((f: Path) =>
+        Files.copy(f, to.resolve(f.getFileName)))
+      to
+    }
+    paths.foreach(p => Tables.parquet(s, p.toString))
+    val b0 = schemaBuilds
+    val jobs = jobsDuring(paths.foreach(p =>
+      assert(Tables.parquet(s, p.toString).columns.toSeq == Seq("id"))))
+    assert(schemaBuilds - b0 == 0, "second cycle inferred again")
+    assert(jobs == 0)
+  }
+
+  test("building a course query starts no Spark job once its tables were read") {
+    // q17 is left out: its max-ts pre-pass runs two jobs by design
+    val course = Seq("q1_multi_agg", "q10_star_join", "q13_wordcount",
+      "q15_json_extract", "q19_pivot_agg", "st3_sessionize")
+    course.foreach(n => SparkEntry.queries(n)(s, dir))
+    val jobs = course.map(n => n -> jobsDuring(SparkEntry.queries(n)(s, dir)))
+    assert(jobs.forall(_._2 == 0), jobs.mkString(", "))
+  }
 
   test("current corpus generation: naive-UTC NTZ scan normalizes to TimestampType") {
     val ev = Tables.events(s, TestSpark.SfDir)
