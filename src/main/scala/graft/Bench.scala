@@ -61,45 +61,56 @@ object Bench {
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
         .getCount
 
-    /** Spark jobs started while a query's frame is built: the jobs
-      * submitted under the [[BuildPhase]] local property, which
-      * [[built]] sets around the query call (schema inference, size
-      * probes and eager checkpoints inside the operator). */
-    val BuildPhase = "graft.bench.build"
-    val buildJobs = new java.util.concurrent.atomic.AtomicLong
+    /** Spark jobs started in each phase of a query: the jobs submitted
+      * while [[inPhase]] has set the [[PhaseKey]] local property, "build"
+      * around the query call (schema inference, size probes and eager
+      * checkpoints inside the operator) and "exec" around its noop write
+      * (the query's own stages, range sampling included). */
+    val PhaseKey = "graft.bench.phase"
+    val phaseJobs = Map("build" -> new java.util.concurrent.atomic.AtomicLong,
+      "exec" -> new java.util.concurrent.atomic.AtomicLong)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(BuildPhase) != null)
-          buildJobs.incrementAndGet()
+        Option(e.properties).flatMap(p => Option(p.getProperty(PhaseKey)))
+          .flatMap(phaseJobs.get).foreach(_.incrementAndGet())
     })
-    def built(df: => DataFrame): DataFrame = {
-      spark.sparkContext.setLocalProperty(BuildPhase, "1")
-      try df finally spark.sparkContext.setLocalProperty(BuildPhase, null)
+    def inPhase[T](phase: String)(body: => T): T = {
+      spark.sparkContext.setLocalProperty(PhaseKey, phase)
+      try body finally spark.sparkContext.setLocalProperty(PhaseKey, null)
     }
-    def drainedBuildJobs(): Long = {
+    def drainedJobs(phase: String): Long = {
       org.apache.spark.graftbridge.GraftScheduler
         .drainListenerBus(spark.sparkContext)
-      buildJobs.get
+      phaseJobs(phase).get
     }
 
-    /** (median, relative spread, codegen compiles, build jobs) over
-      * `runs` timed executions after ONE untimed per-query warmup (codegen
-      * compilation, file listing, and pay-once artifacts like q23's
-      * bucketed rewrite otherwise land in the first run and dominate
-      * the spread, drowning the steady-state noise the spread exists to
-      * measure). A single failed run poisons the sample — a transient
-      * failure must not hide behind the surviving runs' timing. */
-    def sample(body: => Unit): (Double, Double, Long, Long) = {
+    /** One query's (or pin's) timed runs: median wall seconds (-1 when a
+      * run failed), relative spread, and the codegen compiles, build jobs
+      * and exec jobs summed over the timed runs. */
+    case class Sample(median: Double, spread: Double, compiles: Long,
+                            buildJobs: Long, execJobs: Long)
+
+    /** [[Sample]] of `runs` timed executions after ONE untimed per-query
+      * warmup (codegen compilation, file listing, and pay-once artifacts
+      * like q23's bucketed rewrite otherwise land in the first run and
+      * dominate the spread, drowning the steady-state noise the spread
+      * exists to measure). A single failed run poisons the sample — a
+      * transient failure must not hide behind the surviving runs'
+      * timing. */
+    def sample(body: => Unit): Sample = {
       // a failed WARMUP also poisons the sample: silently swallowing it
       // would both hide the failure and leak the pay-once costs the
       // warmup absorbs into timed run 1's spread
       val warm = { cleanup(); timed(body) }
       val c0 = codegenCompiles()
-      val j0 = drainedBuildJobs()
+      val b0 = drainedJobs("build")
+      val e0 = drainedJobs("exec")
       val xs = Seq.fill(runs) { cleanup(); timed(body) }
       val compiles = codegenCompiles() - c0
-      val jobs = drainedBuildJobs() - j0
-      if (warm < 0 || xs.exists(_ < 0)) (-1.0, -1.0, compiles, jobs)
+      val buildJobs = drainedJobs("build") - b0
+      val execJobs = drainedJobs("exec") - e0
+      if (warm < 0 || xs.exists(_ < 0))
+        Sample(-1.0, -1.0, compiles, buildJobs, execJobs)
       else {
         val s = xs.sorted
         val n = s.length
@@ -107,7 +118,8 @@ object Bench {
         // (upper-middle alone biases high and skews cross-round deltas
         // when rounds were run with different run counts)
         val med = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-        (med, if (med > 0) (s.last - s.head) / med else 0.0, compiles, jobs)
+        Sample(med, if (med > 0) (s.last - s.head) / med else 0.0,
+          compiles, buildJobs, execJobs)
       }
     }
 
@@ -169,7 +181,10 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val results = names.map { n =>
-      n -> sample(noopWrite(built(SparkEntry.queries(n)(spark, sfDir))))
+      n -> sample {
+        val df = inPhase("build")(SparkEntry.queries(n)(spark, sfDir))
+        inPhase("exec")(noopWrite(df))
+      }
     }
     val pinnedResults = pinned.map { case (n, f) => n -> sample(f()) }
 
@@ -206,8 +221,8 @@ object Bench {
         "guard is skipped (direction-only evidence)")
     // guarded lookup: a pin added/renamed without a reference entry must
     // degrade to "not in the ratio" — not throw after the whole sweep ran
-    val pinRatios = pinnedResults.flatMap { case (n, (m, _, _, _)) =>
-      referencePins.get(n).filter(_ => m > 0).map(m / _)
+    val pinRatios = pinnedResults.flatMap { case (n, r) =>
+      referencePins.get(n).filter(_ => r.median > 0).map(r.median / _)
     }.sorted
     val pinRatio =
       if (pinRatios.isEmpty) -1.0 else pinRatios(pinRatios.length / 2)
@@ -227,13 +242,16 @@ object Bench {
     def fmtMap(xs: Seq[(String, Double)]): String = xs
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
+    def fmtCounts(f: Sample => Long): String = results
+      .map { case (k, r) => "\"" + k + "\":" + f(r) }
+      .mkString("{", ",", "}")
     // pinned failures count too: a -1.0 pinned median would silently
     // poison the cross-round drift correction it exists to provide
     val failed = (results ++ pinnedResults)
-      .collect { case (n, (m, _, _, _)) if m < 0 => n }
+      .collect { case (n, r) if r.median < 0 => n }
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    val spreads = results.map(_._2._2).filter(_ >= 0).sorted
+    val total = results.map(_._2.median).filter(_ >= 0).sum
+    val spreads = results.map(_._2.spread).filter(_ >= 0).sorted
     // same even-n median convention as the per-query medians (upper-middle
     // alone biases the headline noise scalar high)
     val noise =
@@ -248,18 +266,18 @@ object Bench {
     // detail in a repo-local file instead.
     val detail =
       f"""{"metric":"total_wall","value":$total%.3f,"unit":"sec","runs":$runs,""" +
-        s""""queries":${fmtMap(results.map(r => r._1 -> r._2._1))},""" +
-        s""""spread":${fmtMap(results.map(r => r._1 -> r._2._2))},""" +
+        s""""queries":${fmtMap(results.map(r => r._1 -> r._2.median))},""" +
+        s""""spread":${fmtMap(results.map(r => r._1 -> r._2.spread))},""" +
         // classes compiled in each query's timed runs: 0 once every
         // class the query generates stays in Spark's codegen cache
-        s""""codegen_compiles":${results.map(r => "\"" + r._1 + "\":" + r._2._3)
-          .mkString("{", ",", "}")},""" +
+        s""""codegen_compiles":${fmtCounts(_.compiles)},""" +
         // Spark jobs started while each query's frame was built, in its
         // timed runs: 0 for a query whose operators run no eager job
-        s""""build_jobs":${results.map(r => "\"" + r._1 + "\":" + r._2._4)
-          .mkString("{", ",", "}")},""" +
-        s""""pinned":${fmtMap(pinnedResults.map(r => r._1 -> r._2._1))},""" +
-        s""""pinned_spread":${fmtMap(pinnedResults.map(r => r._1 -> r._2._2))},""" +
+        s""""build_jobs":${fmtCounts(_.buildJobs)},""" +
+        // Spark jobs started while each query executed, in its timed runs
+        s""""exec_jobs":${fmtCounts(_.execJobs)},""" +
+        s""""pinned":${fmtMap(pinnedResults.map(r => r._1 -> r._2.median))},""" +
+        s""""pinned_spread":${fmtMap(pinnedResults.map(r => r._1 -> r._2.spread))},""" +
         f""""memo_build_sec":$memoBuildSec%.3f,"pin_ratio":$pinRatio%.3f,""" +
         s""""loaded":$loaded,""" +
         f""""noise":$noise%.3f,"failed":$fs,"sf":"$sfDir"}"""
@@ -317,12 +335,12 @@ object Bench {
     // map is in the detail file (and the committed BENCH_local
     // artifact). Reporting-only change — the timing protocol above is
     // untouched (declared in OPTIMIZATION_r18.md).
-    val ranked = results.filter(_._2._1 >= 0).sortBy(-_._2._1)
+    val ranked = results.filter(_._2.median >= 0).sortBy(-_._2.median)
     def lineWith(qs: Seq[(String, Double)]): String =
       f"""{"metric":"total_wall","value":$total%.3f,"unit":"sec","runs":$runs,""" +
         s""""n_queries":${results.length},""" +
         s""""queries":${fmtMap(qs.map(r => r._1 -> r._2))},""" +
-        s""""pinned":${fmtMap(pinnedResults.map(r => r._1 -> r._2._1))},""" +
+        s""""pinned":${fmtMap(pinnedResults.map(r => r._1 -> r._2.median))},""" +
         f""""memo_build_sec":$memoBuildSec%.3f,"pin_ratio":$pinRatio%.3f,""" +
         s""""loaded":$loaded,""" + oracleRef +
         f""""noise":$noise%.3f,"failed":$fs,""" +
@@ -332,9 +350,9 @@ object Bench {
     val LineBudget = 1800
     val keep = ranked.indices.reverse
       .find(i => lineWith(ranked.take(i + 1)
-        .map(r => r._1 -> r._2._1)).length <= LineBudget)
+        .map(r => r._1 -> r._2.median)).length <= LineBudget)
       .map(_ + 1).getOrElse(ranked.length.min(10))
-    println(lineWith(ranked.take(keep).map(r => r._1 -> r._2._1)))
+    println(lineWith(ranked.take(keep).map(r => r._1 -> r._2.median)))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.GraftBroadcasts
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Central SparkSession factory with scale-oriented defaults.
   *
@@ -44,6 +47,31 @@ import org.apache.spark.sql.SparkSession
   * strings and task records that grew the heap query by query; trimming
   * it pays back part of the cache's heap. A user who turns the UI on
   * should raise these four limits again.
+  *
+  * The builder installs [[functions.GraftExtensions]]: graft's native
+  * functions and the AQE rule [[SmallSortInOneTask]]. A global sort
+  * (`orderBy`) whose input AQE has measured as small runs in one task:
+  * once the shuffle stages under it have materialized, the rule
+  * replaces its range exchange with `CoalesceExec(1)`, so neither the
+  * range-sampling job nor the range shuffle's map stage starts. It
+  * fires only on an exchange that `EnsureRequirements` added, when
+  * every leaf below it is a materialized shuffle stage, every operator
+  * between them cannot add rows (project, filter, sort, aggregates,
+  * window, limits; no generate, expand, union or join), and the stages'
+  * summed map output is at most what AQE's own coalescing turns into one
+  * partition (`coalescePartitions.minPartitionSize` under
+  * `parallelismFirst`, else `advisoryPartitionSizeInBytes`). Each of the
+  * seven course queries runs two jobs fewer.
+  *
+  * The builder also registers [[ReleaseBroadcasts]], which drops each
+  * finished query's deserialized broadcast relations from the driver's
+  * block manager under a local master (see
+  * `org.apache.spark.sql.graftbridge.GraftBroadcasts`). Without it those
+  * relations stay on the heap until a GC shows their plan gone and
+  * `ContextCleaner` runs. The jobs the rule removes were the large
+  * allocations that used to bring that GC on, so without the release a
+  * full GC after a course pass still found q10's three hash relations
+  * live.
   */
 object GraftSession {
   /** `spark.sql.codegen.cache.maxEntries`: distinct generated classes
@@ -81,6 +109,9 @@ object GraftSession {
       .config("spark.ui.retainedJobs", StatusHistory.toString)
       .config("spark.ui.retainedStages", StatusHistory.toString)
       .config("spark.ui.retainedTasks", StatusHistory.toString)
+      .withExtensions(new functions.GraftExtensions)
+      .config("spark.sql.queryExecutionListeners",
+        classOf[ReleaseBroadcasts].getName)
       // bucketed tables (Sources.writeBucketed) land here, not in cwd
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")
@@ -128,4 +159,17 @@ object GraftSession {
       targetPartitionMb
     math.max(byCores, byMemory).toInt
   }
+}
+
+/** Query listener that drops a finished query's broadcast relations
+  * from the driver's block manager (local master only; the serialized
+  * pieces stay, so the same `Dataset` can run again). [[GraftSession]]
+  * registers it through `spark.sql.queryExecutionListeners`. */
+class ReleaseBroadcasts extends QueryExecutionListener {
+  override def onSuccess(funcName: String, qe: QueryExecution,
+                         durationNs: Long): Unit =
+    GraftBroadcasts.releaseDriverValues(qe.executedPlan)
+
+  override def onFailure(funcName: String, qe: QueryExecution,
+                         exception: Exception): Unit = ()
 }

@@ -12,12 +12,17 @@ import org.apache.spark.sql.SparkSessionExtensions
   * }}}
   *
   * It installs [[GraftFunctions.functions]], the same list
-  * [[GraftFunctions.register]] installs. Operators also call `register`
-  * defensively, so either path (or none) works; this class exists so a
-  * cluster admin can make `cosine_sim` & co. available to plain
-  * `spark.sql(...)` users without any graft code running first.
+  * [[GraftFunctions.register]] installs, and the AQE rule
+  * [[graft.SmallSortInOneTask]]. `graft.GraftSession.builder` installs
+  * it, so a session built either way plans the same. Operators also
+  * call `register` defensively, so the functions resolve on any
+  * session; this class exists so a cluster admin can make `cosine_sim`
+  * & co. available to plain `spark.sql(...)` users without any graft
+  * code running first.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
+    ext.injectQueryStagePrepRule(graft.SmallSortInOneTask(_))
+  }
 }

@@ -254,6 +254,14 @@ class FunctionsSpec extends AnyFunSuite {
         "SELECT cosine_sim(array(1.0F, 2.0F), array(1.0F, 2.0F)) AS c")
         .head.getDouble(0)
       assert(math.abs(v - 1.0) < 1e-12)
+      // the installer also carries the planner rule: a small final sort
+      // runs without a range exchange, as in a GraftSession
+      val q1 = SparkEntry.queries("q1_multi_agg")(s2, TestSpark.SfDir)
+      q1.collect()
+      val plan = q1.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+      assert(!plan.contains("Exchange rangepartitioning"), plan)
+      assert(plan.contains("Coalesce 1"), plan)
     } finally {
       SparkSession.setDefaultSession(s)
       SparkSession.setActiveSession(s)
