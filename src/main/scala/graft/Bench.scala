@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall seconds.
@@ -88,7 +88,7 @@ object Bench {
       * run failed), relative spread, and the codegen compiles, build jobs
       * and exec jobs summed over the timed runs. */
     case class Sample(median: Double, spread: Double, compiles: Long,
-                            buildJobs: Long, execJobs: Long)
+                      buildJobs: Long, execJobs: Long)
 
     /** [[Sample]] of `runs` timed executions after ONE untimed per-query
       * warmup (codegen compilation, file listing, and pay-once artifacts

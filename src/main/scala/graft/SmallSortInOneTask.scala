@@ -29,7 +29,7 @@ import org.apache.spark.sql.internal.SQLConf
   *    partitions);
   *  - walking down from the exchange's child, every leaf is a
   *    materialized shuffle stage (possibly under an `AQEShuffleReadExec`),
-  *    and every operator on the way cannot add rows ([[passes]]: no
+  *    and every operator on the way cannot add rows (`passes`: no
   *    Generate, Expand, Union or join);
   *  - AQE's partition coalescing is on and those stages' summed map
   *    output is at most the size it coalesces into one partition:
@@ -54,7 +54,7 @@ case class SmallSortInOneTask(session: SparkSession) extends Rule[SparkPlan] {
 
 object SmallSortInOneTask {
   /** Operators that never emit more rows than they read. */
-  def passes(p: SparkPlan): Boolean = p match {
+  private def passes(p: SparkPlan): Boolean = p match {
     case _: ProjectExec | _: FilterExec | _: SortExec | _: HashAggregateExec |
          _: SortAggregateExec | _: ObjectHashAggregateExec | _: WindowExec |
          _: WindowGroupLimitExec | _: LocalLimitExec | _: GlobalLimitExec => true
@@ -64,7 +64,7 @@ object SmallSortInOneTask {
   /** Summed map-output bytes of the shuffle stages under `p`, or None
     * when some leaf is not a materialized shuffle stage or the walk
     * meets an operator that may add rows. */
-  def inputBytes(p: SparkPlan): Option[Long] = p match {
+  private def inputBytes(p: SparkPlan): Option[Long] = p match {
     case s: ShuffleQueryStageExec =>
       if (s.isMaterialized)
         Some(s.mapStats.map(_.bytesByPartitionId.sum).getOrElse(0L))
