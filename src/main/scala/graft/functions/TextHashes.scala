@@ -37,17 +37,29 @@ object TextHashKernels {
     out
   }
 
-  /** All `n` minhash coordinates in ONE pass over the shingle array:
-    * element j equals [[minhashMin]](shingles, "j") — md5("<j>|"+shingle)
-    * minimized lexicographically — but each shingle's bytes are
-    * materialized once and fed to the n digests, instead of n separate
-    * array traversals with n conversions each. */
-  def minhashSig(shingles: ArrayData, n: Int): ArrayData = {
+  /** Lower-case hex of the 16-byte digest at `d(off until off + 16)`,
+    * as ASCII bytes written to `out` from `at`. */
+  private def hexInto(d: Array[Byte], off: Int, out: Array[Byte], at: Int): Unit = {
+    var b = 0
+    while (b < 16) {
+      out(at + 2 * b) = hexChars((d(off + b) >> 4) & 0xf).toByte
+      out(at + 2 * b + 1) = hexChars(d(off + b) & 0xf).toByte
+      b += 1
+    }
+  }
+
+  /** The `n` minimal digests of [[minhashSig]], flat: bytes
+    * `16j until 16j + 16` are seed j's winning md5. Minimizing raw
+    * digests as unsigned bytes is the same order as minimizing their
+    * fixed-width lower-case hex strings ('0'..'9' < 'a'..'f' in ASCII,
+    * one nibble per char), so only the winners are ever hex-encoded;
+    * the candidate digests are written into one scratch buffer. */
+  private def minhashDigests(shingles: ArrayData, n: Int): Array[Byte] = {
     val m = shingles.numElements()
-    if (m == 0) return null
     val md = md5Local.get()
     val prefixes = Array.tabulate(n)(j => (j.toString + "|").getBytes("UTF-8"))
-    val best = new Array[String](n)
+    val best = new Array[Byte](16 * n)
+    val d = new Array[Byte](16)
     var i = 0
     while (i < m) {
       val sh = shingles.getUTF8String(i).getBytes
@@ -55,22 +67,35 @@ object TextHashKernels {
       while (j < n) {
         md.update(prefixes(j))
         md.update(sh)
-        val d = md.digest()
-        val hex = new Array[Char](32)
-        var b = 0
-        while (b < 16) {
-          hex(2 * b) = hexChars((d(b) >> 4) & 0xf)
-          hex(2 * b + 1) = hexChars(d(b) & 0xf)
-          b += 1
-        }
-        val s = new String(hex)
-        if (best(j) == null || s.compareTo(best(j)) < 0) best(j) = s
+        md.digest(d, 0, 16)
+        if (i == 0 || java.util.Arrays.compareUnsigned(
+            d, 0, 16, best, 16 * j, 16 * j + 16) < 0)
+          System.arraycopy(d, 0, best, 16 * j, 16)
         j += 1
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      best.map(UTF8String.fromString).asInstanceOf[Array[Any]])
+    best
+  }
+
+  /** All `n` minhash coordinates in ONE pass over the shingle array:
+    * element j equals [[minhashMin]](shingles, "j") — md5("<j>|"+shingle)
+    * minimized lexicographically — but each shingle's bytes are
+    * materialized once and fed to the n digests, instead of n separate
+    * array traversals with n conversions each. The minima are kept as
+    * raw digests (see [[minhashDigests]]) and hex-encoded once each. */
+  def minhashSig(shingles: ArrayData, n: Int): ArrayData = {
+    if (shingles.numElements() == 0) return null
+    val best = minhashDigests(shingles, n)
+    val out = new Array[Any](n)
+    var j = 0
+    while (j < n) {
+      val hex = new Array[Byte](32)
+      hexInto(best, 16 * j, hex, 0)
+      out(j) = UTF8String.fromBytes(hex)
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
   /** SimHash over the md5 of each token: bit j (0..59) of the fingerprint
@@ -251,27 +276,32 @@ object TextHashKernels {
     * Returning the band keys as ONE array column keeps the whole
     * computation behind a single generator reference, so Catalyst's
     * project-collapsing can't inline (and thus re-evaluate) the
-    * signature per band. */
+    * signature per band. The band's hex minima are written straight
+    * from the winning digests into the bytes that are hashed. */
   def minhashBandKeys(shingles: ArrayData, nHashes: Int,
                       nBands: Int): ArrayData = {
-    val sig = minhashSig(shingles, nHashes)
-    if (sig == null) return null
+    if (shingles.numElements() == 0) return null
+    val best = minhashDigests(shingles, nHashes)
+    val md = md5Local.get()
     val rows = nHashes / nBands
-    val out = new Array[UTF8String](nBands)
+    val band = new Array[Byte](32 * rows)
+    val key = new Array[Byte](16)
+    val out = new Array[Any](nBands)
     var b = 0
     while (b < nBands) {
-      val sb = new java.lang.StringBuilder(32 * rows)
       var r = 0
       while (r < rows) {
-        sb.append(sig.getUTF8String(b * rows + r).toString)
+        hexInto(best, 16 * (b * rows + r), band, 32 * r)
         r += 1
       }
-      out(b) = UTF8String.fromString(
-        new String(md5hex(sb.toString.getBytes("UTF-8"))))
+      md.update(band)
+      md.digest(key, 0, 16)
+      val hex = new Array[Byte](32)
+      hexInto(key, 0, hex, 0)
+      out(b) = UTF8String.fromBytes(hex)
       b += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.asInstanceOf[Array[Any]])
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
   /** Scan-local scrubber for t11's boilerplate-span removal: walk every

@@ -71,11 +71,32 @@ object Dedup {
     * its band buckets and the self-join goes O(m²) per bucket — measured
     * 38× worse on a 20×-duplicated probe corpus; at 100 TB, where
     * boilerplate pages duplicate millions of times, it is the difference
-    * between a linear pipeline and an unrunnable one. */
+    * between a linear pipeline and an unrunnable one.
+    *
+    * The group shuffle is an explicit `repartition(shuffle.partitions,
+    * h)`: AQE coalesces an ENSURE_REQUIREMENTS exchange by bytes, and a
+    * compact corpus's ~0.5 MB of (h, doc_id, norm) rows fell under
+    * `coalescePartitions.minPartitionSize` and ran every group — and
+    * the minhash kernel in the stage that reads them — in ONE task.
+    * AQE leaves a REPARTITION_BY_NUM exchange alone (as in
+    * [[Tables.documentsSpread]]); at corpus scale this shuffle is large
+    * and would not be coalesced anyway, so the count is the planner's.
+    * The cost: collect_list's partial aggregate now runs after the
+    * shuffle instead of before it (the shuffle moves the same bytes:
+    * groups are near-distinct).
+    *
+    * The explicit `h IS NOT NULL` keeps every consumer's subtree
+    * identical: d2's band join (`x.ch < y.ch`) makes the optimizer
+    * infer it on the band branch only, and the two differing copies
+    * then scan, spread and shuffle the corpus twice instead of reusing
+    * one exchange. No row changes: md5 of a non-null text is never
+    * null, and a null `norm` yields -1 tokens, below [[MinToks]]. */
   private def contentGroups(s: SparkSession, dir: String): DataFrame =
     Tables.documentsSpread(s, dir)
       .withColumn("norm", TextOps.normText(col("text")))
       .withColumn("h", md5(col("norm")))
+      .filter(col("h").isNotNull)
+      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("h"))
       .groupBy("h")
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         // norm is constant within a group (h = md5(norm))

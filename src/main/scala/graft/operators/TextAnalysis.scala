@@ -1373,8 +1373,13 @@ object TextAnalysis {
     // nll serves three consumers (histogram, total count, the final
     // bucket projection) — cut it, it is doc-sized
     val nll = nllIn.localCheckpoint(true)
+    // hist feeds offs and thr; the optimizer infers `hb IS NOT NULL`
+    // on one copy only (offs' join key), so without the explicit
+    // filter the two copies differ and the histogram aggregates twice.
+    // nll_micro is an integer NLL, never null, so no row changes.
     val hist = nll.groupBy("nll_micro").agg(count(lit(1)).as("hc"))
       .withColumn("hb", expr(s"nll_micro div ${T17HistB}L"))
+      .filter(col("hb").isNotNull)
     val inW = Window.partitionBy("hb").orderBy("nll_micro")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val offs = hist.groupBy("hb").agg(sum("hc").as("bc"))

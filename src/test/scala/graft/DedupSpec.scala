@@ -32,6 +32,55 @@ class DedupSpec extends AnyFunSuite {
       s"jaccard-confirmed pairs missed by LSH: ${confirmed -- cands}")
   }
 
+  test("d2 derives its content groups once: one documents scan, the " +
+      "group exchange reused by the within-group branch") {
+    val df = Dedup.d2Minhash(s, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    val scans = plan.linesIterator
+      .count(l => l.contains("FileScan parquet") && l.contains("documents"))
+    assert(scans == 1, plan)
+    assert(plan.linesIterator.exists(l =>
+      l.contains("ReusedExchange") && l.contains("hashpartitioning(h#")), plan)
+  }
+
+  test("d2's minhash stage runs one task per shuffle partition") {
+    import scala.collection.mutable
+    import org.apache.spark.graftbridge.GraftScheduler
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.GenerateExec
+    val sc = s.sparkContext
+    val tasks = mutable.Map.empty[Int, Int]
+    val accs = mutable.Map.empty[Int, Set[Long]]
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        tasks(e.stageId) = tasks.getOrElse(e.stageId, 0) + 1
+        accs(e.stageId) = accs.getOrElse(e.stageId, Set.empty[Long]) ++
+          e.taskInfo.accumulables.map(_.id)
+      }
+    }
+    val df = Dedup.d2Minhash(s, dir)
+    GraftScheduler.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      df.collect()
+      GraftScheduler.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    // the kernel's stage is the one whose tasks count the rows of the
+    // Generate that posexplodes minhash_band_keys
+    val gen = TestSpark.flattenPlan(df.queryExecution.executedPlan).collect {
+      case g: GenerateExec
+          if g.generator.toString.contains("minhash_band_keys") => g
+    }
+    assert(gen.size == 1)
+    val rowsAcc = gen.head.metrics("numOutputRows").id
+    val stages = l.synchronized(accs.filter(_._2.contains(rowsAcc)).keys.toSeq)
+    assert(stages.size == 1, s"stages counting the kernel's rows: $stages")
+    assert(tasks(stages.head) ==
+      s.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
   test("d3 simhash is a 60-bit fingerprint, one per doc") {
     val rows = Dedup.d3Simhash(s, dir).collect()
     assert(rows.length == Tables.documents(s, dir).count())

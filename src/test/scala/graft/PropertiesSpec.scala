@@ -179,6 +179,56 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
+  test("property: unsigned-byte order of md5 digests is the order of " +
+      "their hex strings") {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def hex(d: Array[Byte]) = d.map("%02x".format(_)).mkString
+    val bytes = Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue))
+      .map(_.toArray)
+    samples(Gen.zip(bytes, bytes), 500, seed = 31L).foreach { case (a, b) =>
+      val (da, db) = (md.digest(a), md.digest(b))
+      assert(Integer.signum(java.util.Arrays.compareUnsigned(da, db)) ===
+        Integer.signum(hex(da).compareTo(hex(db))))
+    }
+  }
+
+  test("property: minhash_sig coordinate j equals minhash_min(seed j), " +
+      "and minhash_band_keys hashes those coordinates") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def digest(s: String) = md.digest(s.getBytes("UTF-8"))
+    def hex(s: String) = digest(s).map("%02x".format(_)).mkString
+    // shingles whose seed-0 digests share their first two bytes, so the
+    // minimum is decided past the leading bytes
+    val sharing = (0 until 4096).map(i => s"s$i")
+      .groupBy(sh => digest("0|" + sh).take(2).toSeq)
+      .values.filter(_.size >= 2).take(20).flatten.toSeq
+    assert(sharing.size >= 10)
+    val shingle = Gen.oneOf(word, Gen.oneOf(sharing), Gen.const("é ñ 日"))
+    val arrays = Gen.oneOf(
+      Gen.listOfN(1, shingle), // a single shingle
+      Gen.nonEmptyListOf(shingle).map(l => l ++ l), // every one repeated
+      Gen.nonEmptyListOf(Gen.oneOf(sharing)),
+      Gen.nonEmptyListOf(shingle))
+    val n = 12
+    samples(arrays, 200, seed = 37L).foreach { shs =>
+      val arr = new GenericArrayData(
+        shs.map(UTF8String.fromString).toArray[Any])
+      val sig = TextHashKernels.minhashSig(arr, n)
+      val mins = (0 until n).map(j =>
+        TextHashKernels.minhashMin(arr, UTF8String.fromString(j.toString))
+          .toString)
+      assert((0 until n).map(sig.getUTF8String(_).toString) === mins,
+        s"on $shs")
+      // the driver spelling of the same minimum
+      assert(mins.head === shs.map(sh => hex("0|" + sh)).min)
+      val bands = TextHashKernels.minhashBandKeys(arr, n, 4)
+      assert((0 until 4).map(bands.getUTF8String(_).toString) ===
+        mins.grouped(3).map(g => hex(g.mkString)).toSeq, s"on $shs")
+    }
+  }
+
   test("property: rolling hash is prefix-composable: roll(a++b) == fold(roll(a), b)") {
     val M = 1000000007L
     samples(Gen.zip(Gen.alphaNumStr, Gen.alphaNumStr), 100, seed = 13L)

@@ -681,6 +681,19 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(Artifacts.builds("text.t17").get() == before + 1)
   }
 
+  test("t17 and c25 aggregate the nll histogram once") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    Seq("t17_ccnet_ppl", "c25_curriculum").foreach { q =>
+      val df = SparkEntry.queries(q)(s, dir)
+      df.collect()
+      // reused exchanges are leaves here, so each exchange counts once
+      val hist = TestSpark.flattenPlan(df.queryExecution.executedPlan)
+        .collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .count(_.toString.startsWith("hashpartitioning(nll_micro"))
+      assert(hist == 1, s"$q:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("t17 ccnet terciles match a driver bigram-LM replay; planted " +
       "docs land in the tail; tercile masses honor nearest-rank") {
     import org.apache.spark.sql.functions._

@@ -22,6 +22,8 @@ sbt --batch "runMain graft.Verify $sf $out/dump" >"$out/verify.log" 2>&1 || {
 grep '\[verify\].*failed' "$out/verify.log" >&2 || true
 python3 tools/check.py "$sf" "$out/dump" | tee "$out/check.log" |
   grep -v '^PASS ' || true
+# report only: exchanges PLANS.txt shows planned twice (never fails the gate)
+python3 tools/dup_exchanges.py PLANS.txt || true
 summary=$(tail -n 1 "$out/check.log")
 case "$summary" in
   "== $expected pass / 0 fail ==")
