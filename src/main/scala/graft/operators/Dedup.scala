@@ -96,7 +96,7 @@ object Dedup {
       .withColumn("norm", TextOps.normText(col("text")))
       .withColumn("h", md5(col("norm")))
       .filter(col("h").isNotNull)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("h"))
+      .repartition(s.sessionState.conf.numShufflePartitions, col("h"))
       .groupBy("h")
       .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         // norm is constant within a group (h = md5(norm))

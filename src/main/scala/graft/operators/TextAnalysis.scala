@@ -1367,16 +1367,21 @@ object TextAnalysis {
   }
 
   /** Tercile bucketing over a per-doc (doc_id, n_bigrams, nll_micro)
-    * frame — the two-phase histogram prefix sum described above. */
+    * frame — the two-phase histogram prefix sum described above.
+    *
+    * The histogram carries an explicit `hb IS NOT NULL`: it feeds both
+    * the bucket offsets and the in-bucket sums, and the optimizer
+    * infers that filter from the join of the two, but can push it into
+    * the in-bucket copy only (the offsets' window has no partition key
+    * for it to pass); the two copies then differ and the histogram
+    * aggregates twice (t17 and c25 alike). No row changes: nll_micro is never null
+    * (the kernel returns a null struct only for a null key array,
+    * which the `size(ks) >= 1` filter already dropped). */
   private def t17Terciles(s: SparkSession, nllIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // nll serves three consumers (histogram, total count, the final
     // bucket projection) — cut it, it is doc-sized
     val nll = nllIn.localCheckpoint(true)
-    // hist feeds offs and thr; the optimizer infers `hb IS NOT NULL`
-    // on one copy only (offs' join key), so without the explicit
-    // filter the two copies differ and the histogram aggregates twice.
-    // nll_micro is an integer NLL, never null, so no row changes.
     val hist = nll.groupBy("nll_micro").agg(count(lit(1)).as("hc"))
       .withColumn("hb", expr(s"nll_micro div ${T17HistB}L"))
       .filter(col("hb").isNotNull)
