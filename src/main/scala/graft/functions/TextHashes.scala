@@ -38,7 +38,9 @@ object TextHashKernels {
   }
 
   /** Lower-case hex of the 16-byte digest at `d(off until off + 16)`,
-    * as ASCII bytes written to `out` from `at`. */
+    * as ASCII bytes written to `out` from `at`. [[md5hex]] keeps its
+    * own loop so that [[minhashMin]], the reference the fused minhash
+    * kernels are checked against, shares no encoding code with them. */
   private def hexInto(d: Array[Byte], off: Int, out: Array[Byte], at: Int): Unit = {
     var b = 0
     while (b < 16) {

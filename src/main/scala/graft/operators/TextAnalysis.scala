@@ -1374,9 +1374,9 @@ object TextAnalysis {
     * infers that filter from the join of the two, but can push it into
     * the in-bucket copy only (the offsets' window has no partition key
     * for it to pass); the two copies then differ and the histogram
-    * aggregates twice (t17 and c25 alike). No row changes: nll_micro is never null
-    * (the kernel returns a null struct only for a null key array,
-    * which the `size(ks) >= 1` filter already dropped). */
+    * aggregates twice (t17 and c25 alike). No row changes: nll_micro
+    * is never null (the kernel returns a null struct only for a null
+    * key array, which the `size(ks) >= 1` filter already dropped). */
   private def t17Terciles(s: SparkSession, nllIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // nll serves three consumers (histogram, total count, the final
