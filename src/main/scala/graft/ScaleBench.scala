@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *  - document text gets a per-copy suffix (distinct contents — the
   *    shingle/minhash work really is 10×, not collapse-away dups) and
   *    n_chars is recomputed;
-  *  - embeddings rotate per copy (distinct, decorrelated — see Probe).
+  *  - embeddings rotate circularly per copy: norm-preserving, distinct
+  *    and decorrelated, where a shared additive perturbation would point
+  *    every copy at one direction and skew the LSH buckets (SURVEY §5).
   *
   * Usage: sbt "runMain graft.ScaleBench"; one JSON line per query.
   */

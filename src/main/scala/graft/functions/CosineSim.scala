@@ -562,45 +562,6 @@ object HyperplaneBandKeys {
   }
 }
 
-/** `lead_sign_bucket(array<float>, n) -> int` — bit j (0-based, j < n) is
-  * set iff component j+1 of the vector is strictly positive; the trivial
-  * leading-components sign LSH used by the embedding near-dup blocker
-  * (graft.operators.Dedup.d5Embedding). Equals the HOF spelling
-  * `aggregate(transform(sequence(0, n-1), j -> IF(v[j+1] > 0F, 1<<j, 0)),
-  * 0, (a,b) -> a+b)` and its DuckDB list_reduce mirror. */
-case class LeadSignBucket(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override val nullIntolerant: Boolean = true
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "lead_sign_bucket"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LeadSignBucket.bucket(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.LeadSignBucket.bucket($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LeadSignBucket =
-    copy(left = newLeft, right = newRight)
-}
-
-object LeadSignBucket {
-  def bucket(v: org.apache.spark.sql.catalyst.util.ArrayData, n: Int): Int = {
-    val m = math.min(n, v.numElements())
-    var out = 0
-    var j = 0
-    while (j < m) {
-      if (v.getFloat(j) > 0f) out |= (1 << j)
-      j += 1
-    }
-    out
-  }
-}
-
 /** Registry for graft's native SQL functions. Idempotent — every operator
   * that needs a function calls [[GraftFunctions.register]] with its
   * session first, so the functions exist no matter who built the session
@@ -661,8 +622,6 @@ object GraftFunctions {
         HyperplaneBandKeys(cs(0),
           litInt("hyperplane_band_keys", "bands", cs(1)),
           litInt("hyperplane_band_keys", "bits_per_band", cs(2)))),
-      f("lead_sign_bucket", classOf[LeadSignBucket])(cs =>
-        LeadSignBucket(cs(0), cs(1))),
       f("count_in", classOf[CountTokensIn])(cs =>
         CountTokensIn(cs(0), cs(1))),
       f("pii_scrub", classOf[PiiScrub])(cs => PiiScrub(cs(0))),

@@ -30,35 +30,12 @@ object Dedup {
   val Bands = 4
   private val RowsPerBand = NumHashes / Bands
 
-  /** Per-seed minhash: lexicographic min of md5("<seed>|" + shingle).
-    * String-min is hash-min under a uniform hash, and is exactly
-    * reproducible in SQL. Computed by the native codegen'd kernel
-    * (graft.functions.MinHashMin) — the HOF spelling
-    * `array_min(transform(shingles, x -> md5(concat('$seed|', x))))`
-    * is interpreted per-element and was the d2 hot spot. */
-  private def minhashExpr(seed: Int): String =
-    s"minhash_min(shingles, '$seed')"
-
   /** Skew guard shared by the blocking dedup ops: documents too short to
     * form one true 3-shingle would all carry the SAME degenerate
     * signature, turning one band bucket into an O(n²) hot key at corpus
     * scale. They are excluded from candidate generation (exact dedup d1
     * still covers them); a no-op on corpora without such docs. */
   val MinToks = 3
-
-  /** doc_id + one band-key column per LSH band. */
-  def minhashBands(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val sig = (0 until NumHashes).foldLeft(
-      TextOps.withShingles(Tables.documentsSpread(s, dir))
-        .filter(size(col("toks")) >= MinToks)) {
-      (df, j) => df.withColumn(s"h$j", expr(minhashExpr(j)))
-    }
-    (0 until Bands).foldLeft(sig) { (df, b) =>
-      val cols = (0 until RowsPerBand).map(r => col(s"h${b * RowsPerBand + r}"))
-      df.withColumn(s"band_$b", md5(concat(cols: _*)))
-    }.select(col("doc_id") +: (0 until Bands).map(b => col(s"band_$b")): _*)
-  }
 
   /** One row per distinct normalized content: content hash, one
     * representative normalized text, and the sorted member doc_ids.
@@ -222,7 +199,7 @@ object Dedup {
     * maxHamming+1 sub-blocks); worst-case hot-bucket cost drops from
     * occ² to Σ_subbucket occ_sub² — a further ~2^7× split under the
     * near-even fingerprint spread simhash gives, measured near-linear
-    * in graft.Probe's 10×/100× distinct-fingerprint curve (SURVEY §5).
+    * on a 10×/100× distinct-fingerprint curve (SURVEY §5).
     * Adversarially recursive concentrations would need deeper levels;
     * one level is the documented occupancy bound at the default dial. */
   /** Contiguous (offset, width) blocks splitting the 60 fingerprint
@@ -1143,7 +1120,7 @@ object Dedup {
   /** Expected vectors per (band, bucket) once bits-per-band growth
     * saturates: candidate pairs per vector are bounded by
     * 2 · D5Bands · occupancy ≈ 128 — the linear constant of the
-    * operator. (Probe.scala measures the 10×/100× scaling.) */
+    * operator. (SURVEY §5 records the 10×/100× scaling.) */
   val D5TargetOccupancy = 16
   /** Group-level candidates kept per (band, bucket) before the global
     * merge — a map-side WindowGroupLimit, so a skewed bucket can emit at

@@ -37,25 +37,7 @@ object Graph {
     * component = the minimum node id reachable from `id`. `edges` needs
     * two integral columns named `src`, `dst`; direction and duplicates
     * are irrelevant. Empty edge sets yield an empty result. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsWithRounds(edges, maxIter)._1
-
-  /** [[connectedComponents]] plus the number of contraction rounds it
-    * took to converge — the probe-facing variant (round count is the
-    * O(log² n) claim the scale probe measures).
-    *
-    * `splitRoundCheckpoints` exists ONLY for the A/B probe
-    * (Probe `d8ab`): true additionally cuts lineage between the stars,
-    * eliminating smallStar's triple re-execution of the largeStar
-    * subtree at the price of one extra eager materialization per
-    * round. The interleaved A/B measured the two spellings
-    * indistinguishable (SURVEY §5) — the recompute is pipelined map
-    * work that costs about what the extra barrier saves — so
-    * production keeps the composed round (simpler, one cut per
-    * round). */
-  def connectedComponentsWithRounds(edges: DataFrame,
-      maxIter: Int = 20,
-      splitRoundCheckpoints: Boolean = false): (DataFrame, Int) = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // single EAGER cut of the upstream lineage: `nodes` and the
     // iteration both derive from this one materialized edge set, so a
     // possibly-expensive producer plan (for d8: the whole
@@ -105,19 +87,12 @@ object Graph {
       // across the embeddings (the distinct() collapses differently
       // into each downstream aggregate), so the composed plan
       // recomputes the largeStar subtree. The round-8 interleaved A/B
-      // (Probe `d8ab`, SURVEY §5) measured composed vs
-      // split-checkpoint rounds indistinguishable — the recompute is
-      // pipelined map work costing about what the extra eager
-      // materialization barrier saves — so the composed spelling wins
-      // on simplicity; on a real cluster it also avoids one
-      // distributed-store write per round.
-      val ls =
-        if (splitRoundCheckpoints) largeStar(cur).localCheckpoint(true)
-        else largeStar(cur)
-      val next = smallStar(ls).localCheckpoint(true)
-      if (splitRoundCheckpoints)
-        org.apache.spark.sql.graftbridge.GraftCheckpoints
-          .releaseLocalCheckpoint(ls) // next was its only reader
+      // (SURVEY §5) measured composed vs split-checkpoint rounds
+      // indistinguishable — the recompute is pipelined map work costing
+      // about what the extra eager materialization barrier saves — so
+      // the composed spelling wins on simplicity; on a real cluster it
+      // also avoids one distributed-store write per round.
+      val next = smallStar(largeStar(cur)).localCheckpoint(true)
       val nextSig = sig(next)
       converged = nextSig == curSig
       // round N's edge set is dead once round N+1 is materialized and
@@ -143,7 +118,7 @@ object Graph {
     // d8/c2 consumer checkpoints its own memoized copy immediately)
     graft.Artifacts.lease(
       edges.sparkSession, "graph.cc", base, cur)
-    (out, iter)
+    out
   }
 
   /** large-star: every node links its LARGER neighbors to the minimum

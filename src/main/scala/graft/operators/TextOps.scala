@@ -32,13 +32,6 @@ object TextOps {
 
   val sqlToks: String = sqlToksOf("norm")
 
-  /** Word 3-gram shingles over a token array column named `toks`.
-    * `slice` clamps at the end so short documents yield their full text
-    * as a single shingle. */
-  val shinglesExpr: String =
-    "transform(sequence(1, greatest(size(toks) - 2, 1)), " +
-      "i -> array_join(slice(toks, i, 3), ' '))"
-
   /** Width-parametric DuckDB mirror of `word_shingles(toks, w)`. */
   def sqlShinglesW(w: Int): String =
     s"list_transform(generate_series(1, greatest(len(toks) - ${w - 1}, 1)), " +
@@ -50,8 +43,11 @@ object TextOps {
 
   /** documents + `norm`, `toks`, `shingles` columns. Shingles come from
     * the native codegen'd kernel (graft.functions.WordShingles), which is
-    * value-identical to [[shinglesExpr]] — the interpreted HOF spelling
-    * was the d2/d4 map-side hot spot. */
+    * value-identical to the interpreted HOF spelling
+    * `transform(sequence(1, greatest(size(toks) - 2, 1)),
+    * i -> array_join(slice(toks, i, 3), ' '))` — word 3-grams, with a
+    * short document's full text as its single shingle; the HOF was the
+    * d2/d4 map-side hot spot. */
   def withShingles(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.withColumn("norm", normText(col("text")))
