@@ -221,7 +221,6 @@ class FunctionsSpec extends AnyFunSuite {
   test("GraftExtensions installs all functions and the small-sort rule") {
     val s = TestSpark.spark
     GraftFunctions.register(s)
-
     // extensions path: a genuinely new session (shared context) with only
     // the installer configured — clear the default so getOrCreate builds
     // one instead of returning the test session, and don't stop() it

@@ -10,10 +10,11 @@ class LibraryHygieneSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
-    val objectDecl = """\bobject\s+(\w+)""".r
+    val objectDecl =
+      """(?m)^\s*(?:private\S*\s+|final\s+|case\s+)*object\s+(\w+)""".r
     val mainDecl = """\bdef\s+main\s*\(""".r
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
     // each `def main(` belongs to the last object declared above it
     val mains = files.flatMap { f =>
       val src = java.nio.file.Files.readString(f)
