@@ -12,8 +12,8 @@ import org.apache.spark.sql.graftbridge.GraftCheckpoints
 
 /** The one registry of built artifacts: per-corpus models, inventories,
   * checkpointed subtrees and probe results that operators build once
-  * and reuse across the queries of a session, plus the checkpoint
-  * leases of frames a query returns.
+  * and reuse across the queries of a session, plus the lifetimes of
+  * the checkpoint cuts each query makes ([[scoped]]).
   *
   * An entry belongs to an OWNER, the object whose lifetime bounds the
   * value:
@@ -124,17 +124,98 @@ object Artifacts {
         }
       }
 
+  /** The eager lineage cuts of one query build, and their lifetimes.
+    * An operator opens one with [[scoped]] and cuts through it; a
+    * shared helper takes its caller's scope, so its cuts belong to the
+    * query it serves. */
+  final class Scope private[Artifacts] (val session: SparkSession) {
+    private val cuts = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+
+    /** `df` materialized now as an eager local checkpoint, which cuts
+      * its lineage: every later reader starts from the stored rows. */
+    def cut[T](df: Dataset[T]): Dataset[T] = {
+      val c = df.localCheckpoint(true)
+      cuts.synchronized(cuts += c)
+      c
+    }
+
+    /** `n` rounds of `step` from `init`, each round cut. A round is
+      * freed once the next is materialized, so at most two round
+      * frames are stored at a time; `init` is never freed here. */
+    def rounds[T](init: Dataset[T], n: Int)(
+        step: Dataset[T] => Dataset[T]): Dataset[T] =
+      roundsUntil(init, n)(step)(_ => false)._1
+
+    /** [[rounds]] that stops after the first round whose cut satisfies
+      * `done`; also says whether `done` stopped it. */
+    def roundsUntil[T](init: Dataset[T], n: Int)(
+        step: Dataset[T] => Dataset[T])(
+        done: Dataset[T] => Boolean): (Dataset[T], Boolean) = {
+      @scala.annotation.tailrec
+      def go(cur: Dataset[T], i: Int): (Dataset[T], Boolean) =
+        if (i == n) (cur, false)
+        else {
+          val next = cut(step(cur))
+          val stop = done(next)
+          if (cur ne init) free(cur)
+          if (stop) (next, true) else go(next, i + 1)
+        }
+      go(init, 0)
+    }
+
+    private def free(c: Dataset[_]): Unit = {
+      cuts.synchronized(cuts.filterInPlace(_ ne c))
+      GraftCheckpoints.releaseLocalCheckpoint(c)
+    }
+
+    private[Artifacts] def all: Seq[Dataset[_]] = cuts.synchronized(cuts.toList)
+  }
+
+  /** Run one query build `body` in a fresh [[Scope]]. When it returns,
+    * the cuts its result still reads (the `LogicalRDD` leaves of the
+    * analyzed plans of the Datasets it returns, subqueries included)
+    * are leased under (`s`, `tag`), replacing that tag's previous
+    * lease, and every other cut is freed. If it throws, all its cuts
+    * are freed and the previous lease stays.
+    *
+    * CONTRACT: `tag` names the public operator; the frame returned by
+    * call N is readable until call N+1 of the SAME operator on the SAME
+    * session. A later read of the stale frame fails loudly with a
+    * missing-block error (localCheckpoint truncates lineage), never
+    * silently recomputes. Callers fully materialize a query before
+    * re-invoking it. */
+  def scoped[T](s: SparkSession, tag: String)(body: Scope => T): T = {
+    val scope = new Scope(s)
+    val out =
+      try body(scope)
+      catch {
+        case e: Throwable =>
+          scope.all.foreach(GraftCheckpoints.releaseLocalCheckpoint)
+          throw e
+      }
+    val read = datasets(out).flatMap(GraftCheckpoints.readRdds).toSet
+    val (kept, freed) = scope.all
+      .partition(GraftCheckpoints.checkpointRdd(_).exists(read))
+    lease(s, tag, kept: _*)
+    freed.foreach(GraftCheckpoints.releaseLocalCheckpoint)
+    out
+  }
+
+  /** The Datasets a build returns: itself, or inside a tuple, option
+    * or collection. */
+  private def datasets(out: Any): Seq[Dataset[_]] = out match {
+    case d: Dataset[_] => Seq(d)
+    case p: Product => p.productIterator.flatMap(datasets).toSeq
+    case i: Iterable[_] => i.flatMap(datasets).toSeq
+    case _ => Nil
+  }
+
   private val leases = new ConcurrentHashMap[String, Seq[Dataset[_]]]()
 
-  /** Lease eagerly localCheckpoint'ed `frames` that a query RETURNS
-    * under (`s`, `tag`), releasing the frames of the previous lease.
-    *
-    * CONTRACT: the frame returned by call N of an operator is readable
-    * until call N+1 of the SAME operator on the SAME session; a later
-    * read of the stale frame fails loudly with a missing-block error
-    * (localCheckpoint truncates lineage), never silently recomputes.
-    * Callers fully materialize a query before re-invoking it. */
-  def lease(s: SparkSession, tag: String, frames: Dataset[_]*): Unit = {
+  /** Hold `frames` under (`s`, `tag`) and release the frames of the
+    * previous lease: the exit step of [[scoped]]. */
+  private[graft] def lease(s: SparkSession, tag: String,
+      frames: Dataset[_]*): Unit = {
     val k = slot(s, tag)
     val prev = if (frames.isEmpty) leases.remove(k) else leases.put(k, frames)
     Option(prev).foreach(_.foreach(GraftCheckpoints.releaseLocalCheckpoint))

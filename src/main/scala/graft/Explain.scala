@@ -87,7 +87,10 @@ object Explain {
       "target/ for the first time, so it depends on what target/ already " +
       "holds; warm(S/T) counts the same for a second call of the query in " +
       "the same JVM, once every unit is staged and every memo built, and " +
-      "reads the same on every regeneration of one commit.\n")
+      "reads the same on every regeneration of one commit, except " +
+      "c30_curation_v2 and c30_report, whose total can move by one " +
+      "stage (likely AQE flipping the d8 membership join they reach " +
+      "between sort-merge and broadcast).\n")
     summary.append("query | shuffles(exec+reused) | stages(S/T) | " +
       "warm(S/T) | joins | pushed | readCols\n")
 

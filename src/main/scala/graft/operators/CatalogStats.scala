@@ -231,24 +231,20 @@ object CatalogStats {
     * all bounded: one 4-scalar row, one B-column fence row, one
     * B-column NDV row. */
   private[graft] def histogramFor(df: DataFrame, n: String): Histogram = {
-    import org.apache.spark.sql.expressions.Window
     val b = Curation.C27Buckets
     // the collapsed distinct-value histogram has FOUR consumers below
     // (bounds scalar, the two-phase cumulative, the fence aggregate, the
     // per-bin NDV aggregate); un-materialized each re-ran the full table
     // scan + keyed collapse — 4 scans per histogram column (measured:
     // c29_analyze paid ~10 scans/run across its two tables). One
-    // eager localCheckpoint holds the NDV-bounded collapsed frame
-    // instead; blocks released before returning. At 100 TB the frame is
-    // distinct-value-sized — storing ~16 B/value once beats re-scanning
-    // and re-shuffling the column 4× (guide §1.2: remove passes first).
-    val hist = df.select(col(n).cast("double").as("u"))
-      .filter(col("u").isNotNull)
-      .groupBy("u").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    try histogramOver(hist, b)
-    finally org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(hist)
+    // eager cut holds the NDV-bounded collapsed frame instead, freed
+    // on return. At 100 TB the frame is distinct-value-sized — storing
+    // ~16 B/value once beats re-scanning and re-shuffling the column 4×
+    // (guide §1.2: remove passes first).
+    graft.Artifacts.scoped(df.sparkSession, "catalog.histogram")(sc =>
+      histogramOver(sc.cut(df.select(col(n).cast("double").as("u"))
+        .filter(col("u").isNotNull)
+        .groupBy("u").agg(count(lit(1)).as("c"))), b))
   }
 
   /** [[histogramFor]]'s math over an already-materialized collapsed

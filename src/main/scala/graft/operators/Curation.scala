@@ -548,12 +548,13 @@ object Curation {
     * window on the canonical URL; stage 4's threshold rides the
     * (source × distinct-score) HISTOGRAM, never a per-source doc sort;
     * stages 5–6 join the memoized cluster/decontamination frames; the
-    * flag frame is localCheckpointed once and the two survivor
-    * aggregations (threshold, mix) read it instead of re-deriving the
-    * corpus pass. Everything after the (hash-proven) kernel outputs is
-    * integer arithmetic. */
-  private def c30Flags(s: SparkSession, dir: String): DataFrame = {
+    * flag frame is cut once, in the calling query's scope, and the two
+    * survivor aggregations (threshold, mix) read it instead of
+    * re-deriving the corpus pass. Everything after the (hash-proven)
+    * kernel outputs is integer arithmetic. */
+  private def c30Flags(sc: graft.Artifacts.Scope, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val s = sc.session
     graft.functions.GraftFunctions.register(s)
     val m = Classifier.modelFor(s, dir)
     val deco = TextAnalysis.T13Deco
@@ -564,7 +565,7 @@ object Curation {
       when(col("doc_id") % 2 === 0, lit(TextAnalysis.T13Gap))
         .otherwise(lit(" ")),
       col("text"))
-    val base = TextAnalysis.gopherCols(
+    val base = sc.cut(TextAnalysis.gopherCols(
       Tables.documentsSpread(s, dir)
         .withColumn("canon",
           expr(s"url_canon(${TextAnalysis.t14UrlSql(1)})"))
@@ -582,8 +583,7 @@ object Curation {
       // token; bit-identical by ClassifierSpec's kernel≡HOF pin
       .withColumn("score_micro", Classifier.scoreKernelCol(m))
       .withColumn("p3", col("p1") && col("passes_gopher"))
-      .select("doc_id", "lang", "source", "chg", "p1", "p3", "score_micro")
-      .localCheckpoint(true)
+      .select("doc_id", "lang", "source", "chg", "p1", "p3", "score_micro"))
     val p3rows = base.filter(col("p3"))
     val hist = p3rows.groupBy("source", "score_micro")
       .agg(count(lit(1)).as("c"))
@@ -602,7 +602,7 @@ object Curation {
     val semc = Similarity.d15SemDecontam(s, dir)
       .filter(col("contaminated") === 1)
       .select(col("vec_id").as("doc_id"), lit(true).as("sem_cont"))
-    val flagged = base
+    val flagged = sc.cut(base
       .join(thr, Seq("source"), "left")
       .join(keep, Seq("doc_id"), "left")
       .join(ngc, Seq("doc_id"), "left")
@@ -614,19 +614,7 @@ object Curation {
         !coalesce(col("ng_cont"), lit(false)) &&
         !coalesce(col("sem_cont"), lit(false)))
       .select("doc_id", "lang", "source", "chg", "p1", "p3", "p4", "p5",
-        "p6", "score_micro")
-      .localCheckpoint(true)
-    // `flagged` just materialized and was base's LAST reader (thr/hist/
-    // tot all fed the join above) — free base's blocks immediately;
-    // flagged itself is read lazily by the returned frame, so it is
-    // leased until the next c30Flags call (c30_report and
-    // c30_curation_v2 each rebuild the flag frame per the
-    // no-result-caching rule; previously BOTH pinned base+flagged per
-    // run for the application lifetime — the r17 verdict's c30 GC
-    // suspect)
-    org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(base)
-    graft.Artifacts.lease(s, "curation.c30flags", flagged)
+        "p6", "score_micro"))
     val mixc = flagged.filter(col("p6")).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"))
     val mixn = mixc.agg(max("n_docs").as("n_max"))
@@ -643,39 +631,41 @@ object Curation {
   }
 
   def c30CurationV2(s: SparkSession, dir: String): DataFrame =
-    c30Flags(s, dir).filter(col("p7"))
-      .select("doc_id", "lang", "source", "score_micro")
-      .orderBy("doc_id")
+    graft.Artifacts.scoped(s, "curation.c30")(sc =>
+      c30Flags(sc, dir).filter(col("p7"))
+        .select("doc_id", "lang", "source", "score_micro")
+        .orderBy("doc_id"))
 
   /** c30_report: per-stage retention lineage of [[c30CurationV2]] —
     * the c4_report shape plus a `rows_changed` column so the
     * TRANSFORM stage (normalize) is visible next to the filter
     * stages. One aggregation over the same flag frame. */
   def c30Report(s: SparkSession, dir: String): DataFrame =
-    c30Flags(s, dir)
-      .agg(count(lit(1)).as("n_in"),
-        count(when(col("p1"), 1)).as("n1"),
-        count(when(col("p1") && col("chg"), 1)).as("nchg"),
-        count(when(col("p3"), 1)).as("n3"),
-        count(when(col("p4"), 1)).as("n4"),
-        count(when(col("p5"), 1)).as("n5"),
-        count(when(col("p6"), 1)).as("n6"),
-        count(when(col("p7"), 1)).as("n7"))
-      .select(expr(
-        """stack(7,
-          |  1, 'url_dedup',     n_in, n1, CAST(0 AS BIGINT),
-          |  2, 'normalize',     n1,   n1, nchg,
-          |  3, 'gopher_rules',  n1,   n3, CAST(0 AS BIGINT),
-          |  4, 'quality_cut',   n3,   n4, CAST(0 AS BIGINT),
-          |  5, 'cluster_dedup', n4,   n5, CAST(0 AS BIGINT),
-          |  6, 'decontaminate', n5,   n6, CAST(0 AS BIGINT),
-          |  7, 'lang_mix',      n6,   n7, CAST(0 AS BIGINT))
-          |  AS (stage_id, stage, rows_in, rows_out, rows_changed)"""
-          .stripMargin))
-      .withColumn("rows_dropped", col("rows_in") - col("rows_out"))
-      .select("stage_id", "stage", "rows_in", "rows_out", "rows_dropped",
-        "rows_changed")
-      .orderBy("stage_id")
+    graft.Artifacts.scoped(s, "curation.c30Report")(sc =>
+      c30Flags(sc, dir)
+        .agg(count(lit(1)).as("n_in"),
+          count(when(col("p1"), 1)).as("n1"),
+          count(when(col("p1") && col("chg"), 1)).as("nchg"),
+          count(when(col("p3"), 1)).as("n3"),
+          count(when(col("p4"), 1)).as("n4"),
+          count(when(col("p5"), 1)).as("n5"),
+          count(when(col("p6"), 1)).as("n6"),
+          count(when(col("p7"), 1)).as("n7"))
+        .select(expr(
+          """stack(7,
+            |  1, 'url_dedup',     n_in, n1, CAST(0 AS BIGINT),
+            |  2, 'normalize',     n1,   n1, nchg,
+            |  3, 'gopher_rules',  n1,   n3, CAST(0 AS BIGINT),
+            |  4, 'quality_cut',   n3,   n4, CAST(0 AS BIGINT),
+            |  5, 'cluster_dedup', n4,   n5, CAST(0 AS BIGINT),
+            |  6, 'decontaminate', n5,   n6, CAST(0 AS BIGINT),
+            |  7, 'lang_mix',      n6,   n7, CAST(0 AS BIGINT))
+            |  AS (stage_id, stage, rows_in, rows_out, rows_changed)"""
+            .stripMargin))
+        .withColumn("rows_dropped", col("rows_in") - col("rows_out"))
+        .select("stage_id", "stage", "rows_in", "rows_out", "rows_dropped",
+          "rows_changed")
+        .orderBy("stage_id"))
 
   /** c6 packing parameters: token budget per training sequence and the
     * shard fan-out. 256 tokens ≈ a few docs per sequence on this corpus
@@ -847,32 +837,30 @@ object Curation {
     * The versioned table stages pay-once per (session, dir) from v1
     * (the q23/q30 ensure-tables shape); every call then re-applies
     * the changeset, so bench medians measure the MERGE itself. */
-  def c13ApplyDiff(s: SparkSession, dir: String): DataFrame = {
-    val t = graft.sources.Sources.ensureStagedPartitioned(
-      s, c13Table(s, dir), "pt",
-      Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .withColumn("pt", pmod(col("doc_id"), lit(C13Parts))))
-    // the diff (a v1⋈v2 full-outer join over two md5 scans) feeds BOTH
-    // changeset sides; filtered to touched keys it is changeset-sized —
-    // evaluate it ONCE instead of once per side (and without c12's
-    // presentation sort, which the filters below would discard anyway)
-    val diff = c12DiffCore(s, dir)
-      .filter(col("status") =!= "unchanged")
-      .localCheckpoint(true)
-    val v2 = Tables.parquet(s, c12SnapshotPath(s, dir))
-    val upserts = diff.filter(col("status").isin("added", "changed"))
-      .join(v2, Seq("doc_id"))
-      .select(col("doc_id"), col("text"),
-        pmod(col("doc_id"), lit(C13Parts)).as("pt"))
-    val deletes = diff.filter(col("status") === "removed")
-      .select(col("doc_id"), pmod(col("doc_id"), lit(C13Parts)).as("pt"))
-    graft.sources.Sources.mergeIntoPartitioned(
-      s, t, "pt", "doc_id", upserts, deletes)
-    org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(diff)
-    s.table(t).select(col("doc_id"), md5(col("text")).as("h"))
-      .orderBy("doc_id")
-  }
+  def c13ApplyDiff(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "curation.c13") { sc =>
+      val t = graft.sources.Sources.ensureStagedPartitioned(
+        s, c13Table(s, dir), "pt",
+        Tables.documents(s, dir).select(col("doc_id"), col("text"))
+          .withColumn("pt", pmod(col("doc_id"), lit(C13Parts))))
+      // the diff (a v1⋈v2 full-outer join over two md5 scans) feeds BOTH
+      // changeset sides; filtered to touched keys it is changeset-sized —
+      // evaluate it ONCE instead of once per side (and without c12's
+      // presentation sort, which the filters below would discard anyway)
+      val diff = sc.cut(c12DiffCore(s, dir)
+        .filter(col("status") =!= "unchanged"))
+      val v2 = Tables.parquet(s, c12SnapshotPath(s, dir))
+      val upserts = diff.filter(col("status").isin("added", "changed"))
+        .join(v2, Seq("doc_id"))
+        .select(col("doc_id"), col("text"),
+          pmod(col("doc_id"), lit(C13Parts)).as("pt"))
+      val deletes = diff.filter(col("status") === "removed")
+        .select(col("doc_id"), pmod(col("doc_id"), lit(C13Parts)).as("pt"))
+      graft.sources.Sources.mergeIntoPartitioned(
+        s, t, "pt", "doc_id", upserts, deletes)
+      s.table(t).select(col("doc_id"), md5(col("text")).as("h"))
+        .orderBy("doc_id")
+    }
 
   /** Every [[C15ForgetMod]]th user id is on the c15 forget list —
     * deterministic, so the oracle filters the same set. */
@@ -1254,7 +1242,8 @@ object Curation {
     * trainer-replay discipline, via the shared t17 CTEs). */
   def c25Curriculum(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = TextAnalysis.t17CcnetPpl(s, dir)
+    val scored = graft.Artifacts.scoped(s, "curation.c25")(
+        TextAnalysis.t17CcnetPpl(_, dir))
       .select(col("doc_id"), col("ppl_bucket"))
       .withColumn("br",
         when(col("ppl_bucket") === "head", 0)
@@ -1987,30 +1976,29 @@ object Curation {
     * checkpointed), then all planning arithmetic runs on that tiny
     * frame (two broadcast scalar joins) — at 100 TB the plan costs
     * one linear scan, and the recipe itself never moves data. */
-  def c31EpochPlan(s: SparkSession, dir: String): DataFrame = {
-    val perSrc = Tables.documentsSpread(s, dir)
-      .withColumn("ws_tokens",
-        size(expr("filter(split(text, ' '), t -> t <> '')")).cast("long"))
-      .groupBy("source").agg(sum("ws_tokens").as("n_tokens"))
-      .localCheckpoint(true) // O(sources) rows; one corpus pass total
-    // leased: read lazily by the returned plan until the next c31 call
-    graft.Artifacts.lease(s, "curation.c31", perSrc)
-    val nmax = perSrc.agg(max("n_tokens").as("n_max"))
-    val alloc = perSrc.crossJoin(broadcast(nmax))
-      .withColumn("epochs_milli",
-        least(lit(C31MaxEpochsMilli),
-          floor(lit(C31EpochScale.toDouble) *
-            sqrt(col("n_max").cast("double") /
-              col("n_tokens").cast("double")))).cast("long"))
-      .withColumn("alloc_tokens",
-        expr(s"n_tokens * epochs_milli div $C31EpochScale"))
-    val tot = alloc.agg(sum("alloc_tokens").as("tot"))
-    alloc.crossJoin(broadcast(tot))
-      .withColumn("share_bp", expr("(10000 * alloc_tokens) div tot"))
-      .select("source", "n_tokens", "epochs_milli", "alloc_tokens",
-        "share_bp")
-      .orderBy("source")
-  }
+  def c31EpochPlan(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "curation.c31") { sc =>
+      // O(sources) rows; one corpus pass total
+      val perSrc = sc.cut(Tables.documentsSpread(s, dir)
+        .withColumn("ws_tokens",
+          size(expr("filter(split(text, ' '), t -> t <> '')")).cast("long"))
+        .groupBy("source").agg(sum("ws_tokens").as("n_tokens")))
+      val nmax = perSrc.agg(max("n_tokens").as("n_max"))
+      val alloc = perSrc.crossJoin(broadcast(nmax))
+        .withColumn("epochs_milli",
+          least(lit(C31MaxEpochsMilli),
+            floor(lit(C31EpochScale.toDouble) *
+              sqrt(col("n_max").cast("double") /
+                col("n_tokens").cast("double")))).cast("long"))
+        .withColumn("alloc_tokens",
+          expr(s"n_tokens * epochs_milli div $C31EpochScale"))
+      val tot = alloc.agg(sum("alloc_tokens").as("tot"))
+      alloc.crossJoin(broadcast(tot))
+        .withColumn("share_bp", expr("(10000 * alloc_tokens) div tot"))
+        .select("source", "n_tokens", "epochs_milli", "alloc_tokens",
+          "share_bp")
+        .orderBy("source")
+    }
 
   val oracle: Map[String, String] = Map(
     // same temperature arithmetic on the same whitespace-token sums;
@@ -2680,47 +2668,41 @@ object Curation {
     * Scale shape: inherits each stage's admission contract — zero
     * corpus-sized work (broadcast band probe, cell-pruned index read,
     * partitioned append ∝ admitted shard). */
-  def c28AdmitShard(s: SparkSession, dir: String): DataFrame = {
-    val shardPath = c28ShardPath(s, dir)
-    val shard = Tables.parquet(s, shardPath).localCheckpoint(true)
-    val sig = Dedup.d11Admit(s, dir, shard.select("doc_id", "text"))
-      .select(col("doc_id"), col("is_new_unique").as("sig_ok"))
-    val sem = Similarity.d12Admit(s, dir,
-        shard.select(col("doc_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("doc_id"), col("cell"),
-        col("is_new_unique").as("sem_ok"))
-    // shard-sized (one row per shard doc); TWO consumers — the physical
-    // admit below and the final read-back join — so materialize the two
-    // screen probes once instead of re-running both per consumer.
-    // Leased: the returned join reads verdicts lazily until the next
-    // c28 call on this session releases it
-    val verdicts = sig.join(sem, "doc_id").localCheckpoint(true)
-    graft.Artifacts.lease(s, "curation.c28", verdicts)
-    val admitted = verdicts
-      .filter(col("sig_ok") === 1 && col("sem_ok") === 1)
-      .select(col("doc_id").as("vec_id"))
-      .join(shard.select(col("doc_id").as("vec_id"), col("embedding")),
-        Seq("vec_id"))
-    val outPath = new org.apache.hadoop.fs.Path(shardPath)
-      .getParent.toString + "/indexed"
-    Similarity.s8WriteAssigned(s, dir, admitted, outPath)
-    // the eager write above was shard's LAST reader (the read-back join
-    // below reads the written tree + verdicts) — free its blocks now
-    org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(shard)
-    // explicit schema: a corpus whose semantic tail rejects the WHOLE
-    // shard (legitimate — e.g. every negated vector collides) leaves a
-    // zero-partition tree that schema inference cannot read
-    val indexed = s.read
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, cell INT")
-      .parquet(outPath)
-      .select(col("vec_id").as("doc_id"), lit(1).as("ix"))
-    verdicts.join(indexed, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("cell").cast("int").as("cell"),
-        col("sig_ok"), col("sem_ok"),
-        coalesce(col("ix"), lit(0)).cast("int").as("indexed"))
-      .orderBy("doc_id")
-  }
+  def c28AdmitShard(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "curation.c28") { sc =>
+      val shardPath = c28ShardPath(s, dir)
+      val shard = sc.cut(Tables.parquet(s, shardPath))
+      val sig = Dedup.d11Admit(sc, dir, shard.select("doc_id", "text"))
+        .select(col("doc_id"), col("is_new_unique").as("sig_ok"))
+      val sem = Similarity.d12Admit(sc, dir,
+          shard.select(col("doc_id").as("vec_id"), col("embedding")))
+        .select(col("vec_id").as("doc_id"), col("cell"),
+          col("is_new_unique").as("sem_ok"))
+      // shard-sized (one row per shard doc); TWO consumers — the physical
+      // admit below and the final read-back join — so materialize the two
+      // screen probes once instead of re-running both per consumer.
+      val verdicts = sc.cut(sig.join(sem, "doc_id"))
+      val admitted = verdicts
+        .filter(col("sig_ok") === 1 && col("sem_ok") === 1)
+        .select(col("doc_id").as("vec_id"))
+        .join(shard.select(col("doc_id").as("vec_id"), col("embedding")),
+          Seq("vec_id"))
+      val outPath = new org.apache.hadoop.fs.Path(shardPath)
+        .getParent.toString + "/indexed"
+      Similarity.s8WriteAssigned(s, dir, admitted, outPath)
+      // explicit schema: a corpus whose semantic tail rejects the WHOLE
+      // shard (legitimate — e.g. every negated vector collides) leaves a
+      // zero-partition tree that schema inference cannot read
+      val indexed = s.read
+        .schema("vec_id LONG, embedding ARRAY<FLOAT>, cell INT")
+        .parquet(outPath)
+        .select(col("vec_id").as("doc_id"), lit(1).as("ix"))
+      verdicts.join(indexed, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("cell").cast("int").as("cell"),
+          col("sig_ok"), col("sem_ok"),
+          coalesce(col("ix"), lit(0)).cast("int").as("indexed"))
+        .orderBy("doc_id")
+    }
 
   /** DuckDB mirror of [[c28AdmitShard]]: the d11 full-union text
     * recompute AND the d12 full-union semantic recompute (trained

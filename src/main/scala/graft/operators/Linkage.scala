@@ -110,67 +110,64 @@ object Linkage {
     * row-granularity rule, since for equal names distance is equal
     * and the min key over rows IS the min over name-groups' min
     * keys. */
-  def q46FuzzyJoin(s: SparkSession, dir: String): DataFrame = {
-    val clean = Tables.customer(s, dir).select(
-      col("c_custkey"), col("c_name"))
-    val maxId = clean.agg(max("c_custkey")).head().getLong(0)
-    val dirty = clean
-      .filter(col("c_custkey") % DirtyMod === 0)
-      .select((col("c_custkey") + maxId + 1).as("d_id"),
-        when(col("c_custkey") % ExactMod === 0, col("c_name"))
-          .otherwise(expr(
-            "concat(substr(c_name, 1, 9 + CAST(c_custkey % 9 AS INT)), " +
-              "substr(c_name, 11 + CAST(c_custkey % 9 AS INT), 1000000))"))
-          .as("d_name"))
-    val cleanNames = clean.groupBy("c_name")
-      .agg(min("c_custkey").as("c_custkey"))
-    val dirtyNames = dirty.groupBy("d_name")
-      .agg(sort_array(collect_list(col("d_id"))).as("members"))
-    // join on the 64-bit HASH of each deletion key, not the key string:
-    // the candidate join's build side carries every exploded key (names
-    // × ~19), and hashing fixed-width longs shrinks its exchange/
-    // broadcast bytes ~3× and its hash-relation build (the measured
-    // load-sensitive serial driver cost — SURVEY §5 q46 adjudication).
-    // Result-identical: distance ≤ 1 names ALWAYS share a deletion key
-    // (SymSpell completeness), so a hash collision can only ADD
-    // candidates, and the exact levenshtein verify already discards
-    // every non-match (guide §2.3: shuffle keys, not payloads).
-    val cleanKeys = cleanNames
-      .select(col("c_custkey"), col("c_name"),
-        explode(expr(delKeysExpr("c_name"))).as("ks"))
-      .select(col("c_custkey"), col("c_name"), xxhash64(col("ks")).as("k"))
-    val dirtyKeys = dirtyNames
-      .select(col("d_name"), explode(expr(delKeysExpr("d_name"))).as("ks"))
-      .select(col("d_name"), xxhash64(col("ks")).as("k"))
-    val w = Window.partitionBy("d_name")
-      .orderBy(col("dist"), col("c_custkey"))
-    // the distinct is CUT (eager localCheckpoint) before the verify:
-    // left lazy, Catalyst pushes the deterministic levenshtein filter
-    // through the aggregate INTO the join condition, so the verify ran
-    // per key-match INSTANCE (~10–19× per pair on dense ids — the
-    // probe measured the pushed spelling at +1.7 s of the 5.2 s wall)
-    // instead of once per distinct candidate pair; the checkpointed
-    // frame is candidate-bounded (≤ keys × bucket size)
-    require(FuzzyMaxDist == 1,
-      "hashed deletion-key join requires the single-delete neighborhood")
-    val cand = dirtyKeys.join(cleanKeys, "k")
-      .select("d_name", "c_custkey", "c_name")
-      .distinct()
-      .localCheckpoint(true)
-    // leased, not leaked: the returned frame reads this checkpoint
-    // lazily, so it stays readable until the next q46 call releases it
-    graft.Artifacts.lease(s, "linkage.q46", cand)
-    val best = cand
-      .withColumn("dist", levenshtein(col("d_name"), col("c_name")))
-      .filter(col("dist") <= FuzzyMaxDist)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-    best.join(dirtyNames, "d_name")
-      .select(explode(col("members")).as("d_id"),
-        col("c_custkey").as("matched_key"),
-        col("c_name").as("matched_name"), col("dist").cast("int").as("dist"))
-      .orderBy("d_id")
-  }
+  def q46FuzzyJoin(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "linkage.q46") { sc =>
+      val clean = Tables.customer(s, dir).select(
+        col("c_custkey"), col("c_name"))
+      val maxId = clean.agg(max("c_custkey")).head().getLong(0)
+      val dirty = clean
+        .filter(col("c_custkey") % DirtyMod === 0)
+        .select((col("c_custkey") + maxId + 1).as("d_id"),
+          when(col("c_custkey") % ExactMod === 0, col("c_name"))
+            .otherwise(expr(
+              "concat(substr(c_name, 1, 9 + CAST(c_custkey % 9 AS INT)), " +
+                "substr(c_name, 11 + CAST(c_custkey % 9 AS INT), 1000000))"))
+            .as("d_name"))
+      val cleanNames = clean.groupBy("c_name")
+        .agg(min("c_custkey").as("c_custkey"))
+      val dirtyNames = dirty.groupBy("d_name")
+        .agg(sort_array(collect_list(col("d_id"))).as("members"))
+      // join on the 64-bit HASH of each deletion key, not the key string:
+      // the candidate join's build side carries every exploded key (names
+      // × ~19), and hashing fixed-width longs shrinks its exchange/
+      // broadcast bytes ~3× and its hash-relation build (the measured
+      // load-sensitive serial driver cost — SURVEY §5 q46 adjudication).
+      // Result-identical: distance ≤ 1 names ALWAYS share a deletion key
+      // (SymSpell completeness), so a hash collision can only ADD
+      // candidates, and the exact levenshtein verify already discards
+      // every non-match (guide §2.3: shuffle keys, not payloads).
+      val cleanKeys = cleanNames
+        .select(col("c_custkey"), col("c_name"),
+          explode(expr(delKeysExpr("c_name"))).as("ks"))
+        .select(col("c_custkey"), col("c_name"), xxhash64(col("ks")).as("k"))
+      val dirtyKeys = dirtyNames
+        .select(col("d_name"), explode(expr(delKeysExpr("d_name"))).as("ks"))
+        .select(col("d_name"), xxhash64(col("ks")).as("k"))
+      val w = Window.partitionBy("d_name")
+        .orderBy(col("dist"), col("c_custkey"))
+      // the distinct is CUT (eager localCheckpoint) before the verify:
+      // left lazy, Catalyst pushes the deterministic levenshtein filter
+      // through the aggregate INTO the join condition, so the verify ran
+      // per key-match INSTANCE (~10–19× per pair on dense ids — the
+      // probe measured the pushed spelling at +1.7 s of the 5.2 s wall)
+      // instead of once per distinct candidate pair; the checkpointed
+      // frame is candidate-bounded (≤ keys × bucket size)
+      require(FuzzyMaxDist == 1,
+        "hashed deletion-key join requires the single-delete neighborhood")
+      val cand = sc.cut(dirtyKeys.join(cleanKeys, "k")
+        .select("d_name", "c_custkey", "c_name")
+        .distinct())
+      val best = cand
+        .withColumn("dist", levenshtein(col("d_name"), col("c_name")))
+        .filter(col("dist") <= FuzzyMaxDist)
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") === 1)
+      best.join(dirtyNames, "d_name")
+        .select(explode(col("members")).as("d_id"),
+          col("c_custkey").as("matched_key"),
+          col("c_name").as("matched_name"), col("dist").cast("int").as("dist"))
+        .orderBy("d_id")
+    }
 
   /** q53: WITHIN-TABLE entity resolution — the full ER pipeline shape
     * (block → match → MERGE-OR-QUEUE) where q46 stops at
@@ -201,71 +198,68 @@ object Linkage {
     * match-count aggregation; verdicts joined back — all equi-joins,
     * no closure, no iteration. All-integer/string output,
     * hash-exact. customer. */
-  def q53ErClusters(s: SparkSession, dir: String): DataFrame = {
-    val clean = Tables.customer(s, dir)
-      .select(col("c_custkey").as("rec_id"), col("c_name").as("name"))
-    val maxId = clean.agg(max("rec_id")).head().getLong(0)
-    val dirty = Tables.customer(s, dir)
-      .filter(col("c_custkey") % DirtyMod === 0)
-      .select((col("c_custkey") + maxId + 1).as("rec_id"),
-        when(col("c_custkey") % ExactMod === 0, col("c_name"))
-          .otherwise(expr(
-            "concat(substr(c_name, 1, 9 + CAST(c_custkey % 9 AS INT)), " +
-              "substr(c_name, 11 + CAST(c_custkey % 9 AS INT), 1000000))"))
-          .as("name"))
-    val recs = clean.unionByName(dirty)
-    val names = recs.groupBy("name").agg(min("rec_id").as("nid"),
-      max(when(col("rec_id") <= maxId, 1).otherwise(0)).as("is_clean"))
-    val masters = names.filter(col("is_clean") === 1)
-    val incoming = names.filter(col("is_clean") === 0)
-    // hashed deletion keys — the q46 spelling and argument (a collision
-    // only adds candidates; the exact levenshtein verify removes them)
-    val mKeys = masters.select(col("nid").as("m_nid"),
-        col("name").as("m_name"), explode(expr(delKeysExpr("name"))).as("ks"))
-      .select(col("m_nid"), col("m_name"), xxhash64(col("ks")).as("k"))
-    val iKeys = incoming.select(col("nid"), col("name"),
-        explode(expr(delKeysExpr("name"))).as("ks"))
-      .select(col("nid"), col("name"), xxhash64(col("ks")).as("k"))
-    require(FuzzyMaxDist == 1,
-      "hashed deletion-key join requires the single-delete neighborhood")
-    // distinct cut before the verify — the q46 pushed-levenshtein fix,
-    // SIZE-GATED on the record count (maxId ≈ customer count, already
-    // collected above): below [[Q53CutMinNames]] the lazy plan's
-    // pushed verify is cheaper than the cut's materialization job
-    // (measurements at the constant's scaladoc). Both spellings are
-    // result-identical — the cut changes WHERE the verify runs, never
-    // what it keeps (r17 shipped the lazy spelling hash-green, r17opt
-    // the cut spelling hash-green).
-    val mcand0 = iKeys.join(mKeys, "k")
-      .select("nid", "name", "m_nid", "m_name").distinct()
-    val mcand =
-      if (maxId >= s.conf.get("spark.graft.linkage.q53CutMinNames",
-          Q53CutMinNames.toString).toLong) {
-        val c = mcand0.localCheckpoint(true)
-        // leased, not leaked: readable until the next q53 call
-        graft.Artifacts.lease(s, "linkage.q53", c)
-        c
-      } else mcand0
-    val matches = mcand
-      .filter(levenshtein(col("name"), col("m_name")) <= FuzzyMaxDist)
-      .groupBy("nid")
-      .agg(count(lit(1)).as("n_matches"), min("m_nid").as("m_min"))
-    recs.join(names, "name")
-      .join(matches, Seq("nid"), "left")
-      .select(col("rec_id"),
-        when(col("is_clean") === 1, col("nid"))
-          .when(col("n_matches") === 1, col("m_min"))
-          .otherwise(col("nid")).as("entity_id"),
-        // verdicts are RECORD-level: an exact re-upload carries a
-        // master NAME but is itself an incoming record — it reads
-        // 'merged' (the distance-0 auto-merge), never 'master'
-        when(col("rec_id") <= maxId, lit("master"))
-          .when(col("is_clean") === 1, lit("merged"))
-          .when(col("n_matches") === 1, lit("merged"))
-          .when(col("n_matches") > 1, lit("ambiguous"))
-          .otherwise(lit("new")).as("status"))
-      .orderBy("rec_id")
-  }
+  def q53ErClusters(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "linkage.q53") { sc =>
+      val clean = Tables.customer(s, dir)
+        .select(col("c_custkey").as("rec_id"), col("c_name").as("name"))
+      val maxId = clean.agg(max("rec_id")).head().getLong(0)
+      val dirty = Tables.customer(s, dir)
+        .filter(col("c_custkey") % DirtyMod === 0)
+        .select((col("c_custkey") + maxId + 1).as("rec_id"),
+          when(col("c_custkey") % ExactMod === 0, col("c_name"))
+            .otherwise(expr(
+              "concat(substr(c_name, 1, 9 + CAST(c_custkey % 9 AS INT)), " +
+                "substr(c_name, 11 + CAST(c_custkey % 9 AS INT), 1000000))"))
+            .as("name"))
+      val recs = clean.unionByName(dirty)
+      val names = recs.groupBy("name").agg(min("rec_id").as("nid"),
+        max(when(col("rec_id") <= maxId, 1).otherwise(0)).as("is_clean"))
+      val masters = names.filter(col("is_clean") === 1)
+      val incoming = names.filter(col("is_clean") === 0)
+      // hashed deletion keys — the q46 spelling and argument (a collision
+      // only adds candidates; the exact levenshtein verify removes them)
+      val mKeys = masters.select(col("nid").as("m_nid"),
+          col("name").as("m_name"), explode(expr(delKeysExpr("name"))).as("ks"))
+        .select(col("m_nid"), col("m_name"), xxhash64(col("ks")).as("k"))
+      val iKeys = incoming.select(col("nid"), col("name"),
+          explode(expr(delKeysExpr("name"))).as("ks"))
+        .select(col("nid"), col("name"), xxhash64(col("ks")).as("k"))
+      require(FuzzyMaxDist == 1,
+        "hashed deletion-key join requires the single-delete neighborhood")
+      // distinct cut before the verify — the q46 pushed-levenshtein fix,
+      // SIZE-GATED on the record count (maxId ≈ customer count, already
+      // collected above): below [[Q53CutMinNames]] the lazy plan's
+      // pushed verify is cheaper than the cut's materialization job
+      // (measurements at the constant's scaladoc). Both spellings are
+      // result-identical — the cut changes WHERE the verify runs, never
+      // what it keeps (r17 shipped the lazy spelling hash-green, r17opt
+      // the cut spelling hash-green).
+      val mcand0 = iKeys.join(mKeys, "k")
+        .select("nid", "name", "m_nid", "m_name").distinct()
+      val mcand =
+        if (maxId >= s.conf.get("spark.graft.linkage.q53CutMinNames",
+            Q53CutMinNames.toString).toLong) sc.cut(mcand0)
+        else mcand0
+      val matches = mcand
+        .filter(levenshtein(col("name"), col("m_name")) <= FuzzyMaxDist)
+        .groupBy("nid")
+        .agg(count(lit(1)).as("n_matches"), min("m_nid").as("m_min"))
+      recs.join(names, "name")
+        .join(matches, Seq("nid"), "left")
+        .select(col("rec_id"),
+          when(col("is_clean") === 1, col("nid"))
+            .when(col("n_matches") === 1, col("m_min"))
+            .otherwise(col("nid")).as("entity_id"),
+          // verdicts are RECORD-level: an exact re-upload carries a
+          // master NAME but is itself an incoming record — it reads
+          // 'merged' (the distance-0 auto-merge), never 'master'
+          when(col("rec_id") <= maxId, lit("master"))
+            .when(col("is_clean") === 1, lit("merged"))
+            .when(col("n_matches") === 1, lit("merged"))
+            .when(col("n_matches") > 1, lit("ambiguous"))
+            .otherwise(lit("new")).as("status"))
+        .orderBy("rec_id")
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q46_fuzzy_join" -> q46FuzzyJoin,

@@ -178,11 +178,7 @@ object Partitioned {
     * query with the filter disabled is row-identical. */
   def q42BloomJoin(s: SparkSession, dir: String): DataFrame =
     withBloomConfs(s) {
-      val out = q42Plan(s, dir).localCheckpoint(true)
-      // leased, not leaked: the result checkpoint stays readable until
-      // the next q42 call on this session releases it
-      graft.Artifacts.lease(s, "partitioned.q42", out)
-      out
+      graft.Artifacts.scoped(s, "partitioned.q42")(_.cut(q42Plan(s, dir)))
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

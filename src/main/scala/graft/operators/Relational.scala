@@ -342,15 +342,15 @@ object Relational {
     * become per-level literals. 10× probe: the Expand spelling ran
     * 4.8–7.8×; this is the volume-scan cost alone. */
   def q28RollupAgg(s: SparkSession, dir: String): DataFrame =
-    q28FromDetail(
-      Tables.lineitem(s, dir)
+    // the detail is 6 rows; three levels read it
+    graft.Artifacts.scoped(s, "relational.q28")(sc =>
+      q28FromDetail(sc.cut(Tables.lineitem(s, dir)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("cnt"),
           sum(col("l_quantity")
             .cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("dq"),
           sum(col("l_extendedprice")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("dp"))
-        .localCheckpoint(true)) // 6 rows; three levels read it
+            .cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("dp")))))
 
   /** The three rollup levels from a (flag, status, cnt, dq, dp)
     * detail frame — exact-decimal re-aggregation. */
@@ -601,13 +601,13 @@ object Relational {
     * column pruning defeats exchange reuse and the whole input scan +
     * histogram aggregation ran TWICE (r17's q33/q39 plans:
     * two `Scan parquet` of lineitem — the measured regression), so a
-    * non-checkpointed input is cut here and leased
-    * ([[graft.Artifacts.lease]]: readable until the next rankedHist
-    * call on the session). All integer sums — bit-identical to the
+    * non-checkpointed input is cut here, in the calling query's scope.
+    * All integer sums — bit-identical to the
     * serial window, which the DuckDB oracles keep (hash-equality
     * proves two-phase ≡ global, the t17/c27 argument). */
-  private def rankedHist(hist: DataFrame, grp: String, v: String,
-      twoPhase: Boolean, materialized: Boolean = false): DataFrame = {
+  private def rankedHist(sc: graft.Artifacts.Scope, hist: DataFrame,
+      grp: String, v: String, twoPhase: Boolean,
+      materialized: Boolean = false): DataFrame = {
     if (!twoPhase) {
       val wOrd = Window.partitionBy(grp).orderBy(v)
       val wAll = Window.partitionBy(grp)
@@ -615,14 +615,7 @@ object Relational {
         .withColumn("cum", sum("cnt").over(wOrd))
         .withColumn("n", sum("cnt").over(wAll))
     }
-    val h =
-      if (materialized) hist
-      else {
-        val cut = hist.localCheckpoint(true)
-        graft.Artifacts.lease(
-          hist.sparkSession, "relational.rankedHist", cut)
-        cut
-      }
+    val h = if (materialized) hist else sc.cut(hist)
     val hbed = h.withColumn("hb",
       when(col(v) >= 0, expr(s"$v div ${RankHistB}L"))
         .otherwise(raise_error(lit(
@@ -641,44 +634,45 @@ object Relational {
       .drop("hb", "incum", "off")
   }
 
-  def q33Quantiles(s: SparkSession, dir: String): DataFrame = {
-    val hist = Tables.lineitem(s, dir)
-      .select(col("l_returnflag"),
-        expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
-    var ranked = rankedHist(hist, "l_returnflag", "cents",
-      twoPhase = rankedHistTwoPhase(s, dir))
-    val qs = Seq("25" -> 0.25, "50" -> 0.5, "75" -> 0.75)
-    qs.foreach { case (tag, q) =>
-      // rank position rp = q·(n−1): exact (q is an exact binary
-      // double, n−1 < 2^50); the straddling ranks are its floor/ceil
-      ranked = ranked.withColumn(s"rp$tag",
-        expr(s"CAST($q AS DOUBLE) * CAST(n - 1 AS DOUBLE)"))
+  def q33Quantiles(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "relational.q33") { sc =>
+      val hist = Tables.lineitem(s, dir)
+        .select(col("l_returnflag"),
+          expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
+        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
+      var ranked = rankedHist(sc, hist, "l_returnflag", "cents",
+        twoPhase = rankedHistTwoPhase(s, dir))
+      val qs = Seq("25" -> 0.25, "50" -> 0.5, "75" -> 0.75)
+      qs.foreach { case (tag, q) =>
+        // rank position rp = q·(n−1): exact (q is an exact binary
+        // double, n−1 < 2^50); the straddling ranks are its floor/ceil
+        ranked = ranked.withColumn(s"rp$tag",
+          expr(s"CAST($q AS DOUBLE) * CAST(n - 1 AS DOUBLE)"))
+      }
+      def valueAt(pos: org.apache.spark.sql.Column) =
+        max(when(col("cum") - col("cnt") <= pos && pos <= col("cum") - 1,
+          col("cents")))
+      ranked.groupBy("l_returnflag")
+        .agg(max("n").as("n"),
+          min("cents").as("min_cents"),
+          max("cents").as("max_cents"),
+          max(col("rp25")).as("rp25"),
+          max(col("rp50")).as("rp50"),
+          max(col("rp75")).as("rp75"),
+          valueAt(floor(col("rp25"))).as("lo25"),
+          valueAt(ceil(col("rp25"))).as("hi25"),
+          valueAt(floor(col("rp50"))).as("lo50"),
+          valueAt(ceil(col("rp50"))).as("hi50"),
+          valueAt(floor(col("rp75"))).as("lo75"),
+          valueAt(ceil(col("rp75"))).as("hi75"))
+        .select(col("l_returnflag"), col("n"),
+          col("min_cents"),
+          expr(quantileInterp("25")).as("p25"),
+          expr(quantileInterp("50")).as("p50"),
+          expr(quantileInterp("75")).as("p75"),
+          col("max_cents"))
+        .orderBy("l_returnflag")
     }
-    def valueAt(pos: org.apache.spark.sql.Column) =
-      max(when(col("cum") - col("cnt") <= pos && pos <= col("cum") - 1,
-        col("cents")))
-    ranked.groupBy("l_returnflag")
-      .agg(max("n").as("n"),
-        min("cents").as("min_cents"),
-        max("cents").as("max_cents"),
-        max(col("rp25")).as("rp25"),
-        max(col("rp50")).as("rp50"),
-        max(col("rp75")).as("rp75"),
-        valueAt(floor(col("rp25"))).as("lo25"),
-        valueAt(ceil(col("rp25"))).as("hi25"),
-        valueAt(floor(col("rp50"))).as("lo50"),
-        valueAt(ceil(col("rp50"))).as("hi50"),
-        valueAt(floor(col("rp75"))).as("lo75"),
-        valueAt(ceil(col("rp75"))).as("hi75"))
-      .select(col("l_returnflag"), col("n"),
-        col("min_cents"),
-        expr(quantileInterp("25")).as("p25"),
-        expr(quantileInterp("50")).as("p50"),
-        expr(quantileInterp("75")).as("p75"),
-        col("max_cents"))
-      .orderBy("l_returnflag")
-  }
 
   /** q39: TAIL quantiles (p90/p95/p99) per group — the production
     * percentile family q33's scaladoc deferred. Arbitrary fracs don't
@@ -700,26 +694,27 @@ object Relational {
     * `approx_percentile` sketch against these exact values (rank
     * error ≤ n/accuracy) — the approximate path a 100 TB caller
     * takes, quantified instead of trusted. */
-  def q39TailQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val hist = Tables.lineitem(s, dir)
-      .select(col("l_returnflag"),
-        expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
-    // two-phase cum + joined group totals (rankedHist) above the size
-    // floor, the serial per-flag window below it — the same gate as
-    // q33 (this scaladoc's "plan shape is q33's" holds either way)
-    val ranked = rankedHist(hist, "l_returnflag", "cents",
-      twoPhase = rankedHistTwoPhase(s, dir))
-    def valueAt(rank: org.apache.spark.sql.Column) =
-      max(when(col("cum") - col("cnt") < rank && rank <= col("cum"),
-        col("cents")))
-    ranked.groupBy("l_returnflag")
-      .agg(max("n").as("n"),
-        valueAt(expr("(90 * n + 99) div 100")).as("p90_cents"),
-        valueAt(expr("(95 * n + 99) div 100")).as("p95_cents"),
-        valueAt(expr("(99 * n + 99) div 100")).as("p99_cents"))
-      .orderBy("l_returnflag")
-  }
+  def q39TailQuantiles(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "relational.q39") { sc =>
+      val hist = Tables.lineitem(s, dir)
+        .select(col("l_returnflag"),
+          expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
+        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
+      // two-phase cum + joined group totals (rankedHist) above the size
+      // floor, the serial per-flag window below it — the same gate as
+      // q33 (this scaladoc's "plan shape is q33's" holds either way)
+      val ranked = rankedHist(sc, hist, "l_returnflag", "cents",
+        twoPhase = rankedHistTwoPhase(s, dir))
+      def valueAt(rank: org.apache.spark.sql.Column) =
+        max(when(col("cum") - col("cnt") < rank && rank <= col("cum"),
+          col("cents")))
+      ranked.groupBy("l_returnflag")
+        .agg(max("n").as("n"),
+          valueAt(expr("(90 * n + 99) div 100")).as("p90_cents"),
+          valueAt(expr("(95 * n + 99) div 100")).as("p95_cents"),
+          valueAt(expr("(99 * n + 99) div 100")).as("p99_cents"))
+        .orderBy("l_returnflag")
+    }
 
   /** q48 outlier cut: 3 · 1.4826 (the normal-consistency constant
     * that makes MAD estimate σ) in 1e4 fixed-point — the flag test
@@ -741,56 +736,53 @@ object Relational {
     * histogram — two corpus scans, two keyed shuffles, everything
     * else group-cardinality. Output per group: n, median, MAD,
     * outlier count, max deviation. */
-  def q48RobustOutliers(s: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.lineitem(s, dir)
-      .select(col("l_returnflag"),
-        expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-    val twoPhase = rankedHistTwoPhase(s, dir)
-    def medianOf(hist: DataFrame, v: String): DataFrame = {
-      // the q33/q39 size-gated cum (values nonnegative: cents, |dev|);
-      // inputs below are already checkpointed — no internal cut
-      val ranked = rankedHist(hist, "l_returnflag", v,
-        twoPhase = twoPhase, materialized = true)
-      ranked.groupBy("l_returnflag")
-        .agg(max(when(col("cum") - col("cnt") < expr("(50 * n + 99) div 100")
-          && expr("(50 * n + 99) div 100") <= col("cum"), col(v)))
-          .as("m"))
+  def q48RobustOutliers(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "relational.q48") { sc =>
+      val raw = Tables.lineitem(s, dir)
+        .select(col("l_returnflag"),
+          expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
+      val twoPhase = rankedHistTwoPhase(s, dir)
+      def medianOf(hist: DataFrame, v: String): DataFrame = {
+        // the q33/q39 size-gated cum (values nonnegative: cents, |dev|);
+        // inputs below are already checkpointed — no internal cut
+        val ranked = rankedHist(sc, hist, "l_returnflag", v,
+          twoPhase = twoPhase, materialized = true)
+        ranked.groupBy("l_returnflag")
+          .agg(max(when(col("cum") - col("cnt") < expr("(50 * n + 99) div 100")
+            && expr("(50 * n + 99) div 100") <= col("cum"), col(v)))
+            .as("m"))
+      }
+      // ONE corpus scan: the deviation histogram is a pure function of
+      // the (flag, cents) histogram — dev = |cents − med| re-keyed with
+      // the counts summed — so deriving it FROM the checkpointed cents
+      // histogram replaces the second lineitem scan + corpus-sized
+      // (flag, dev) shuffle with a histogram-sized re-aggregation
+      // (guide §2.3: aggregate before you shuffle). Bit-identical: for
+      // every raw row, dev is determined by its cents value, so summing
+      // histogram counts over colliding devs equals counting raw rows.
+      // feeds the median rank AND the dev histogram
+      val hist = sc.cut(raw.groupBy("l_returnflag", "cents")
+        .agg(count(lit(1)).as("cnt")))
+      // group-cardinality; read again at output time
+      val med = sc.cut(medianOf(hist, "cents")
+        .withColumnRenamed("m", "med_cents"))
+      // feeds the MAD rank AND the outlier count
+      val devHist = sc.cut(hist.join(broadcast(med), Seq("l_returnflag"))
+        .withColumn("dev", abs(col("cents") - col("med_cents")))
+        .groupBy("l_returnflag", "dev").agg(sum("cnt").as("cnt")))
+      val mad = medianOf(devHist, "dev").withColumnRenamed("m", "mad_cents")
+      devHist
+        .join(broadcast(mad), Seq("l_returnflag"))
+        .join(broadcast(med), Seq("l_returnflag"))
+        .groupBy("l_returnflag")
+        .agg(sum("cnt").as("n"),
+          max("med_cents").as("med_cents"),
+          max("mad_cents").as("mad_cents"),
+          sum(when(col("dev") * 10000L > col("mad_cents") * Q48Cut,
+            col("cnt")).otherwise(0L)).as("n_outliers"),
+          max("dev").as("max_dev"))
+        .orderBy("l_returnflag")
     }
-    // ONE corpus scan: the deviation histogram is a pure function of
-    // the (flag, cents) histogram — dev = |cents − med| re-keyed with
-    // the counts summed — so deriving it FROM the checkpointed cents
-    // histogram replaces the second lineitem scan + corpus-sized
-    // (flag, dev) shuffle with a histogram-sized re-aggregation
-    // (guide §2.3: aggregate before you shuffle). Bit-identical: for
-    // every raw row, dev is determined by its cents value, so summing
-    // histogram counts over colliding devs equals counting raw rows.
-    val hist = raw.groupBy("l_returnflag", "cents")
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // feeds the median rank AND the dev histogram
-    val med = medianOf(hist, "cents").withColumnRenamed("m", "med_cents")
-      .localCheckpoint(true) // group-cardinality; read again at output time
-    val devHist = hist.join(broadcast(med), Seq("l_returnflag"))
-      .withColumn("dev", abs(col("cents") - col("med_cents")))
-      .groupBy("l_returnflag", "dev").agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true) // feeds the MAD rank AND the outlier count
-    org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(hist) // med + devHist were its only readers
-    // med/devHist are read lazily by the returned frame — leased until
-    // the next q48 call on this session (previously pinned per run)
-    graft.Artifacts.lease(s, "relational.q48", med, devHist)
-    val mad = medianOf(devHist, "dev").withColumnRenamed("m", "mad_cents")
-    devHist
-      .join(broadcast(mad), Seq("l_returnflag"))
-      .join(broadcast(med), Seq("l_returnflag"))
-      .groupBy("l_returnflag")
-      .agg(sum("cnt").as("n"),
-        max("med_cents").as("med_cents"),
-        max("mad_cents").as("mad_cents"),
-        sum(when(col("dev") * 10000L > col("mad_cents") * Q48Cut,
-          col("cnt")).otherwise(0L)).as("n_outliers"),
-        max("dev").as("max_dev"))
-      .orderBy("l_returnflag")
-  }
 
   /** q40 register count: m = 2^p registers (p = 6 → 64). Standard HLL
     * error ≈ 1.04/sqrt(m) ≈ 13% at 64 — matched to [[KmvK]] so the two

@@ -290,45 +290,45 @@ object Similarity {
     * stays exact; only cross-JVM retrains of the same corpus may
     * produce an equivalent-quality but not bit-identical quantizer. */
   private[graft] def kmeansCentroidsDistributed(s: SparkSession,
-      dir: String, cells: Int): Array[Array[Float]] = {
-    val e = Tables.embeddings(s, dir)
-    val n = e.count()
-    val step = math.max(1L, n / kmeansSampleFor(cells))
-    val sample = e
-      .filter(pmod(hash(col("vec_id")), lit(step)) === 0)
-      .select("vec_id", "embedding")
-      .localCheckpoint(true)
-    val m = sample.count()
-    require(m >= cells, s"sample smaller than $cells")
-    var centroids: Array[Array[Float]] = sample
-      .withColumn("hk", md5(col("vec_id").cast("string")))
-      .orderBy("hk", "vec_id").limit(cells)
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray)
-    val dim = centroids.head.length
-    var iter = 0
-    while (iter < KmeansIters) {
-      val agg = sample
-        .withColumn("cell", ivfCellCol(centroids))
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(sum(col("v").cast("double")).as("sv"), count(lit(1)).as("cnt"))
-        .collect()
-      val sums = Array.fill(cells)(new Array[Double](dim))
-      val counts = new Array[Long](cells)
-      agg.foreach { r =>
-        val c = r.getInt(0); val p = r.getInt(1)
-        sums(c)(p) = r.getDouble(2)
-        if (p == 0) counts(c) = r.getLong(3)
+      dir: String, cells: Int): Array[Array[Float]] =
+    graft.Artifacts.scoped(s, "similarity.centroids") { sc =>
+      val e = Tables.embeddings(s, dir)
+      val n = e.count()
+      val step = math.max(1L, n / kmeansSampleFor(cells))
+      val sample = sc.cut(e
+        .filter(pmod(hash(col("vec_id")), lit(step)) === 0)
+        .select("vec_id", "embedding"))
+      val m = sample.count()
+      require(m >= cells, s"sample smaller than $cells")
+      var centroids: Array[Array[Float]] = sample
+        .withColumn("hk", md5(col("vec_id").cast("string")))
+        .orderBy("hk", "vec_id").limit(cells)
+        .select("embedding").collect()
+        .map(_.getSeq[Float](0).toArray)
+      val dim = centroids.head.length
+      var iter = 0
+      while (iter < KmeansIters) {
+        val agg = sample
+          .withColumn("cell", ivfCellCol(centroids))
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .groupBy("cell", "pos")
+          .agg(sum(col("v").cast("double")).as("sv"), count(lit(1)).as("cnt"))
+          .collect()
+        val sums = Array.fill(cells)(new Array[Double](dim))
+        val counts = new Array[Long](cells)
+        agg.foreach { r =>
+          val c = r.getInt(0); val p = r.getInt(1)
+          sums(c)(p) = r.getDouble(2)
+          if (p == 0) counts(c) = r.getLong(3)
+        }
+        centroids = Array.tabulate(cells) { c =>
+          if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
+          else Array.tabulate(dim)(i => (sums(c)(i) / counts(c)).toFloat)
+        }
+        iter += 1
       }
-      centroids = Array.tabulate(cells) { c =>
-        if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
-        else Array.tabulate(dim)(i => (sums(c)(i) / counts(c)).toFloat)
-      }
-      iter += 1
+      centroids
     }
-    centroids
-  }
 
   /** Cells probed per query (nprobe). Balanced k-means cells mean a
     * query's true neighbors straddle cell boundaries, so single-probe
@@ -580,21 +580,21 @@ object Similarity {
     * (cos DESC, neighbor_id ASC). Scale: cost ∝ candidates ×
     * probes/cells — one scan-local assignment pass and a broadcast
     * query side. `pruneCells` serves a persisted cell-partitioned
-    * index: the query frame is checkpointed, its probed cell ids
+    * index: the query frame is cut in the caller's scope, its probed cell ids
     * (queries × probes ints) collected and the candidates filtered
     * to them, a static partition-pruned scan. Oracle mirror:
     * [[sqlRankedCells]] + [[sqlProbeTail]], with the same centroids
     * inlined, so each gate entry is a full rows+schema+hash match. */
   private def ivfProbe(s: SparkSession, dir: String, cand: DataFrame,
       probes: Int, limit: Int, minCos: Option[Double] = None,
-      pruneCells: Boolean = false): DataFrame = {
+      pruneCells: Option[graft.Artifacts.Scope] = None): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val fanOut = Tables.embeddings(s, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         explode(slice(ivfRankCol(centroidsFor(s, dir)), 1, probes)).as("qc"))
     // when pruning, the query frame is read twice: prune list + join
-    val q = if (pruneCells) fanOut.localCheckpoint(true) else fanOut
-    val c = if (!pruneCells) cand else {
+    val q = pruneCells.fold(fanOut)(_.cut(fanOut))
+    val c = if (pruneCells.isEmpty) cand else {
       val probed = q.select("qc").distinct().collect().map(_.getInt(0))
       cand.filter(col("cell").isin(probed.map(Integer.valueOf): _*))
     }
@@ -972,97 +972,87 @@ object Similarity {
     * self-exclusion, the same rule the s8/d12 increment contracts
     * state). */
   private[graft] def s14AnnGraphFor(s: SparkSession, dir: String,
-      q: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val e = Tables.embeddings(s, dir)
-    val idx = graphIndexPath(s, dir)
-    val edges = s12SymEdges(s, dir)
-    val nodes = e.select(col("vec_id").as("node"), col("embedding").as("ne"))
-    val entryId = e.agg(min("vec_id")).collect()(0).getLong(0)
-    val wBeam = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("node"))
-    // seed leg 3: the query's probed IVF cells' best members — rank
-    // the frozen quantizer's cells scan-locally on the QUERY frame
-    // (the same fused kernel every layer of the artifact was built
-    // with), then a PARTITION-PRUNED read of the assign/ layer at the
-    // probed cells, cosine, top-[[S14SeedK]] per query. For an
-    // IN-CORPUS query the top-[[S12K]] of this leg is exactly its s12
-    // out-edge list (same probes, same members, same tie rule), so the
-    // leg strictly widens the seed set; for an out-of-corpus query it
-    // is the ONLY data-dependent leg. Cost: queries × nprobe pruned
-    // cell reads — request-sized, never a corpus scan.
-    val qprobe = q
-      .select(col("query_id"), col("qe"),
-        explode(slice(s12RankCol(s, dir, "qe"), 1, S12Probes)).as("qc"))
-      .localCheckpoint(true) // query-sized; reused for the cell list + join
-    val probedCells = qprobe.select("qc").distinct().collect()
-      .map(_.getInt(0))
-    val seedProbe = Tables.parquet(s, s"$idx/assign")
-      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-      .select(col("vec_id").as("node"), col("embedding").as("ne"),
-        col("cell"))
-      .join(broadcast(qprobe),
-        col("cell") === col("qc") && col("query_id") =!= col("node"))
-      .select(col("query_id"), col("node"),
-        VectorOps.cosine("qe", "ne").as("cos"))
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= S14SeedK)
-      .select("query_id", "node")
-    // seed = the global entry + the query's own adjacency (the
-    // NN-Descent in-corpus convention: a kNN-graph search for a
-    // corpus-member query starts from that member's own edges —
-    // without them, a degree-[[S12K]] graph is too sparse to navigate
-    // from a single fixed entry and the search UNDERPERFORMS the raw
-    // graph: measured 0.53 vs 0.73 recall@3 at sf0.1) + the probed
-    // cells' best members (real entry points for a query with no
-    // adjacency — and strictly more seeds for one that has it).
-    val seed = q.select(col("query_id"), lit(entryId).as("node"))
-      .unionByName(broadcast(q.select("query_id"))
-        .join(edges, col("query_id") === col("src"))
-        .select(col("query_id"), col("dst").as("node")))
-      .unionByName(seedProbe)
-      .distinct()
-    var beam = seed
-      .join(nodes, "node")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("node"),
-        VectorOps.cosine("qe", "ne").as("cos"))
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= S14Beam)
-      .select("query_id", "node", "cos")
-      .localCheckpoint(true)
-    for (_ <- 1 to S14Hops) {
-      val expanded = broadcast(beam.select("query_id", "node"))
-        .join(edges, col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node")).distinct()
-        .join(beam.select("query_id", "node"), Seq("query_id", "node"),
-          "left_anti")
-      val scoredNew = expanded
+      q: DataFrame): DataFrame =
+    graft.Artifacts.scoped(s, "similarity.s14") { sc =>
+      graft.functions.GraftFunctions.register(s)
+      val e = Tables.embeddings(s, dir)
+      val idx = graphIndexPath(s, dir)
+      val edges = s12SymEdges(s, dir)
+      val nodes = e.select(col("vec_id").as("node"), col("embedding").as("ne"))
+      val entryId = e.agg(min("vec_id")).collect()(0).getLong(0)
+      val wBeam = Window.partitionBy("query_id")
+        .orderBy(col("cos").desc, col("node"))
+      // seed leg 3: the query's probed IVF cells' best members — rank
+      // the frozen quantizer's cells scan-locally on the QUERY frame
+      // (the same fused kernel every layer of the artifact was built
+      // with), then a PARTITION-PRUNED read of the assign/ layer at the
+      // probed cells, cosine, top-[[S14SeedK]] per query. For an
+      // IN-CORPUS query the top-[[S12K]] of this leg is exactly its s12
+      // out-edge list (same probes, same members, same tie rule), so the
+      // leg strictly widens the seed set; for an out-of-corpus query it
+      // is the ONLY data-dependent leg. Cost: queries × nprobe pruned
+      // cell reads — request-sized, never a corpus scan.
+      val qprobe = sc.cut(q // query-sized; reused for the cell list + join
+        .select(col("query_id"), col("qe"),
+          explode(slice(s12RankCol(s, dir, "qe"), 1, S12Probes)).as("qc")))
+      val probedCells = qprobe.select("qc").distinct().collect()
+        .map(_.getInt(0))
+      val seedProbe = Tables.parquet(s, s"$idx/assign")
+        .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
+        .select(col("vec_id").as("node"), col("embedding").as("ne"),
+          col("cell"))
+        .join(broadcast(qprobe),
+          col("cell") === col("qc") && col("query_id") =!= col("node"))
+        .select(col("query_id"), col("node"),
+          VectorOps.cosine("qe", "ne").as("cos"))
+        .withColumn("rnk", row_number().over(wBeam))
+        .filter(col("rnk") <= S14SeedK)
+        .select("query_id", "node")
+      // seed = the global entry + the query's own adjacency (the
+      // NN-Descent in-corpus convention: a kNN-graph search for a
+      // corpus-member query starts from that member's own edges —
+      // without them, a degree-[[S12K]] graph is too sparse to navigate
+      // from a single fixed entry and the search UNDERPERFORMS the raw
+      // graph: measured 0.53 vs 0.73 recall@3 at sf0.1) + the probed
+      // cells' best members (real entry points for a query with no
+      // adjacency — and strictly more seeds for one that has it).
+      val seed = q.select(col("query_id"), lit(entryId).as("node"))
+        .unionByName(broadcast(q.select("query_id"))
+          .join(edges, col("query_id") === col("src"))
+          .select(col("query_id"), col("dst").as("node")))
+        .unionByName(seedProbe)
+        .distinct()
+      val seedBeam = sc.cut(seed
         .join(nodes, "node")
         .join(broadcast(q), "query_id")
         .select(col("query_id"), col("node"),
           VectorOps.cosine("qe", "ne").as("cos"))
-      val prevBeam = beam
-      beam = beam.unionByName(scoredNew)
         .withColumn("rnk", row_number().over(wBeam))
         .filter(col("rnk") <= S14Beam)
-        .select("query_id", "node", "cos")
-        .localCheckpoint(true)
-      // hop N's beam is dead once hop N+1 materializes (the q36
-      // release rule: two beams live regardless of hop count)
-      org.apache.spark.sql.graftbridge.GraftCheckpoints
-        .releaseLocalCheckpoint(prevBeam)
+        .select("query_id", "node", "cos"))
+      sc.rounds(seedBeam, S14Hops) { beam =>
+        val expanded = broadcast(beam.select("query_id", "node"))
+          .join(edges, col("node") === col("src"))
+          .select(col("query_id"), col("dst").as("node")).distinct()
+          .join(beam.select("query_id", "node"), Seq("query_id", "node"),
+            "left_anti")
+        val scoredNew = expanded
+          .join(nodes, "node")
+          .join(broadcast(q), "query_id")
+          .select(col("query_id"), col("node"),
+            VectorOps.cosine("qe", "ne").as("cos"))
+        beam.unionByName(scoredNew)
+          .withColumn("rnk", row_number().over(wBeam))
+          .filter(col("rnk") <= S14Beam)
+          .select("query_id", "node", "cos")
+      }
+        .filter(col("query_id") =!= col("node"))
+        .withColumn("rnk", row_number().over(wBeam))
+        .filter(col("rnk") <= TopK)
+        .select(col("query_id"), col("rnk"), col("node").as("neighbor_id"),
+          col("cos"))
+        .orderBy("query_id", "rnk")
     }
-    // the FINAL beam is read lazily by the returned frame — leased
-    // until the next s14 call on this session
-    graft.Artifacts.lease(s, "similarity.s14", beam)
-    beam.filter(col("query_id") =!= col("node"))
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= TopK)
-      .select(col("query_id"), col("rnk"), col("node").as("neighbor_id"),
-        col("cos"))
-      .orderBy("query_id", "rnk")
-  }
 
   /** s15: INCREMENTAL kNN-GRAPH ADMISSION — the d11/s8 admission
     * contract applied to the persisted graph artifact: ingest a new
@@ -1124,74 +1114,74 @@ object Similarity {
     * affected) apart from the corpus-sized pass-through union that
     * production spells as the next edge-table generation's write. */
   private[graft] def s15AdmitParts(s: SparkSession, dir: String,
-      incVecs: DataFrame): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
-    val idx = graphIndexPath(s, dir)
-    val inc = incVecs
-      .select(col("vec_id"), col("embedding"),
-        slice(s12RankCol(s, dir), 1, S12Probes).as("probes"))
-      .withColumn("cell", element_at(col("probes"), 1))
-      .localCheckpoint(true) // shard-sized; reused by every piece below
-    // driver-side cell-id lists (shard-bounded, ≤ shard × nprobe ints):
-    // `landed` prunes the affected-old read, `probed` the member read
-    val landed = inc.select("cell").distinct().collect()
-      .map(_.getInt(0)).map(Integer.valueOf)
-    val probed = inc.select(explode(col("probes")).as("pc")).distinct()
-      .collect().map(_.getInt(0)).map(Integer.valueOf)
-    val wEdge = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
+      incVecs: DataFrame): (DataFrame, DataFrame) =
+    graft.Artifacts.scoped(s, "similarity.s15") { sc =>
+      graft.functions.GraftFunctions.register(s)
+      val idx = graphIndexPath(s, dir)
+      val inc = sc.cut(incVecs // shard-sized; reused by every piece below
+        .select(col("vec_id"), col("embedding"),
+          slice(s12RankCol(s, dir), 1, S12Probes).as("probes"))
+        .withColumn("cell", element_at(col("probes"), 1)))
+      // driver-side cell-id lists (shard-bounded, ≤ shard × nprobe ints):
+      // `landed` prunes the affected-old read, `probed` the member read
+      val landed = inc.select("cell").distinct().collect()
+        .map(_.getInt(0)).map(Integer.valueOf)
+      val probed = inc.select(explode(col("probes")).as("pc")).distinct()
+        .collect().map(_.getInt(0)).map(Integer.valueOf)
+      val wEdge = Window.partitionBy("query_id")
+        .orderBy(col("cos").desc, col("neighbor_id"))
 
-    // 1. new-vector edges: shard probes × (old members of those cells
-    //    ∪ the shard itself), shard side broadcast — members never
-    //    shuffle, and the read is partition-pruned to the probed cells
-    val members = Tables.parquet(s, s"$idx/assign")
-      .filter(col("cell").isin(probed: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
-        col("cell"))
-      .unionByName(inc.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ne"), col("cell")))
-    val newEdges = members
-      .join(broadcast(inc
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-            explode(col("probes")).as("cell"))),
-        Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorOps.cosine("qe", "ne").as("cos"))
-      .withColumn("rnk", row_number().over(wEdge))
-      .filter(col("rnk") <= S12K)
+      // 1. new-vector edges: shard probes × (old members of those cells
+      //    ∪ the shard itself), shard side broadcast — members never
+      //    shuffle, and the read is partition-pruned to the probed cells
+      val members = Tables.parquet(s, s"$idx/assign")
+        .filter(col("cell").isin(probed: _*))
+        .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
+          col("cell"))
+        .unionByName(inc.select(col("vec_id").as("neighbor_id"),
+          col("embedding").as("ne"), col("cell")))
+      val newEdges = members
+        .join(broadcast(inc
+            .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+              explode(col("probes")).as("cell"))),
+          Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          VectorOps.cosine("qe", "ne").as("cos"))
+        .withColumn("rnk", row_number().over(wEdge))
+        .filter(col("rnk") <= S12K)
 
-    // 2. affected-old updates: probers of the landed cells (pruned
-    //    inverted-index read), paired with the new arrivals in the
-    //    cell they probe, then merged with their STORED edge lists
-    val affected = Tables.parquet(s, s"$idx/probed")
-      .filter(col("pcell").isin(landed: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("pcell"))
-    val candNew = affected
-      .join(broadcast(inc.select(col("cell").as("pcell"),
-          col("vec_id").as("neighbor_id"), col("embedding").as("ne"))),
-        Seq("pcell"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorOps.cosine("qe", "ne").as("cos"))
-    val affIds = affected.select("query_id").distinct()
-      .localCheckpoint(true) // landed-cells-bounded; reused by 2 joins
-    val oldEdges = Tables.parquet(s, s"$idx/edges")
-    val merged = oldEdges
-      .join(broadcast(affIds), Seq("query_id"), "left_semi")
-      .select("query_id", "neighbor_id", "cos")
-      .unionByName(candNew)
-      .withColumn("rnk", row_number().over(wEdge))
-      .filter(col("rnk") <= S12K)
+      // 2. affected-old updates: probers of the landed cells (pruned
+      //    inverted-index read), paired with the new arrivals in the
+      //    cell they probe, then merged with their STORED edge lists
+      val affected = Tables.parquet(s, s"$idx/probed")
+        .filter(col("pcell").isin(landed: _*))
+        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+          col("pcell"))
+      val candNew = affected
+        .join(broadcast(inc.select(col("cell").as("pcell"),
+            col("vec_id").as("neighbor_id"), col("embedding").as("ne"))),
+          Seq("pcell"))
+        .select(col("query_id"), col("neighbor_id"),
+          VectorOps.cosine("qe", "ne").as("cos"))
+      // landed-cells-bounded; reused by 2 joins
+      val affIds = sc.cut(affected.select("query_id").distinct())
+      val oldEdges = Tables.parquet(s, s"$idx/edges")
+      val merged = oldEdges
+        .join(broadcast(affIds), Seq("query_id"), "left_semi")
+        .select("query_id", "neighbor_id", "cos")
+        .unionByName(candNew)
+        .withColumn("rnk", row_number().over(wEdge))
+        .filter(col("rnk") <= S12K)
 
-    // 3. untouched rows pass through with their stored ranks
-    val untouched = oldEdges
-      .join(broadcast(affIds), Seq("query_id"), "left_anti")
-      .select("query_id", "rnk", "neighbor_id", "cos")
-    val delta = merged.select("query_id", "rnk", "neighbor_id", "cos")
-      .unionByName(newEdges.select("query_id", "rnk", "neighbor_id", "cos"))
-    (untouched, delta)
-  }
+      // 3. untouched rows pass through with their stored ranks
+      val untouched = oldEdges
+        .join(broadcast(affIds), Seq("query_id"), "left_anti")
+        .select("query_id", "rnk", "neighbor_id", "cos")
+      val delta = merged.select("query_id", "rnk", "neighbor_id", "cos")
+        .unionByName(newEdges.select("query_id", "rnk", "neighbor_id", "cos"))
+      (untouched, delta)
+    }
 
   /** DuckDB mirror of [[s15GraphAdmit]]: the FULL s12 rebuild over
     * corpus ∪ the SQL-derived shard (same [[S8Mod]] re-keying) with
@@ -1247,17 +1237,18 @@ object Similarity {
     * SHARED s12EdgeCtes fragment — trained literals inlined) + the
     * LP rounds unrolled as MATERIALIZED stacked CTEs (the s14
     * pattern). */
-  def s18GraphCommunities(s: SparkSession, dir: String): DataFrame = {
-    val labels = Graph.labelPropagation(s12SymEdges(s, dir), S18Rounds)
-    val comm = labels.groupBy(col("label").as("community"))
-      .agg(count(lit(1)).as("size"))
-      .localCheckpoint(true) // reused by the total row and the top-k
-    val total = comm.agg(count(lit(1)).as("size"))
-      .select(lit(-1L).as("community"), col("size"))
-    val top = comm.orderBy(col("size").desc, col("community"))
-      .limit(S18TopK)
-    total.unionAll(top).orderBy("community")
-  }
+  def s18GraphCommunities(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "similarity.s18") { sc =>
+      val labels = Graph.labelPropagation(sc, s12SymEdges(s, dir), S18Rounds)
+      val comm = sc.cut(labels // reused by the total row and the top-k
+        .groupBy(col("label").as("community"))
+        .agg(count(lit(1)).as("size")))
+      val total = comm.agg(count(lit(1)).as("size"))
+        .select(lit(-1L).as("community"), col("size"))
+      val top = comm.orderBy(col("size").desc, col("community"))
+        .limit(S18TopK)
+      total.unionAll(top).orderBy("community")
+    }
 
   /** DuckDB mirror of [[s18GraphCommunities]]: the shared s12 edge
     * derivation + [[S18Rounds]] synchronous LP rounds unrolled — mode
@@ -1330,70 +1321,56 @@ object Similarity {
     * the whole selection sequence — is hash-verified by an oracle that
     * unrolls the k steps as stacked CTEs (the c10 trainer-replay
     * pattern). */
-  def s10MmrDiversify(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val wRel = Window.partitionBy("query_id")
-      .orderBy(col("rel").desc, col("neighbor_id"))
-    val cand = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .crossJoin(broadcast(queriesDf(s, dir)))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("rel", VectorOps.cosine("qe", "ce"))
-      .withColumn("crnk", row_number().over(wRel))
-      .filter(col("crnk") <= S10Cand)
-      .select("query_id", "neighbor_id", "ce", "rel")
-      .localCheckpoint(true)
-    val pairs = cand
-      .select(col("query_id"), col("neighbor_id").as("a"), col("ce").as("ea"))
-      .join(cand.select(col("query_id"), col("neighbor_id").as("b"),
-        col("ce").as("eb")), Seq("query_id"))
-      .filter(col("a") =!= col("b"))
-      .withColumn("sim", VectorOps.cosine("ea", "eb"))
-      .select("query_id", "a", "b", "sim")
-      .localCheckpoint(true)
-    val half = lit(0.5)
-    var sel = cand.withColumn("rnk", row_number().over(wRel))
-      .filter(col("rnk") === 1)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("step"),
-        (half * col("rel")).as("mmr"))
-      .localCheckpoint(true)
-    for (step <- 2 to S10K) {
-      val maxsim = pairs
-        .join(sel.select(col("query_id"), col("neighbor_id").as("b")),
-          Seq("query_id", "b"))
-        .join(sel.select(col("query_id"), col("neighbor_id").as("a")),
-          Seq("query_id", "a"), "left_anti")
-        .groupBy("query_id", "a").agg(max("sim").as("maxsim"))
-      val wMmr = Window.partitionBy("query_id")
-        .orderBy(col("mmr").desc, col("neighbor_id"))
-      val next = cand.as("c")
-        .join(maxsim.as("m"), col("c.query_id") === col("m.query_id") &&
-          col("c.neighbor_id") === col("m.a"))
-        .select(col("c.query_id").as("query_id"),
-          col("c.neighbor_id").as("neighbor_id"), col("c.rel").as("rel"),
-          col("m.maxsim").as("maxsim"))
-        .withColumn("mmr", half * col("rel") - half * col("maxsim"))
-        .withColumn("rnk", row_number().over(wMmr))
+  def s10MmrDiversify(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "similarity.s10") { sc =>
+      graft.functions.GraftFunctions.register(s)
+      val wRel = Window.partitionBy("query_id")
+        .orderBy(col("rel").desc, col("neighbor_id"))
+      val cand = sc.cut(Tables.embeddings(s, dir)
+        .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
+        .crossJoin(broadcast(queriesDf(s, dir)))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("rel", VectorOps.cosine("qe", "ce"))
+        .withColumn("crnk", row_number().over(wRel))
+        .filter(col("crnk") <= S10Cand)
+        .select("query_id", "neighbor_id", "ce", "rel"))
+      val pairs = sc.cut(cand
+        .select(col("query_id"), col("neighbor_id").as("a"), col("ce").as("ea"))
+        .join(cand.select(col("query_id"), col("neighbor_id").as("b"),
+          col("ce").as("eb")), Seq("query_id"))
+        .filter(col("a") =!= col("b"))
+        .withColumn("sim", VectorOps.cosine("ea", "eb"))
+        .select("query_id", "a", "b", "sim"))
+      val half = lit(0.5)
+      val first = sc.cut(cand.withColumn("rnk", row_number().over(wRel))
         .filter(col("rnk") === 1)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(step).as("step"), col("mmr"))
-      val prevSel = sel
-      sel = sel.unionByName(next).localCheckpoint(true)
-      // step N's selection is dead once step N+1 materializes (the
-      // q36 release rule: two selections live regardless of k)
-      org.apache.spark.sql.graftbridge.GraftCheckpoints
-        .releaseLocalCheckpoint(prevSel)
+        .select(col("query_id"), col("neighbor_id"), lit(1).as("step"),
+          (half * col("rel")).as("mmr")))
+      val steps = (2 to S10K).iterator
+      sc.rounds(first, S10K - 1) { sel =>
+        val step = steps.next()
+        val maxsim = pairs
+          .join(sel.select(col("query_id"), col("neighbor_id").as("b")),
+            Seq("query_id", "b"))
+          .join(sel.select(col("query_id"), col("neighbor_id").as("a")),
+            Seq("query_id", "a"), "left_anti")
+          .groupBy("query_id", "a").agg(max("sim").as("maxsim"))
+        val wMmr = Window.partitionBy("query_id")
+          .orderBy(col("mmr").desc, col("neighbor_id"))
+        val next = cand.as("c")
+          .join(maxsim.as("m"), col("c.query_id") === col("m.query_id") &&
+            col("c.neighbor_id") === col("m.a"))
+          .select(col("c.query_id").as("query_id"),
+            col("c.neighbor_id").as("neighbor_id"), col("c.rel").as("rel"),
+            col("m.maxsim").as("maxsim"))
+          .withColumn("mmr", half * col("rel") - half * col("maxsim"))
+          .withColumn("rnk", row_number().over(wMmr))
+          .filter(col("rnk") === 1)
+          .select(col("query_id"), col("neighbor_id"),
+            lit(step).as("step"), col("mmr"))
+        sel.unionByName(next)
+      }.orderBy("query_id", "step")
     }
-    // the greedy loop was cand/pairs' last reader; the FINAL selection
-    // is read lazily by the returned frame — leased until the next s10
-    // call on this session
-    org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(cand)
-    org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(pairs)
-    graft.Artifacts.lease(s, "similarity.s10", sel)
-    sel.orderBy("query_id", "step")
-  }
 
   /** DuckDB mirror of [[s10MmrDiversify]]: the greedy unrolled as
     * [[S10K]] stacked CTE stages (the c10 pattern — each stage's
@@ -1865,12 +1842,13 @@ object Similarity {
     * admission = shard scan + partitioned append (∝ increment);
     * query = nprobe/cells of the index bytes, no shuffle of index rows
     * except the final candidate rank. */
-  def s8AnnIncremental(s: SparkSession, dir: String): DataFrame = {
-    val idx = s8IndexPath(s, dir)
-    ivfProbe(s, dir, indexCands(Tables.parquet(s, s"$idx/base")
-        .unionByName(Tables.parquet(s, s"$idx/inc"))),
-      IvfProbes, TopK, pruneCells = true)
-  }
+  def s8AnnIncremental(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "similarity.s8") { sc =>
+      val idx = s8IndexPath(s, dir)
+      ivfProbe(s, dir, indexCands(Tables.parquet(s, s"$idx/base")
+          .unionByName(Tables.parquet(s, s"$idx/inc"))),
+        IvfProbes, TopK, pruneCells = Some(sc))
+    }
 
   /** Rows of the persisted cell-partitioned index as probe candidates. */
   private def indexCands(index: DataFrame): DataFrame =
@@ -1969,19 +1947,20 @@ object Similarity {
     * exact copies drop (cos 1.0 with their source), negated vectors
     * survive except against the corpus's ≤ −τ tail. */
   def d12SemdedupIncremental(s: SparkSession, dir: String): DataFrame =
-    d12Admit(s, dir, Tables.parquet(s, d12IncrementPath(s, dir)))
+    graft.Artifacts.scoped(s, "similarity.d12")(
+      d12Admit(_, dir, Tables.parquet(s, d12IncrementPath(s, dir))))
 
   /** The semantic-admission core over an explicit (vec_id, embedding)
     * shard — factored out like [[Dedup.d11Admit]]/[[s8WriteAssigned]]
     * so the c28 composite can screen ITS shard. CONTRACT: every shard
     * vec_id must exceed every corpus vec_id. */
-  private[graft] def d12Admit(s: SparkSession, dir: String,
+  private[graft] def d12Admit(sc: graft.Artifacts.Scope, dir: String,
       incVecs: DataFrame): DataFrame = {
+    val s = sc.session
     graft.functions.GraftFunctions.register(s)
     val idx = s8IndexPath(s, dir)
-    val inc = incVecs
-      .withColumn("cell", ivfCellCol(centroidsFor(s, dir)))
-      .localCheckpoint(true) // shard-sized; reused by 3 joins below
+    val inc = sc.cut(incVecs // shard-sized; reused by 3 joins below
+      .withColumn("cell", ivfCellCol(centroidsFor(s, dir))))
     val incCells = inc.select("cell").distinct().collect().map(_.getInt(0))
     val base = Tables.parquet(s, s"$idx/base")
       .filter(col("cell").isin(incCells.map(Integer.valueOf): _*))
@@ -2090,8 +2069,10 @@ object Similarity {
       // delete-only (the c15 contract): limit(0) upserts re-derive for
       // free; an idempotent re-apply must not pay a materialization job
       materializeUpserts = false)
-    ivfProbe(s, dir, indexCands(s.table(t)), IvfProbes, TopK,
-      pruneCells = true)
+    graft.Artifacts.scoped(s, "similarity.s11") { sc =>
+      ivfProbe(s, dir, indexCands(s.table(t)), IvfProbes, TopK,
+        pruneCells = Some(sc))
+    }
   }
 
   /** DuckDB mirror of [[s11AnnForget]]: [[s8OracleSql]] with the

@@ -1112,35 +1112,30 @@ object TextAnalysis {
     * broadcast; the per-doc window shuffles on doc_id once. Four
     * keyed exchanges, all linear in the collapsed frames — no
     * corpus-sized sort, no vocabulary broadcast. */
-  def t16Keywords(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsSpread(s, dir)
-    val tf = docs
-      .select(col("doc_id"),
-        explode(expr("filter(split(text, ' '), x -> x <> '')")).as("word"))
-      .filter(!col("word").isin(Relational.stopwords: _*))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+  def t16Keywords(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "text.t16") { sc =>
+      val docs = Tables.documentsSpread(s, dir)
       // TWO consumers (the df aggregation below and the tf⋈df join
       // probe): un-materialized, the corpus explode + keyed collapse
       // ran twice per query — once per consumer
-      .localCheckpoint(true)
-    // leased, not leaked: the returned frame reads tf lazily, so the
-    // corpus-token-sized block set stays pinned until the NEXT t16
-    // call on this session releases it (r17 advice #3 — previously it
-    // pinned one generation per invocation for the application life)
-    graft.Artifacts.lease(s, "text.t16", tf)
-    val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    val nd = docs.agg(count(lit(1)).as("n_docs"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("score_micro").desc, col("word"))
-    tf.join(dfT, "word")
-      .crossJoin(broadcast(nd))
-      .withColumn("score_micro", col("tf") * expr(t16IdfMicroSql))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= T16TopK)
-      .select(col("doc_id"), col("word"), col("tf"), col("df"),
-        col("score_micro"), col("rk"))
-      .orderBy("doc_id", "rk")
-  }
+      val tf = sc.cut(docs
+        .select(col("doc_id"),
+          explode(expr("filter(split(text, ' '), x -> x <> '')")).as("word"))
+        .filter(!col("word").isin(Relational.stopwords: _*))
+        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
+      val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
+      val nd = docs.agg(count(lit(1)).as("n_docs"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy(col("score_micro").desc, col("word"))
+      tf.join(dfT, "word")
+        .crossJoin(broadcast(nd))
+        .withColumn("score_micro", col("tf") * expr(t16IdfMicroSql))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= T16TopK)
+        .select(col("doc_id"), col("word"), col("tf"), col("df"),
+          col("score_micro"), col("rk"))
+        .orderBy("doc_id", "rk")
+    }
 
   // ----------------------------------------------------------------- t17
 
@@ -1285,7 +1280,12 @@ object TextAnalysis {
     * the ONE-window global spelling, so hash-equality proves the
     * two-phase cum ≡ the global scan. */
   def t17CcnetPpl(s: SparkSession, dir: String): DataFrame =
-    t17Terciles(s, t17NllKernel(s, dir))
+    graft.Artifacts.scoped(s, "text.t17")(t17CcnetPpl(_, dir))
+
+  /** [[t17CcnetPpl]] with its cuts in the caller's scope. */
+  private[graft] def t17CcnetPpl(sc: graft.Artifacts.Scope,
+      dir: String): DataFrame =
+    t17Terciles(sc, t17NllKernel(sc, dir))
 
   /** Per-corpus trained [[graft.functions.CcnetLpGrid]], held per
     * SparkContext like the t8 model. The collect is bounded by
@@ -1315,13 +1315,15 @@ object TextAnalysis {
     * explode of a long array, no HOF) into the B²-bounded pair count;
     * on a cache hit the query is a single corpus scan. TextAnalysisSpec
     * pins this bit-identical to [[t17NllJoinSpelling]] corpus-wide. */
-  private[graft] def t17NllKernel(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def t17NllKernel(sc: graft.Artifacts.Scope,
+      dir: String): DataFrame = {
+    val s = sc.session
     var trainedOn: DataFrame = null
     val model: T17Model = graft.Artifacts.memo(s.sparkContext, "text.t17",
         Tables.fingerprint(s, dir, "documents")) {
       // two consumers on a miss (pair counts + scoring): cut the
       // subtree so the md5 walk runs once (the d8/q36 reuse rule)
-      trainedOn = t17Keys(s, dir).localCheckpoint(true)
+      trainedOn = sc.cut(t17Keys(s, dir))
       val pairs = trainedOn.select(explode(col("ks")).as("k"))
         .groupBy("k").agg(count(lit(1)).as("c"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -1343,28 +1345,28 @@ object TextAnalysis {
     * kept as the transparent ground truth the kernel spec runs against
     * (the t8CharlmFilterJoinSpelling discipline). */
   private[graft] def t17NllJoinSpelling(s: SparkSession,
-      dir: String): DataFrame = {
-    val pairs = Tables.documents(s, dir)
-      .withColumn("ptext", t17Planted)
-      .withColumn("toks", expr("filter(split(ptext, ' '), x -> x <> '')"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1), " +
-          "i -> struct(element_at(toks, i) AS pw, " +
-          "element_at(toks, i + 1) AS cw))")).as("p"))
-      .select(col("doc_id"),
-        t17Bucket(col("p.pw")).as("pb"), t17Bucket(col("p.cw")).as("cb"))
-      .localCheckpoint(true)
-    val bc = pairs.groupBy("pb", "cb").agg(count(lit(1)).as("c"))
-    val uc = bc.groupBy("pb").agg(sum("c").as("cu"))
-    pairs
-      .join(broadcast(bc), Seq("pb", "cb"))
-      .join(broadcast(uc), Seq("pb"))
-      .withColumn("lp", expr(t17LpMicroSql))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        expr("(-sum(lp)) div count(1)").as("nll_micro"))
-  }
+      dir: String): DataFrame =
+    graft.Artifacts.scoped(s, "text.t17JoinSpelling") { sc =>
+      val pairs = sc.cut(Tables.documents(s, dir)
+        .withColumn("ptext", t17Planted)
+        .withColumn("toks", expr("filter(split(ptext, ' '), x -> x <> '')"))
+        .filter(size(col("toks")) >= 2)
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(1, size(toks) - 1), " +
+            "i -> struct(element_at(toks, i) AS pw, " +
+            "element_at(toks, i + 1) AS cw))")).as("p"))
+        .select(col("doc_id"),
+          t17Bucket(col("p.pw")).as("pb"), t17Bucket(col("p.cw")).as("cb")))
+      val bc = pairs.groupBy("pb", "cb").agg(count(lit(1)).as("c"))
+      val uc = bc.groupBy("pb").agg(sum("c").as("cu"))
+      pairs
+        .join(broadcast(bc), Seq("pb", "cb"))
+        .join(broadcast(uc), Seq("pb"))
+        .withColumn("lp", expr(t17LpMicroSql))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          expr("(-sum(lp)) div count(1)").as("nll_micro"))
+    }
 
   /** Tercile bucketing over a per-doc (doc_id, n_bigrams, nll_micro)
     * frame — the two-phase histogram prefix sum described above.
@@ -1377,11 +1379,12 @@ object TextAnalysis {
     * aggregates twice (t17 and c25 alike). No row changes: nll_micro
     * is never null (the kernel returns a null struct only for a null
     * key array, which the `size(ks) >= 1` filter already dropped). */
-  private def t17Terciles(s: SparkSession, nllIn: DataFrame): DataFrame = {
+  private def t17Terciles(sc: graft.Artifacts.Scope,
+      nllIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // nll serves three consumers (histogram, total count, the final
     // bucket projection) — cut it, it is doc-sized
-    val nll = nllIn.localCheckpoint(true)
+    val nll = sc.cut(nllIn)
     val hist = nll.groupBy("nll_micro").agg(count(lit(1)).as("hc"))
       .withColumn("hb", expr(s"nll_micro div ${T17HistB}L"))
       .filter(col("hb").isNotNull)

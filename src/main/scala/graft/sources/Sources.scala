@@ -162,13 +162,11 @@ object Sources {
         .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerDir)
       .map(_.getPath.getName.drop(partCol.length + 1))
       .toIndexedSeq
-    if (fragmented.isEmpty) return 0
-    val slice = s.table(table)
-      .filter(col(partCol).isin(fragmented: _*))
-      .localCheckpoint(true)
-    try overwritePartitions(slice, table, partCol)
-    finally org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(slice) // the write was its only reader
+    if (fragmented.nonEmpty)
+      graft.Artifacts.scoped(s, "sources.compactPartitions")(sc =>
+        overwritePartitions(
+          sc.cut(s.table(table).filter(col(partCol).isin(fragmented: _*))),
+          table, partCol))
     fragmented.length
   }
 
@@ -193,19 +191,18 @@ object Sources {
         .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerDir)
       .map(_.getPath.getName.drop(partCol.length + 1))
       .toIndexedSeq
-    if (fragmented.isEmpty) return 0
-    val slice = s.read.parquet(path)
-      .filter(col(partCol).isin(fragmented: _*))
-      .localCheckpoint(true)
-    // per-writer option, never a session-conf mutation: a concurrent
-    // write on the same session must not inherit dynamic mode, and two
-    // concurrent compactions must not race a save/restore
-    try slice.repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(path)
-    finally org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(slice) // the write was its only reader
+    if (fragmented.nonEmpty)
+      graft.Artifacts.scoped(s, "sources.compactPartitionedPath") { sc =>
+        val slice = sc.cut(s.read.parquet(path)
+          .filter(col(partCol).isin(fragmented: _*)))
+        // per-writer option, never a session-conf mutation: a concurrent
+        // write on the same session must not inherit dynamic mode, and
+        // two concurrent compactions must not race a save/restore
+        slice.repartition(col(partCol))
+          .write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partCol).parquet(path)
+      }
     fragmented.length
   }
 
@@ -303,8 +300,9 @@ object Sources {
     // anti-join side, the new-rows union — so by default it is
     // materialized ONCE (changeset-sized by this method's contract)
     // instead of re-derived per consumer (c13 paid its v1⋈v2
-    // full-outer diff per consumer); blocks released before returning
-    // so repeated maintenance calls never accumulate pinned storage.
+    // full-outer diff per consumer); the scope frees its blocks on
+    // return, so repeated maintenance calls never accumulate pinned
+    // storage.
     // `materializeUpserts = false` is for callers whose upsert side is
     // trivially re-derivable — empty `limit(0)` delete-only flows
     // (c15, s11), a group-cardinality delta over an already-staged
@@ -321,50 +319,45 @@ object Sources {
     // COLUMN-PRUNED (part-only, key-only), which is cheaper than
     // materializing the full distinct — measured on c15, where an
     // eager checkpoint of the delete footprint cost +39%.
-    val doMat = materializeUpserts
-    val up = if (doMat) upserts.localCheckpoint(true) else upserts
-    val del = deleteKeys
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.graftbridge.GraftCheckpoints.releaseLocalCheckpoint(df)
-    try {
-      val partVals = up.select(partCol).unionAll(del.select(partCol))
+    graft.Artifacts.scoped(s, "sources.mergeIntoPartitioned") { sc =>
+      val up = if (materializeUpserts) sc.cut(upserts) else upserts
+      val partVals = up.select(partCol).unionAll(deleteKeys.select(partCol))
         .distinct().collect().map(_.get(0))
-      if (partVals.isEmpty) return
-      // a null partition value would silently vanish from the isin pruning
-      // filter below (null never matches isin) and mis-target the emptied-
-      // partition drop — fail loudly instead of merging incompletely
-      require(partVals.forall(_ != null),
-        "mergeIntoPartitioned: changeset carries a null partition value")
-      val touchedKeys = up.select(keyCol)
-        .unionAll(del.select(keyCol)).distinct()
-      val stored = s.table(table).columns
-      val kept = s.table(table)
-        .filter(col(partCol).isin(partVals.toIndexedSeq: _*))
-        .join(touchedKeys, Seq(keyCol), "left_anti")
-      val newRows = kept.select(stored.map(col).toIndexedSeq: _*)
-        .unionByName(up.select(stored.map(col).toIndexedSeq: _*))
-        .localCheckpoint(true)
-      overwritePartitions(newRows, table, partCol)
-      // dynamic overwrite only replaces partitions PRESENT in the written
-      // data — a touched partition whose every row was deleted lands zero
-      // rows, is never rewritten, and would silently keep its old file.
-      // Those emptied directories must be dropped explicitly (the
-      // delete-last-row-of-a-partition case: e.g. erasing the only user a
-      // date directory contains).
-      // dropped through the catalog API, not ALTER TABLE SQL text — a
-      // string partition value containing quotes or backslashes would
-      // round-trip wrong through the lexer and silently no-op the drop
-      val remaining = newRows.select(partCol).distinct()
-        .collect().map(r => String.valueOf(r.get(0))).toSet
-      release(newRows) // write + remaining collect were its only readers
-      val emptied = partVals.map(String.valueOf(_)).filterNot(remaining)
-      if (emptied.nonEmpty) {
-        val ident = s.sessionState.sqlParser.parseTableIdentifier(table)
-        s.sessionState.catalog.dropPartitions(
-          ident, emptied.map(v => Map(partCol -> v)).toIndexedSeq,
-          ignoreIfNotExists = true, purge = false, retainData = false)
+      if (partVals.nonEmpty) {
+        // a null partition value would silently vanish from the isin pruning
+        // filter below (null never matches isin) and mis-target the emptied-
+        // partition drop — fail loudly instead of merging incompletely
+        require(partVals.forall(_ != null),
+          "mergeIntoPartitioned: changeset carries a null partition value")
+        val touchedKeys = up.select(keyCol)
+          .unionAll(deleteKeys.select(keyCol)).distinct()
+        val stored = s.table(table).columns
+        val kept = s.table(table)
+          .filter(col(partCol).isin(partVals.toIndexedSeq: _*))
+          .join(touchedKeys, Seq(keyCol), "left_anti")
+        val newRows = sc.cut(kept.select(stored.map(col).toIndexedSeq: _*)
+          .unionByName(up.select(stored.map(col).toIndexedSeq: _*)))
+        overwritePartitions(newRows, table, partCol)
+        // dynamic overwrite only replaces partitions PRESENT in the written
+        // data — a touched partition whose every row was deleted lands zero
+        // rows, is never rewritten, and would silently keep its old file.
+        // Those emptied directories must be dropped explicitly (the
+        // delete-last-row-of-a-partition case: e.g. erasing the only user a
+        // date directory contains).
+        // dropped through the catalog API, not ALTER TABLE SQL text — a
+        // string partition value containing quotes or backslashes would
+        // round-trip wrong through the lexer and silently no-op the drop
+        val remaining = newRows.select(partCol).distinct()
+          .collect().map(r => String.valueOf(r.get(0))).toSet
+        val emptied = partVals.map(String.valueOf(_)).filterNot(remaining)
+        if (emptied.nonEmpty) {
+          val ident = s.sessionState.sqlParser.parseTableIdentifier(table)
+          s.sessionState.catalog.dropPartitions(
+            ident, emptied.map(v => Map(partCol -> v)).toIndexedSeq,
+            ignoreIfNotExists = true, purge = false, retainData = false)
+        }
       }
-    } finally if (doMat) release(up)
+    }
   }
 
   /** Parallel-fetch ingest fan-out (luigi/taxi_data_import.py:40-76:

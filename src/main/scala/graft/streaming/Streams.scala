@@ -523,9 +523,10 @@ object Streams {
     * sort. The streaming spelling is [[st11AdmitStream]]; StreamsSpec
     * proves micro-batched admission ≡ this batch feed row for row. */
   def st11Query(s: SparkSession, dir: String): DataFrame =
-    Dedup.st11AdmitFeed(s, dir,
-      Tables.parquet(s, Dedup.d11IncrementPath(s, dir)))
-      .orderBy("doc_id", "dup_of")
+    graft.Artifacts.scoped(s, "streams.st11")(sc =>
+      Dedup.st11AdmitFeed(sc, dir,
+        Tables.parquet(s, Dedup.d11IncrementPath(s, dir)))
+        .orderBy("doc_id", "dup_of"))
 
   /** st11 (streaming spelling): the always-on ingest admission gate —
     * each micro-batch of arriving docs is screened against the
@@ -537,9 +538,9 @@ object Streams {
       docs: DataFrame, sinkPath: String, checkpoint: String): Unit =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Dedup.st11AdmitFeed(batch.sparkSession, dir, batch.toDF())
-          .write.mode("append").parquet(sinkPath)
-        ()
+        graft.Artifacts.scoped(batch.sparkSession, "streams.st11Batch")(sc =>
+          Dedup.st11AdmitFeed(sc, dir, batch.toDF())
+            .write.mode("append").parquet(sinkPath))
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -627,25 +628,23 @@ object Streams {
       .select(keys.map(col) ++
         Seq(col("m.op").as("op"), col("m.text").as("text")): _*)
 
-  def st10ApplyBatch(s: SparkSession, table: String, log: DataFrame): Unit = {
-    // compacted batch is changeset-sized; evaluate the log scan + LWW
-    // aggregate ONCE — the upsert and delete sides are filters over it,
-    // not two re-derivations of it
-    val latest = lwwLatest(log, "doc_id")
-      .withColumn("pt", pmod(col("doc_id"), lit(St10Parts)))
-      .localCheckpoint(true)
-    try graft.sources.Sources.mergeIntoPartitioned(
-      s, table, "pt", "doc_id",
-      latest.filter(col("op") === "upsert").select("doc_id", "text", "pt"),
-      latest.filter(col("op") === "delete").select("doc_id", "pt"),
-      // `latest` is ALREADY checkpointed above — the merge's own
-      // checkpoint materialized the upsert rows a second time per
-      // batch (r17 advice #2); filters over cached blocks re-derive
-      // for free (r18 A/B: flat wall, strictly less pinned storage)
-      materializeUpserts = false)
-    finally org.apache.spark.sql.graftbridge.GraftCheckpoints
-      .releaseLocalCheckpoint(latest)
-  }
+  def st10ApplyBatch(s: SparkSession, table: String, log: DataFrame): Unit =
+    graft.Artifacts.scoped(s, "streams.st10") { sc =>
+      // compacted batch is changeset-sized; evaluate the log scan + LWW
+      // aggregate ONCE — the upsert and delete sides are filters over
+      // it, not two re-derivations of it
+      val latest = sc.cut(lwwLatest(log, "doc_id")
+        .withColumn("pt", pmod(col("doc_id"), lit(St10Parts))))
+      graft.sources.Sources.mergeIntoPartitioned(
+        s, table, "pt", "doc_id",
+        latest.filter(col("op") === "upsert").select("doc_id", "text", "pt"),
+        latest.filter(col("op") === "delete").select("doc_id", "pt"),
+        // `latest` is ALREADY checkpointed above — the merge's own
+        // checkpoint materialized the upsert rows a second time per
+        // batch (r17 advice #2); filters over cached blocks re-derive
+        // for free (r18 A/B: flat wall, strictly less pinned storage)
+        materializeUpserts = false)
+    }
 
   /** st10 (streaming spelling): the change feed applied continuously —
     * each micro-batch LWW-compacts and merges via foreachBatch, the

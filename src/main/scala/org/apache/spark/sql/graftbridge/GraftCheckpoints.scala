@@ -4,21 +4,15 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge to the `LogicalRDD` behind an eagerly localCheckpoint'ed
-  * Dataset — one method, for one shape: iterative operators (q36
-  * pagerank is the canonical case) cut lineage by re-checkpointing a
-  * node-sized frame per round, and the PREVIOUS round's storage blocks
-  * stay pinned for the application lifetime even though no plan will
-  * ever read them again. The r16 memory probe measured exactly that
-  * retained-block term as part of q36's completion floor; releasing
-  * each round's blocks once the next round is materialized shrinks the
-  * concurrent storage demand to two rank vectors regardless of
-  * iteration count.
+  * Dataset, for [[graft.Artifacts.Scope]], the one owner of checkpoint
+  * lifetimes: it frees a cut's storage blocks once nothing reads them,
+  * and finds which cuts a query's result still reads.
   *
-  * CONTRACT: callers must only release a frame that (a) was returned
-  * by an EAGER `localCheckpoint(true)` and (b) has no remaining
-  * consumer — a local checkpoint truncates lineage, so a released
-  * frame cannot be recomputed; a later read would fail loudly with a
-  * missing-block error, not silently recompute.
+  * CONTRACT: only a frame that (a) was returned by an EAGER
+  * `localCheckpoint(true)` and (b) has no remaining consumer may be
+  * released — a local checkpoint truncates lineage, so a released
+  * frame cannot be recomputed; a later read fails loudly with a
+  * missing-block error, never silently recomputes.
   *
   * Lives under `org.apache.spark.sql` solely to satisfy the
   * `private[sql]` qualifier (the GraftColumns pattern); contains no
@@ -31,5 +25,19 @@ object GraftCheckpoints {
     df.queryExecution.analyzed match {
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
+    }
+
+  /** Id of the RDD behind an eagerly localCheckpoint'ed Dataset. */
+  def checkpointRdd(df: Dataset[_]): Option[Int] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l.rdd.id)
+      case _ => None
+    }
+
+  /** Ids of the RDDs `df` reads through the `LogicalRDD` leaves of its
+    * analyzed plan, subqueries included. */
+  def readRdds(df: Dataset[_]): Seq[Int] =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRDD => l.rdd.id
     }
 }

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.graftbridge.GraftCheckpoints
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Relational, Similarity}
 
 /** The [[Artifacts]] registry: per-kind LRU bound, release on clear,
-  * owner scoping, the checksummed two-layer quantizer store, and the
-  * checkpoint-lease contract. */
+  * owner scoping, the checksummed two-layer quantizer store, the
+  * checkpoint-lease contract and the checkpoint scope. */
 class ArtifactsSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val dir = TestSpark.SfDir
@@ -167,6 +169,91 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(reread(qa).toSeq == rows, "q48 on b released a's result")
     Artifacts.lease(a, "spec.sibling")
     Artifacts.lease(b, "spec.sibling")
+  }
+
+  test("scope: a cut the result does not read is freed at exit") {
+    var unread: DataFrame = null
+    val out = Artifacts.scoped(s, "spec.scope.unread") { sc =>
+      unread = sc.cut(s.range(100).toDF("id"))
+      assert(unread.count() == 100)
+      sc.cut(s.range(50).toDF("id")).filter(col("id") < 10)
+    }
+    assertReleased(unread)
+    assert(reread(out).length == 10)
+    Artifacts.lease(s, "spec.scope.unread")
+  }
+
+  test("scope: cuts read through a union, a broadcast hint or a scalar " +
+      "subquery stay readable until the tag's next call") {
+    val tag = "spec.scope.paths"
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def build(): DataFrame = Artifacts.scoped(s, tag) { sc =>
+      val Seq(u, b, q) = Seq(10, 5, 3).map(n => sc.cut(s.range(n).toDF("id")))
+      cuts ++= Seq(u, b, q)
+      u.unionByName(s.range(100, 110).toDF("id"))
+        .join(broadcast(b), Seq("id"), "left_anti")
+        .createOrReplaceTempView("spec_scope_out")
+      q.createOrReplaceTempView("spec_scope_q")
+      s.sql("SELECT id FROM spec_scope_out " +
+        "WHERE id > (SELECT min(id) FROM spec_scope_q)")
+    }
+    try {
+      val first = build()
+      Thread.sleep(500) // room for a wrongful asynchronous release
+      assert(reread(first).length == 15)
+      cuts.foreach(c => assert(reread(c).nonEmpty))
+      val second = build()
+      cuts.take(3).foreach(assertReleased)
+      assert(reread(second).length == 15)
+    } finally {
+      Artifacts.lease(s, tag)
+      Seq("spec_scope_out", "spec_scope_q").foreach(s.catalog.dropTempView)
+    }
+  }
+
+  test("scope: a throwing body frees all its cuts and keeps the " +
+      "previous call's result readable") {
+    val tag = "spec.scope.throw"
+    val ok = Artifacts.scoped(s, tag)(_.cut(s.range(10).toDF("id")))
+    var cut: DataFrame = null
+    intercept[IllegalStateException](Artifacts.scoped(s, tag) { sc =>
+      cut = sc.cut(s.range(20).toDF("id"))
+      throw new IllegalStateException("build failed")
+    })
+    assertReleased(cut)
+    assert(reread(ok).length == 10)
+    Artifacts.lease(s, tag)
+  }
+
+  test("scope: rounds stores at most two round frames and never frees " +
+      "init") {
+    val tag = "spec.scope.rounds"
+    def rdd(df: DataFrame): Int = GraftCheckpoints.checkpointRdd(df).get
+    def stored(ids: Set[Int]): Int =
+      s.sparkContext.getRDDStorageInfo.count(i => ids(i.id))
+    /** Stored frames among `ids` once pending asynchronous frees land. */
+    def settled(ids: Set[Int]): Int = {
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (stored(ids) > 1 && System.nanoTime() < deadline) Thread.sleep(50)
+      stored(ids)
+    }
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val out = Artifacts.scoped(s, tag) { sc =>
+      val init = sc.cut(s.range(100).toDF("id"))
+      val last = sc.rounds(init, 5) { prev =>
+        if (prev ne init) rounds += rdd(prev)
+        // the previous rounds are freed before this one's successor is
+        // cut: with it, at most two round frames are ever stored
+        assert(settled(rounds.toSet) <= 1, s"rounds stored: $rounds")
+        assert(stored(Set(rdd(init))) == 1, "rounds freed init")
+        prev.select((col("id") + 1).as("id"))
+      }
+      assert(reread(init).length == 100)
+      last
+    }
+    assert(rounds.length == 4)
+    assert(reread(out).map(_.getLong(0)).sorted.toSeq == (5L until 105L))
+    Artifacts.lease(s, tag)
   }
 }
 

@@ -259,10 +259,12 @@ class CurationSpec extends AnyFunSuite {
       .toMap
     val shardPath = Curation.c28ShardPath(s, dir)
     val shard = s.read.parquet(shardPath)
-    val sig = Dedup.d11Admit(s, dir, shard.select("doc_id", "text"))
+    val sig = Artifacts.scoped(s, "spec.c28.sig")(
+        Dedup.d11Admit(_, dir, shard.select("doc_id", "text")))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val sem = graft.operators.Similarity.d12Admit(s, dir,
-        shard.select(col("doc_id").as("vec_id"), col("embedding")))
+    val sem = Artifacts.scoped(s, "spec.c28.sem")(
+        graft.operators.Similarity.d12Admit(_, dir,
+          shard.select(col("doc_id").as("vec_id"), col("embedding"))))
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(out.keySet == sig.keySet && out.keySet == sem.keySet)
     out.foreach { case (id, (sg, sm, ix)) =>
@@ -279,6 +281,28 @@ class CurationSpec extends AnyFunSuite {
         .getParent.toString + "/indexed")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(written == out.filter(_._2._3 == 1).keySet)
+  }
+
+  /** Build `a`, build `b`, re-read `a`: the operators share helpers, and
+    * `b` must not free the checkpoints `a`'s unread result needs. */
+  private def assertSurvives(a: String, b: String): Unit = {
+    val first = SparkEntry.queries(a)(s, dir)
+    val rows = first.collect().toSeq
+    SparkEntry.queries(b)(s, dir).collect()
+    Thread.sleep(500) // room for a wrongful asynchronous release
+    assert(first.select("*").collect().toSeq == rows, s"$b changed $a's rows")
+  }
+
+  test("c30_curation_v2's result stays readable after c30_report") {
+    assertSurvives("c30_curation_v2", "c30_report")
+  }
+
+  test("d11_dedup_incremental's result stays readable after c28_admit_shard") {
+    assertSurvives("d11_dedup_incremental", "c28_admit_shard")
+  }
+
+  test("c25_curriculum's result stays readable after t17_ccnet_ppl") {
+    assertSurvives("c25_curriculum", "t17_ccnet_ppl")
   }
 
   test("catalog stats from the c26 scan flip a join from sort-merge to " +

@@ -670,14 +670,16 @@ class TextAnalysisSpec extends AnyFunSuite {
     val before = Artifacts.builds("text.t17").get()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val kernel = rows(TextAnalysis.t17NllKernel(s, dir))
+    def kernelRows() = rows(
+      Artifacts.scoped(s, "spec.t17")(TextAnalysis.t17NllKernel(_, dir)))
+    val kernel = kernelRows()
     assert(Artifacts.builds("text.t17").get() == before + 1)
     val join = rows(TextAnalysis.t17NllJoinSpelling(s, dir))
     assert(kernel.nonEmpty && kernel == join,
       s"kernel/join drift: ${(kernel -- join).take(3)} vs " +
         s"${(join -- kernel).take(3)}")
     // second kernel call: cache hit, no retrain
-    rows(TextAnalysis.t17NllKernel(s, dir))
+    kernelRows()
     assert(Artifacts.builds("text.t17").get() == before + 1)
   }
 
