@@ -201,12 +201,10 @@ object Artifacts {
     out
   }
 
-  /** The Datasets a build returns: itself, or inside a tuple, option
-    * or collection. */
+  /** The Datasets a build returns: itself, or inside a tuple. */
   private def datasets(out: Any): Seq[Dataset[_]] = out match {
     case d: Dataset[_] => Seq(d)
     case p: Product => p.productIterator.flatMap(datasets).toSeq
-    case i: Iterable[_] => i.flatMap(datasets).toSeq
     case _ => Nil
   }
 
