@@ -351,30 +351,30 @@ object Bpe {
        |FROM per_doc GROUP BY source ORDER BY source""".stripMargin
   }
 
+  /** The three entries for the trained merges `m`. */
+  private def oracleWith(m: Seq[Merge]): Map[String, String] = Map(
+    "c10_bpe_merges" -> sqlMergesOracle,
+    "c10_bpe_tokenize" -> sqlTokenizeOracle(m),
+    "c32_bpe_fertility" -> sqlFertilityOracle(m))
+
   /** Corpus-aware oracle (the Verify dump path): trains on demand for
     * the explicit corpus, like Similarity.oracleFor. */
-  def oracleFor(s: SparkSession, dir: String): Map[String, String] = Map(
-    "c10_bpe_merges" -> sqlMergesOracle,
-    "c10_bpe_tokenize" -> sqlTokenizeOracle(mergesFor(s, dir)),
-    "c32_bpe_fertility" -> sqlFertilityOracle(mergesFor(s, dir)))
+  def oracleFor(s: SparkSession, dir: String): Map[String, String] =
+    oracleWith(mergesFor(s, dir))
 
   /** Static form — fails loudly if no training has happened (same
     * contract as Similarity.oracle: a premature dump must not
     * silently shrink the gate). Resolves the MOST RECENTLY used
     * corpus via [[lastKey]]. */
-  def oracle: Map[String, String] = {
+  def oracle: Map[String, String] =
     lastKey.flatMap(graft.Artifacts.peek[Seq[Merge]](
         graft.Artifacts.Jvm, "bpe.merges", _)) match {
-      case Some(m) => Map(
-        "c10_bpe_merges" -> sqlMergesOracle,
-        "c10_bpe_tokenize" -> sqlTokenizeOracle(m),
-        "c32_bpe_fertility" -> sqlFertilityOracle(m))
+      case Some(m) => oracleWith(m)
       case None => throw new IllegalStateException(
         "c10_bpe_tokenize oracle requested but no merges are trained — " +
           "run Bpe.mergesFor for the gate corpus first, or use " +
           "Bpe.oracleFor(spark, dir)")
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "c10_bpe_merges" -> c10BpeMerges,

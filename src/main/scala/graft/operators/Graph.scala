@@ -97,7 +97,7 @@ object Graph {
     // converged when its signature equals the previous round's.
     var lastSig = sig(base)
     val (cur, converged) =
-      if (base.isEmpty) (base, true)
+      if (lastSig._1 == 0) (base, true)
       else sc.roundsUntil(base, maxIter)(e => smallStar(largeStar(e))) {
         next =>
           val nextSig = sig(next)

@@ -50,8 +50,8 @@ object Linkage {
     * unconditional cut on ~20k names; re-measured r18 on the
     * same-JVM alternating protocol at sf0.1: q53 lazy median 1.55 s
     * vs cut 1.65 s — the lazy side wins below the floor. q46 keeps
-    * its UNCONDITIONAL cut: the same protocol (Q46Ab) reads cut
-    * median 3.23 s spread 0.30 vs pushed median 4.15 s spread 2.30 —
+    * its UNCONDITIONAL cut: the same protocol (OPTIMIZATION_r18) reads
+    * cut median 3.23 s spread 0.30 vs pushed median 4.15 s spread 2.30 —
     * its candidate×instance volume is ~an order larger per name and
     * load-amplified). Conf-settable without a rebuild
     * (spark.graft.linkage.q53CutMinNames). */

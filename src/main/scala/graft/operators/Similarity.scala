@@ -135,137 +135,181 @@ object Similarity {
     * 16 rows/cell ⇒ K ≈ 10⁴, the §5 flop-arithmetic crossover
     * (~5.5e12 flops ≈ a minute chunk-parallel). Past it,
     * [[kmeansCentroidsDistributed]] trains with the sample staying on
-    * executors. Overridable per session via
-    * `spark.graft.kmeans.driverMaxSample` (specs lower it to exercise
-    * the distributed path on spec-sized corpora). */
+    * executors. */
   val KmeansDriverMaxSample = 160000
 
-  /** Fixed chunk size for the Lloyd pass's parallel driver loops.
-    * Chunk boundaries are CONSTANT (never derived from thread or core
-    * count) and partials merge in chunk order, so trained floats are
-    * bit-deterministic on any machine — and a ≤ 2048-row sample (every
-    * fixed-16-cell quantizer) is exactly ONE chunk, reproducing the
-    * pre-r16 sequential accumulation order bit-for-bit. */
+  /** Chunk length of the fine quantizer's [[lloyd]] pass. Chunk
+    * boundaries are CONSTANT (never derived from thread or core count)
+    * and partials merge in chunk order, so trained floats are
+    * bit-deterministic on any machine. A sample of at most 2048 rows is
+    * one chunk; a larger one (a hash-spread draw can overshoot the
+    * 2048-row floor, and a corpus-scaled cell count draws 16 rows per
+    * cell) splits into several. */
   private val KmeansChunk = 2048
 
-  /** Coarse quantizer: Lloyd k-means (max-cosine assignment, mean
-    * update) over a deterministic hash-spread sample of the corpus.
-    *
-    * Production shape: the sample filter `hash(vec_id) % step == 0` is a
-    * single scan-local predicate (no ordering assumption — a permutation
-    * of vec_ids just picks a different random-ish sample, so cell
-    * quality is NOT an artifact of id order, unlike the round-1 "lowest
-    * 16 vec_ids" quantizer); the Lloyd iterations run on the driver over
-    * ~[[kmeansSampleFor]] vectors — flop-heavy passes chunk-parallel
-    * over driver cores with deterministic merge order — and the
-    * resulting cells×dim floats persist into the plan as literals.
-    * Init is deterministic farthest-point (maxmin cosine) from the
-    * id-sorted sample. */
-  private[graft] def kmeansCentroids(s: SparkSession, dir: String,
-      cells: Int = IvfCells): Array[Array[Float]] = {
-    val cap = s.conf.get("spark.graft.kmeans.driverMaxSample",
-      KmeansDriverMaxSample.toString).toInt
-    if (kmeansSampleFor(cells) > cap) kmeansCentroidsDistributed(s, dir, cells)
-    else kmeansCentroidsDriver(s, dir, cells)
+  /** The deterministic hash-spread Lloyd sample: the rows whose
+    * `pmod(hash(vec_id), n / target)` is 0, n the memoized
+    * [[embeddingsCount]]. A single scan-local predicate with no
+    * ordering assumption — a permutation of vec_ids just picks a
+    * different random-ish sample, so cell quality is NOT an artifact
+    * of id order. */
+  private def lloydSample(s: SparkSession, dir: String,
+      target: Int): DataFrame = {
+    val step = math.max(1L, embeddingsCount(s, dir) / target)
+    Tables.embeddings(s, dir)
+      .filter(pmod(hash(col("vec_id")), lit(step)) === 0)
   }
 
-  private def kmeansCentroidsDriver(s: SparkSession, dir: String,
-      cells: Int): Array[Array[Float]] = {
-    val e = Tables.embeddings(s, dir)
-    val n = e.count()
-    val step = math.max(1L, n / kmeansSampleFor(cells))
-    val sample: Array[Array[Float]] = e
-      .filter(pmod(hash(col("vec_id")), lit(step)) === 0)
-      .orderBy("vec_id")
+  /** [[lloydSample]]'s embeddings collected in vec_id order; at least
+    * `min` of them. */
+  private def collectSample(s: SparkSession, dir: String, target: Int,
+      min: Int): Array[Array[Float]] = {
+    val sample = lloydSample(s, dir, target).orderBy("vec_id")
       .select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
-    require(sample.length >= cells, s"sample smaller than $cells")
-    val dim = sample.head.length
+    require(sample.length >= min, s"sample smaller than $min")
+    sample
+  }
 
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
+  /** Driver-side cosine in the shared zero-seeded fold. */
+  private def cos(a: Array[Float], b: Array[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < math.min(a.length, b.length)) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
     }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
-    // farthest-point init: greedily add the sample vector least similar
-    // to its closest already-chosen centroid (ties: first in id order);
-    // nearest-similarity is maintained incrementally, O(sample · cells)
-    val chosen = scala.collection.mutable.ArrayBuffer(sample.head)
-    val nearest = sample.map(v => cos(v, sample.head))
-    while (chosen.length < cells) {
-      var bestIdx = 0; var bestScore = Double.MaxValue
-      var i = 0
-      while (i < sample.length) {
-        if (nearest(i) < bestScore) { bestScore = nearest(i); bestIdx = i }
+  /** Squared L2 distance over `b`'s length. */
+  private def l2(a: Array[Float], b: Array[Float]): Double = {
+    var d = 0.0; var i = 0
+    while (i < b.length) {
+      val diff = a(i).toDouble - b(i).toDouble
+      d += diff * diff; i += 1
+    }
+    d
+  }
+
+  /** The max-cosine cell by the ivf_rank_cells kernel's own selection
+    * (ties to the HIGHER cell, NaN highest) — the rule the distributed
+    * Lloyd assigns with, so which side of the driver cap a corpus
+    * lands on can never change trained output. */
+  private def nearestByCos(v: Array[Float], cents: Array[Array[Float]]): Int =
+    graft.functions.IvfRankCellsKernel.select(
+      Array.tabulate(cents.length)(c => cos(v, cents(c))), 1)(0)
+
+  /** The min-L2 codeword, ties to the LOWER id. */
+  private def nearestByL2(v: Array[Float], cents: Array[Array[Float]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val d = l2(v, cents(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Deterministic farthest-point (maxmin) init: the first point, then
+    * greedily the point farthest by `dist` from its nearest chosen seed
+    * (ties: first in point order). The nearest distance is maintained
+    * incrementally, O(points · k), by an elementwise min — no
+    * accumulation, so the parallel update is deterministic. */
+  private def farthestPoints(points: Array[Array[Float]], k: Int,
+      dist: (Array[Float], Array[Float]) => Double): Array[Array[Float]] = {
+    val chosen = scala.collection.mutable.ArrayBuffer(points.head)
+    val nearest = points.map(dist(_, points.head))
+    while (chosen.length < k) {
+      var best = 0; var bestD = -Double.MaxValue; var i = 0
+      while (i < points.length) {
+        if (nearest(i) > bestD) { bestD = nearest(i); best = i }
         i += 1
       }
-      val added = sample(bestIdx)
+      val added = points(best)
       chosen += added
-      // elementwise max against the new centroid — no accumulation, so
-      // the parallel update is deterministic regardless of scheduling
-      java.util.stream.IntStream.range(0, sample.length).parallel()
-        .forEach { j =>
-          nearest(j) = math.max(nearest(j), cos(sample(j), added))
-        }
+      java.util.stream.IntStream.range(0, points.length).parallel()
+        .forEach(j => nearest(j) = math.min(nearest(j), dist(points(j), added)))
     }
-    var centroids = chosen.toArray
+    chosen.toArray
+  }
 
-    // Lloyd: assignment + partial sums run per fixed-size chunk in
-    // parallel (O(sample·cells·dim) flops per iteration — 16·cells²·dim
-    // once the sample scales with cells, the pass worth spreading over
-    // driver cores); partials merge in chunk order, so the result is
-    // bit-deterministic and a one-chunk sample (every fixed-16-cell
-    // quantizer) reproduces the sequential accumulation exactly.
-    val nChunks = (sample.length + KmeansChunk - 1) / KmeansChunk
+  /** Per cell, the mean of its rows (double sums over `counts` rows,
+    * cast to float); an empty cell keeps its centroid. */
+  private def meanOrKeep(cents: Array[Array[Float]],
+      sums: Array[Array[Double]], counts: Array[Long]): Array[Array[Float]] =
+    Array.tabulate(cents.length) { c =>
+      if (counts(c) == 0) cents(c)
+      else sums(c).map(x => (x / counts(c)).toFloat)
+    }
+
+  /** The one driver Lloyd loop: [[KmeansIters]] rounds from `init`, each
+    * assigning every point with `assign(point, centroids)` and moving
+    * each cell to [[meanOrKeep]]. Rows sum in double in point order
+    * within each `chunk`-long run of points; runs go in parallel (the
+    * O(points·cells·dim) pass worth spreading over driver cores) and
+    * merge in run order, so the result is bit-deterministic, and one
+    * run over all points is exactly the sequential accumulation. */
+  private def lloyd(points: Array[Array[Float]], init: Array[Array[Float]],
+      chunk: Int)(assign: (Array[Float], Array[Array[Float]]) => Int)
+      : Array[Array[Float]] = {
+    val k = init.length
+    val dim = init.head.length
+    val runs = (points.length + chunk - 1) / chunk
+    var cents = init
     var iter = 0
     while (iter < KmeansIters) {
-      val cents = centroids
-      val partials =
-        new Array[(Array[Int], Array[Array[Double]])](nChunks)
-      java.util.stream.IntStream.range(0, nChunks).parallel().forEach { ci =>
-        val lo = ci * KmeansChunk
-        val hi = math.min(sample.length, lo + KmeansChunk)
-        val pSums = Array.fill(cells)(new Array[Double](dim))
-        val pCounts = new Array[Int](cells)
-        var si = lo
-        while (si < hi) {
-          val v = sample(si)
-          // the ivf_rank_cells kernel's own selection (ties to the
-          // HIGHER cell, NaN highest) — the rule the DISTRIBUTED Lloyd
-          // assigns with, so which side of the driverMaxSample cap a
-          // corpus lands on can never change trained output
-          val best = graft.functions.IvfRankCellsKernel.select(
-            Array.tabulate(cells)(c => cos(v, cents(c))), 1)(0)
-          pCounts(best) += 1
+      val cur = cents
+      val partials = new Array[(Array[Long], Array[Array[Double]])](runs)
+      java.util.stream.IntStream.range(0, runs).parallel().forEach { r =>
+        val counts = new Array[Long](k)
+        val sums = Array.fill(k)(new Array[Double](dim))
+        var p = r * chunk
+        val hi = math.min(points.length, p + chunk)
+        while (p < hi) {
+          val v = points(p)
+          val c = assign(v, cur)
+          counts(c) += 1
           var i = 0
-          while (i < dim) { pSums(best)(i) += v(i); i += 1 }
-          si += 1
+          while (i < dim) { sums(c)(i) += v(i); i += 1 }
+          p += 1
         }
-        partials(ci) = (pCounts, pSums)
+        partials(r) = (counts, sums)
       }
-      val sums = Array.fill(cells)(new Array[Double](dim))
-      val counts = new Array[Int](cells)
-      partials.foreach { case (pCounts, pSums) =>
+      // merge into the first run's partial (a sum seeded at +0.0 is
+      // never -0.0, so this equals merging into zeroed arrays)
+      val (counts, sums) = partials.head
+      partials.tail.foreach { case (pCounts, pSums) =>
         var c = 0
-        while (c < cells) {
+        while (c < k) {
           counts(c) += pCounts(c)
           var i = 0
           while (i < dim) { sums(c)(i) += pSums(c)(i); i += 1 }
           c += 1
         }
       }
-      centroids = Array.tabulate(cells) { c =>
-        if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
-        else Array.tabulate(dim)(i => (sums(c)(i) / counts(c)).toFloat)
-      }
+      cents = meanOrKeep(cur, sums, counts)
       iter += 1
     }
-    centroids
+    cents
   }
+
+  /** Fine quantizer: [[lloyd]] with max-cosine assignment over the
+    * collected, id-ordered [[lloydSample]] of ~[[kmeansSampleFor]]
+    * vectors, in [[KmeansChunk]] runs, from a farthest-point (maxmin
+    * cosine) init; the resulting cells×dim floats persist into the
+    * plan as literals. A sample target above `driverMaxSample` trains
+    * with [[kmeansCentroidsDistributed]] instead (specs lower the cap
+    * to exercise that path on spec-sized corpora). */
+  private[graft] def kmeansCentroids(s: SparkSession, dir: String,
+      cells: Int = IvfCells,
+      driverMaxSample: Int = KmeansDriverMaxSample): Array[Array[Float]] =
+    if (kmeansSampleFor(cells) > driverMaxSample)
+      kmeansCentroidsDistributed(s, dir, cells)
+    else {
+      val sample = collectSample(s, dir, kmeansSampleFor(cells), cells)
+      lloyd(sample, farthestPoints(sample, cells, (a, b) => -cos(a, b)),
+        KmeansChunk)(nearestByCos)
+    }
 
   /** DISTRIBUTED Lloyd — the §5 driver-budget handoff implemented
     * (spelling (a) of the audit): when the scaled sample outgrows
@@ -292,11 +336,7 @@ object Similarity {
   private[graft] def kmeansCentroidsDistributed(s: SparkSession,
       dir: String, cells: Int): Array[Array[Float]] =
     graft.Artifacts.scoped(s, "similarity.centroids") { sc =>
-      val e = Tables.embeddings(s, dir)
-      val n = e.count()
-      val step = math.max(1L, n / kmeansSampleFor(cells))
-      val sample = sc.cut(e
-        .filter(pmod(hash(col("vec_id")), lit(step)) === 0)
+      val sample = sc.cut(lloydSample(s, dir, kmeansSampleFor(cells))
         .select("vec_id", "embedding"))
       val m = sample.count()
       require(m >= cells, s"sample smaller than $cells")
@@ -321,10 +361,7 @@ object Similarity {
           sums(c)(p) = r.getDouble(2)
           if (p == 0) counts(c) = r.getLong(3)
         }
-        centroids = Array.tabulate(cells) { c =>
-          if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
-          else Array.tabulate(dim)(i => (sums(c)(i) / counts(c)).toFloat)
-        }
+        centroids = meanOrKeep(centroids, sums, counts)
         iter += 1
       }
       centroids
@@ -464,53 +501,21 @@ object Similarity {
     graft.Artifacts.memo(graft.Artifacts.Jvm, "similarity.coarse",
       centroidSig(fine))(trainCoarse(fine))
 
-  /** Deterministic driver-side Lloyd over the FINE CENTROIDS (not the
-    * corpus — the fine set is already the corpus summary, ≤ n/128
+  /** Deterministic driver-side [[lloyd]] over the FINE CENTROIDS (not
+    * the corpus — the fine set is already the corpus summary, ≤ n/128
     * rows, so this is O(K·√K·D·iters) driver work: ~32M flops at the
-    * 100× probe). Strided init over the id-ordered fine set, max-cosine
-    * assignment by the fine level's rule
-    * ([[graft.functions.IvfRankCellsKernel.select]]: ties to the HIGHER
-    * coarse id, NaN highest), mean update in double cast to float per
-    * round (bit-deterministic), empty buckets keep their centroid
-    * during iteration and are DROPPED (ids compacted) at the end so a
+    * 100× probe), in one run over the id-ordered fine set. Strided
+    * init, max-cosine assignment by the fine level's rule
+    * ([[nearestByCos]]); empty buckets keep their centroid during
+    * iteration and are DROPPED (ids compacted) at the end so a
     * selected coarse bucket always routes to ≥ 1 fine cell. */
   private def trainCoarse(
       fine: Array[Array[Float]]): (Array[Array[Float]], Array[Int]) = {
     val k = fine.length
     val kc = math.min(s12CoarseCellsFor(k), k)
-    val dim = fine.head.length
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    var coarse = Array.tabulate(kc)(j => fine((j.toLong * k / kc).toInt))
-    def assign(): Array[Int] = Array.tabulate(k) { i =>
-      graft.functions.IvfRankCellsKernel.select(
-        Array.tabulate(kc)(j => cos(fine(i), coarse(j))), 1)(0)
-    }
-    var iter = 0
-    while (iter < KmeansIters) {
-      val a = assign()
-      val sums = Array.fill(kc)(new Array[Double](dim))
-      val counts = new Array[Int](kc)
-      var i = 0
-      while (i < k) {
-        counts(a(i)) += 1
-        var d = 0
-        while (d < dim) { sums(a(i))(d) += fine(i)(d); d += 1 }
-        i += 1
-      }
-      coarse = Array.tabulate(kc) { j =>
-        if (counts(j) == 0) coarse(j)
-        else Array.tabulate(dim)(d => (sums(j)(d) / counts(j)).toFloat)
-      }
-      iter += 1
-    }
-    val fin = assign()
+    val coarse = lloyd(fine,
+      Array.tabulate(kc)(j => fine((j.toLong * k / kc).toInt)), k)(nearestByCos)
+    val fin = fine.map(nearestByCos(_, coarse))
     val occupied = (0 until kc).filter(j => fin.contains(j)).toArray
     val remap = occupied.zipWithIndex.toMap
     (occupied.map(coarse), fin.map(remap))
@@ -2312,89 +2317,30 @@ object Similarity {
   /** ADC partials travel as integer nanounits: floor(x·1e9 + 0.5). */
   val PqNano = 1000000000L
 
-  /** Per-subspace codebooks: Lloyd k-means (min-L2 assignment, mean
-    * update) over the L2-NORMALIZED slices of the same deterministic
-    * hash-spread sample [[kmeansCentroids]] draws — normalized because
-    * the family ranks by cosine and ‖x−y‖² = 2−2·cos(x,y) exactly on
-    * unit vectors, making PQ's L2 machinery a cosine ranker. Init is
-    * deterministic farthest-point per subspace; empty cells keep their
-    * codeword. Returns ([m][cid][PqSubDim] floats, corpus row count —
-    * the count sizes the ADC shortlist and ships with the artifact). */
+  /** Per-subspace codebooks: per subspace, [[lloyd]] with min-L2
+    * assignment ([[nearestByL2]]) in one run over that subspace's slices
+    * of the L2-NORMALIZED id-ordered [[lloydSample]] (the
+    * [[KmeansSample]]-row target) — normalized because the family ranks
+    * by cosine and ‖x−y‖² = 2−2·cos(x,y) exactly on unit vectors,
+    * making PQ's L2 machinery a cosine ranker. Init is farthest-point
+    * (maxmin L2) per subspace; empty cells keep their codeword. Returns
+    * ([m][cid][PqSubDim] floats, corpus row count — the count sizes the
+    * ADC shortlist and ships with the artifact). */
   private[graft] def pqTrainCodebooks(s: SparkSession, dir: String): (Array[Array[Array[Float]]], Long) = {
-    val e = Tables.embeddings(s, dir)
-    val n = e.count()
-    val step = math.max(1L, n / KmeansSample)
-    val raw: Array[Array[Float]] = e
-      .filter(pmod(hash(col("vec_id")), lit(step)) === 0)
-      .orderBy("vec_id")
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray)
-    require(raw.length >= PqK, s"sample smaller than $PqK")
     // driver-side normalization in the same zero-seeded left fold the
     // engines use, so codewords are trained on the very values the
     // scan-side normalizer produces
-    val sample = raw.map { v =>
+    val sample = collectSample(s, dir, KmeansSample, PqK).map { v =>
       var ss = 0.0; var i = 0
       while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
       val nrm = math.sqrt(ss)
       v.map(x => (x.toDouble / nrm).toFloat)
     }
-
-    def l2(a: Array[Float], off: Int, b: Array[Float]): Double = {
-      var d = 0.0; var i = 0
-      while (i < b.length) {
-        val diff = a(off + i).toDouble - b(i).toDouble
-        d += diff * diff; i += 1
-      }
-      d
-    }
-
     Array.tabulate(PqM) { m =>
-      val off = m * PqSubDim
-      // farthest-point init within the subspace (maxmin L2)
-      val first = java.util.Arrays.copyOfRange(sample.head, off, off + PqSubDim)
-      val chosen = scala.collection.mutable.ArrayBuffer(first)
-      val nearest = sample.map(v => l2(v, off, first))
-      while (chosen.length < PqK) {
-        var bestIdx = 0; var bestD = -1.0
-        var i = 0
-        while (i < sample.length) {
-          if (nearest(i) > bestD) { bestD = nearest(i); bestIdx = i }
-          i += 1
-        }
-        val added = java.util.Arrays.copyOfRange(
-          sample(bestIdx), off, off + PqSubDim)
-        chosen += added
-        i = 0
-        while (i < sample.length) {
-          nearest(i) = math.min(nearest(i), l2(sample(i), off, added))
-          i += 1
-        }
-      }
-      var cw = chosen.toArray
-      var iter = 0
-      while (iter < KmeansIters) {
-        val sums = Array.fill(PqK)(new Array[Double](PqSubDim))
-        val counts = new Array[Int](PqK)
-        sample.foreach { v =>
-          var best = 0; var bestD = Double.MaxValue; var c = 0
-          while (c < PqK) {
-            val d = l2(v, off, cw(c))
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          counts(best) += 1
-          var i = 0
-          while (i < PqSubDim) { sums(best)(i) += v(off + i); i += 1 }
-        }
-        cw = Array.tabulate(PqK) { c =>
-          if (counts(c) == 0) cw(c)
-          else Array.tabulate(PqSubDim)(i => (sums(c)(i) / counts(c)).toFloat)
-        }
-        iter += 1
-      }
-      cw
-    } -> n
+      val points = sample.map(v =>
+        java.util.Arrays.copyOfRange(v, m * PqSubDim, (m + 1) * PqSubDim))
+      lloyd(points, farthestPoints(points, PqK, l2), points.length)(nearestByL2)
+    } -> embeddingsCount(s, dir)
   }
 
   @volatile private[graft] var lastPqKey: Option[String] = None
@@ -3014,18 +2960,16 @@ object Similarity {
        |FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id
        |ORDER BY c.vec_id""".stripMargin
 
-  /** Oracle for an EXPLICIT corpus: trains (or cache-hits) the
-    * quantizer for `dir` on demand, so the s3/d10 entries never depend
-    * on which corpus happened to run last — the dump path Verify uses. */
-  def oracleFor(s: SparkSession, dir: String): Map[String, String] = {
-    val cent = centroidsFor(s, dir)
-    val pq = pqFor(s, dir)
+  /** The generated entries for the fine quantizer `cent`, the s12
+    * quantizer `c12` and the PQ model `pq`, over the static ones. */
+  private def oracleWith(cent: Array[Array[Float]], c12: Array[Array[Float]],
+      pq: (Array[Array[Array[Float]]], Long)): Map[String, String] =
     staticOracle +
       ("s3_ann_ivf" -> s3OracleSql(cent)) +
-      ("s12_knn_graph" -> s12OracleFor(s12CentroidsFor(s, dir))) +
-      ("s14_ann_graph" -> s14OracleFor(s12CentroidsFor(s, dir))) +
-      ("s15_graph_admit" -> s15OracleFor(s12CentroidsFor(s, dir))) +
-      ("s18_graph_communities" -> s18OracleFor(s12CentroidsFor(s, dir))) +
+      ("s12_knn_graph" -> s12OracleFor(c12)) +
+      ("s14_ann_graph" -> s14OracleFor(c12)) +
+      ("s15_graph_admit" -> s15OracleFor(c12)) +
+      ("s18_graph_communities" -> s18OracleFor(c12)) +
       ("s9_ann_filtered" -> s9OracleSql(cent)) +
       ("s17_range_search" -> s17OracleSql(cent)) +
       ("d10_semdedup" -> d10OracleSql(cent)) +
@@ -3036,6 +2980,14 @@ object Similarity {
       ("s13_compact_index" -> s13OracleSql(cent)) +
       ("c28_admit_shard" -> Curation.c28OracleSql(cent)) +
       ("d12_semdedup_incremental" -> d12OracleSql(cent))
+
+  /** Oracle for an EXPLICIT corpus: trains (or cache-hits) the
+    * quantizer for `dir` on demand, so the s3/d10 entries never depend
+    * on which corpus happened to run last — the dump path Verify uses. */
+  def oracleFor(s: SparkSession, dir: String): Map[String, String] = {
+    val cent = centroidsFor(s, dir)
+    val pq = pqFor(s, dir)
+    oracleWith(cent, s12CentroidsFor(s, dir), pq)
   }
 
   /** s1/s2 are static SQL; s3's entry requires a trained quantizer.
@@ -3051,28 +3003,12 @@ object Similarity {
     val pqCached = lastPqKey.flatMap(
       peek[(Array[Array[Array[Float]]], Long)](Jvm, "similarity.pq", _))
     (centroids(lastCorpusKey), pqCached) match {
+      // the s12 quantizer shares s3's entry whenever its scaled cell
+      // count is 16 (every gate corpus); a corpus where they differ
+      // has necessarily RUN s12 (that is how a dump is taken), so
+      // lastS12Key resolves — fall back to c otherwise
       case (Some(c), Some(p)) =>
-        // the s12 quantizer shares s3's entry whenever its scaled cell
-        // count is 16 (every gate corpus); a corpus where they differ
-        // has necessarily RUN s12 (that is how a dump is taken), so
-        // lastS12Key resolves — fall back to c otherwise
-        val c12 = centroids(lastS12Key).getOrElse(c)
-        staticOracle +
-        ("s3_ann_ivf" -> s3OracleSql(c)) +
-        ("s12_knn_graph" -> s12OracleFor(c12)) +
-        ("s14_ann_graph" -> s14OracleFor(c12)) +
-        ("s15_graph_admit" -> s15OracleFor(c12)) +
-        ("s18_graph_communities" -> s18OracleFor(c12)) +
-        ("s9_ann_filtered" -> s9OracleSql(c)) +
-        ("s17_range_search" -> s17OracleSql(c)) +
-        ("d10_semdedup" -> d10OracleSql(c)) +
-        ("s6_ann_pq" -> s6OracleSql(p)) +
-        ("s7_ann_ivfpq" -> s7OracleSql(c, p)) +
-        ("s8_ann_incremental" -> s8OracleSql(c)) +
-        ("s11_ann_forget" -> s11OracleSql(c)) +
-        ("s13_compact_index" -> s13OracleSql(c)) +
-        ("c28_admit_shard" -> Curation.c28OracleSql(c)) +
-        ("d12_semdedup_incremental" -> d12OracleSql(c))
+        oracleWith(c, centroids(lastS12Key).getOrElse(c), p)
       case _ => throw new IllegalStateException(
         "s3/d10/s6/s7 oracle requested but no trained quantizer is " +
           "cached for any corpus — run the queries for the gate corpus " +

@@ -1,7 +1,7 @@
 package graft
 
 /** Dev-only same-JVM alternating A/B of GATE queries under a flipped
-  * runtime conf — the Q46Ab protocol generalized: run the named
+  * runtime conf — the r18 q46 cut-vs-pushed A/B protocol generalized: run the named
   * queries' noop-sink wall with the conf at valueA, then at valueB,
   * alternating A/B/A/B so box-weather waves hit both sides equally
   * (the only trustworthy comparison this box permits — SURVEY §6).

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, TextOps}
 
 /** Dev-only stage decomposition of d14_containment's wall (the r17
-  * Q46Probe protocol): times each prefix of the pipeline through the
-  * noop sink, 3 reps, medians. */
+  * q46 stage-probe protocol, OPTIMIZATION_r17.md): times each prefix
+  * of the pipeline through the noop sink, 3 reps, medians. */
 object D14Probe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")

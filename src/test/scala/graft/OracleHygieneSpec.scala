@@ -23,6 +23,16 @@ class OracleHygieneSpec extends AnyFunSuite {
       s"oracles cast a raw regexp_extract: ${bad.toSeq.sorted.mkString(", ")}")
   }
 
+  test("the static oracle map equals the corpus-aware dump of the " +
+    "corpus used last") {
+    val dumped = SparkEntry.oracleSqlFor(TestSpark.spark, TestSpark.SfDir)
+    val static = SparkEntry.oracleSql
+    val differ = (dumped.keySet ++ static.keySet)
+      .filter(k => dumped.get(k) != static.get(k))
+    assert(differ.isEmpty,
+      s"oracleSql and oracleSqlFor differ on: ${differ.toSeq.sorted.mkString(", ")}")
+  }
+
   test("every gate query has an oracle and vice versa") {
     val q = SparkEntry.queries.keySet
     val o = oracles.keySet

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Dev-only per-query formatted-plan dump for the optimization-round
-  * deliverables (`plans/r17/<query>_<tag>.txt`): materializes each
+  * deliverables (`<outDir>/<query>_<tag>.txt`): materializes each
   * requested query through its own QueryExecution (so the AQE FINAL
   * plan is shown, the Explain.scala discipline) and writes
   * `.explain("formatted")` output to one file per query.

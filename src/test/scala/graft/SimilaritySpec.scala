@@ -877,6 +877,35 @@ class SimilaritySpec extends AnyFunSuite {
       "raw-graph floor — the seeded beam should dominate s12's own edges")
   }
 
+  /** A 5,000-row dim-4 corpus: with 2,500 cells the whole corpus is the
+    * sample, three Lloyd chunks long. */
+  private def stageCeilingCorpus(): String = {
+    val dir = "target/test-s12-ceiling"
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 5000).map { i =>
+      (i.toLong, Array.fill(4)(rnd.nextFloat() * 2f - 1f), i.toLong % 7)
+    }
+    import s.implicits._
+    rows.toDF("vec_id", "embedding", "label")
+      .repartition(2).write.mode("overwrite")
+      .parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  /** A 3,000-row dim-64 corpus and its rows. */
+  private def stageDistCorpus(): (String, Seq[(Long, Array[Float], Long)]) = {
+    val dir = "target/test-kmeans-dist"
+    val rnd = new scala.util.Random(13)
+    val rows = (0 until 3000).map { i =>
+      (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f), i.toLong % 5)
+    }
+    import s.implicits._
+    rows.toDF("vec_id", "embedding", "label")
+      .repartition(3).write.mode("overwrite")
+      .parquet(s"$dir/embeddings.parquet")
+    (dir, rows)
+  }
+
   test("kmeans training sample scales with the cell count: a quantizer " +
     "past the old fixed-2048 cap trains (r15 s12 ceiling), " +
     "deterministically, while gate-scale sampling is unchanged") {
@@ -896,16 +925,7 @@ class SimilaritySpec extends AnyFunSuite {
     // corpus is the sample) but n ≥ cells — the exact shape the old cap
     // rejected. dim 4 keeps the Lloyd pass cheap; the quantizer is
     // dim-agnostic.
-    val dir = "target/test-s12-ceiling"
-    val rnd = new scala.util.Random(7)
-    val rows = (0 until 5000).map { i =>
-      (i.toLong, Array.fill(4)(rnd.nextFloat() * 2f - 1f), i.toLong % 7)
-    }
-    import s.implicits._
-    rows.toDF("vec_id", "embedding", "label")
-      .repartition(2).write.mode("overwrite")
-      .parquet(s"$dir/embeddings.parquet")
-
+    val dir = stageCeilingCorpus()
     val trained = Similarity.kmeansCentroids(s, dir, cells)
     assert(trained.length == cells)
     assert(trained.forall(_.length == 4))
@@ -931,57 +951,76 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.s12CellsFor(200000)) // the 100x-probe corpus
       <= Similarity.KmeansDriverMaxSample)
 
-    // stage a dim-64 corpus (the assignment kernel's fixed stride) and
+    // stage a dim-64 corpus (the width of the gate corpora) and
     // force the handoff by lowering the cap below the sample target
-    val dir = "target/test-kmeans-dist"
-    val rnd = new scala.util.Random(13)
-    val rows = (0 until 3000).map { i =>
-      (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f), i.toLong % 5)
-    }
-    import s.implicits._
-    rows.toDF("vec_id", "embedding", "label")
-      .repartition(3).write.mode("overwrite")
-      .parquet(s"$dir/embeddings.parquet")
-
+    val (dir, rows) = stageDistCorpus()
     val cells = 64
-    s.conf.set("spark.graft.kmeans.driverMaxSample", "1000")
-    try {
-      val trained = Similarity.kmeansCentroids(s, dir, cells)
-      assert(trained.length == cells)
-      assert(trained.forall(v => v.length == 64 &&
-        v.forall(x => !x.isNaN && !x.isInfinite)))
+    val trained = Similarity.kmeansCentroids(s, dir, cells,
+      driverMaxSample = 1000)
+    assert(trained.length == cells)
+    assert(trained.forall(v => v.length == 64 &&
+      v.forall(x => !x.isNaN && !x.isInfinite)))
 
-      // Lloyd must not be a no-op: the trained quantizer's objective
-      // (mean max-cosine of the sample to its nearest centroid) should
-      // improve on the seed set's. NOT a theorem — Lloyd is monotone
-      // for SSE / renormalized spherical k-means, not for max-cosine
-      // with arithmetic-mean updates, and the distributed path's float
-      // sums are partition-order dependent — so the bound carries
-      // empirical headroom (measured gap ≈ +0.05 on this seeded
-      // corpus, asserted at -0.02), guarding against a broken update
-      // step, not against ULP drift
-      val sample = rows.map(_._2)
-      def cos(a: Array[Float], b: Array[Float]): Double = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < a.length) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; na += x * x; nb += y * y; i += 1
-        }
-        dot / (math.sqrt(na) * math.sqrt(nb))
+    // Lloyd must not be a no-op: the trained quantizer's objective
+    // (mean max-cosine of the sample to its nearest centroid) should
+    // improve on the seed set's. NOT a theorem — Lloyd is monotone
+    // for SSE / renormalized spherical k-means, not for max-cosine
+    // with arithmetic-mean updates, and the distributed path's float
+    // sums are partition-order dependent — so the bound carries
+    // empirical headroom (measured gap ≈ +0.05 on this seeded
+    // corpus, asserted at -0.02), guarding against a broken update
+    // step, not against ULP drift
+    val sample = rows.map(_._2)
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) {
+        val x = a(i).toDouble; val y = b(i).toDouble
+        dot += x * y; na += x * x; nb += y * y; i += 1
       }
-      def objective(cents: Array[Array[Float]]): Double =
-        sample.map(v => cents.map(c => cos(v, c)).max).sum / sample.length
-      // seeds-only reference: md5-smallest vectors, no iteration —
-      // recompute the seed rule directly
-      val seedSet = rows
-        .sortBy(r => (org.apache.commons.codec.digest.DigestUtils
-          .md5Hex(r._1.toString), r._1))
-        .take(cells).map(_._2).toArray
-      val (objT, objS) = (objective(trained), objective(seedSet))
-      info(f"distributed Lloyd objective: seeds $objS%.4f -> trained $objT%.4f")
-      assert(objT >= objS - 0.02,
-        f"distributed Lloyd scored $objT%.4f, below its seed set $objS%.4f")
-    } finally s.conf.unset("spark.graft.kmeans.driverMaxSample")
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def objective(cents: Array[Array[Float]]): Double =
+      sample.map(v => cents.map(c => cos(v, c)).max).sum / sample.length
+    // seeds-only reference: md5-smallest vectors, no iteration —
+    // recompute the seed rule directly
+    val seedSet = rows
+      .sortBy(r => (org.apache.commons.codec.digest.DigestUtils
+        .md5Hex(r._1.toString), r._1))
+      .take(cells).map(_._2).toArray
+    val (objT, objS) = (objective(trained), objective(seedSet))
+    info(f"distributed Lloyd objective: seeds $objS%.4f -> trained $objT%.4f")
+    assert(objT >= objS - 0.02,
+      f"distributed Lloyd scored $objT%.4f, below its seed set $objS%.4f")
+  }
+
+  test("golden trainer checksums: the fine, coarse and PQ trainers " +
+    "reproduce the pinned float bits") {
+    // the stored artifacts are keyed by the corpus fingerprint alone, so
+    // a stored quantizer cannot show that training still yields the same
+    // floats: drop the memos and call the trainers directly
+    graft.Artifacts.clear("similarity.centroids", "similarity.pq",
+      "similarity.coarse", "similarity.embCount")
+    def pqSig(cb: Array[Array[Array[Float]]]) = Similarity.centroidSig(cb.flatten)
+    val ceiling = stageCeilingCorpus()
+    val (dist, _) = stageDistCorpus()
+    val fine = Similarity.kmeansCentroids(s, ceiling, 2500)
+    val (coarse, route) = Similarity.s12CoarseFor(fine)
+    assert(coarse.length == 50 && route.length == 2500)
+    val got = Seq(
+      "fine16@sf" -> Similarity.centroidSig(Similarity.kmeansCentroids(s, dir)),
+      "fine2500@ceiling" -> Similarity.centroidSig(fine),
+      "coarse50@ceiling" -> Similarity.centroidSig(coarse),
+      "route@ceiling" -> java.util.Arrays.hashCode(route).toString,
+      "pq@sf" -> pqSig(Similarity.pqTrainCodebooks(s, dir)._1),
+      "pq@dist" -> pqSig(Similarity.pqTrainCodebooks(s, dist)._1))
+    val golden = Seq(
+      "fine16@sf" -> "6a419dd5ed6b5281a7b2ed2c68b077fc",
+      "fine2500@ceiling" -> "d70d508a0324e607e86a53b5d542b89f",
+      "coarse50@ceiling" -> "58cae1080c08d69dc32df69dd19c8e0b",
+      "route@ceiling" -> "-570715946",
+      "pq@sf" -> "ee3e93a2e27397853f34f33fc54c6abb",
+      "pq@dist" -> "1e4e06219f0f1ae8beced57fdc863cfd")
+    assert(got == golden)
   }
 
   test("s14 OUT-OF-CORPUS queries (r16 ask #3): probe-seeded beam over a " +

@@ -14,7 +14,11 @@ repo=$(git rev-parse --show-toplevel)
 out=$(mktemp -d "${TMPDIR:-/tmp}/graft-gate.XXXXXX")
 trap 'rm -rf "$out"' EXIT
 cd "$repo"
-sbt --batch "runMain graft.Verify $sf $out/dump" >"$out/verify.log" 2>&1 || {
+# train the quantizers with the code under test: the stored centroids
+# and PQ codebooks are keyed by the corpus alone, so the default store
+# would serve floats an earlier build trained
+sbt --batch "set javaOptions ++= Seq(\"-Dspark.graft.centroids.dir=$out/centroids\", \"-Dspark.graft.pq.dir=$out/pq\")" \
+  "runMain graft.Verify $sf $out/dump" >"$out/verify.log" 2>&1 || {
   tail -n 40 "$out/verify.log" >&2
   echo "gate: graft.Verify failed" >&2
   exit 1
