@@ -142,17 +142,6 @@ object Tables {
     if (parts < cores) df.repartition(cores) else df
   }
 
-  /** Metadata-only on-disk size of one table (sum of file lengths, one
-    * FS listing, no data read, no Spark job) — the cheap scale probe
-    * size-adaptive operators gate on (the quantile family's serial-
-    * window escape): row counts would need a footer read or a job,
-    * but every size gate here only needs order-of-magnitude. */
-  def tableBytes(s: SparkSession, dir: String, table: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(p(dir, table))
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(path).map(_.getLen).sum
-  }
-
   /** Metadata-only fingerprint of one table: path + per-file
     * (name, length, mtime). One FS listing, no data read — the key of
     * every per-corpus [[Artifacts]] entry: a re-ingested corpus at the

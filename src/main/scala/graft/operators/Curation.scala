@@ -255,7 +255,7 @@ object Curation {
     val base = Tables.documentsSpread(s, dir)
       .withColumn("h", md5(TextOps.normText(col("text"))))
       .withColumn("ws_tokens",
-        size(expr("filter(split(text, ' '), t -> t <> '')")).cast("long"))
+        size(TextOps.toksOf("text")).cast("long"))
       .join(quality, "doc_id")
     base.groupBy("source", "lang", "h")
       .agg(count(lit(1)).as("cnt"),
@@ -724,7 +724,7 @@ object Curation {
   def c6PackSequences(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"),
-        expr("size(filter(split(text, ' '), t -> t <> ''))").as("n_tok"),
+        size(TextOps.toksOf("text")).as("n_tok"),
         (col("doc_id") % C6PackShards).cast("int").as("shard"))
     packSequences(toks, "doc_id", "n_tok", "shard", C6PackBudget)
       .select(col("doc_id"), col("shard"), col("n_tok"), col("seq_id"))
@@ -1182,7 +1182,7 @@ object Curation {
     *
     * The interesting part at scale is DENSE POSITION ASSIGNMENT
     * without a single-partition window: `row_number() OVER (ORDER BY
-    * key)` serializes the corpus through one task (the q33 sin). The
+    * key)` serializes the corpus through one task. The
     * classic distributed enumeration instead: (1) bucket by the
     * key's first hex byte — buckets are lexicographic RANGES of the
     * key, so bucket-asc + in-bucket-key-asc IS global key order;
@@ -1981,7 +1981,7 @@ object Curation {
       // O(sources) rows; one corpus pass total
       val perSrc = sc.cut(Tables.documentsSpread(s, dir)
         .withColumn("ws_tokens",
-          size(expr("filter(split(text, ' '), t -> t <> '')")).cast("long"))
+          size(TextOps.toksOf("text")).cast("long"))
         .groupBy("source").agg(sum("ws_tokens").as("n_tokens")))
       val nmax = perSrc.agg(max("n_tokens").as("n_max"))
       val alloc = perSrc.crossJoin(broadcast(nmax))
@@ -2006,8 +2006,8 @@ object Curation {
     "c31_epoch_plan" ->
       s"""WITH per_src AS (
          |  SELECT source,
-         |    CAST(sum(len(list_filter(string_split(text, ' '),
-         |      t -> t <> ''))) AS BIGINT) AS n_tokens
+         |    CAST(sum(len(${TextOps.sqlToksOf("text")})) AS BIGINT)
+         |      AS n_tokens
          |  FROM documents GROUP BY source),
          |mx AS (SELECT max(n_tokens) AS n_max FROM per_src),
          |alloc AS (
@@ -2251,8 +2251,7 @@ object Curation {
     "c6_pack_sequences" ->
       s"""WITH tok AS (
          |  SELECT doc_id,
-         |    CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
-         |      AS INTEGER) AS n_tok,
+         |    CAST(len(${TextOps.sqlToksOf("text")}) AS INTEGER) AS n_tok,
          |    CAST(doc_id % $C6PackShards AS INTEGER) AS shard
          |  FROM documents),
          |cum AS (
@@ -2443,8 +2442,7 @@ object Curation {
          |  SELECT *, ${TextOps.sqlNormText} AS norm FROM documents),
          |tok_t AS (SELECT *, ${TextOps.sqlToks} AS toks FROM norm_t),
          |m AS (SELECT doc_id, source, lang, n_chars, md5(norm) AS h,
-         |    len(list_filter(string_split(text, ' '), t -> t <> ''))
-         |      AS ws_tokens,
+         |    len(${TextOps.sqlToksOf("text")}) AS ws_tokens,
          |    CAST(len(toks) AS INTEGER) AS n_tok,
          |    CAST(len(list_filter(toks,
          |      t -> t IN (${TextAnalysis.sqlStopList}))) AS BIGINT) AS n_stop

@@ -160,18 +160,6 @@ object Graph {
   val PrScale = 1000000L
   val PrTopK = 20
 
-  /** Node-count ceiling for the broadcast-rank fast path. A rank row
-    * is two longs (~16 B packed, ~50 B as a broadcast hash relation),
-    * so 4M nodes ≈ 200 MB of executor heap per broadcast — safely
-    * inside a production executor while far above the gate corpora.
-    * Past it q36 drops the hint and the SAME spelling degrades
-    * gracefully to the classic two-shuffle iteration, rather than
-    * OOMing on a hard-coded broadcast (the round-11 verdict's scale
-    * defect: the scaladoc promised the degradation but nothing
-    * implemented it). Integer fixed-point arithmetic is order-free,
-    * so the two branches are bit-identical (spec-pinned). */
-  val PrBroadcastMaxNodes = 4000000L
-
   /** q36: PAGERANK over the customer–supplier trade graph — the
     * iterative message-passing analytic beside d8's star contraction
     * (components answer "which nodes connect"; PageRank answers "which
@@ -204,18 +192,10 @@ object Graph {
     * final top-k is a TakeOrderedAndProject. The per-round eager
     * localCheckpoint on ranks is cheap (node-sized) and keeps the
     * broadcast subtree flat — without it, materializing round N's
-    * broadcast would re-execute rounds 1..N-1. At 100 TB: edges
-    * persist to reliable storage; the rank-side join is
-    * SIZE-ADAPTIVE — the node count (read from the checkpointed rank
-    * vector, a free action) picks the broadcast fast path below
-    * [[PrBroadcastMaxNodes]] and the classic two-shuffle iteration
-    * above it, so the plan degrades instead of OOMing at ~10⁹
-    * nodes. */
+    * broadcast would re-execute rounds 1..N-1. A rank row is two
+    * longs, so the broadcast rank vector stays small at every corpus
+    * here (about 16k nodes at sf0.1). */
   def q36Pagerank(s: SparkSession, dir: String): DataFrame =
-    q36PagerankWith(s, dir, PrBroadcastMaxNodes)
-
-  private[graft] def q36PagerankWith(s: SparkSession, dir: String,
-      broadcastMaxNodes: Long): DataFrame =
     graft.Artifacts.scoped(s, "graph.q36") { sc =>
       // Integer node ids on the wire (custkey → 2k, suppkey → 2k+1):
       // every shuffle hashes and compares fixed-width longs instead of
@@ -243,12 +223,8 @@ object Graph {
       val eo = sc.cut(edges.join(broadcast(outdeg), "src"))
       val init = sc.cut(outdeg
         .select(col("src").as("node"), lit(PrScale).as("rank")))
-      // the adaptive choice: counting the eagerly-checkpointed rank
-      // vector is a cached-partition count, not a recompute
-      val useBroadcast = init.count() <= broadcastMaxNodes
       sc.rounds(init, PrIters) { ranks =>
-        eo.join(if (useBroadcast) broadcast(ranks) else ranks,
-            col("src") === col("node"))
+        eo.join(broadcast(ranks), col("src") === col("node"))
           .select(col("dst"), expr("rank div outdeg").as("contrib"))
           .groupBy("dst").agg(sum("contrib").as("inflow"))
           .select(col("dst").as("node"),

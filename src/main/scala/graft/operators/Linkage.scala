@@ -37,26 +37,6 @@ object Linkage {
     * requires at the hashed joins below pin this coupling in code). */
   val FuzzyMaxDist = 1
 
-  /** Name-count floor above which the candidate frame is CUT (eager
-    * localCheckpoint between the candidate DISTINCT and the
-    * levenshtein verify). Left lazy, Catalyst pushes the verify into
-    * the join condition and runs the O(len²) levenshtein per
-    * key-match INSTANCE (~10–19× per pair on dense ids) instead of
-    * per distinct pair — the r17 q46 plan defect, worth −36% in the
-    * driver's own run. The cut costs one candidate-sized
-    * materialization job, so BELOW this floor (where the instance
-    * blow-up is small absolute work) the lazy plan is cheaper — the
-    * r17 verdict's q53 adjudication (+29% quiet from an
-    * unconditional cut on ~20k names; re-measured r18 on the
-    * same-JVM alternating protocol at sf0.1: q53 lazy median 1.55 s
-    * vs cut 1.65 s — the lazy side wins below the floor. q46 keeps
-    * its UNCONDITIONAL cut: the same protocol (OPTIMIZATION_r18) reads
-    * cut median 3.23 s spread 0.30 vs pushed median 4.15 s spread 2.30 —
-    * its candidate×instance volume is ~an order larger per name and
-    * load-amplified). Conf-settable without a rebuild
-    * (spark.graft.linkage.q53CutMinNames). */
-  val Q53CutMinNames = 200000L
-
   /** Deterministic dirty-list derivation: every [[DirtyMod]]th customer
     * arrives re-keyed past the corpus max; those whose key divides
     * [[ExactMod]] keep their name VERBATIM (the exact-match branch,
@@ -151,7 +131,9 @@ object Linkage {
       // per key-match INSTANCE (~10–19× per pair on dense ids — the
       // probe measured the pushed spelling at +1.7 s of the 5.2 s wall)
       // instead of once per distinct candidate pair; the checkpointed
-      // frame is candidate-bounded (≤ keys × bucket size)
+      // frame is candidate-bounded (≤ keys × bucket size). Same-JVM
+      // alternating A/B at sf0.1 (OPTIMIZATION_r18): cut median 3.23 s,
+      // pushed 4.15 s
       require(FuzzyMaxDist == 1,
         "hashed deletion-key join requires the single-delete neighborhood")
       val cand = sc.cut(dirtyKeys.join(cleanKeys, "k")
@@ -197,69 +179,63 @@ object Linkage {
     * volume); one candidate-bounded verify; one name-keyed
     * match-count aggregation; verdicts joined back — all equi-joins,
     * no closure, no iteration. All-integer/string output,
-    * hash-exact. customer. */
-  def q53ErClusters(s: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.scoped(s, "linkage.q53") { sc =>
-      val clean = Tables.customer(s, dir)
-        .select(col("c_custkey").as("rec_id"), col("c_name").as("name"))
-      val maxId = clean.agg(max("rec_id")).head().getLong(0)
-      val dirty = Tables.customer(s, dir)
-        .filter(col("c_custkey") % DirtyMod === 0)
-        .select((col("c_custkey") + maxId + 1).as("rec_id"),
-          when(col("c_custkey") % ExactMod === 0, col("c_name"))
-            .otherwise(expr(
-              "concat(substr(c_name, 1, 9 + CAST(c_custkey % 9 AS INT)), " +
-                "substr(c_name, 11 + CAST(c_custkey % 9 AS INT), 1000000))"))
-            .as("name"))
-      val recs = clean.unionByName(dirty)
-      val names = recs.groupBy("name").agg(min("rec_id").as("nid"),
-        max(when(col("rec_id") <= maxId, 1).otherwise(0)).as("is_clean"))
-      val masters = names.filter(col("is_clean") === 1)
-      val incoming = names.filter(col("is_clean") === 0)
-      // hashed deletion keys — the q46 spelling and argument (a collision
-      // only adds candidates; the exact levenshtein verify removes them)
-      val mKeys = masters.select(col("nid").as("m_nid"),
-          col("name").as("m_name"), explode(expr(delKeysExpr("name"))).as("ks"))
-        .select(col("m_nid"), col("m_name"), xxhash64(col("ks")).as("k"))
-      val iKeys = incoming.select(col("nid"), col("name"),
-          explode(expr(delKeysExpr("name"))).as("ks"))
-        .select(col("nid"), col("name"), xxhash64(col("ks")).as("k"))
-      require(FuzzyMaxDist == 1,
-        "hashed deletion-key join requires the single-delete neighborhood")
-      // distinct cut before the verify — the q46 pushed-levenshtein fix,
-      // SIZE-GATED on the record count (maxId ≈ customer count, already
-      // collected above): below [[Q53CutMinNames]] the lazy plan's
-      // pushed verify is cheaper than the cut's materialization job
-      // (measurements at the constant's scaladoc). Both spellings are
-      // result-identical — the cut changes WHERE the verify runs, never
-      // what it keeps (r17 shipped the lazy spelling hash-green, r17opt
-      // the cut spelling hash-green).
-      val mcand0 = iKeys.join(mKeys, "k")
-        .select("nid", "name", "m_nid", "m_name").distinct()
-      val mcand =
-        if (maxId >= s.conf.get("spark.graft.linkage.q53CutMinNames",
-            Q53CutMinNames.toString).toLong) sc.cut(mcand0)
-        else mcand0
-      val matches = mcand
-        .filter(levenshtein(col("name"), col("m_name")) <= FuzzyMaxDist)
-        .groupBy("nid")
-        .agg(count(lit(1)).as("n_matches"), min("m_nid").as("m_min"))
-      recs.join(names, "name")
-        .join(matches, Seq("nid"), "left")
-        .select(col("rec_id"),
-          when(col("is_clean") === 1, col("nid"))
-            .when(col("n_matches") === 1, col("m_min"))
-            .otherwise(col("nid")).as("entity_id"),
-          // verdicts are RECORD-level: an exact re-upload carries a
-          // master NAME but is itself an incoming record — it reads
-          // 'merged' (the distance-0 auto-merge), never 'master'
-          when(col("rec_id") <= maxId, lit("master"))
-            .when(col("is_clean") === 1, lit("merged"))
-            .when(col("n_matches") === 1, lit("merged"))
-            .when(col("n_matches") > 1, lit("ambiguous"))
-            .otherwise(lit("new")).as("status"))
-        .orderBy("rec_id")
-    }
+    * hash-exact. customer.
+    *
+    * Unlike q46, the candidate DISTINCT stays lazy: Catalyst pushes
+    * the levenshtein verify into the join condition, so it runs per
+    * key-match instance instead of per distinct pair, and that extra
+    * work costs less than the materialization job q46's cut pays
+    * (same-JVM alternating A/B, lazy vs cut median: 1.55 vs 1.65 s at
+    * sf0.1, OPTIMIZATION_r18; 1.91 vs 2.08 s on the 10× ScaleBench
+    * copy, lazy faster in 7 of 8 pairs). */
+  def q53ErClusters(s: SparkSession, dir: String): DataFrame = {
+    val clean = Tables.customer(s, dir)
+      .select(col("c_custkey").as("rec_id"), col("c_name").as("name"))
+    val maxId = clean.agg(max("rec_id")).head().getLong(0)
+    val dirty = Tables.customer(s, dir)
+      .filter(col("c_custkey") % DirtyMod === 0)
+      .select((col("c_custkey") + maxId + 1).as("rec_id"),
+        when(col("c_custkey") % ExactMod === 0, col("c_name"))
+          .otherwise(expr(
+            "concat(substr(c_name, 1, 9 + CAST(c_custkey % 9 AS INT)), " +
+              "substr(c_name, 11 + CAST(c_custkey % 9 AS INT), 1000000))"))
+          .as("name"))
+    val recs = clean.unionByName(dirty)
+    val names = recs.groupBy("name").agg(min("rec_id").as("nid"),
+      max(when(col("rec_id") <= maxId, 1).otherwise(0)).as("is_clean"))
+    val masters = names.filter(col("is_clean") === 1)
+    val incoming = names.filter(col("is_clean") === 0)
+    // hashed deletion keys — the q46 spelling and argument (a collision
+    // only adds candidates; the exact levenshtein verify removes them)
+    val mKeys = masters.select(col("nid").as("m_nid"),
+        col("name").as("m_name"), explode(expr(delKeysExpr("name"))).as("ks"))
+      .select(col("m_nid"), col("m_name"), xxhash64(col("ks")).as("k"))
+    val iKeys = incoming.select(col("nid"), col("name"),
+        explode(expr(delKeysExpr("name"))).as("ks"))
+      .select(col("nid"), col("name"), xxhash64(col("ks")).as("k"))
+    require(FuzzyMaxDist == 1,
+      "hashed deletion-key join requires the single-delete neighborhood")
+    val matches = iKeys.join(mKeys, "k")
+      .select("nid", "name", "m_nid", "m_name").distinct()
+      .filter(levenshtein(col("name"), col("m_name")) <= FuzzyMaxDist)
+      .groupBy("nid")
+      .agg(count(lit(1)).as("n_matches"), min("m_nid").as("m_min"))
+    recs.join(names, "name")
+      .join(matches, Seq("nid"), "left")
+      .select(col("rec_id"),
+        when(col("is_clean") === 1, col("nid"))
+          .when(col("n_matches") === 1, col("m_min"))
+          .otherwise(col("nid")).as("entity_id"),
+        // verdicts are RECORD-level: an exact re-upload carries a
+        // master NAME but is itself an incoming record — it reads
+        // 'merged' (the distance-0 auto-merge), never 'master'
+        when(col("rec_id") <= maxId, lit("master"))
+          .when(col("is_clean") === 1, lit("merged"))
+          .when(col("n_matches") === 1, lit("merged"))
+          .when(col("n_matches") > 1, lit("ambiguous"))
+          .otherwise(lit("new")).as("status"))
+      .orderBy("rec_id")
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q46_fuzzy_join" -> q46FuzzyJoin,

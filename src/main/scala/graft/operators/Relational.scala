@@ -527,6 +527,19 @@ object Relational {
       .orderBy("stage")
   }
 
+  /** (grp, v, cnt) histogram → + `cum` (running count of rows with
+    * value ≤ v within grp) and `n` (group total), in one keyed window
+    * pass: a group's whole distinct-value histogram lands in one task,
+    * a few hundred thousand rows at sf0.1. */
+  private def rankedHist(hist: DataFrame, grp: String, v: String)
+      : DataFrame = {
+    val wOrd = Window.partitionBy(grp).orderBy(v)
+    val wAll = Window.partitionBy(grp)
+    hist
+      .withColumn("cum", sum("cnt").over(wOrd))
+      .withColumn("n", sum("cnt").over(wAll))
+  }
+
   /** q33: per-group EXACT quantile summary (p25/p50/p75 + min/max/n) —
     * the `describe`-style distribution profile every reference frame
     * gets before modeling (tasks.py's min/max/mean/median family asked
@@ -554,125 +567,49 @@ object Relational {
     * interpolation exactly as `percentile`/`quantile_cont` define it.
     * All arithmetic stays on the exact grid (see above), so the
     * rewrite is bit-identical to the builtin, and the oracle keeps
-    * DuckDB's independent quantile_cont as the cross-check. */
-  /** Width of the value-range buckets the quantile family's two-phase
-    * cumulative counts run within (the c27HistB/t17HistB sibling):
-    * 2¹⁴ spans cent-valued price columns in a few hundred parallel
-    * windows per group. */
-  private val RankHistB = 16384L
-
-  /** Input-size floor (table parquet bytes) above which the quantile
-    * family takes the TWO-PHASE cumulative spelling; below it the one
-    * serial per-group window is strictly cheaper (measured r17→r18:
-    * two-phase cost q33 +18% / q39 +27% quiet at sf0.1 — the r17
-    * verdict's adjudication item #1 — because its fixed machinery,
-    * one extra histogram pass + a broadcast-build barrier, dwarfs the
-    * ~198k-row serial window it parallelizes). 256 MiB of lineitem
-    * parquet ≈ 10M rows ≈ the largest per-group distinct-value
-    * histogram a single window task should ever hold; conf-settable
-    * so a cluster can move the trade without a rebuild. Both
-    * spellings are bit-identical (integer sums, same rank algebra —
-    * r16 shipped serial, r17 shipped two-phase, both 162/162
-    * hash-green vs the oracle's independent global-window spelling),
-    * so the gate changes the PLAN only, never the result. */
-  private def rankedHistTwoPhase(s: SparkSession, dir: String): Boolean =
-    Tables.tableBytes(s, dir, "lineitem") >= s.conf.get(
-      "spark.graft.quantile.twoPhaseMinBytes",
-      (256L * 1024 * 1024).toString).toLong
-
-  /** (grp, v, cnt) histogram → + `cum` (running count of rows with
-    * value ≤ v within grp) and `n` (group total).
-    *
-    * `twoPhase = false`: one keyed window pass (the r16 spelling) —
-    * a group's ENTIRE distinct-value histogram lands in ONE task,
-    * fine below [[rankedHistTwoPhase]]'s floor, the "q33 sin" above
-    * it (the whole column's distinct values at 100 TB).
-    *
-    * `twoPhase = true`: the c27/t17 two-phase prefix sum — values
-    * must be NONNEGATIVE so `v div` [[RankHistB]] buckets are
-    * lexicographic RANGES of v (guarded per row below: a signed
-    * column fails loudly instead of returning wrong ranks — r17
-    * advice #1): in-bucket cumulative sums run as hundreds of
-    * parallel windows, an exclusive prefix of per-bucket totals (the
-    * only serial frame, bucket-count-sized) broadcasts back,
-    * cum = offset + in-bucket cum; `n` rides the same bucket-total
-    * frame. The histogram feeds BOTH the window branch and the
-    * bucket-total branch; un-materialized, Catalyst's per-branch
-    * column pruning defeats exchange reuse and the whole input scan +
-    * histogram aggregation ran TWICE (r17's q33/q39 plans:
-    * two `Scan parquet` of lineitem — the measured regression), so a
-    * non-checkpointed input is cut here, in the calling query's scope.
-    * All integer sums — bit-identical to the
-    * serial window, which the DuckDB oracles keep (hash-equality
-    * proves two-phase ≡ global, the t17/c27 argument). */
-  private def rankedHist(sc: graft.Artifacts.Scope, hist: DataFrame,
-      grp: String, v: String, twoPhase: Boolean,
-      materialized: Boolean = false): DataFrame = {
-    if (!twoPhase) {
-      val wOrd = Window.partitionBy(grp).orderBy(v)
-      val wAll = Window.partitionBy(grp)
-      return hist
-        .withColumn("cum", sum("cnt").over(wOrd))
-        .withColumn("n", sum("cnt").over(wAll))
+    * DuckDB's independent quantile_cont as the cross-check. The window
+    * stays serial per group: a bucketed two-phase prefix sum that
+    * spreads it over parallel windows lost at sf0.1 (1.88 vs 1.81 s,
+    * OPTIMIZATION_r18) and showed no clear margin on the 10×
+    * ScaleBench copy (same-JVM alternating pairs: faster in 6 of 8 for
+    * q33, median 3.54 vs 3.66 s; 5 of 8 for q39; 3 of 8 for q48). */
+  def q33Quantiles(s: SparkSession, dir: String): DataFrame = {
+    val hist = Tables.lineitem(s, dir)
+      .select(col("l_returnflag"),
+        expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
+      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
+    var ranked = rankedHist(hist, "l_returnflag", "cents")
+    val qs = Seq("25" -> 0.25, "50" -> 0.5, "75" -> 0.75)
+    qs.foreach { case (tag, q) =>
+      // rank position rp = q·(n−1): exact (q is an exact binary
+      // double, n−1 < 2^50); the straddling ranks are its floor/ceil
+      ranked = ranked.withColumn(s"rp$tag",
+        expr(s"CAST($q AS DOUBLE) * CAST(n - 1 AS DOUBLE)"))
     }
-    val h = if (materialized) hist else sc.cut(hist)
-    val hbed = h.withColumn("hb",
-      when(col(v) >= 0, expr(s"$v div ${RankHistB}L"))
-        .otherwise(raise_error(lit(
-          s"rankedHist: negative $v breaks the bucket-range invariant"))))
-    val inW = Window.partitionBy(grp, "hb").orderBy(v)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = hbed.groupBy(col(grp), col("hb")).agg(sum("cnt").as("bc"))
-      .withColumn("off",
-        coalesce(sum("bc").over(Window.partitionBy(grp).orderBy("hb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum("bc").over(Window.partitionBy(grp)))
-      .select(col(grp), col("hb"), col("off"), col("n"))
-    hbed.withColumn("incum", sum("cnt").over(inW))
-      .join(broadcast(offs), Seq(grp, "hb"))
-      .withColumn("cum", col("incum") + col("off"))
-      .drop("hb", "incum", "off")
+    def valueAt(pos: org.apache.spark.sql.Column) =
+      max(when(col("cum") - col("cnt") <= pos && pos <= col("cum") - 1,
+        col("cents")))
+    ranked.groupBy("l_returnflag")
+      .agg(max("n").as("n"),
+        min("cents").as("min_cents"),
+        max("cents").as("max_cents"),
+        max(col("rp25")).as("rp25"),
+        max(col("rp50")).as("rp50"),
+        max(col("rp75")).as("rp75"),
+        valueAt(floor(col("rp25"))).as("lo25"),
+        valueAt(ceil(col("rp25"))).as("hi25"),
+        valueAt(floor(col("rp50"))).as("lo50"),
+        valueAt(ceil(col("rp50"))).as("hi50"),
+        valueAt(floor(col("rp75"))).as("lo75"),
+        valueAt(ceil(col("rp75"))).as("hi75"))
+      .select(col("l_returnflag"), col("n"),
+        col("min_cents"),
+        expr(quantileInterp("25")).as("p25"),
+        expr(quantileInterp("50")).as("p50"),
+        expr(quantileInterp("75")).as("p75"),
+        col("max_cents"))
+      .orderBy("l_returnflag")
   }
-
-  def q33Quantiles(s: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.scoped(s, "relational.q33") { sc =>
-      val hist = Tables.lineitem(s, dir)
-        .select(col("l_returnflag"),
-          expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
-      var ranked = rankedHist(sc, hist, "l_returnflag", "cents",
-        twoPhase = rankedHistTwoPhase(s, dir))
-      val qs = Seq("25" -> 0.25, "50" -> 0.5, "75" -> 0.75)
-      qs.foreach { case (tag, q) =>
-        // rank position rp = q·(n−1): exact (q is an exact binary
-        // double, n−1 < 2^50); the straddling ranks are its floor/ceil
-        ranked = ranked.withColumn(s"rp$tag",
-          expr(s"CAST($q AS DOUBLE) * CAST(n - 1 AS DOUBLE)"))
-      }
-      def valueAt(pos: org.apache.spark.sql.Column) =
-        max(when(col("cum") - col("cnt") <= pos && pos <= col("cum") - 1,
-          col("cents")))
-      ranked.groupBy("l_returnflag")
-        .agg(max("n").as("n"),
-          min("cents").as("min_cents"),
-          max("cents").as("max_cents"),
-          max(col("rp25")).as("rp25"),
-          max(col("rp50")).as("rp50"),
-          max(col("rp75")).as("rp75"),
-          valueAt(floor(col("rp25"))).as("lo25"),
-          valueAt(ceil(col("rp25"))).as("hi25"),
-          valueAt(floor(col("rp50"))).as("lo50"),
-          valueAt(ceil(col("rp50"))).as("hi50"),
-          valueAt(floor(col("rp75"))).as("lo75"),
-          valueAt(ceil(col("rp75"))).as("hi75"))
-        .select(col("l_returnflag"), col("n"),
-          col("min_cents"),
-          expr(quantileInterp("25")).as("p25"),
-          expr(quantileInterp("50")).as("p50"),
-          expr(quantileInterp("75")).as("p75"),
-          col("max_cents"))
-        .orderBy("l_returnflag")
-    }
 
   /** q39: TAIL quantiles (p90/p95/p99) per group — the production
     * percentile family q33's scaladoc deferred. Arbitrary fracs don't
@@ -692,29 +629,24 @@ object Relational {
     * `percentile`'s per-task value maps (measured 6.9s vs 1.5s at
     * sf0.1 on q33). RelationalSpec additionally audits Spark's
     * `approx_percentile` sketch against these exact values (rank
-    * error ≤ n/accuracy) — the approximate path a 100 TB caller
-    * takes, quantified instead of trusted. */
-  def q39TailQuantiles(s: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.scoped(s, "relational.q39") { sc =>
-      val hist = Tables.lineitem(s, dir)
-        .select(col("l_returnflag"),
-          expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
-      // two-phase cum + joined group totals (rankedHist) above the size
-      // floor, the serial per-flag window below it — the same gate as
-      // q33 (this scaladoc's "plan shape is q33's" holds either way)
-      val ranked = rankedHist(sc, hist, "l_returnflag", "cents",
-        twoPhase = rankedHistTwoPhase(s, dir))
-      def valueAt(rank: org.apache.spark.sql.Column) =
-        max(when(col("cum") - col("cnt") < rank && rank <= col("cum"),
-          col("cents")))
-      ranked.groupBy("l_returnflag")
-        .agg(max("n").as("n"),
-          valueAt(expr("(90 * n + 99) div 100")).as("p90_cents"),
-          valueAt(expr("(95 * n + 99) div 100")).as("p95_cents"),
-          valueAt(expr("(99 * n + 99) div 100")).as("p99_cents"))
-        .orderBy("l_returnflag")
-    }
+    * error ≤ n/accuracy) — the approximate path for a caller that
+    * cannot afford exact ranks, quantified instead of trusted. */
+  def q39TailQuantiles(s: SparkSession, dir: String): DataFrame = {
+    val hist = Tables.lineitem(s, dir)
+      .select(col("l_returnflag"),
+        expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
+      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
+    val ranked = rankedHist(hist, "l_returnflag", "cents")
+    def valueAt(rank: org.apache.spark.sql.Column) =
+      max(when(col("cum") - col("cnt") < rank && rank <= col("cum"),
+        col("cents")))
+    ranked.groupBy("l_returnflag")
+      .agg(max("n").as("n"),
+        valueAt(expr("(90 * n + 99) div 100")).as("p90_cents"),
+        valueAt(expr("(95 * n + 99) div 100")).as("p95_cents"),
+        valueAt(expr("(99 * n + 99) div 100")).as("p99_cents"))
+      .orderBy("l_returnflag")
+  }
 
   /** q48 outlier cut: 3 · 1.4826 (the normal-consistency constant
     * that makes MAD estimate σ) in 1e4 fixed-point — the flag test
@@ -741,12 +673,8 @@ object Relational {
       val raw = Tables.lineitem(s, dir)
         .select(col("l_returnflag"),
           expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-      val twoPhase = rankedHistTwoPhase(s, dir)
       def medianOf(hist: DataFrame, v: String): DataFrame = {
-        // the q33/q39 size-gated cum (values nonnegative: cents, |dev|);
-        // inputs below are already checkpointed — no internal cut
-        val ranked = rankedHist(sc, hist, "l_returnflag", v,
-          twoPhase = twoPhase, materialized = true)
+        val ranked = rankedHist(hist, "l_returnflag", v)
         ranked.groupBy("l_returnflag")
           .agg(max(when(col("cum") - col("cnt") < expr("(50 * n + 99) div 100")
             && expr("(50 * n + 99) div 100") <= col("cum"), col(v)))

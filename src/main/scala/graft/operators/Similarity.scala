@@ -793,7 +793,7 @@ object Similarity {
         col("cell"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
-    // Size-adaptive cell join (the q36 rank-join precedent): at gate
+    // Size-adaptive cell join: at gate
     // SF the exploded probe side is a few MB and broadcasting it wins;
     // at corpus scale it is CORPUS-sized (n×probes rows of 256-byte
     // vectors — ~250 MB at the 100× probe) and the planner's estimate,

@@ -96,7 +96,7 @@ object TextAnalysis {
   def t3TokenCount(s: SparkSession, dir: String): DataFrame =
     Tables.documentsSpread(s, dir)
       .withColumn("ws_tokens",
-        size(expr("filter(split(text, ' '), t -> t <> '')")))
+        size(TextOps.toksOf("text")))
       .withColumn("re_tokens",
         size(expr("regexp_extract_all(text, '[a-z]+', 0)")))
       .withColumn("bpe_pieces",
@@ -1270,7 +1270,8 @@ object TextAnalysis {
     *
     * The NLL histogram is DOC-cardinality in the worst case (per-doc
     * integer averages rarely collide), so the cumulative counts do
-    * NOT run in one unpartitioned window (the q33 sin): c23's
+    * NOT run in one unpartitioned window (one task would hold every
+    * doc's value): c23's
     * two-phase enumeration instead — per-doc NLLs are nonnegative
     * (lp ≤ 0 by construction), so `nll div` [[T17HistB]] buckets are
     * lexicographic RANGES of the value; in-bucket cumulative sums run
@@ -1519,7 +1520,7 @@ object TextAnalysis {
     val tok = Tables.documentsSpread(s, dir)
       .withColumn("shard", (col("doc_id") % T19Shards).cast("int"))
       .withColumn("tok",
-        size(expr("filter(split(text, ' '), t -> t <> '')")).cast("long"))
+        size(TextOps.toksOf("text")).cast("long"))
       .filter(col("tok") > 0)
       .select("doc_id", "shard", "tok")
     val w = Window.partitionBy("shard").orderBy("doc_id")
@@ -1548,8 +1549,7 @@ object TextAnalysis {
   private[graft] def t19ManifestCtes: String =
     s"""t19tok AS (
        |  SELECT doc_id, CAST(doc_id % $T19Shards AS INTEGER) AS shard,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
-       |      AS BIGINT) AS tok
+       |    CAST(len(${TextOps.sqlToksOf("text")}) AS BIGINT) AS tok
        |  FROM documents),
        |t19cum AS (
        |  SELECT doc_id, shard, tok,
@@ -1923,9 +1923,8 @@ object TextAnalysis {
          |  ${sqlScore("n_stop", "n_tok")} AS score
          |FROM m ORDER BY doc_id""".stripMargin,
     "t3_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
-        |    AS INTEGER) AS ws_tokens,
+      s"""SELECT doc_id,
+        |  CAST(len(${TextOps.sqlToksOf("text")}) AS INTEGER) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z]+')) AS INTEGER)
         |    AS re_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z]{1,4}')) AS INTEGER)

@@ -24,8 +24,15 @@ object TextOps {
 
   val sqlNormText: String = sqlNormTextOf("text")
 
+  /** Non-empty whitespace tokens of column `c`, as a Spark SQL
+    * expression; [[sqlToksOf]] is its DuckDB mirror. */
+  def toksExprOf(c: String): String = s"filter(split($c, ' '), t -> t <> '')"
+
+  /** [[toksExprOf]] as a Column. */
+  def toksOf(c: String): Column = expr(toksExprOf(c))
+
   /** Non-empty whitespace tokens of an already-normalized column named `norm`. */
-  val toksExpr: String = "filter(split(norm, ' '), t -> t <> '')"
+  val toksExpr: String = toksExprOf("norm")
 
   def sqlToksOf(c: String): String =
     s"list_filter(string_split($c, ' '), t -> t <> '')"

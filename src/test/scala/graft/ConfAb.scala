@@ -5,8 +5,10 @@ package graft
   * queries' noop-sink wall with the conf at valueA, then at valueB,
   * alternating A/B/A/B so box-weather waves hit both sides equally
   * (the only trustworthy comparison this box permits — SURVEY §6).
-  * The conf must be one the query body reads at BUILD time (the
-  * size-gate confs all are).
+  * The conf must be a Spark conf the query's plan reads (an
+  * optimizer or AQE threshold such as
+  * `spark.sql.autoBroadcastJoinThreshold`); it is set before each
+  * build.
   *
   * Usage: sbt "test:runMain graft.ConfAb <dir> <queriesCsv> <confKey>
   *   <valueA> <valueB> [reps=4]"

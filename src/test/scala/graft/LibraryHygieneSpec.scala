@@ -61,4 +61,25 @@ class LibraryHygieneSpec extends AnyFunSuite {
       "raw localCheckpoint outside a registry-owned memo build (cut " +
         s"through an Artifacts.scoped scope): ${rawCuts.toSet -- registryOwned}")
   }
+
+  test("the only spark.graft conf keys are the two deployment paths") {
+    val key = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val keys = files.flatMap(f =>
+      key.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
+    assert(keys.toSet == Set("spark.graft.centroids.dir",
+      "spark.graft.pq.dir"), s"keys read: ${keys.toSet.mkString(", ")} " +
+      "(a plan choice belongs in code, measured, not behind a conf key)")
+  }
+
+  test("the whitespace tokenizer is spelled only in TextOps") {
+    // Spark's filter(split(c, ' '), t -> t <> '') and DuckDB's
+    // list_filter(string_split(c, ' '), t -> t <> ''), also when a
+    // stripMargin literal breaks the line before the lambda
+    val toks = """split\([^,()]+, ' '\),\s*(?:\|\s*)?t -> t <> ''\)""".r
+    val spelled = files.filter(f =>
+      toks.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).toSet
+    assert(spelled == Set("TextOps.scala"),
+      "call TextOps.toksOf / TextOps.sqlToksOf instead")
+  }
 }

@@ -10,7 +10,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: sbt "Test/runMain graft.PlanDump <sfDir> <outDir> <tag>
   *   <q1,q2,...> [confKey=value ...]" — trailing key=value args set
-  * runtime confs first (dump a size-gated spelling's OTHER branch).
+  * runtime Spark confs first (dump the plan another join threshold or
+  * AQE setting gives).
   *
   * Lives in src/test (not src/main) so a dump run never invalidates
   * the PLANS.txt product-source stamp.
